@@ -2,11 +2,17 @@
 
 The reference's second client surface
 (``be/src/service/impala-hs2-server.cc``; IDL
-``common/thrift/cli_service.thrift``).  Like thrift_server.py's
-BeeswaxService, the structs are hand-mapped from the IDL onto the
-from-scratch TBinaryProtocol (thrift_proto.py), so a generated
-TCLIService client — the thing an Impala JDBC/ODBC driver is —
-interoperates byte-for-byte.
+``common/thrift/cli_service.thrift``).  The structs are hand-mapped
+from the IDL onto the from-scratch TBinaryProtocol (thrift_proto.py),
+so a generated TCLIService client — the thing an Impala JDBC/ODBC
+driver is — interoperates byte-for-byte.  The operation cursor, handle
+table, service loop and client call framing are shared with the
+Beeswax port (service.py); this module keeps the TCLIService structs,
+replies and status mapping.
+
+Sessions: OpenSession's configuration is leased to the session
+(ImpalaSession.lease_options) until CloseSession or disconnect, which
+also close the session's open operations (CloseSessionInternal).
 
 Protocol negotiation: OpenSession clamps the client's requested
 TProtocolVersion to V6.  V6+ sessions get columnar TRowSets
@@ -30,16 +36,12 @@ STRING / DECIMAL → stringVal; NULL = the optional value field unset.
 
 from __future__ import annotations
 
-import itertools
 import re
-import socket
-import socketserver
 import struct
-import threading
-from typing import Any, Callable
+from typing import Any
 
 from impala_cut_spark import thrift_proto as tp
-from impala_cut_spark.session import ImpalaSession
+from impala_cut_spark.service import Operation, ThriftClient, ThriftServer
 
 # TTypeId enum positions (cli_service.thrift)
 _TYPE_IDS = {
@@ -91,122 +93,17 @@ def _like_to_regex(pattern: str | None) -> re.Pattern:
     return re.compile(f"^{esc}$", re.IGNORECASE)
 
 
-class _HS2Op:
-    """One operation: schema (name, dtype) pairs + a paged row cursor.
+class HS2ThriftServer(ThriftServer):
+    """Threaded TCP TCLIService around one ImpalaSession.  Handles are
+    16-byte guids; a session entry holds its negotiated
+    TProtocolVersion (V6 clients get columnar TRowSets, V1-V5
+    row-oriented ones) and owns its operations."""
 
-    The cursor is a restartable iterator factory so FETCH_FIRST can
-    re-run it (impala-hs2-server.cc restarts the fetch from the
-    cached/re-executed results the same way)."""
-
-    def __init__(self, columns: list[tuple[str, str]], rows, proto: int = PROTOCOL_V1):
-        self.columns = columns
-        self._restart = lambda: iter(rows)  # rows: re-iterable list
-        self.proto = proto
-        self.rewind()
-
-    @classmethod
-    def from_df(cls, df, proto: int = PROTOCOL_V1) -> "_HS2Op":
-        op = cls.__new__(cls)
-        op.columns = list(df.dtypes)
-        op._restart = df.toLocalIterator  # lazy: nothing collected
-        op.proto = proto
-        op.rewind()
-        return op
-
-    def rewind(self) -> None:
-        self._rows = iter(self._restart())
-        self.start_row = 0
-        self.eos = False
-
-    def fetch(self, max_rows: int) -> list[tuple]:
-        out = list(itertools.islice(self._rows, max_rows))
-        if len(out) < max_rows:
-            self.eos = True
-        page_start = self.start_row
-        self.start_row += len(out)
-        self._page_start = page_start
-        return out
-
-
-class HS2ThriftServer:
-    """Threaded TCP TCLIService around one ImpalaSession."""
-
-    def __init__(
-        self,
-        session: ImpalaSession | None = None,
-        host: str = "127.0.0.1",
-        port: int = 0,
-        auth=None,
-    ):
-        """``auth``: optional (user, password) → bool validator — when
-        set, connections must complete SASL/PLAIN first (the
-        reference's LDAP path wraps BOTH the beeswax and HS2 services:
-        be/src/rpc/auth-provider.h:114-121)."""
-        self.session = session or ImpalaSession()
-        self._auth = auth
-        self._ops: dict[bytes, _HS2Op] = {}
-        self._sessions: set[bytes] = set()
-        #: per-session negotiated TProtocolVersion (V6 clients get
-        #: columnar TRowSets; V1-V5 get row-oriented ones)
-        self._session_proto: dict[bytes, int] = {}
-        #: per-session option snapshots: {guid: {key: prior-or-None}}
-        #: so CloseSession restores what OpenSession's configuration set
-        self._session_opts: dict[bytes, dict[str, str | None]] = {}
-        self._next = itertools.count(1)
-        self._lock = threading.Lock()
-        # connection ownership (same contract as thrift_server.py,
-        # round 8): each connection is served by exactly one handler
-        # thread, so the thread id keys the sessions/operations opened
-        # on it; Handler.handle()'s finally block closes whatever the
-        # client left open — a crashed JDBC client must not leave its
-        # OpenSession configuration applied to the shared engine
-        # session for every future client, nor leak operation state.
-        self._conn_sessions: dict[int, set[bytes]] = {}
-        self._conn_ops: dict[int, set[bytes]] = {}
-        outer = self
-
-        class Handler(socketserver.StreamRequestHandler):
-            def handle(self) -> None:
-                rfile, wfile = self.rfile, self.wfile
-                if outer._auth is not None:
-                    from impala_cut_spark import sasl_transport as st
-
-                    try:
-                        st.server_negotiate(rfile, wfile, outer._auth)
-                    except (st.SaslError, EOFError):
-                        return  # reject: negotiation reply already sent
-                    rfile = wfile = st.FramedFile(rfile, wfile)
-                tid = threading.get_ident()
-                outer._conn_sessions[tid] = set()
-                outer._conn_ops[tid] = set()
-                try:
-                    r = tp.BinaryReader(rfile)
-                    while True:
-                        try:
-                            name, mtype, seqid = r.message_begin()
-                        except EOFError:
-                            return
-                        args = r.read_struct()
-                        wfile.write(outer._dispatch(name, seqid, args))
-                        wfile.flush()
-                finally:
-                    for g in outer._conn_ops.pop(tid, ()):
-                        outer._ops.pop(g, None)
-                    for g in outer._conn_sessions.pop(tid, ()):
-                        outer._close_session(g)
-
-        class Server(socketserver.ThreadingTCPServer):
-            allow_reuse_address = True
-            daemon_threads = True
-
-        self._server = Server((host, port), Handler)
-        self.host, self.port = self._server.server_address
+    @staticmethod
+    def handle_key(n: int) -> bytes:
+        return struct.pack(">QQ", 0, n)
 
     # -- wire helpers ------------------------------------------------------
-
-    def _new_handle(self) -> bytes:
-        with self._lock:
-            return struct.pack(">QQ", 0, next(self._next))
 
     @staticmethod
     def _status(w: tp.BinaryWriter, code: int = SUCCESS, message: str | None = None) -> None:
@@ -240,31 +137,24 @@ class HS2ThriftServer:
         ident = h.get(1, {}) if isinstance(h, dict) else {}
         return ident.get(1, b"") if isinstance(ident, dict) else b""
 
-    def _register(self, op: _HS2Op) -> bytes:
-        guid = self._new_handle()
-        self._ops[guid] = op
-        owned = self._conn_ops.get(threading.get_ident())
-        if owned is not None:  # None: direct in-process call, no conn
-            owned.add(guid)
-        return guid
+    def _register(self, w: tp.BinaryWriter, req: dict, op: Operation, op_type: int) -> None:
+        """Add an operation owned by the request's session (field 1)
+        and reply with its handle."""
+        guid = self.handles.register(op, owner=self._read_guid(req))
+        if guid is None:
+            raise HS2Error("Invalid session handle", INVALID_HANDLE)
+        self._status(w)
+        self._handle_struct(w, 2, guid, op_type)
 
-    def _op(self, args: dict[int, Any]) -> _HS2Op:
-        o = self._ops.get(self._read_guid(args))
+    def _op(self, args: dict[int, Any]) -> Operation:
+        o = self.handles.get(self._read_guid(args))
         if o is None:
             raise HS2Error("Invalid operation handle", INVALID_HANDLE)
         return o
 
     # -- dispatch ----------------------------------------------------------
 
-    def _dispatch(self, name: str, seqid: int, args: dict[int, Any]) -> bytes:
-        fn: Callable | None = getattr(self, f"_m_{name}", None)
-        if fn is None:
-            # unknown method → thrift EXCEPTION message (see
-            # thrift_proto.application_exception) — a generated client
-            # would misparse an unsolicited REPLY struct
-            return tp.application_exception(
-                name, seqid, f"Invalid method name: '{name}'"
-            )
+    def _reply(self, name: str, seqid: int, fn, args: dict[int, Any]) -> bytes:
         w = tp.BinaryWriter()
         w.message_begin(name, tp.REPLY, seqid)
         w.field(tp.STRUCT, 0)  # resp struct
@@ -288,26 +178,6 @@ class HS2ThriftServer:
     # -- session lifecycle -------------------------------------------------
 
     def _m_OpenSession(self, w: tp.BinaryWriter, req: dict) -> None:
-        # TOpenSessionReq.configuration scopes to THIS HS2 session in
-        # the reference (impala-hs2-server.cc OpenSession →
-        # session_state->default_query_options) — snapshot prior values
-        # so CloseSession can restore the shared engine session
-        before = self.session.options()
-        applied: dict[str, str | None] = {}
-        for k, v in (req.get(4) or {}).items():
-            try:
-                key = k.decode().lower()
-                self.session.set_option(key, v.decode())
-                applied[key] = before.get(key)
-            except Exception:  # noqa: BLE001 — unknown conf keys are advisory
-                pass
-        guid = self._new_handle()
-        self._sessions.add(guid)
-        if applied:
-            self._session_opts[guid] = applied
-        owned = self._conn_sessions.get(threading.get_ident())
-        if owned is not None:
-            owned.add(guid)
         # negotiate: serve the client's version, clamped to V6 (the
         # highest generation implemented; thrift enums are ordered so
         # min() is the correct handshake on both sides)
@@ -316,35 +186,23 @@ class HS2ThriftServer:
         except (TypeError, ValueError):
             requested = PROTOCOL_V1
         proto = min(requested, PROTOCOL_V6)
-        self._session_proto[guid] = proto
+        guid = self.handles.register(proto, owner=self._conn_handle())
+        # TOpenSessionReq.configuration scopes to THIS session in the
+        # reference (impala-hs2-server.cc OpenSession →
+        # session_state->default_query_options)
+        for k, v in (req.get(4) or {}).items():
+            try:
+                self.session.lease_options(guid, [(k.decode(), v.decode())])
+            except Exception:  # noqa: BLE001 — unknown conf keys are advisory
+                pass
         self._status(w)
         w.field(tp.I32, 2)
         w.write_i32(proto)
         self._handle_struct(w, 3, guid)
 
-    def _close_session(self, guid: bytes) -> None:
-        """Release a session: drop its registry entries and restore the
-        options its OpenSession configuration set — shared by
-        CloseSession and connection teardown (a crashed client must
-        not leave options applied for every future client)."""
-        self._sessions.discard(guid)
-        self._session_proto.pop(guid, None)
-        for key, prior in self._session_opts.pop(guid, {}).items():
-            if prior is None:
-                self.session.unset_option(key)
-            else:
-                self.session.set_option(key, prior)
-
     def _m_CloseSession(self, w: tp.BinaryWriter, req: dict) -> None:
-        guid = self._read_guid(req)
-        self._close_session(guid)
-        owned = self._conn_sessions.get(threading.get_ident())
-        if owned is not None:
-            owned.discard(guid)
+        self.close_handle(self._read_guid(req), int)
         self._status(w)
-
-    def _proto(self, req: dict) -> int:
-        return self._session_proto.get(self._read_guid(req, 1), PROTOCOL_V1)
 
     def _m_GetInfo(self, w: tp.BinaryWriter, req: dict) -> None:
         info_type = req.get(2, 0)
@@ -361,10 +219,7 @@ class HS2ThriftServer:
 
     def _m_ExecuteStatement(self, w: tp.BinaryWriter, req: dict) -> None:
         sql = req.get(2, b"").decode()
-        df = self.session.sql(sql)
-        guid = self._register(_HS2Op.from_df(df, self._proto(req)))
-        self._status(w)
-        self._handle_struct(w, 2, guid, OP_EXECUTE)
+        self._register(w, req, Operation.from_df(self.session.sql(sql)), OP_EXECUTE)
 
     def _m_GetOperationStatus(self, w: tp.BinaryWriter, req: dict) -> None:
         self._op(req)
@@ -377,10 +232,7 @@ class HS2ThriftServer:
         self._status(w)
 
     def _m_CloseOperation(self, w: tp.BinaryWriter, req: dict) -> None:
-        owned = self._conn_ops.get(threading.get_ident())
-        if owned is not None:
-            owned.discard(self._read_guid(req))
-        if self._ops.pop(self._read_guid(req), None) is None:
+        if self.close_handle(self._read_guid(req)) is None:
             raise HS2Error("Invalid operation handle", INVALID_HANDLE)
         self._status(w)
 
@@ -442,14 +294,15 @@ class HS2ThriftServer:
             o.rewind()  # re-run the bounded fetch cursor from row 0
         elif orientation != FETCH_NEXT:
             raise HS2Error("only FETCH_NEXT and FETCH_FIRST are supported")
-        rows = o.fetch(int(req.get(3, 1024)) or 1024)
+        start_row, rows = o.fetch(int(req.get(3, 0)))
         self._status(w)
         w.field(tp.BOOL, 2)
         w.write_bool(not o.eos)
         w.field(tp.STRUCT, 3)  # TRowSet
         w.field(tp.I64, 1)
-        w.write_i64(o._page_start)
-        if o.proto >= PROTOCOL_V6:
+        w.write_i64(start_row)
+        proto = self.handles.get(self.handles.owner(self._read_guid(req)), int)
+        if proto is not None and proto >= PROTOCOL_V6:
             # columnar generation: rows (required field) stays empty,
             # values ride list<TColumn> at field 3 — one T<X>Column
             # {1: values, 2: nulls bitmap (LSB-first, 1 = NULL)} per
@@ -494,21 +347,18 @@ class HS2ThriftServer:
 
     # -- JDBC metadata operations -----------------------------------------
 
-    def _meta_op(self, req: dict, columns: list[tuple[str, str]], rows: list[tuple]) -> bytes:
-        return self._register(_HS2Op(columns, rows, proto=self._proto(req)))
+    def _meta_op(self, w: tp.BinaryWriter, req: dict, op_type: int,
+                 columns: list[tuple[str, str]], rows: list[tuple]) -> None:
+        self._register(w, req, Operation(columns, lambda: rows), op_type)
 
     def _m_GetCatalogs(self, w: tp.BinaryWriter, req: dict) -> None:
-        guid = self._meta_op(req, [("TABLE_CAT", "string")], [])
-        self._status(w)
-        self._handle_struct(w, 2, guid, 2)
+        self._meta_op(w, req, 2, [("TABLE_CAT", "string")], [])
 
     def _m_GetSchemas(self, w: tp.BinaryWriter, req: dict) -> None:
         pat = _like_to_regex((req.get(3) or b"%").decode())
         dbs = sorted(d.name for d in self.session.spark.catalog.listDatabases())
         rows = [(d, "") for d in dbs if pat.match(d)]
-        guid = self._meta_op(req, [("TABLE_SCHEM", "string"), ("TABLE_CATALOG", "string")], rows)
-        self._status(w)
-        self._handle_struct(w, 2, guid, 3)
+        self._meta_op(w, req, 3, [("TABLE_SCHEM", "string"), ("TABLE_CATALOG", "string")], rows)
 
     def _m_GetTables(self, w: tp.BinaryWriter, req: dict) -> None:
         schema_pat = _like_to_regex((req.get(3) or b"%").decode())
@@ -522,19 +372,15 @@ class HS2ThriftServer:
                     ttype = "VIEW" if t.tableType in ("TEMPORARY", "VIEW") else "TABLE"
                     rows.append(("", db.name, t.name, ttype, ""))
         rows.sort(key=lambda r: (r[1], r[2]))
-        guid = self._meta_op(
-            req,
+        self._meta_op(
+            w, req, 4,
             [("TABLE_CAT", "string"), ("TABLE_SCHEM", "string"), ("TABLE_NAME", "string"),
              ("TABLE_TYPE", "string"), ("REMARKS", "string")],
             rows,
         )
-        self._status(w)
-        self._handle_struct(w, 2, guid, 4)
 
     def _m_GetTableTypes(self, w: tp.BinaryWriter, req: dict) -> None:
-        guid = self._meta_op(req, [("TABLE_TYPE", "string")], [("TABLE",), ("VIEW",)])
-        self._status(w)
-        self._handle_struct(w, 2, guid, 5)
+        self._meta_op(w, req, 5, [("TABLE_TYPE", "string")], [("TABLE",), ("VIEW",)])
 
     def _m_GetColumns(self, w: tp.BinaryWriter, req: dict) -> None:
         schema_pat = _like_to_regex((req.get(3) or b"%").decode())
@@ -556,82 +402,48 @@ class HS2ThriftServer:
                              c.dataType.upper(), pos + 1)
                         )
         rows.sort(key=lambda r: (r[1], r[2], r[6]))
-        guid = self._meta_op(
-            req,
+        self._meta_op(
+            w, req, 6,
             [("TABLE_CAT", "string"), ("TABLE_SCHEM", "string"), ("TABLE_NAME", "string"),
              ("COLUMN_NAME", "string"), ("DATA_TYPE", "int"), ("TYPE_NAME", "string"),
              ("ORDINAL_POSITION", "int")],
             rows,
         )
-        self._status(w)
-        self._handle_struct(w, 2, guid, 6)
 
     def _m_GetTypeInfo(self, w: tp.BinaryWriter, req: dict) -> None:
         rows = [(name.upper(), tid) for name, tid in sorted(_TYPE_IDS.items(), key=lambda kv: kv[1])]
         rows.append(("DECIMAL", DECIMAL_TYPE_ID))
-        guid = self._meta_op(req, [("TYPE_NAME", "string"), ("DATA_TYPE", "int")], rows)
-        self._status(w)
-        self._handle_struct(w, 2, guid, 1)
+        self._meta_op(w, req, 1, [("TYPE_NAME", "string"), ("DATA_TYPE", "int")], rows)
 
     def _m_GetFunctions(self, w: tp.BinaryWriter, req: dict) -> None:
         pat = _like_to_regex((req.get(4) or b"%").decode())
         from impala_cut_spark.dialect import CALL_REWRITES
 
         names = sorted(n for n in CALL_REWRITES if pat.match(n))
-        guid = self._meta_op(
-            req,
+        self._meta_op(
+            w, req, 7,
             [("FUNCTION_CAT", "string"), ("FUNCTION_SCHEM", "string"),
              ("FUNCTION_NAME", "string")],
             [("", "", n) for n in names],
         )
-        self._status(w)
-        self._handle_struct(w, 2, guid, 7)
-
-    # -- lifecycle ---------------------------------------------------------
-
-    def serve_background(self) -> threading.Thread:
-        t = threading.Thread(target=self._server.serve_forever, daemon=True)
-        t.start()
-        return t
-
-    def shutdown(self) -> None:
-        self._server.shutdown()
-        self._server.server_close()
 
 
-class HS2ThriftClient:
+class HS2ThriftClient(ThriftClient):
     """Minimal TCLIService TBinaryProtocol client (what a JDBC driver
     is, reduced to the tested surface)."""
 
     def __init__(self, host: str, port: int, user: str | None = None, password: str = ""):
-        self._sock = socket.create_connection((host, port))
-        self._f = self._sock.makefile("rwb")
-        if user is not None:  # SASL/PLAIN (the LDAP client mode)
-            from impala_cut_spark import sasl_transport as st
-
-            st.client_negotiate(self._f, user, password)
-            self._f = st.FramedFile(self._f)
-        self._seq = itertools.count(1)
+        super().__init__(host, port, user, password)
         self.session: bytes | None = None
         self.proto = PROTOCOL_V1  # negotiated at open_session
 
     def _call(self, name: str, build_req) -> dict[int, Any]:
-        w = tp.BinaryWriter()
-        seqid = next(self._seq)
-        w.message_begin(name, tp.CALL, seqid)
-        w.field(tp.STRUCT, 1)  # req struct at field 1
-        build_req(w)
-        w.stop()
-        w.stop()
-        self._f.write(w.bytes())
-        self._f.flush()
-        r = tp.BinaryReader(self._f)
-        rname, mtype, rseq = r.message_begin()
-        if (rname, rseq) != (name, seqid):
-            raise tp.TProtocolError(f"out-of-order reply {rname}/{rseq}")
-        result = r.read_struct()
-        tp.raise_if_exception(mtype, result)
-        resp = result[0]
+        def build_args(w: tp.BinaryWriter) -> None:
+            w.field(tp.STRUCT, 1)  # req struct at field 1
+            build_req(w)
+            w.stop()
+
+        resp = self._roundtrip(name, build_args)[0]
         status = resp.get(1, {})
         if status.get(1, 0) != SUCCESS:
             raise HS2Error(status.get(5, b"").decode() or "HS2 error", status.get(1))
@@ -774,28 +586,3 @@ class HS2ThriftClient:
             w.write_i32(info_type)
 
         return self._call("GetInfo", build)[2][1].decode()
-
-    def close(self) -> None:
-        self._f.close()
-        self._sock.close()
-
-
-def main() -> None:  # pragma: no cover — interactive entry point
-    import argparse
-
-    from impala_cut_spark.sources.catalog import register_views
-
-    ap = argparse.ArgumentParser(description="impala_cut_spark HS2 thrift server")
-    ap.add_argument("--host", default="127.0.0.1")
-    ap.add_argument("--port", type=int, default=21050)  # reference HS2 default
-    ap.add_argument("--sf-dir", default="/root/testdata/sf0.001")
-    args = ap.parse_args()
-    session = ImpalaSession()
-    register_views(session.spark, args.sf_dir)
-    srv = HS2ThriftServer(session, host=args.host, port=args.port)
-    print(f"TCLIService listening on {srv.host}:{srv.port} (thrift binary)", flush=True)
-    srv._server.serve_forever()
-
-
-if __name__ == "__main__":
-    main()

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import os
 import re
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -175,6 +176,11 @@ class ImpalaSession:
     def __init__(self, spark: SparkSession | None = None):
         self.spark = spark or build_session()
         self._options: dict[str, str] = {}
+        #: option key → (leasing owner, value to restore); see lease_options
+        self._leases: dict[str, tuple[object, str | None]] = {}
+        #: held by lease/release; hold it across a lease and the
+        #: planning that must see the leased values
+        self.option_lock = threading.RLock()
         #: CREATE DATASOURCE registry: name → (location, class, api_version)
         #: (CreateDataSrcStmt; the reference keeps these in the catalog)
         self._data_sources: dict[str, tuple[str, str, str]] = {}
@@ -692,8 +698,7 @@ class ImpalaSession:
 
     def set_option(self, key: str, value: str) -> None:
         """`SET key=value` — Impala query option surface."""
-        key = key.lower()
-        self._options[key] = value
+        key, raw = key.lower(), value
         conf = self._OPTION_MAP.get(key)
         if conf:
             if key == "disable_codegen":
@@ -704,7 +709,9 @@ class ImpalaSession:
                 # "uncompressed"
                 value = value.lower()
                 value = "uncompressed" if value in ("none", '""', "''") else value
+            # Spark rejects a bad value here, before the option is recorded
             self.spark.conf.set(conf, value)
+        self._options[key] = raw
 
     def _apply_default_order_by_limit(self, text: str) -> str:
         """DEFAULT_ORDER_BY_LIMIT (ImpalaService.thrift:77-80;
@@ -773,3 +780,28 @@ class ImpalaSession:
 
     def options(self) -> dict[str, str]:
         return dict(self._options)
+
+    def lease_options(self, owner, pairs) -> None:
+        """Apply (key, value) ``pairs`` for ``owner`` until
+        ``release_options(owner)``.  The reference gives every query a
+        private TQueryCtx; one shared SparkSession cannot, so a later
+        lease on a key takes it over, with the restore target of the
+        live owner it displaces (last-writer-wins).  A rejected pair
+        raises, the pairs before it stay leased."""
+        with self.option_lock:
+            for k, v in pairs:
+                k = k.lower()
+                held = self._leases.get(k)
+                restore = held[1] if held else self._options.get(k)
+                self.set_option(k, v)
+                self._leases[k] = (owner, restore)
+
+    def release_options(self, owner) -> None:
+        """Restore the keys ``owner`` still holds (absent → unset)."""
+        with self.option_lock:
+            for k in [k for k, (o, _) in self._leases.items() if o == owner]:
+                restore = self._leases.pop(k)[1]
+                if restore is None:
+                    self.unset_option(k)
+                else:
+                    self.set_option(k, restore)

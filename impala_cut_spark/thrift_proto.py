@@ -6,12 +6,11 @@ The container has no thrift library, so this module implements the
 byte-level protocol the reference's servers actually speak
 (``be/src/rpc/thrift-server.cc`` wraps generated TBinaryProtocol
 services; ``shell/impala_shell.py`` connects with
-TBufferedTransport + TBinaryProtocol).  With it, server.py's Beeswax
-twin (thrift_server.py) serves the REAL wire format — a stock
-beeswaxd/TBinaryProtocol client interoperates — closing most of the
-round-3 "thrift as the wire format" delta; only code generated from
-the IDL is absent (structs are hand-mapped from
-``common/thrift/beeswax.thrift``).
+TBufferedTransport + TBinaryProtocol).  With it, the Beeswax
+(thrift_server.py) and HS2 (hs2_server.py) ports serve the REAL wire
+format — a stock generated client interoperates; only code generated
+from the IDL is absent (structs are hand-mapped from
+``common/thrift/beeswax.thrift`` and ``cli_service.thrift``).
 
 Wire type codes (public spec): STOP=0 BOOL=2 BYTE=3 DOUBLE=4 I16=6
 I32=8 I64=10 STRING=11 STRUCT=12 MAP=13 SET=14 LIST=15.

@@ -6,9 +6,10 @@ BeeswaxService (``common/thrift/beeswax.thrift``; C++ handlers in
 connects with TBufferedTransport + TBinaryProtocol).  This module is
 that service re-expressed on Spark: the hand-rolled TBinaryProtocol
 (thrift_proto.py) carries hand-mapped beeswax.thrift structs, so a
-stock generated beeswaxd client can speak to it byte-for-byte —
-upgrading round 3's "newline-JSON stand-in transport" delta to the
-genuine wire format for the Beeswax surface.
+stock generated beeswaxd client can speak to it byte-for-byte.  The
+operation cursor, handle table, service loop and client call framing
+are shared with the HS2 port (service.py); this module keeps the
+Beeswax structs, replies and exception mapping.
 
 Struct maps (field ids from beeswax.thrift):
     Query            {1: query string}
@@ -47,26 +48,20 @@ Query.configuration options are scoped to the OPERATION lifetime (the
 reference scopes them to the query's TQueryCtx): applied before
 planning, held while the client fetches (so execution-time Spark confs
 are genuinely active when the lazy plan runs), and restored at
-close/CloseInsert/clean.  The server session is shared, so a per-key
-owner table arbitrates overlapping clients: a key is restored only by
-the operation that last applied it — a later conflicting apply takes
-ownership and the earlier op's restore becomes a no-op (documented
-delta: the reference gives every query a private TQueryCtx; one shared
-SparkSession cannot, so overlapping conflicting options follow
-last-writer-wins during the overlap).
+close/CloseInsert/clean or when the connection drops.  They are leased
+through the shared session (ImpalaSession.lease_options), so
+overlapping clients — on either port — follow last-writer-wins.
 """
 
 from __future__ import annotations
 
-import itertools
-import socket
-import socketserver
-import threading
+import datetime
+import decimal
+import re
 from typing import Any
 
 from impala_cut_spark import thrift_proto as tp
-from impala_cut_spark.server import _Operation
-from impala_cut_spark.session import ImpalaSession
+from impala_cut_spark.service import Operation, ThriftClient, ThriftServer
 
 QUERY_STATE_FINISHED = 4  # beeswax.thrift QueryState enum position
 QUERY_STATE_EXCEPTION = 5
@@ -74,16 +69,6 @@ TSTATUS_OK = 0  # Status.thrift TStatusCode
 TSTATUS_RUNTIME_ERROR = 4
 EXEC_STATE_FINISHED = 4  # ExecStats.thrift TExecState
 VERSION_STRING = "impala_cut_spark shell server (PySpark re-expression)"
-
-
-class _NullCtx:
-    """No-op context manager (lock already held)."""
-
-    def __enter__(self):
-        return self
-
-    def __exit__(self, *a):
-        return False
 
 
 class BeeswaxError(Exception):
@@ -109,95 +94,35 @@ def _read_handle(args: dict[int, Any], fid: int = 1) -> str:
     return h.get(1, b"").decode() if isinstance(h, dict) else ""
 
 
-class BeeswaxThriftServer:
-    """Threaded TCP thrift server around one ImpalaSession — the
-    thrift-wire twin of server.py's jsonl QueryServer, sharing its
-    _Operation paged-fetch machinery."""
+def _plain(v: Any) -> Any:
+    """A value in the form its ASCII rendering starts from: timestamps
+    ISO with a space, decimals exact, binary as hex, recursively."""
+    if isinstance(v, (datetime.datetime, datetime.date)):
+        return v.isoformat(sep=" ") if isinstance(v, datetime.datetime) else v.isoformat()
+    if isinstance(v, decimal.Decimal):
+        return str(v)
+    if isinstance(v, bytes):
+        return v.hex()
+    if isinstance(v, list):
+        return [_plain(x) for x in v]
+    if isinstance(v, dict):
+        return {k: _plain(x) for k, x in v.items()}
+    return v
 
-    def __init__(
-        self,
-        session: ImpalaSession | None = None,
-        host: str = "127.0.0.1",
-        port: int = 0,
-        auth=None,
-    ):
-        """``auth``: optional (user, password) → bool validator — when
-        set, every connection must complete a SASL/PLAIN negotiation
-        first (the reference's LDAP auth path: LdapAuthProvider wraps
-        the server transport in PLAIN/SASL, auth-provider.h:114-121;
-        the stand-in for its ldap_simple_bind_s credential check)."""
-        self.session = session or ImpalaSession()
-        self._ops: dict[str, _Operation] = {}
-        self._next = itertools.count(1)
-        self._lock = threading.Lock()
-        self._auth = auth
-        # Query.configuration scoping: key → handle of the operation
-        # that last applied it (see module docstring); an op restores
-        # only the keys it still owns at close time
-        self._opt_owner: dict[str, str] = {}
-        # connection ownership: handler-thread id → handles opened on
-        # that connection and not yet closed.  Each connection is
-        # served by exactly one ThreadingTCPServer thread, so the
-        # thread id identifies the connection; Handler.handle()'s
-        # finally block closes whatever the client left open — without
-        # this, a crashed shell that shipped options (mem_limit,
-        # default_order_by_limit…) mutated the shared session for every
-        # future client (r7 ADVICE).
-        self._conn_handles: dict[int, set[str]] = {}
-        outer = self
 
-        class Handler(socketserver.StreamRequestHandler):
-            def handle(self) -> None:
-                rfile, wfile = self.rfile, self.wfile
-                if outer._auth is not None:
-                    from impala_cut_spark import sasl_transport as st
+def render_tsv(rows) -> list[str]:
+    """Beeswax Results.data page: each row one tab-delimited ASCII
+    string (impala-beeswax-server.cc FetchInternal renders rows via the
+    output exprs' ASCII form; NULL prints as ``NULL``)."""
+    return ["\t".join("NULL" if v is None else str(_plain(v)) for v in row) for row in rows]
 
-                    try:
-                        st.server_negotiate(rfile, wfile, outer._auth)
-                    except (st.SaslError, EOFError):
-                        return  # reject: negotiation reply already sent
-                    # reuse the SAME rfile/wfile pair (the buffered
-                    # reader may have consumed bytes past negotiation)
-                    rfile = wfile = st.FramedFile(rfile, wfile)
-                tid = threading.get_ident()
-                outer._conn_handles[tid] = set()
-                try:
-                    r = tp.BinaryReader(rfile)
-                    while True:
-                        try:
-                            name, mtype, seqid = r.message_begin()
-                        except EOFError:
-                            return
-                        args = r.read_struct()
-                        wfile.write(outer._dispatch(name, seqid, args))
-                        wfile.flush()
-                finally:
-                    # connection teardown: release every operation the
-                    # client never closed (disconnect, crash, ^C) so
-                    # its shipped options are restored for other clients
-                    for h in outer._conn_handles.pop(tid, ()):
-                        outer._close_op(h)
 
-        class Server(socketserver.ThreadingTCPServer):
-            allow_reuse_address = True
-            daemon_threads = True
+class BeeswaxThriftServer(ThriftServer):
+    """Threaded TCP BeeswaxService around one ImpalaSession; handles
+    are decimal strings."""
 
-        self._server = Server((host, port), Handler)
-        self.host, self.port = self._server.server_address
-
-    # -- method dispatch ---------------------------------------------------
-
-    def _dispatch(self, name: str, seqid: int, args: dict[int, Any]) -> bytes:
+    def _reply(self, name: str, seqid: int, fn, args: dict[int, Any]) -> bytes:
         w = tp.BinaryWriter()
-        fn = getattr(self, f"_m_{name}", None)
-        if fn is None:
-            # a stock generated client has no IDL for this method, so a
-            # REPLY with a declared-exception slot would be misparsed —
-            # thrift's contract is an EXCEPTION message with
-            # TApplicationException(UNKNOWN_METHOD)
-            return tp.application_exception(
-                name, seqid, f"Invalid method name: '{name}'"
-            )
         try:
             w.message_begin(name, tp.REPLY, seqid)
             fn(w, args)
@@ -237,46 +162,29 @@ class BeeswaxThriftServer:
         # "k=v") — the reference shell ships its SET options with every
         # query and impalad applies them scoped to THAT query's
         # TQueryCtx (impala-beeswax-server.cc QueryToTQueryContext).
-        # Options are held for the OPERATION lifetime — applied before
-        # planning, restored at close — so execution-time Spark confs
-        # are active when the client's fetch actually runs the plan.
-        # The apply window is serialized under the server lock.
+        # They are leased to the OPERATION — applied before planning,
+        # restored at close — so execution-time Spark confs are active
+        # when the client's fetch actually runs the plan.  The option
+        # lock spans lease and planning, so a concurrent lease cannot
+        # change what this plan sees.
         shipped: list[tuple[str, str]] = []
         if isinstance(q, dict):
             for item in q.get(3) or []:
                 s = item.decode() if isinstance(item, (bytes, bytearray)) else str(item)
                 if "=" in s:
                     k, v = s.split("=", 1)
-                    shipped.append((k.strip().lower(), v.strip()))
-        with self._lock:
-            h = str(next(self._next))
-            before = self.session.options()
-            restore: dict[str, str | None] = {}
-            for k, _ in shipped:
-                prev_owner = self._opt_owner.get(k)
-                if prev_owner is not None and prev_owner in self._ops:
-                    # the current session value is another live op's
-                    # TRANSIENT setting — inherit ITS restore target,
-                    # else closing last would re-impose the transient
-                    restore[k] = self._ops[prev_owner]._restore.get(k)
-                else:
-                    restore[k] = before.get(k)
-            for k, v in shipped:
-                self.session.set_option(k, v)
-                self._opt_owner[k] = h
+                    shipped.append((k.strip(), v.strip()))
+        with self.session.option_lock:
+            h = self.handles.new_handle()
             try:
+                self.session.lease_options(h, shipped)
                 df = self.session.sql(sql)
-            except Exception as e:  # noqa: BLE001 — analysis error → client
-                self._release_options(h, restore, locked=True)
+            except Exception as e:  # noqa: BLE001 — bad option / analysis error → client
+                self.session.release_options(h)
                 raise BeeswaxError(f"{type(e).__name__}: {e}") from e
-            op = _Operation(df)
-            op._df = df  # for GetRuntimeProfile / GetExecSummary
-            op._restore = restore
+            op = Operation.from_df(df)
             op.rows_appended = self._insert_rows(df, sql)
-            self._ops[h] = op
-            owned = self._conn_handles.get(threading.get_ident())
-            if owned is not None:  # None: direct in-process call, no conn
-                owned.add(h)
+            self.handles.register(op, self._conn_handle(), h)
         return h
 
     @staticmethod
@@ -284,8 +192,6 @@ class BeeswaxThriftServer:
         """For DML, the total-rows-written metric of the eagerly-run
         write command (Spark's DataWritingCommandExec numOutputRows) —
         what CloseInsert reports.  None for non-DML."""
-        import re
-
         if not re.match(r"^\s*(insert|load\s+data)\b", sql, re.IGNORECASE):
             return None
         total = 0
@@ -300,31 +206,8 @@ class BeeswaxThriftServer:
             total = 0
         return {"": total}
 
-    def _release_options(self, h: str, restore: dict[str, str | None], locked: bool = False) -> None:
-        """Restore the option keys this operation still owns (a later
-        conflicting apply takes ownership — last-writer-wins)."""
-        ctx = _NullCtx() if locked else self._lock
-        with ctx:
-            for k, v in restore.items():
-                if self._opt_owner.get(k) != h:
-                    continue
-                del self._opt_owner[k]
-                if v is None:
-                    self.session.unset_option(k)
-                else:
-                    self.session.set_option(k, v)
-
-    def _close_op(self, handle: str) -> _Operation | None:
-        op = self._ops.pop(handle, None)
-        if op is not None:
-            self._release_options(handle, getattr(op, "_restore", {}))
-            owned = self._conn_handles.get(threading.get_ident())
-            if owned is not None:
-                owned.discard(handle)
-        return op
-
-    def _op(self, args: dict[int, Any]) -> _Operation:
-        o = self._ops.get(_read_handle(args))
+    def _op(self, args: dict[int, Any]) -> Operation:
+        o = self.handles.get(_read_handle(args))
         if o is None:
             raise QueryNotFound()
         return o
@@ -332,8 +215,7 @@ class BeeswaxThriftServer:
     def _m_query(self, w: tp.BinaryWriter, args) -> None:
         _write_query_handle(w, self._execute(args))
 
-    def _m_executeAndWait(self, w: tp.BinaryWriter, args) -> None:
-        _write_query_handle(w, self._execute(args))
+    _m_executeAndWait = _m_query  # execution is synchronous here either way
 
     def _m_explain(self, w: tp.BinaryWriter, args) -> None:
         q = args.get(1, {})
@@ -352,16 +234,12 @@ class BeeswaxThriftServer:
         if args.get(2):
             raise BeeswaxError("Does not support start over")
         o = self._op(args)
-        fetch_size = args.get(3, -1)
-        if fetch_size is None or fetch_size <= 0:
-            fetch_size = 1024
-        start_row = getattr(o, "_beeswax_row", 0)
-        data = o.fetch_tsv(fetch_size)
-        o._beeswax_row = start_row + len(data)
+        start_row, rows = o.fetch(args.get(3) or 0)
+        data = render_tsv(rows)
         w.field(tp.STRUCT, 0)
         w.field(tp.BOOL, 1)
         w.write_bool(True)
-        w.write_string_list(2, list(o.columns))
+        w.write_string_list(2, [c for c, _ in o.columns])
         w.write_string_list(3, data)
         w.field(tp.I64, 4)
         w.write_i64(start_row)
@@ -382,7 +260,7 @@ class BeeswaxThriftServer:
         w.field(tp.STRUCT, 1)  # Schema
         w.field(tp.LIST, 1)
         w.list_begin(tp.STRUCT, len(o.columns))
-        for c, t in zip(o.columns, o.types):
+        for c, t in o.columns:
             w.field(tp.STRING, 1)
             w.write_string(c)
             w.field(tp.STRING, 2)
@@ -427,7 +305,7 @@ class BeeswaxThriftServer:
         w.stop()
 
     def _m_close(self, w: tp.BinaryWriter, args) -> None:
-        if self._close_op(_read_handle(args)) is None:
+        if self.close_handle(_read_handle(args)) is None:
             raise QueryNotFound()
         w.stop()  # void
 
@@ -442,7 +320,7 @@ class BeeswaxThriftServer:
         handle = (
             h.decode() if isinstance(h, (bytes, bytearray)) else _read_handle(args)
         )
-        self._close_op(handle)
+        self.close_handle(handle)
         w.stop()  # void
 
     # -- ImpalaService extension (ImpalaService.thrift:172-200) -------------
@@ -471,7 +349,7 @@ class BeeswaxThriftServer:
         # Cancel on a live handle is the reference's cancel-after-
         # finish case: TStatus(OK); an unknown handle throws
         # BeeswaxException per the IDL
-        if self._ops.get(_read_handle(args)) is None:
+        if self.handles.get(_read_handle(args)) is None:
             raise BeeswaxError("Invalid query handle")
         self._write_tstatus(w)
 
@@ -499,10 +377,10 @@ class BeeswaxThriftServer:
         # the reference returns the coordinator's runtime profile tree;
         # the Spark-side equivalent is the QueryExecution summary
         # (parsed/analyzed/optimized/physical plans)
-        op = self._ops.get(_read_handle(args))
+        op = self.handles.get(_read_handle(args))
         if op is None:  # IDL declares only BeeswaxException here
             raise BeeswaxError("Invalid query handle")
-        text = f"Query Runtime Profile (Spark QueryExecution):\n{op._df._jdf.queryExecution().toString()}"
+        text = f"Query Runtime Profile (Spark QueryExecution):\n{op.df._jdf.queryExecution().toString()}"
         w.field(tp.STRING, 0)  # IDL: returns a bare string
         w.write_string(text)
         w.stop()
@@ -515,7 +393,7 @@ class BeeswaxThriftServer:
         # concurrent close on the same handle (r7 ADVICE: op became
         # None between the two and the client got INTERNAL_ERROR
         # instead of QueryNotFoundException)
-        op = self._close_op(_read_handle(args))
+        op = self.close_handle(_read_handle(args))
         if op is None:
             raise QueryNotFound()
         rows = op.rows_appended or {"": 0}
@@ -533,58 +411,20 @@ class BeeswaxThriftServer:
         # complete by fetch time, so FINISHED; per-node stats are a
         # C++-runtime concept with no Spark twin (profile carries the
         # plan text instead)
-        if self._ops.get(_read_handle(args)) is None:
-            raise QueryNotFound()
+        self._op(args)
         w.field(tp.STRUCT, 0)
         w.field(tp.I32, 1)
         w.write_i32(EXEC_STATE_FINISHED)
         w.stop()  # TExecSummary
         w.stop()
 
-    # -- lifecycle ---------------------------------------------------------
 
-    def serve_background(self) -> threading.Thread:
-        t = threading.Thread(target=self._server.serve_forever, daemon=True)
-        t.start()
-        return t
-
-    def shutdown(self) -> None:
-        self._server.shutdown()
-        self._server.server_close()
-
-
-class BeeswaxThriftClient:
-    """Minimal TBinaryProtocol beeswax client (the impala_shell.py-side
-    counterpart) — used by tests to drive the server exactly as a
-    generated thrift client would."""
-
-    def __init__(self, host: str, port: int, user: str | None = None, password: str = ""):
-        """``user``: when given, run the SASL/PLAIN negotiation first —
-        the stock shell's LDAP mode (TSaslClientTransport(…, "PLAIN",
-        sock), shell/impala_shell.py:694)."""
-        self._sock = socket.create_connection((host, port))
-        self._f = self._sock.makefile("rwb")
-        if user is not None:
-            from impala_cut_spark import sasl_transport as st
-
-            st.client_negotiate(self._f, user, password)
-            self._f = st.FramedFile(self._f)
-        self._seq = itertools.count(1)
+class BeeswaxThriftClient(ThriftClient):
+    """TBinaryProtocol Beeswax client (the impala_shell.py-side
+    counterpart)."""
 
     def _call(self, name: str, build_args) -> dict[int, Any]:
-        w = tp.BinaryWriter()
-        seqid = next(self._seq)
-        w.message_begin(name, tp.CALL, seqid)
-        build_args(w)
-        w.stop()
-        self._f.write(w.bytes())
-        self._f.flush()
-        r = tp.BinaryReader(self._f)
-        rname, mtype, rseq = r.message_begin()
-        if (rname, rseq) != (name, seqid):
-            raise tp.TProtocolError(f"out-of-order reply {rname}/{rseq}")
-        result = r.read_struct()
-        tp.raise_if_exception(mtype, result)
+        result = self._roundtrip(name, build_args)
         if 0 in result or not result:
             return result
         exc_fid, exc = next(iter(result.items()))
@@ -702,28 +542,3 @@ class BeeswaxThriftClient:
     def get_exec_summary(self, handle: str) -> int:
         """→ TExecSummary.state."""
         return self._call("GetExecSummary", self._handle_args(handle))[0][1]
-
-    def close(self) -> None:
-        self._f.close()
-        self._sock.close()
-
-
-def main() -> None:  # pragma: no cover — interactive entry point
-    import argparse
-
-    from impala_cut_spark.sources.catalog import register_views
-
-    ap = argparse.ArgumentParser(description="impala_cut_spark Beeswax thrift server")
-    ap.add_argument("--host", default="127.0.0.1")
-    ap.add_argument("--port", type=int, default=21000)  # reference beeswax default
-    ap.add_argument("--sf-dir", default="/root/testdata/sf0.001")
-    args = ap.parse_args()
-    session = ImpalaSession()
-    register_views(session.spark, args.sf_dir)
-    srv = BeeswaxThriftServer(session, host=args.host, port=args.port)
-    print(f"BeeswaxService listening on {srv.host}:{srv.port} (thrift binary)", flush=True)
-    srv._server.serve_forever()
-
-
-if __name__ == "__main__":
-    main()

@@ -41,17 +41,19 @@ def test_session_statement_lifecycle(client):
 
 
 def test_paged_fetch_offsets(client):
-    op = client.execute("select o_orderkey from orders order by o_orderkey limit 250")
-    seen, offset = 0, 0
-    while True:
-        fr = client.fetch(op, 100)
-        assert fr["start_row"] == offset
-        offset += len(fr["rows"])
-        seen += len(fr["rows"])
-        if not fr["has_more"]:
-            break
-    client.close_operation(op)
-    assert seen == 250
+    # a non-positive max_rows means 1024 rows, as on the Beeswax port
+    for max_rows in (100, 0, -1):
+        op = client.execute("select o_orderkey from orders order by o_orderkey limit 250")
+        seen, offset = 0, 0
+        while True:
+            fr = client.fetch(op, max_rows)
+            assert fr["start_row"] == offset
+            offset += len(fr["rows"])
+            seen += len(fr["rows"])
+            if not fr["has_more"]:
+                break
+        client.close_operation(op)
+        assert seen == 250
 
 
 def test_typed_value_arms_and_nulls(client):
@@ -314,7 +316,47 @@ def test_disconnect_releases_session_options(server):
         opts = dict(server.session.options())
         assert "explain_level" not in opts
         assert opts.get("mem_limit") == "1g"  # pre-existing value restored
-        assert op not in server._ops  # leaked operation reaped
-        assert not server._sessions
+        assert op not in server.handles  # leaked operation reaped
+        assert not server.handles
     finally:
         server.session.unset_option("mem_limit")
+
+
+def test_overlapping_sessions_share_an_option_key(server):
+    """Two sessions overlap on one key over a prior value: the later
+    session's value survives the first close, and the prior value
+    returns after the last close (last-writer-wins, as on the Beeswax
+    port).  A key set_option rejects is ignored and leaves nothing."""
+    server.session.set_option("mem_limit", "1g")
+    a = HS2ThriftClient(server.host, server.port)
+    b = HS2ThriftClient(server.host, server.port)
+    try:
+        a.open_session({"mem_limit": "2g"})
+        b.open_session({"mem_limit": "3g", "parquet_file_size": "not-a-size"})
+        assert server.session.options().get("mem_limit") == "3g"
+        a.close_session()
+        assert server.session.options().get("mem_limit") == "3g"
+        b.close_session()
+        assert server.session.options().get("mem_limit") == "1g"
+        assert "parquet_file_size" not in server.session.options()
+    finally:
+        a.close()
+        b.close()
+        server.session.unset_option("mem_limit")
+
+
+def test_close_session_closes_its_operations(server):
+    """CloseSession unregisters the session's open operations
+    (impala-server.cc CloseSessionInternal), on a connection that stays
+    open — not only when the TCP connection drops."""
+    c = HS2ThriftClient(server.host, server.port)
+    try:
+        c.open_session()
+        op = c.execute("select 1 as one")
+        c.close_session()
+        with pytest.raises(HS2Error) as ei:
+            c.fetch(op)
+        assert ei.value.code == 4  # INVALID_HANDLE_STATUS
+        assert op not in server.handles
+    finally:
+        c.close()

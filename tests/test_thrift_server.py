@@ -52,9 +52,11 @@ def test_query_lifecycle_over_thrift(client):
 
 
 def test_execute_and_wait_and_echo(client):
-    h = client.execute_and_wait("select 1 as one")
-    assert client.fetch(h)["data"] == ["1"]
-    client.close_query(h)
+    # a non-positive fetch size means 1024 rows, not an empty page
+    for fetch_size in (1024, 0, -1):
+        h = client.execute_and_wait("select 1 as one")
+        assert client.fetch(h, fetch_size)["data"] == ["1"]
+        client.close_query(h)
     assert client.echo("round trip") == "round trip"
 
 
@@ -80,6 +82,8 @@ def test_unknown_handle_raises_query_not_found(client):
         client.fetch("424242")
     with pytest.raises(QueryNotFound):
         client.get_state("424242")
+    with pytest.raises(QueryNotFound):
+        client.get_results_metadata("424242")
     with pytest.raises(QueryNotFound):
         client.close_query("424242")
 
@@ -367,7 +371,7 @@ def test_clean_releases_operation_and_shipped_options(server, client):
     assert server.session.options().get("default_order_by_limit") == "3"
     client.clean(h)
     assert "default_order_by_limit" not in server.session.options()
-    assert h not in server._ops
+    assert h not in server.handles
 
 
 def test_disconnect_releases_shipped_options(server):
@@ -386,7 +390,7 @@ def test_disconnect_releases_shipped_options(server):
             break
         time.sleep(0.05)
     assert "default_order_by_limit" not in server.session.options()
-    assert h not in server._ops
+    assert h not in server.handles
 
 
 def test_double_close_insert_is_query_not_found(client):
@@ -438,4 +442,4 @@ def test_concurrent_clients_option_isolation_stress(server):
         t.join()
     assert not errs, errs
     assert "default_order_by_limit" not in server.session.options()
-    assert not server._opt_owner
+    assert not server.session._leases

@@ -8,8 +8,9 @@ The in-process differential (tests/test_query_grammar.py) proves the
 ENGINE matches DuckDB; this file proves the WIRE carries that result
 faithfully: NULL sentinels, decimal/timestamp string forms, TSV
 escaping, page offsets — the layers ImpalaSession.sql never touches.
-The expected side uses the server's own row renderer (_Operation
-.fetch_tsv) directly on the in-process DataFrame, so any divergence
+The expected side uses the server's own cursor and row renderer
+(service.Operation, thrift_server.render_tsv) directly on the
+in-process DataFrame, so any divergence
 localizes to marshalling/framing/dispatch, not the renderer.
 """
 
@@ -61,15 +62,16 @@ def pool(oracle):
 
 @pytest.mark.parametrize("seed", WIRE_SEEDS)
 def test_grammar_seed_replays_byte_identical_over_wire(seed, isession, wire, pool):
-    from impala_cut_spark.server import _Operation
+    from impala_cut_spark.service import Operation
+    from impala_cut_spark.thrift_server import render_tsv
 
     q = QueryGen(random.Random(seed), pool).create_query(depth=2)
 
     # in-process expectation, rendered by the server's own TSV renderer
-    op = _Operation(isession.sql(q.sql))
+    op = Operation.from_df(isession.sql(q.sql))
     expected: list[str] = []
     while not op.eos:
-        expected.extend(op.fetch_tsv(64))
+        expected.extend(render_tsv(op.fetch(64)[1]))
 
     # the same query over the thrift wire, small pages to exercise
     # the paging/offset path
