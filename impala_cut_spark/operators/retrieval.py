@@ -93,7 +93,8 @@ def bm25_topk(
     # form exactly: tf/dl/df are the same integers, idf the same
     # rounded double, and the per-doc score sums the same
     # decimal(18,6) terms (unmatched terms add decimal zero).
-    terms = [str(t) for t in query_terms]
+    # a bag of distinct terms: a repeat must not score or count twice
+    terms = list(dict.fromkeys(str(t) for t in query_terms))
     nt = len(terms)
 
     def q(s: str) -> str:

@@ -20,7 +20,11 @@ import itertools
 import socket
 import socketserver
 import threading
-from typing import Any, Callable, Hashable
+from typing import Any, Callable, Hashable, Iterator
+
+from pyspark.serializers import BatchedSerializer, CPickleSerializer, read_int, write_int
+from pyspark.traceback_utils import SCCallSiteSync
+from pyspark.util import local_connect_and_auth
 
 from impala_cut_spark import sasl_transport as st
 from impala_cut_spark import thrift_proto as tp
@@ -29,6 +33,47 @@ from impala_cut_spark.session import ImpalaSession
 #: rows per fetch page when a client asks for a non-positive size: an
 #: empty page without end-of-stream would spin a drain-until-eos client
 DEFAULT_FETCH_ROWS = 1024
+
+
+def _local_rows(df) -> Iterator:
+    """``df.toLocalIterator()`` whose socket closes with the generator.
+    Rows cross to the driver one partition per request, like the
+    reference's plan-root sink, never as a full collect.  pyspark's own
+    iterator leaves the socket, and the JVM thread serving it, open
+    until garbage collection.  The first ``next()`` plans the query and
+    connects; it yields nothing.
+
+    Mirrors pyspark 4.1.2's ``DataFrame.toLocalIterator`` and
+    ``pyspark.util._local_iterator_from_socket`` (private: the
+    ``toPythonIterator`` call and the 1/0/-1 status words), so a
+    pyspark upgrade must re-check it."""
+    with SCCallSiteSync(df.sparkSession.sparkContext):
+        port, secret, server = df._jdf.toPythonIterator(False)
+    f, sock = local_connect_and_auth(port, secret)
+    sock.settimeout(None)  # a partition takes unbounded time to compute
+    part, status = iter(()), 1
+    with sock, f:
+        try:
+            yield
+            while status == 1:
+                write_int(1, f)  # ask for the next partition
+                f.flush()
+                status = read_int(f)  # 1: one follows, 0: done, -1: failed
+                if status == 1:
+                    part = BatchedSerializer(CPickleSerializer()).load_stream(f)
+                    for row in part:  # not ``yield from``: close must not close it
+                        yield row
+            if status == -1:
+                server.getResult()  # raises the JVM-side error
+        finally:
+            if status == 1:  # closed early: finish the partition, say stop
+                try:
+                    for _ in part:
+                        pass
+                    write_int(0, f)
+                    f.flush()
+                except (OSError, EOFError):
+                    pass  # the JVM end is gone already
 
 
 class Operation:
@@ -41,31 +86,65 @@ class Operation:
         #: DML only: rows written, for Beeswax CloseInsert
         self.rows_appended: dict[str, int] | None = None
         self.df = None
+        #: set once by close(); a closed operation never reopens its cursor
+        self.closed = False
+        # held while the cursor is read or replaced: a generator cannot
+        # be closed while another thread runs it
+        self._lock = threading.Lock()
+        self._rows = iter(())
         self.rewind()
 
     @classmethod
     def from_df(cls, df) -> "Operation":
-        # toLocalIterator: like the reference's plan-root sink, rows
-        # cross to the driver one partition at a time as the client
-        # fetches, never as a full collect
-        op = cls(list(df.dtypes), df.toLocalIterator)
+        def restart() -> Iterator:
+            rows = _local_rows(df)
+            next(rows)  # plan now: a planning error belongs to execute
+            return rows
+
+        op = cls(list(df.dtypes), restart)
         op.df = df
         return op
 
     def rewind(self) -> None:
-        self._rows = iter(self._restart())
-        self._next_row = 0
-        self.eos = False
+        with self._lock:
+            if not self.closed:
+                self._close_rows()
+                self._rows = iter(self._restart())
+                self._next_row = 0
+                self.eos = False
+        self._close_if_closed()
+
+    def close(self) -> None:
+        """Release the row cursor now rather than at garbage collection.
+        Does not wait for a fetch or rewind in flight: that call
+        releases the cursor as it ends."""
+        self.closed = True
+        self._close_if_closed()
+
+    def _close_if_closed(self) -> None:
+        # whoever holds the lock calls this again after releasing it
+        if self.closed and self._lock.acquire(blocking=False):
+            try:
+                self._close_rows()
+            finally:
+                self._lock.release()
+
+    def _close_rows(self) -> None:
+        close = getattr(self._rows, "close", None)
+        if close is not None:
+            close()
 
     def fetch(self, n: int) -> tuple[int, list]:
         """Up to ``n`` rows (non-positive: DEFAULT_FETCH_ROWS) →
         (start_row, rows)."""
         if n <= 0:
             n = DEFAULT_FETCH_ROWS
-        rows = list(itertools.islice(self._rows, n))
-        self.eos = len(rows) < n
-        start = self._next_row
-        self._next_row += len(rows)
+        with self._lock:
+            rows = [] if self.closed else list(itertools.islice(self._rows, n))
+            self.eos = len(rows) < n
+            start = self._next_row
+            self._next_row += len(rows)
+        self._close_if_closed()
         return start, rows
 
 
@@ -202,7 +281,9 @@ class ThriftServer:
         """Close ``handle`` and what it owns, releasing their leased
         options; → its item, or None when no such live ``kind``."""
         closed = self.handles.close(handle, kind)
-        for h, _ in closed:
+        for h, item in closed:
+            if isinstance(item, Operation):
+                item.close()
             self.session.release_options(h)
         return closed[0][1] if closed else None
 

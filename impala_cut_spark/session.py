@@ -64,8 +64,23 @@ ENGINE_CONF: dict[str, str] = {
     # not a local-mode trick).  Takes effect at JVM launch, so it only
     # helps sessions this module itself builds (bench.py, servers,
     # tools) — which is where the many-queries-one-JVM pattern lives.
-    "spark.driver.extraJavaOptions": "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing",
+    # G1HeapRegionSize=16m (driver only): keeps Spark's 1-4 MB per-query
+    # buffers (4 MB broadcast blocks, 1 MB serializer chunks) out of
+    # humongous regions; a 4 GB driver heap's 2 MB regions let 0.9-1.4 GB
+    # of them pile up between young GCs while ~95 MB was live.  It only
+    # changes heaps under 32 GB: the default 32 GB driver already gets
+    # 16 MB regions (heap / 2048).  Executors keep G1's choice (1 MB
+    # regions at the default 1 GB heap) until a workload measures one.
+    "spark.driver.extraJavaOptions": "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing"
+    " -XX:G1HeapRegionSize=16m",
     "spark.executor.extraJavaOptions": "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing",
+    # --- codegen cache ---
+    # Spark's generated-class LRU holds 100; the 13 registry_pipeline
+    # headliners need ~230 (all 23 bench headliners ~470), so every warm
+    # pass recompiled as much as the cold one.  Static: applies only to
+    # a session built here.  Needs the region size above: without class
+    # churn the metadata GCs that reaped humongous garbage stop.
+    "spark.sql.codegen.cache.maxEntries": "1000",
     # --- storage quirks of the driver testdata ---
     # events.parquet stores TIMESTAMP(NANOS); Spark has no ns type, so
     # read as epoch-nanos BIGINT and convert at the catalog layer
@@ -96,17 +111,17 @@ def build_session(
         # local mode: ~#cores. Cluster mode: override upward.
         shuffle_partitions = int(cpus) if str(cpus).isdigit() else 32
 
-    builder = SparkSession.builder.appName(app_name).master(master)
-    builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    # local mode: the driver JVM IS the executor — 32 threads at 16g
-    # (~0.5g/thread) was GC-bound on cached indexes + broadcasts
-    # (measured: minhash bench -40% at a larger heap); 32g leaves
-    # headroom for the rest of the box. Cluster mode: spark-submit owns
-    # executor sizing and this only affects the driver process.
-    builder = builder.config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g"))
-    builder = builder.config("spark.ui.enabled", "false")
-    for k, v in ENGINE_CONF.items():
-        builder = builder.config(k, v)
+    conf = {
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        # local mode: the driver JVM IS the executor — 32 threads at 16g
+        # (~0.5g/thread) was GC-bound on cached indexes + broadcasts
+        # (measured: minhash bench -40% at a larger heap); 32g leaves
+        # headroom for the rest of the box. Cluster mode: spark-submit owns
+        # executor sizing and this only affects the driver process.
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEM", "32g"),
+        "spark.ui.enabled": "false",
+        **ENGINE_CONF,
+    }
     for k, v in (extra_conf or {}).items():
         if k.endswith(".extraJavaOptions") and k in ENGINE_CONF:
             # APPEND caller JVM flags to the engine's code-cache flags
@@ -114,19 +129,29 @@ def build_session(
             # within one extraJavaOptions string the last occurrence of
             # a -XX flag wins, so caller overrides still apply.
             v = f"{ENGINE_CONF[k]} {v}"
-        builder = builder.config(k, v)
+        conf[k] = v
+    builder = SparkSession.builder.appName(app_name).master(master).config(map=conf)
     from pyspark import SparkContext
 
-    if SparkContext._active_spark_context is not None:
-        # getOrCreate will REUSE the live JVM: launch-time flags
-        # (extraJavaOptions — the code-cache sizing) silently cannot
-        # apply to it (ADVICE r12 #2). Surface that instead of letting
-        # a long session hit JIT-off cliffs with no breadcrumb.
+    sc = SparkContext._active_spark_context
+    if sc is not None:
+        # getOrCreate will REUSE the live JVM and context: JVM flags and
+        # static SQL confs silently cannot apply to it (ADVICE r12 #2).
+        # Surface that instead of letting a long session hit JIT-off
+        # cliffs or codegen-cache churn with no breadcrumb.  SQLConf
+        # knows the static keys once a session has started, which is
+        # when they become fixed.
         import warnings
 
+        is_static = sc._jvm.org.apache.spark.sql.internal.SQLConf.isStaticConfigKey
+        fixed = "; ".join(
+            f"{k}={v}"
+            for k, v in conf.items()
+            if k == "spark.driver.memory" or k.endswith(".extraJavaOptions") or is_static(k)
+        )
         warnings.warn(
-            "build_session: reusing an already-running SparkContext — "
-            "launch-time JVM flags (ReservedCodeCacheSize) do not apply",
+            f"build_session: reusing an already-running SparkContext — "
+            f"these settings do not apply: {fixed}",
             stacklevel=2,
         )
     spark = builder.getOrCreate()

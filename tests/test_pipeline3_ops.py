@@ -371,6 +371,21 @@ def test_bm25_ranks_term_dense_docs_first(spark):
     assert got[0]["score"] > got[1]["score"] > 0
 
 
+def test_bm25_repeated_term_scores_and_counts_once(spark):
+    """A term given twice is one query term: same scores, and
+    n_terms_matched counts it once."""
+    from impala_cut_spark.operators.retrieval import bm25_topk
+
+    df = spark.createDataFrame(
+        [(1, "join join hash"), (2, "join once"), (3, "hash only")],
+        "doc_id bigint, text string",
+    )
+    once = bm25_topk(df, ["join", "hash"], k=10).collect()
+    got = bm25_topk(df, ["join", "hash", "join"], k=10).collect()
+    assert got == once
+    assert [r["n_terms_matched"] for r in got] == [2, 1, 1]
+
+
 def test_rrf_fuse_semantics(spark):
     """rrf_fuse: overlap sums both arms, single-arm docs get one term,
     ordering is (rrf desc, doc_id)."""

@@ -5,9 +5,11 @@ either port release what they leased."""
 
 from __future__ import annotations
 
+import gc
 import sys
 import threading
 import time
+import warnings
 
 import pytest
 
@@ -50,6 +52,34 @@ def test_hs2_session_and_beeswax_operation_share_an_option_key(ports):
         hc.close()
         bc.close()
         isess.unset_option("mem_limit")
+
+
+def test_closing_an_undrained_operation_closes_its_cursor(ports, monkeypatch):
+    """CloseOperation before the last row closes the operation's row
+    socket (and so the JVM thread serving it) at once: nothing is left
+    for garbage collection to find unclosed.  A FETCH_FIRST rewind that
+    reached the operation just before the close must not reopen it."""
+    _, hs2 = ports
+    gc.collect()
+    unraisable: list = []
+    monkeypatch.setattr(sys, "unraisablehook", unraisable.append)
+    hc = HS2ThriftClient(hs2.host, hs2.port)
+    try:
+        with warnings.catch_warnings():
+            warnings.simplefilter("error", ResourceWarning)
+            hc.open_session()
+            op = hc.execute("select o_orderkey from orders")
+            assert len(hc.fetch(op, 2)["rows"]) == 2
+            server_op = hs2.handles.get(op)
+            hc.close_operation(op)
+            server_op.rewind()
+            assert server_op.fetch(5) == (2, []) and server_op.eos
+            del server_op
+            hc.close_session()
+            gc.collect()
+    finally:
+        hc.close()
+    assert not [u.exc_value for u in unraisable], unraisable
 
 
 def test_concurrent_clients_across_both_ports(ports):

@@ -6,6 +6,11 @@ watermark passes last_event + gap, so the replay appends two sentinel
 files (far-future events) processed as separate micro-batches
 (maxFilesPerTrigger=1) to push the watermark across every real
 session's timeout.
+
+The engine SparkSession that ``session.build_session`` builds is
+checked at the end: a warm query mix larger than Spark's default
+codegen cache recompiles nothing, and reusing the live context names
+the settings it cannot apply.
 """
 
 from __future__ import annotations
@@ -17,6 +22,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from impala_cut_spark.session import ENGINE_CONF, build_session
 from impala_cut_spark.sources.catalog import load_table
 from impala_cut_spark.streaming.sessions import sessionize_stateful, user_sessions
 
@@ -79,3 +85,52 @@ def test_stateful_sessions_equal_batch(spark, sf_dir, tmp_path):
     }
     assert len(got) == len(expected)
     assert got == expected
+
+
+# --- the engine SparkSession -------------------------------------------
+
+
+def test_warm_mix_recompiles_nothing(spark):
+    """150 queries, each its own generated class (Spark inlines int
+    literals), planned twice: more than the default 100-entry codegen
+    cache holds, which an LRU cycle would miss on every access."""
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    queries = [f"SELECT id + {k} AS v FROM range(10)" for k in range(150)]
+
+    def cycle() -> None:
+        for q in queries:  # physical planning compiles; no job needed
+            spark.sql(q)._jdf.queryExecution().toRdd()
+
+    cycle()
+    before = compiles.getCount()
+    cycle()
+    assert compiles.getCount() - before == 0
+
+
+def test_reuse_warning_names_every_setting_that_cannot_apply(spark):
+    """build_session on a live context warns with each launch-time
+    setting and static SQL conf it was asked for and cannot apply, as
+    merged with the caller's.  Same master, partitions and warehouse as
+    the fixture, so the runtime confs it re-applies change nothing."""
+    warehouse = spark.conf.get("spark.sql.warehouse.dir")
+    with pytest.warns(UserWarning, match="reusing an already-running SparkContext") as rec:
+        again = build_session(
+            app_name="impala-cut-spark-tests",
+            master="local[8]",
+            shuffle_partitions=8,
+            extra_conf={
+                "spark.sql.warehouse.dir": warehouse,
+                "spark.driver.extraJavaOptions": "-Dimpala.cut.reuse=1",
+            },
+        )
+    assert again is spark
+    msg = str(rec[0].message)
+    for setting in (
+        "spark.driver.memory=",
+        f"spark.driver.extraJavaOptions={ENGINE_CONF['spark.driver.extraJavaOptions']} -Dimpala.cut.reuse=1",
+        f"spark.executor.extraJavaOptions={ENGINE_CONF['spark.executor.extraJavaOptions']}",
+        f"spark.sql.codegen.cache.maxEntries={ENGINE_CONF['spark.sql.codegen.cache.maxEntries']}",
+        f"spark.sql.warehouse.dir={warehouse}",
+    ):
+        assert setting in msg
+    assert "spark.sql.shuffle.partitions" not in msg  # a runtime conf applies

@@ -20,15 +20,7 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
-
-def sentinel(rounds: int = 1_000_000) -> float:
-    import hashlib
-
-    t0 = time.perf_counter()
-    h = b"\x00" * 64
-    for _ in range(rounds):
-        h = hashlib.md5(h).digest()
-    return round(time.perf_counter() - t0, 4)
+from bench import _noise_sentinel as sentinel  # noqa: E402 — after the path fix
 
 
 def main() -> None:
