@@ -13,7 +13,12 @@ are handled two ways:
 Additionally ``register_all`` registers a handful of names as Spark
 SQL UDFs (Spark ≥3.5 ``CREATE TEMPORARY FUNCTION … RETURN expr``,
 inlined by the analyzer → still whole-stage-codegen'd) so raw
-``spark.sql`` without the dialect layer also resolves them.
+``spark.sql`` without the dialect layer also resolves them. Names that
+are already Spark builtins cannot be replaced by a SQL UDF and are not
+registered: ``zeroifnull`` and ``nullifzero`` match Impala as they
+are, but Spark's ``dayname`` returns the abbreviated day (``'Thu'``),
+so raw ``spark.sql`` differs from Impala's ``'Thursday'``; only the
+dialect layer (``CALL_REWRITES``) gives the full name.
 """
 
 from __future__ import annotations
@@ -22,11 +27,6 @@ from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
 # --- Column helpers (DataFrame-API mirror of dialect.CALL_REWRITES) ------
-
-
-def isnull2(a: Column, b: Column) -> Column:
-    """Impala binary isnull(a, b) (conditional-functions.h)."""
-    return F.coalesce(a, b)
 
 
 def zeroifnull(c: Column) -> Column:
@@ -80,12 +80,9 @@ def group_concat(c: Column, sep: str = ", ") -> Column:
 # (name, param list, return-expression) — types chosen as the widest
 # overload; the dialect layer handles type-generic call sites.
 _SQL_UDFS: list[tuple[str, str, str]] = [
-    ("zeroifnull", "(x DOUBLE)", "coalesce(x, cast(0 as double))"),
-    ("nullifzero", "(x DOUBLE)", "nullif(x, cast(0 as double))"),
     ("strleft", "(s STRING, n INT)", "left(s, n)"),
     ("strright", "(s STRING, n INT)", "right(s, n)"),
     ("fnv_hash", "(s STRING)", "xxhash64(s)"),
-    ("dayname", "(t TIMESTAMP)", "date_format(t, 'EEEE')"),
     ("is_inf", "(x DOUBLE)", "abs(x) = double('Infinity')"),
     ("is_nan", "(x DOUBLE)", "isnan(x)"),
     ("truncate", "(x DOUBLE, n INT)", "cast(x * pow(10, n) as bigint) / pow(10, n)"),
@@ -138,7 +135,7 @@ def register_all(spark: SparkSession) -> None:
 
 
 def _ret_type(body: str) -> str:
-    if body.startswith(("left", "right", "date_format")):
+    if body.startswith(("left", "right")):
         return "STRING"
     if body.startswith("timestampadd"):
         return "TIMESTAMP"

@@ -128,17 +128,6 @@ def docx_text(payload: bytes) -> dict:
     }
 
 
-def _cell_ref_col(ref: str) -> int:
-    """'BC12' → 0-based column 54 (A1-style reference walk)."""
-    col = 0
-    for ch in ref:
-        if ch.isalpha():
-            col = col * 26 + (ord(ch.upper()) - 64)
-        else:
-            break
-    return col - 1
-
-
 def xlsx_cells(payload: bytes) -> dict:
     """XLSX → {n_sheets, n_cells, n_shared, n_inline, n_numeric,
     text}.  ``text`` joins every STRING cell's value in sheet order

@@ -109,10 +109,6 @@ def bpe_token_count(text: Column) -> Column:
     return F.size(F.regexp_extract_all(text, F.lit(BPE_TOKEN_PATTERN), F.lit(0)))
 
 
-def distinct_token_count(text: Column) -> Column:
-    return F.size(F.array_distinct(tokens(text)))
-
-
 def _count_in(toks: Column, words: list[str]) -> Column:
     """Multiset count of tokens that appear in ``words``."""
     return F.size(F.filter(toks, lambda x: reduce(lambda a, b: a | b, [x == w for w in words])))

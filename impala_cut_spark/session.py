@@ -214,14 +214,9 @@ class ImpalaSession:
         #: with the definition text (ToSqlUtils.getCreateViewSql —
         #: Spark's temp-view catalog keeps the plan, not the SQL)
         self._view_defs: dict[str, str] = {}
-        # avro/warc scan DDL (STORED AS AVRO|WARC … LOCATION) resolves
-        # to the pyavro/pywarc Python DataSources — register them up front
-        from impala_cut_spark.sources.avro import register_avro_source
-        from impala_cut_spark.sources.warc import register_warc_source
-
-        register_warc_source(self.spark)
-
-        register_avro_source(self.spark)
+        # read_avro/read_warc register the pyavro/pywarc Python sources
+        # on first use: the first registration makes the JVM start a
+        # Python worker (~2 s), which most sessions never need
 
     def sql(self, text: str) -> DataFrame:
         from impala_cut_spark.dialect import rewrite

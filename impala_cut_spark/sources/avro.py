@@ -258,17 +258,13 @@ class AvroFileSource(ExternalSource):
         yield from read_avro_file(self.files[partition])
 
 
-def register_avro_source(spark) -> None:
-    """Idempotently register the ``pyavro`` format on a session."""
+def read_avro(spark, path: str):
+    """``spark.read.format("pyavro")`` convenience wrapper; registers the
+    format on the session first."""
     try:
         spark.dataSource.register(make_datasource("pyavro", AvroFileSource))
     except Exception:
         pass  # already registered
-
-
-def read_avro(spark, path: str):
-    """``spark.read.format("pyavro")`` convenience wrapper."""
-    register_avro_source(spark)
     return spark.read.format("pyavro").options(path=path).load()
 
 

@@ -15,7 +15,7 @@ side skew AQE can't split (e.g. one key = 30% of rows in a groupBy).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -35,14 +35,6 @@ def write_bucketed(
     if sort_cols:
         w = w.sortBy(*sort_cols)
     w.mode("overwrite").saveAsTable(table)
-
-
-def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, on: list[str], how: str = "inner"
-) -> DataFrame:
-    """Join two same-bucketed catalog tables on their bucket key —
-    plans with zero Exchange nodes (asserted in tests/test_bucketing.py)."""
-    return spark.table(left_table).join(spark.table(right_table), on, how)
 
 
 def salted_groupby_count(df: DataFrame, key: str, n_salts: int = 16) -> DataFrame:

@@ -385,8 +385,3 @@ def write_text_table_exact(
             )
         )
     df.select(F.concat_ws(sep, *cols).alias("value")).write.mode(mode).text(path)
-
-
-def write_parquet_table(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Parquet writer (hdfs-parquet-table-writer.cc parity)."""
-    df.write.mode(mode).parquet(path)

@@ -454,17 +454,13 @@ class WarcFileSource(ExternalSource):
             yield (name, None, None, None, None, None, None, None, False)
 
 
-def register_warc_source(spark) -> None:
-    """Idempotently register the ``pywarc`` format on a session."""
+def read_warc(spark, path: str):
+    """``spark.read.format("pywarc")`` convenience wrapper; registers the
+    format on the session first."""
     try:
         spark.dataSource.register(make_datasource("pywarc", WarcFileSource))
     except Exception:
         pass  # already registered
-
-
-def read_warc(spark, path: str):
-    """``spark.read.format("pywarc")`` convenience wrapper."""
-    register_warc_source(spark)
     # the shared _ExternalReader implements pushFilters, which Spark
     # refuses to plan unless the pushdown feature flag is on
     # (ImpalaSession sets it; bare sessions need it here)

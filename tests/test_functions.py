@@ -194,6 +194,17 @@ def test_group_concat_deterministic(sess):
     assert got == "a|b|c"  # sorted for determinism (registry docstring)
 
 
+def test_register_all_creates_every_sql_udf(spark):
+    """Every _SQL_UDFS entry becomes a session function: a name that
+    is already a Spark builtin cannot be replaced by a SQL UDF, and
+    register_all would swallow that failure."""
+    from impala_cut_spark.functions.registry import _SQL_UDFS, register_all
+
+    register_all(spark)
+    user = {r[0] for r in spark.sql("SHOW USER FUNCTIONS").collect()}
+    assert [name for name, _, _ in _SQL_UDFS if name not in user] == []
+
+
 def test_register_all_resolves_without_dialect(spark):
     from impala_cut_spark.functions.registry import register_all
 

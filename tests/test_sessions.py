@@ -9,8 +9,9 @@ session's timeout.
 
 The engine SparkSession that ``session.build_session`` builds is
 checked at the end: a warm query mix larger than Spark's default
-codegen cache recompiles nothing, and reusing the live context names
-the settings it cannot apply.
+codegen cache recompiles nothing, reusing the live context names the
+settings it cannot apply, and an ImpalaSession registers its Python
+DataSources only on first use.
 """
 
 from __future__ import annotations
@@ -134,3 +135,39 @@ def test_reuse_warning_names_every_setting_that_cannot_apply(spark):
     ):
         assert setting in msg
     assert "spark.sql.shuffle.partitions" not in msg  # a runtime conf applies
+
+
+def test_session_registers_python_sources_on_first_use(spark, tmp_path, monkeypatch):
+    """A new ImpalaSession registers no Python DataSource (the first
+    registration starts a Python worker); STORED AS AVRO|WARC …
+    LOCATION registers its source when it mounts."""
+    from pyspark.sql.datasource import DataSourceRegistration
+
+    from impala_cut_spark.session import ImpalaSession
+    from impala_cut_spark.sources.avro import write_avro
+    from impala_cut_spark.sources.warc import write_warc_files
+
+    registered = []
+    register = DataSourceRegistration.register
+
+    def recording(self, source):
+        registered.append(source.name())
+        return register(self, source)
+
+    monkeypatch.setattr(DataSourceRegistration, "register", recording)
+    sess = ImpalaSession(spark)
+    assert registered == []
+
+    avro = str(tmp_path / "t.avro")
+    write_avro(avro, [("id", "long")], [(1,), (2,)])
+    warc = str(tmp_path / "crawl")
+    write_warc_files([({"WARC-Type": "response"}, b"body")], warc)
+    try:
+        sess.sql(f"CREATE EXTERNAL TABLE first_use_avro STORED AS AVRO LOCATION '{avro}'")
+        sess.sql(f"CREATE EXTERNAL TABLE first_use_warc STORED AS WARC LOCATION '{warc}'")
+        assert sess.sql("SELECT sum(id) FROM first_use_avro").collect()[0][0] == 3
+        assert sess.sql("SELECT count(*) FROM first_use_warc").collect()[0][0] == 1
+    finally:
+        spark.catalog.dropTempView("first_use_avro")
+        spark.catalog.dropTempView("first_use_warc")
+    assert sorted(set(registered)) == ["pyavro", "pywarc"]
