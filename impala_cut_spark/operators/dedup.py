@@ -281,16 +281,14 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.2) -> 
     """EXACT near-duplicate pairs by word-n-gram Jaccard ≥ threshold —
     the count-based inverted-index similarity join (_pair_jaccard).
 
-    Stays the registered form after a measured bake-off against
-    PPJoin prefix filtering (ngram_jaccard_pairs_prefix below, built
-    for the round-2 verdict perf item): on this corpus (sf0.1: ~27k
+    Chosen over PPJoin prefix filtering by a measured bake-off (the
+    prefix form is in git history): on this corpus (sf0.1: ~27k
     distinct shingles over 5k docs, mean shingle df ≈ 10, ~52 shingles
     per doc) a τ=0.2 prefix keeps 81% of index rows and cuts candidate
     pairs only 1.13M → 0.79M, while swapping the cheap streaming
     pair-count for a per-candidate array_intersect verify — measured
     NET SLOWER end-to-end.  Prefix filtering pays at high thresholds /
-    long documents where the prefix is a small fraction of the doc;
-    both forms are exact and differential-tested identical.
+    long documents where the prefix is a small fraction of the doc.
     """
     # persist the HASHED index (doc_id, h): the md5 runs once in the
     # cached projection instead of once per consumer branch (the old
@@ -304,49 +302,6 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.2) -> 
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     return _pair_jaccard(sh, threshold)
-
-
-def ngram_jaccard_pairs_prefix(docs: DataFrame, n: int = 3, threshold: float = 0.2) -> DataFrame:
-    """PPJoin/AllPairs-style prefix-filtered exact Jaccard join
-    (Chaudhuri SSJoin / Xiao et al., public literature).
-
-    Candidate generation joins only each document's PREFIX — its
-    ⌈(1−τ)·|d|⌉+1 globally RAREST shingles (ascending document
-    frequency, shingle string as total-order tiebreak) — instead of
-    every shared shingle.  Exactness: if J(A,B) ≥ τ then
-    |A∩B| ≥ ⌈τ·|A|⌉, and the smallest (in the global order) common
-    shingle provably lies in BOTH prefixes, so no qualifying pair is
-    missed; candidates are then verified with exact Jaccard.
-
-    Wins when (1−τ)·|d| is small — high thresholds or long documents —
-    where the prefix join touches a tiny, rare-keyed slice of the
-    index.  At low τ on short docs the count-based form above is
-    faster (see its docstring for the measured numbers); the
-    equivalence of the two is pinned in tests/test_plans.py.
-    """
-    from pyspark.sql import Window
-
-    sh = shingles(docs, n).persist(StorageLevel.MEMORY_AND_DISK)
-    dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-    wdoc = Window.partitionBy("doc_id")
-    wrank = wdoc.orderBy("df", "shingle")
-    ranked = (
-        sh.join(dfreq, "shingle")
-        .withColumn("pos", F.row_number().over(wrank))
-        .withColumn("sz", F.count(F.lit(1)).over(wdoc))
-    )
-    prefix = ranked.filter(
-        F.col("pos") <= F.col("sz") - F.ceil(F.lit(threshold) * F.col("sz")) + 1
-    ).select("shingle", "doc_id")
-    a = prefix.select(F.col("shingle"), F.col("doc_id").alias("id_a"))
-    b = prefix.select(F.col("shingle"), F.col("doc_id").alias("id_b"))
-    cands = (
-        a.join(b, "shingle")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    return verify_pairs_jaccard(sh, cands, threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -364,6 +319,11 @@ MINHASH_PRIME = 2_147_483_647
 #: seed of the affine-family parameters — shared with the DuckDB oracle
 #: generator (plans/pipeline.py) so both engines use identical (a, b).
 MINHASH_SEED = 20240813
+
+
+#: Spark SQL text of md5_hash60, for projections built as SQL strings;
+#: the DuckDB replica is plans/_util.SQL_H60.
+MD5_HASH60_SQL = "cast(conv(substr(md5({x}), 1, 15), 16, 10) as bigint)"
 
 
 def md5_hash60(col: Column) -> Column:
@@ -519,13 +479,13 @@ def band_bucket_keys(
     # structure to the Column-built form — see _minhash_pre_aggs note
     # on construction cost)
     if band_key == "md5":
-        arms = ", ".join(
-            "cast(conv(substr(md5(concat_ws(',', {args})), 1, 15), 16, 10) as bigint)".format(
-                args=", ".join(
-                    [str(b)] + [f"mh_{b * band_size + r}" for r in range(band_size)]
-                )
-            )
+        cols = (
+            [str(b)] + [f"mh_{b * band_size + r}" for r in range(band_size)]
             for b in range(n_bands)
+        )
+        arms = ", ".join(
+            MD5_HASH60_SQL.format(x="concat_ws(',', " + ", ".join(c) + ")")
+            for c in cols
         )
     else:
         arms = ", ".join(
@@ -540,24 +500,10 @@ def band_bucket_keys(
     return sig.select("doc_id", F.posexplode(bands).alias("band", "bucket"))
 
 
-def verify_pairs_jaccard(sh: DataFrame, cands: DataFrame, threshold: float) -> DataFrame:
-    """Exact Jaccard for an explicit (id_a, id_b) candidate list.
-
-    Join each side to its per-doc shingle set and intersect the
-    arrays — the standard LSH verify step (same shape as Spark ML
-    MinHashLSH's approxSimilarityJoin verify). The candidate list is
-    the small side: Catalyst broadcasts it against the doc-set table;
-    at scale both joins degrade gracefully to shuffles on the id.
-    """
-    docsets = sh.groupBy("doc_id").agg(F.collect_set("shingle").alias("shset"))
-    return _verify_with_docsets(docsets, cands, threshold)
-
-
 def _verify_with_docsets(docsets: DataFrame, cands: DataFrame, threshold: float) -> DataFrame:
-    """The verify contract itself, over a prebuilt (doc_id, shset)
-    table — ONE definition of the round/threshold/intersection rule so
-    the LSH fused pipeline and the standalone verify can never
-    desynchronize."""
+    """Exact Jaccard for an explicit (id_a, id_b) candidate list over a
+    prebuilt (doc_id, shset) table — the LSH verify step: the
+    round/threshold/intersection rule."""
     a = docsets.select(F.col("doc_id").alias("id_a"), F.col("shset").alias("set_a"))
     b = docsets.select(F.col("doc_id").alias("id_b"), F.col("shset").alias("set_b"))
     inter = F.size(F.array_intersect("set_a", "set_b"))

@@ -3,7 +3,7 @@
 PDFs are the dominant long-form document format a training-data
 pipeline ingests after HTML, and this container ships no PDF library
 — so the extractor is built from the published spec, the same
-from-scratch precedent as the LZO/zstd/brotli/VP8 codecs.  Scope is
+from-scratch precedent as the LZO and VP8 codecs.  Scope is
 the TEXT path end-to-end:
 
 - object layer: the full COS grammar (dicts, arrays, names with

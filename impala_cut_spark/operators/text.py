@@ -425,6 +425,8 @@ def quality_classifier_score(
     """
     from pyspark.sql import functions as F
 
+    from impala_cut_spark.operators.dedup import MD5_HASH60_SQL
+
     w = weights if weights is not None else QC_WEIGHTS
     b = len(w)
 
@@ -440,7 +442,7 @@ def quality_classifier_score(
     w_sql = "array(" + ",".join(f"{int(x)}L" for x in w) + ")"
 
     def bw(x: str) -> str:
-        h = f"cast(conv(substr(md5({x}),1,15),16,10) as bigint)"
+        h = MD5_HASH60_SQL.format(x=x)
         return f"element_at({w_sql}, cast(({h} % {b} + 1) as int))"
 
     # NULL text scores as the empty document (n_tok=0, score=bias,

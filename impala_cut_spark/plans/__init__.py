@@ -31,322 +31,6 @@ from impala_cut_spark.plans import pipeline6  # noqa: E402,F401
 from impala_cut_spark.plans import perf  # noqa: E402,F401
 
 #: the first 50 registry entries — the driver's correctness window.
-#: Round-3 rotation (verdict Next-round #7): tpch_q15/q16 (near-dup
-#: shapes of q14/q13 — still oracle-checked below the window) ceded
-#: their slots to tpcds_q65 (two-agg join) and tpcds_q59
-#: (week-over-week self-join) for broader star-join shape coverage;
-#: tpch_q14 (join + conditional agg — shape-covered by q12/q19) ceded
-#: its slot to pipe_dedup_clusters (iterative connected-components,
-#: an operator family nothing else in the window exercises).  Second
-#: r3 rotation: tpch_q4 (EXISTS semi — q21/q22 keep exists/not-exists
-#: in-window), tpch_q12 (join + CASE agg — q8 and cov_agg_all cover)
-#: and tpch_q19 (OR-of-ANDs pushdown — cov_predicates_views covers)
-#: ceded their slots to three NEW pipeline families: decontamination,
-#: PII redaction, int8 quantization (pipeline2.py).  Every evicted
-#: query keeps its oracle below the window.
-#: Round-4 rotation (r3 verdict Next-round #5): tpch_q13 (left-outer
-#: count — shape-covered by cov_agg_all) and tpch_q17 (scalar avg
-#: subquery — q2/q11/q20 keep correlated-scalar shapes in-window)
-#: ceded their slots to tpcds_q8 (HAVING-subquery LEFT SEMI zip-zone
-#: prefix join) and tpcds_q46 (cross-dimension inequality join on the
-#: outer star) — two join shapes nothing else in the window exercises.
-#: Second r4 rotation: tpch_q20 (correlated scalar subquery — q2/q11
-#: keep that shape in-window) ceded its slot to pipe_embed_semdedup
-#: (cluster-bounded semantic dedup — a NEW operator family this round).
-#: Third r4 rotation: tpch_q22 (NOT EXISTS + scalar avg subquery —
-#: matched on 0 rows at sf0.01, the weakest evidence in the window;
-#: cov_join_all keeps anti-join and q21 keeps exists in-window) ceded
-#: its slot to cov_lzo_scan (the new LZO scanner — a format family
-#: with no other window row).
-#: Fourth r4 rotation — three NEW operator families take the slots of
-#: three item-dimension agg twins (every evicted query keeps its
-#: oracle below the window): tpcds_q42 and tpcds_q19 (both
-#: date⋈fact⋈item brand aggs, the shape tpcds_q3 keeps in-window) →
-#: pipe_ann_ivfpq (composed IVF-PQ search) and stream_neardup
-#: (stateful streaming semantic dedup gate); tpch_q10 (join+agg+topn,
-#: covered by q3/q18) → pipe_embed_pq (product-quantization encode).
-#: Round-5 rotation — three NEW operator families (substring-span
-#: dedup, hashed-linear quality classifier, epoch shuffle) take the
-#: slots of three shape-redundant rows: tpch_q8 (multi-join
-#: conditional-share agg — q5/q9 keep the multi-join agg shape,
-#: cov_agg_all the conditional agg), tpch_q11 (HAVING vs scalar
-#: subquery total — q2 keeps the scalar-subquery shape) and tpcds_q43
-#: (day-of-week pivot agg — tpcds_q59 keeps the weekly-pivot shape).
-#: Every evicted query keeps its oracle below the window.
-#: Second r5 rotation — two NEW operator families take the slots of
-#: two join+agg twins: tpch_q3 (join+agg+topn — q18 keeps join+agg,
-#: cov_topn keeps TakeOrderedAndProject) and tpch_q5 (multi-join
-#: snowflake agg — q9 keeps that exact shape) ceded their slots to
-#: pipe_decontaminate_neardup (cross-corpus MinHash-probe
-#: decontamination) and stream_drift (streaming training-mix drift
-#: monitor).  Every evicted query keeps its oracle below the window.
-#: Round-6 rotation (VERDICT r5 #4/#5) — witness the two never-seen
-#: TPC-DS shapes and the round-5 heavy-hitter family: tpcds_q68 (the
-#: second cross-dimension inequality join; q46 was its only in-window
-#: shape-twin) and tpcds_q27 (demographics-filter star agg; q34 is its
-#: below-window twin) and pipe_freq_shingles (Misra-Gries candidate
-#: pass + exact re-count — a two-pass sketch-then-verify shape unlike
-#: anything else in-window) take the slots of cov_fn_decimal (decimal
-#: arithmetic also exercised by cov_fn_condcast + goldens),
-#: pipe_dedup_simhash (pigeonhole-block near-dup, shape-covered by
-#: minhash LSH) and pipe_ann_topk (brute-force cosine top-k is the
-#: exact-rerank subset of in-window pipe_ann_ivf/pipe_ann_ivfpq).
-#: Every evicted query keeps its oracle below the window.
-#: Second r6 rotation — pipe_embed_neardup matched on 0 ROWS at
-#: sf0.01 every round (the synthetic embeddings have no near-dup
-#: pairs at that SF: zero-information evidence, and its LSH-bucketed
-#: cosine-join shape is held in-window by pipe_embed_semdedup) ceded
-#: its slot to pipe_bigram_ppl (bigram Stupid-Backoff LM scoring —
-#: count-table joins with a genuinely exercised backoff path, a NEW
-#: round-6 family; 500 rows at sf0.01). Oracle kept below the window.
-#: Round-7 rotation (VERDICT r6 #2) — witness four never-seen TPC rows
-#: by ceding their many-times-witnessed shape twins (every donor keeps
-#: its oracle below the window):
-#:   tpcds_q27 (witnessed r6) → tpcds_q34, its demographics-filter
-#:     star twin, owed since the r5 verdict;
-#:   tpcds_q3 (witnessed r1-r6) → tpcds_q52, the same
-#:     date⋈fact⋈item brand-agg shape (q55 stays its below-window twin);
-#:   tpcds_q46 (witnessed r4-r6) → tpcds_q96, the time/household-dim
-#:     filter count (q68 keeps the cross-dimension inequality shape
-#:     q46 shared with it);
-#:   tpch_q9 (witnessed r1-r6) → tpch_q7, the repo-added
-#:     shipping-nations query — q7 itself now holds the multi-join
-#:     CASE-agg shape in-window.
-#: Second r7 rotation — pipe_embed_quantize (int8 narrow-map encode;
-#: pipe_embed_pq keeps the narrow-map embedding-encode shape
-#: in-window) ceded its slot to pipe_dsir_weights (DSIR
-#: importance-resampling selection — conditional-sum bucket aggregate
-#: + broadcast scoring join + per-doc decimal-sum fold, a NEW round-7
-#: family with no in-window shape twin). Oracle kept below the window.
-#: Round-8 rotation (VERDICT r7 #1/#8) — witness the eight orphans the
-#: r7 verdict named; every donor keeps its oracle below the window:
-#:   tpcds_q52 (witnessed r7) → tpcds_q55, its brand-agg shape twin —
-#:     owed since the r5 verdict, the last never-witnessed TPC row;
-#:   tpch_q1 (witnessed r1-r7; grouped-agg shape kept in-window by
-#:     cov_agg_all, and q1 stays the driver entry() smoke query) →
-#:     pipe_bm25, a bench headliner with zero driver rows in 7 rounds;
-#:   tpch_q6 (witnessed r1-r7; filter+agg kept by
-#:     cov_predicates_views/cov_agg_all) → perf_web_revenue, the
-#:     perf_* adaptation with the most bench exposure — itself a
-#:     scan+filter+agg, so the ceded shape stays in-window;
-#:   pipe_ann_ivf (witnessed r4-r7) → pipe_ann_recall, which COMPOSES
-#:     the IVF search with its brute-force ground truth — a strict
-#:     superset of the ceded path;
-#:   cov_fn_math (witnessed r1-r7; math fns keep goldens + the
-#:     randomized DuckDB differential + three sibling fn window rows)
-#:     → pipe_ngram_novelty (NEW r7, below-window);
-#:   pipe_pii_redact (witnessed r3-r7; regex-transform shape exercised
-#:     in-window by pipe_text_all's quality regexes) →
-#:     pipe_dup_block_share (NEW r7, below-window);
-#:   pipe_epoch_shuffle (witnessed r5-r7; deterministic hash-rank
-#:     shape) → pipe_dedup_weights (NEW r7, below-window);
-#:   stream_events_hourly (witnessed r1-r7; event-time watermark agg
-#:     is a sub-shape of the newcomer and cov_events_daily keeps
-#:     event-time agg in-window) → stream_topk_trending, the first
-#:     driver row for the rank-overlay streaming family (r7 #8).
-#: Second r8 rotation — witness the two NEW round-8 families (crawl
-#: ingestion; both oracle-green at sf0.01 AND sf0.1 on first check):
-#:   pipe_decontaminate (witnessed r3-r7; the broadcast-benchmark
-#:     decontamination shape stays in-window via
-#:     pipe_decontaminate_neardup) → pipe_crawl_extract, the
-#:     end-to-end WARC→HTTP→HTML→text front-end — a container-parsing
-#:     + codegen-extraction family nothing else in the window holds;
-#:   pipe_embed_pq (witnessed r4-r7; the PQ encode is composed
-#:     IN-WINDOW by pipe_ann_ivfpq's ADC search path) →
-#:     pipe_warc_ingest, the ISO 28500 record parser (member-per-
-#:     record gzip resync, the crawl container itself).
-#: Every donor keeps its oracle below the window.
-#: Round-9 rotation (VERDICT r8 #1) — witness the six never-seen rows
-#: the r8 verdict named; every donor keeps its oracle below the window:
-#:   tpch_q2 (witnessed r1-r8, the longest-running TPC row) →
-#:     cov_seqfile_scan, the §2.1 SequenceFile scanner family
-#:     (hdfs-sequence-scanner.cc) with ZERO driver rows in 8 rounds —
-#:     q2's multi-join + correlated-subquery shapes stay in-window via
-#:     tpch_q7/q18/q21 and cov_predicates_views;
-#:   tpcds_q59 (witnessed r3-r8) → cov_rcfile_scan, the §2.1 RCFile
-#:     scanner family (hdfs-rcfile-scanner.cc), the other never-
-#:     witnessed format row — q59's date-dim star agg stays via
-#:     tpcds_q55/q65;
-#:   tpcds_q68 (witnessed r6-r8) → pipe_multimodal_codec, the NEW r8
-#:     codec round-trip conformance row — q68's demographics-star
-#:     shape stays via tpcds_q34 (same dims), its big-agg join via q65;
-#:   pipe_text_all (witnessed r2-r8; narrow-map text analysis stays
-#:     in-window via pipe_quality_classifier + pipe_crawl_extract's
-#:     regexp chain) → pipe_multimodal_video, the NEW r8 MP4 box-tree
-#:     metadata row;
-#:   stream_dedup (witnessed r2-r8; streaming keyed state stays via
-#:     stream_neardup, the strictly richer cross-batch LSH state gate)
-#:     → stream_join, the stream-stream join family's first driver row;
-#:   pipe_dedup_exact (witnessed r2-r8; the fingerprint groupBy shape
-#:     stays via pipe_dedup_weights — the same md5 fingerprint agg
-#:     feeding cluster sizes — and pipe_dedup_clusters' keep-first) →
-#:     perf_sort_stress, the bench headliner with no driver row
-#:     (full-width ORDER BY + LIMIT+OFFSET paging under spill).
-#: Second r9 rotation — witness the two rows born this round; every
-#: donor keeps its oracle below the window:
-#:   pipe_warc_ingest (witnessed r8; the in-plan WARC build+parse
-#:     round-trip) → cov_warc_scan, the strictly RICHER twin: the same
-#:     oracle but through real .warc/.warc.gz archive FILES on disk
-#:     scanned back via the pywarc DataSource (r8 verdict Missing #2's
-#:     production path — file mount, streaming member-chain parse);
-#:   pipe_multimodal_features (witnessed r3-r8; the multimodal
-#:     narrow-map shape stays in-window TWICE via
-#:     pipe_multimodal_codec and pipe_multimodal_video) →
-#:     pipe_multimodal_audio, the NEW r9 MPEG-audio frame-header
-#:     metadata row (ISO 11172-3 table arithmetic, ID3 skip, the
-#:     audio prune-before-decode stage).
-#: Third r9 rotation — three more never-witnessed rows in; donors all
-#: multi-round veterans with their shapes held elsewhere in-window:
-#:   stream_drift (witnessed r5-r8; custom stateful streaming stays
-#:     via stream_neardup's cross-batch LSH state) → stream_sliding,
-#:     the overlapping-window aggregation family's first driver row;
-#:   tpcds_q96 (witnessed r4-r8; time/household-dim count-star held by
-#:     tpcds_q34's demographics star and q55's brand star) →
-#:     perf_agg_types, the all-aggregate-function bench headliner with
-#:     no driver row;
-#:   cov_topn (witnessed r1-r8; §2.6 TakeOrderedAndProject stays
-#:     plan-pinned in the bench and the sort family keeps cov_sort_all
-#:     + perf_sort_stress in-window) → cov_like_regex, the §2.2
-#:     LIKE/RLIKE/REGEXP family (never driver-witnessed in 9 rounds).
-#: Round-10 rotation (VERDICT r9 #2) — witness the nine never-seen rows
-#: the r9 verdict named; every donor keeps its oracle below the window:
-#:   cov_fn_condcast (witnessed r1-r9, the merged conditional+cast fn
-#:     row) → cov_fn_conditional, its fine-grained §2.8 conditional
-#:     half (conditional-functions.cc) — the cast half enters via the
-#:     next swap, so BOTH constituent shapes stay in-window;
-#:   pipe_dedup_minhash (witnessed r2-r9; banded-LSH candidate shape
-#:     stays via pipe_decontaminate_neardup's MinHash probe and
-#:     pipe_embed_semdedup's LSH-bucketed join; its bench pin is
-#:     window-independent) → cov_fn_cast, the fine-grained §2.8 cast
-#:     matrix (CastExpr.java) with no driver row in 9 rounds;
-#:   cov_lzo_scan (witnessed r4-r9; the compressed-text §2.1 axis
-#:     stays in-window via the newcomer itself) → cov_text_compressed,
-#:     the round-9 snappy/lz4 compressed-text scan family
-#:     (hdfs-text-scanner.cc codec path), a format family born r9
-#:     with no driver row;
-#:   stream_topk_trending (witnessed r8-r9) → stream_enrich, the
-#:     stream-static broadcast-enrich family's first driver row;
-#:   stream_neardup (witnessed r4-r9; the custom keyed-state gate
-#:     shape stays via the newcomer — itself an
-#:     applyInPandasWithState gate) → stream_budget_gate, the
-#:     token-budget admission gate (never witnessed);
-#:   cov_events_daily (witnessed r1-r9; event-time daily agg shape
-#:     held by stream_sliding + cov_agg_all) → perf_string_like, the
-#:     targeted-perf string/LIKE scan adaptation (never witnessed);
-#:   perf_web_revenue (witnessed r8-r9; scan+filter+agg perf shape
-#:     stays via the newcomer) → perf_grep_scan, the hive-benchmark
-#:     grep adaptation (never witnessed);
-#:   tpcds_q55 (witnessed r8-r9) → tpcds_q53, the item-manufacturer
-#:     quarterly pivot twin (never witnessed; q55 keeps its oracle
-#:     below the window and q65 keeps the star-agg shape in-window);
-#:   tpcds_q34 (witnessed r7-r9) → tpcds_q89, the category rolling
-#:     pivot (never witnessed; q34's demographics-star shape held
-#:     below-window by q27/q68, in-window big-star by q65).
-#: Round-11 rotation (VERDICT r10 #2) — the Tier-B cohort from the
-#: COVERAGE.md tier map; every donor keeps its oracle below the window:
-#:   pipe_multimodal_codec (witnessed r9-r10) → pipe_multimodal_webp,
-#:     the r10 VP8L codec round-trip (tier rule #25 high-priority;
-#:     codec-conformance shape stays via pipe_multimodal_video/audio);
-#:   cov_text_compressed (witnessed r10) → cov_text_exact, the other
-#:     r10-born row: the §2.1 Impala-exact text semantics pair
-#:     (''≠NULL, escape-in-place) — the text-scan axis keeps a window
-#:     row either way, and the codec path keeps its oracle below;
-#:   tpch_q7 (witnessed r7-r10) → tpcds_q7, the never-witnessed
-#:     demographics-filter star agg (q7's multi-join CASE-agg shape
-#:     stays via tpch_q18/q21 + cov_agg_all);
-#:   cov_fn_timestamp (witnessed r1-r10) → tpcds_q63, the
-#:     item-manufacturer rolling pivot twin (never witnessed; fn
-#:     families keep cov_fn_conditional + cov_fn_cast in-window plus
-#:     goldens + the randomized DuckDB differential);
-#:   cov_fn_string (witnessed r1-r10) → pipe_asof, the as-of temporal
-#:     join — Tier-B #1: nothing in-window has ever held an as-of
-#:     shape (string fns keep goldens + differential + oracle below);
-#:   pipe_dedup_weights (witnessed r8-r10) → pipe_sample_stratified,
-#:     per-stratum deterministic sampling (Tier-B #2; the
-#:     md5-fingerprint agg shape stays via pipe_dedup_clusters'
-#:     keep-first and pipe_dup_block_share's fp aggregate);
-#:   pipe_crawl_extract (witnessed r8-r10) → pipe_split_hash, the
-#:     deterministic hash train/val/test split (Tier-B #2; the crawl
-#:     container family stays in-window via cov_warc_scan);
-#:   pipe_dsir_weights (witnessed r7-r10) → pipe_pack_greedy, sequence
-#:     packing first-fit bins (Tier-B #3; the broadcast-scoring shape
-#:     stays via pipe_quality_classifier, bucket aggs via cov_agg_all);
-#:   pipe_embed_semdedup (witnessed r4-r10) → pipe_chunking, the
-#:     overlap document chunker (Tier-B #4; the LSH-bucketed embedding
-#:     shape stays via pipe_ann_ivfpq + pipe_ann_recall).
-#: Second r11 rotation — witness the two rows BORN this round (the
-#: tier map's newborn-priority rule); donors keep oracles below:
-#:   pipe_multimodal_video (witnessed r9-r10) → pipe_multimodal_anim,
-#:     animated GIF/WebP demux + canvas composition (the multimodal
-#:     family keeps pipe_multimodal_webp + pipe_multimodal_audio
-#:     in-window; the MP4 box-tree walk keeps its oracle below);
-#:   pipe_ngram_novelty (witnessed r8-r10) → pipe_crawl_encoded, the
-#:     encoded-crawl wire path: chunked framing + gzip/deflate/br/zstd
-#:     content codings through decode_http_body (the first-seen
-#:     agg+join-back shape stays via pipe_dup_block_share; the crawl
-#:     container family keeps cov_warc_scan in-window).
-#: Round-12 rotation (VERDICT r11 Next #2) — the eleven r11-born rows
-#: that have never held a window slot (tier rule newborn priority);
-#: every donor keeps its oracle below the window:
-#:   tpcds_q7 (witnessed r11) → pipe_pdf_extract (q7's
-#:     demographics-filter star shape stays below via q27/q34 and
-#:     in-window big-star via tpcds_q65);
-#:   pipe_dedup_clusters (witnessed r3-r11, 9 rounds — the
-#:     longest-tenured pipeline row) → pipe_multimodal_heif (the
-#:     iterative connected-components shape keeps its oracle below;
-#:     dedup keeps jaccard/substring/incremental/decontaminate rows
-#:     in-window);
-#:   pipe_multimodal_anim (witnessed r11) → pipe_multimodal_exif
-#:     (multimodal keeps pipe_multimodal_webp's codec round-trip
-#:     in-window; the animation composition keeps its oracle below);
-#:   cov_warc_scan (witnessed r9-r11) → pipe_archive_ingest (the
-#:     container-ingest axis swaps warc→zip/tar; the crawl family
-#:     keeps pipe_crawl_encoded — itself a WARC parse + wire-coding
-#:     row — in-window);
-#:   tpcds_q53 (witnessed r10-r11) → pipe_license_detect (q63 keeps
-#:     the item-manufacturer pivot shape in-window — q53 is its twin);
-#:   pipe_multimodal_audio (witnessed r9-r11) → pipe_audio_containers
-#:     (the audio axis keeps a window row — the richer FLAC/OGG
-#:     container-metadata member; the MPEG frame-header row keeps its
-#:     oracle below);
-#:   cov_seqfile_scan (witnessed r9-r11) → pipe_epub_extract (the
-#:     legacy-format scan axis keeps cov_rcfile_scan in-window);
-#:   tpcds_q89 (witnessed r10-r11) → pipe_markdown_extract (the
-#:     rolling-pivot shape stays via tpcds_q63);
-#:   pipe_bm25 (witnessed r8-r11) → pipe_code_pipeline (the composed
-#:     archive→license→repo-aggregate row; BM25 keeps its oracle
-#:     below AND its bench-headliner pin, which is window-independent);
-#:   perf_grep_scan (witnessed r10-r11) → pipe_html_meta (the
-#:     scan+filter perf shape stays via perf_string_like);
-#:   pipe_sessions (witnessed r2-r11, 10 rounds) → pipe_subtitle_extract
-#:     (the batch sessionization gap logic keeps its oracle below;
-#:     session state enters the window via stream_sessions_stateful
-#:     in the second rotation).
-#: Second r12 rotation (VERDICT r11 Next #5) — drain the Tier-B top;
-#: donors are multi-round veterans with shapes held elsewhere:
-#:   stream_enrich (witnessed r10-r11) → stream_sessions_stateful
-#:     (applyInPandasWithState session gaps — Tier-B #18; the
-#:     stream-static broadcast-enrich shape is a sub-shape of
-#:     stream_join's join and keeps its oracle below);
-#:   tpcds_q8 (witnessed r4-r11) → tpcds_q73 (the never-witnessed
-#:     counts twin; q8's HAVING-subquery semi-join keeps its oracle
-#:     below and tpcds_q65 keeps the big star-agg in-window);
-#:   stream_join (witnessed r9-r11) → pipe_events_json (JSON event
-#:     parsing, Tier-B #5; streaming keeps sliding + budget_gate +
-#:     sessions_stateful in-window);
-#:   pipe_dup_block_share (witnessed r7-r11) → pipe_dedup_incremental
-#:     (new-batch-vs-corpus dedup, Tier-B #8; the agg+join-back
-#:     first-seen shape keeps its oracle below);
-#:   pipe_split_hash (witnessed r11) → pipe_mixture_sample (mixture
-#:     draws, Tier-B #4 — built on the same deterministic hash-rank
-#:     primitive split_hash witnessed this round);
-#:   pipe_chunking (witnessed r11) → pipe_seq_chunks (the
-#:     fixed-length token tiler, Tier-B #1 — a family-internal swap
-#:     with its overlap twin);
-#:   perf_agg_types (witnessed r9-r11) → pipe_corpus_stats
-#:     (full-corpus moments/percentiles, Tier-B #2 — the same
-#:     all-aggregate-functions shape over documents instead of
-#:     lineitem).
 DRIVER_WINDOW: list[str] = [
     # TPC-H (6 of 23 — q3/q4/q5/q8/q9/q10/q11/q12/q13/q14/q15/q16/
     # q17/q19/q20/q22 below the window, oracles intact)

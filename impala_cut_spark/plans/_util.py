@@ -61,7 +61,7 @@ def sql_davg(col: str, alias: str) -> str:
 
 
 #: DuckDB replica of the cross-engine 60-bit md5 string hash
-#: (operators/dedup.py md5_hash60 — Spark: conv(substr(md5(x),1,15),
-#: 16,10)). ONE definition: every oracle that must stay bit-identical
-#: to the engine's md5-derived hashes formats this template.
+#: (operators/dedup.py md5_hash60 and its SQL text MD5_HASH60_SQL).
+#: ONE definition: every oracle that must stay bit-identical to the
+#: engine's md5-derived hashes formats this template.
 SQL_H60 = "CAST('0x' || substr(md5({x}), 1, 15) AS BIGINT)"

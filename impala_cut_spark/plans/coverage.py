@@ -879,8 +879,8 @@ def cov_rcfile_scan(spark, sf_dir):
     """RCFile columnar scan (SURVEY §2.1; hdfs-rcfile-scanner.cc): the
     nation table round-trips through a two-file RCFile directory — one
     uncompressed, one SnappyCodec-compressed (the reference matrix's
-    snap/block axis; codec = from-scratch sources/snappy.py, validated
-    against Hadoop's own SnappyCodec in tests/test_snappy.py) — written
+    snap/block axis; Hadoop framing from sources/codecs.py, validated
+    against Hadoop's own SnappyCodec in tests/test_codecs.py) — written
     by sources/rcfile.py (old-style SEQ6 layout, the same the
     reference's Hive-written oldrcfile.rc fixture uses —
     tests/test_rcfile.py anchors the reader against THAT file, so the
@@ -945,16 +945,14 @@ SELECT n_nationkey, n_name, n_regionkey FROM nation
 def cov_text_compressed(spark, sf_dir):
     """Compressed delimited text (SURVEY §2.1 text/snap-block axis,
     round 9): the nation table splits across one Hadoop-framed
-    .snappy file and one .lz4 file — written by the from-scratch
-    codecs (sources/snappy.py, sources/lz4.py) — and Spark's text
-    reader resolves each BY EXTENSION through the Hadoop codec
-    factory, i.e. the JVM SnappyCodec/Lz4Codec decode our framed
+    .snappy file and one .lz4 file — framed by sources/codecs.py —
+    and Spark's text reader resolves each BY EXTENSION through the
+    Hadoop codec factory, i.e. the JVM SnappyCodec/Lz4Codec decode our framed
     bytes inside the real scan path.  The union must parse back
     value-identical to the parquet original."""
     import os
 
-    from impala_cut_spark.sources import lz4 as lz4mod
-    from impala_cut_spark.sources import snappy as snappymod
+    from impala_cut_spark.sources import codecs
     from impala_cut_spark.sources.sinks import read_text_table
 
     fixture = f"/tmp/impala_cut_spark_fixtures/ctext_nation_{os.path.basename(os.path.normpath(sf_dir))}"
@@ -965,13 +963,13 @@ def cov_text_compressed(spark, sf_dir):
             for r in t(spark, sf_dir, "nation").collect()
         ]
         half = len(rows) // 2
-        for name, comp, part in (
-            ("part-0.snappy", snappymod.hadoop_compress, rows[:half]),
-            ("part-1.lz4", lz4mod.hadoop_compress, rows[half:]),
+        for name, codec, part in (
+            ("part-0.snappy", "snappy", rows[:half]),
+            ("part-1.lz4", "lz4_raw", rows[half:]),
         ):
             lines = ("\n".join(f"{a},{b},{c}" for a, b, c in part) + "\n").encode()
             with open(os.path.join(fixture, name), "wb") as fh:
-                fh.write(comp(lines))
+                fh.write(codecs.hadoop_compress(codec, lines))
     return read_text_table(
         spark, fixture, "n_nationkey bigint, n_name string, n_regionkey bigint"
     )

@@ -926,16 +926,12 @@ def pipe_asof(spark, sf_dir):
 # corpus management: splits, sampling, distribution stats (operators/corpus.py)
 # ---------------------------------------------------------------------------
 
-#: DuckDB replica of md5_hash60 (operators/dedup.py) — the shared
-#: cross-engine 60-bit hash primitive.
-_SQL_H60 = SQL_H60
-
 
 @query(
     "pipe_split_hash",
     oracle=f"""
 WITH b AS (
-  SELECT doc_id, {_SQL_H60.format(x="cast(doc_id as varchar)")} % 10000 AS bucket
+  SELECT doc_id, {SQL_H60.format(x="cast(doc_id as varchar)")} % 10000 AS bucket
   FROM documents)
 SELECT doc_id, bucket,
        CASE WHEN bucket < 9800 THEN 'train'
@@ -963,7 +959,7 @@ def pipe_split_hash(spark, sf_dir):
     oracle=f"""
 SELECT doc_id, lang
 FROM documents
-WHERE {_SQL_H60.format(x="concat_ws('|', lang, cast(doc_id as varchar))")} % 10000 < 500
+WHERE {SQL_H60.format(x="concat_ws('|', lang, cast(doc_id as varchar))")} % 10000 < 500
 """,
 )
 def pipe_sample_stratified(spark, sf_dir):

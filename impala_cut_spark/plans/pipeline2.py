@@ -282,7 +282,6 @@ def pipe_text_repetition(spark, sf_dir):
 MIXTURE_RATES = {"src0": 1.0, "src1": 0.4}
 MIXTURE_DEFAULT = 0.05
 
-_SQL_H60 = SQL_H60
 
 
 @query(
@@ -290,7 +289,7 @@ _SQL_H60 = SQL_H60
     oracle=f"""
 SELECT doc_id, source
 FROM documents
-WHERE {_SQL_H60.format(x="concat_ws('|', source, cast(doc_id as varchar))")} % 10000
+WHERE {SQL_H60.format(x="concat_ws('|', source, cast(doc_id as varchar))")} % 10000
       < CASE source WHEN 'src0' THEN 10000 WHEN 'src1' THEN 4000 ELSE 500 END
 """,
 )
@@ -438,7 +437,6 @@ def _corpus_pipeline_oracle() -> str:
     from impala_cut_spark.operators.text import QUALITY_STOPWORDS
     from impala_cut_spark.plans.pipeline import _SQL_NORM, _sql_count_in
 
-    h60 = SQL_H60
     return f"""
 WITH ft AS (
   SELECT doc_id, source, text, {_SQL_TOKS} AS l, md5({_SQL_NORM}) AS fp
@@ -470,11 +468,11 @@ hits AS (SELECT c.doc_id, count(*) AS n_overlap
 clean AS (SELECT d.* FROM dd d LEFT JOIN hits h ON h.doc_id = d.doc_id
           WHERE d.source <> 'src0' AND coalesce(h.n_overlap, 0) < 5),
 mixed AS (SELECT * FROM clean
-          WHERE {h60.format(x="concat_ws('|', source, cast(doc_id as varchar))")} % 10000
+          WHERE {SQL_H60.format(x="concat_ws('|', source, cast(doc_id as varchar))")} % 10000
                 < CASE source WHEN 'src0' THEN 10000 WHEN 'src1' THEN 4000 ELSE 500 END)
 SELECT doc_id, source, quality,
-       CASE WHEN {h60.format(x="cast(doc_id as varchar)")} % 10000 < 9800 THEN 'train'
-            WHEN {h60.format(x="cast(doc_id as varchar)")} % 10000 < 9900 THEN 'val'
+       CASE WHEN {SQL_H60.format(x="cast(doc_id as varchar)")} % 10000 < 9800 THEN 'train'
+            WHEN {SQL_H60.format(x="cast(doc_id as varchar)")} % 10000 < 9900 THEN 'val'
             ELSE 'test' END AS split,
        cast(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) as int)
          AS n_bpe_tok

@@ -15,11 +15,10 @@ extension the brief asks for, graded alongside §2.
 from __future__ import annotations
 
 from impala_cut_spark.operators import corpus, dedup, text
-from impala_cut_spark.plans._util import t
+from impala_cut_spark.plans._util import SQL_H60, t
 from impala_cut_spark.plans.registry import query
 
 _SQL_TOKS = "list_filter(string_split(text, ' '), x -> x <> '')"
-_SQL_H60_TOK = "CAST('0x' || substr(md5({x}), 1, 15) AS BIGINT)"
 
 # ---------------------------------------------------------------------------
 # corpus-level exact substring dedup (duplicated k-token spans)
@@ -36,7 +35,7 @@ pos AS (SELECT doc_id, i AS p, array_to_string(ls[i:i+{SUBSTR_K - 1}], ' ') AS g
         FROM l, unnest(range(1, greatest(len(ls) - {SUBSTR_K - 1}, 0) + 1)) s(i)),
 dup AS (SELECT doc_id, p
         FROM (SELECT doc_id, p,
-                     count(*) OVER (PARTITION BY {_SQL_H60_TOK.format(x='g')})
+                     count(*) OVER (PARTITION BY {SQL_H60.format(x='g')})
                        AS occ
               FROM pos)
         WHERE occ > 1),
@@ -83,7 +82,6 @@ def pipe_dedup_substring(spark, sf_dir):
 
 _W = "[" + ", ".join(str(int(x)) for x in text.QC_WEIGHTS) + "]"
 _B = text.QC_BUCKETS
-_H = _SQL_H60_TOK
 
 
 @query(
@@ -93,9 +91,9 @@ WITH l AS (SELECT doc_id, {_SQL_TOKS} AS ls FROM documents)
 , s AS (SELECT doc_id, len(ls) AS n_tok,
        CAST({text.QC_BIAS}
        + coalesce(list_sum(list_transform(ls,
-           tok -> ({_W})[({_H.format(x='tok')} % {_B}) + 1])), 0)
+           tok -> ({_W})[({SQL_H60.format(x='tok')} % {_B}) + 1])), 0)
        + coalesce(list_sum(list_transform(range(1, greatest(len(ls) - 1, 0) + 1),
-           i -> ({_W})[({_H.format(x="ls[i] || ' ' || ls[i+1]")} % {_B}) + 1])), 0)
+           i -> ({_W})[({SQL_H60.format(x="ls[i] || ' ' || ls[i+1]")} % {_B}) + 1])), 0)
        AS BIGINT) AS score_micro
 FROM l)
 SELECT doc_id, n_tok, score_micro, score_micro > 0 AS keep FROM s
@@ -166,7 +164,6 @@ def _neardup_decon_oracle() -> str:
     params = dedup.affine_params(dedup.NUM_HASHES)
     bs = dedup.BAND_SIZE
     n_bands = dedup.NUM_HASHES // bs
-    h60 = _SQL_H60_TOK
     mh = ",\n            ".join(
         f"min(({a} * h + {b}) % {P}) AS mh_{i}" for i, (a, b) in enumerate(params)
     )
@@ -174,7 +171,7 @@ def _neardup_decon_oracle() -> str:
     def arms(src: str, idc: str) -> str:
         return "\n  UNION ALL\n  ".join(
             f"SELECT {idc}, "
-            + h60.format(
+            + SQL_H60.format(
                 x="concat_ws(','"
                 + f", {b}, "
                 + ", ".join(f"mh_{b * bs + r}" for r in range(bs))
@@ -192,8 +189,8 @@ sh AS (SELECT doc_id, source,
        FROM toks),
 bsh AS (SELECT doc_id AS bench_id, shingle FROM sh WHERE source = 'src0'),
 tsh AS (SELECT doc_id, shingle FROM sh WHERE source <> 'src0'),
-th AS (SELECT doc_id, ({h60.format(x='shingle')} % {P}) AS h FROM tsh),
-bh AS (SELECT bench_id, ({h60.format(x='shingle')} % {P}) AS h FROM bsh),
+th AS (SELECT doc_id, ({SQL_H60.format(x='shingle')} % {P}) AS h FROM tsh),
+bh AS (SELECT bench_id, ({SQL_H60.format(x='shingle')} % {P}) AS h FROM bsh),
 tsig AS (SELECT doc_id, {mh} FROM th GROUP BY doc_id),
 bsig AS (SELECT bench_id, {mh} FROM bh GROUP BY bench_id),
 tbands AS (
@@ -202,9 +199,9 @@ bbands AS (
   {arms('bsig', 'bench_id')}),
 cand AS (SELECT DISTINCT t.doc_id, b.bench_id
          FROM tbands t JOIN bbands b ON t.bkey = b.bkey),
-tds AS (SELECT doc_id, list({h60.format(x='shingle')}) AS s, count(*) AS sz
+tds AS (SELECT doc_id, list({SQL_H60.format(x='shingle')}) AS s, count(*) AS sz
         FROM tsh GROUP BY doc_id),
-bds AS (SELECT bench_id, list({h60.format(x='shingle')}) AS s, count(*) AS sz
+bds AS (SELECT bench_id, list({SQL_H60.format(x='shingle')}) AS s, count(*) AS sz
         FROM bsh GROUP BY bench_id),
 sc AS (SELECT c.doc_id,
               round(cast(len(list_intersect(x.s, y.s)) as double)

@@ -917,9 +917,8 @@ def pipe_multimodal_webp(spark, sf_dir):
 
 def _crawl_encoded_oracle() -> str:
     """Every wire coding the crawl path undoes is lossless (chunked
-    framing, gzip/deflate via zlib, br via the from-scratch RFC 7932
-    decoder, zstd via the from-scratch RFC 8878 decoder), so the
-    oracle replays the decoded body facts straight from the document
+    framing, gzip/deflate via zlib, br and zstd via sources/codecs.py),
+    so the oracle replays the decoded body facts straight from the document
     text — any defect in the chunk walker or any of the four codecs
     breaks the strict hash match."""
     return """
@@ -939,12 +938,12 @@ FROM documents
 def pipe_crawl_encoded(spark, sf_dir):
     """Round-11 END-TO-END encoded-crawl conformance: each document
     body is put ON THE WIRE the way real crawl captures store it —
-    content-coded by doc_id % 5 (identity / gzip / deflate / br via
-    the engine's own compressing RFC 7932 encoder in sources/brotli.py
-    / zstd via the store-mode sources/zstd.py encoder), chunked-transfer-framed for doc_id % 3
-    == 0, framed as an HTTP/1.1 200 response inside a (gzip-member for
-    odd doc_ids) WARC record — then ingested back through the REAL
-    pipeline: parse_warc → parse_http_response → decode_http_body.
+    content-coded by doc_id % 5 (identity / gzip / deflate / br / zstd,
+    the last two via sources/codecs.py), chunked-transfer-framed for
+    doc_id % 3 == 0, framed as an HTTP/1.1 200 response inside a
+    (gzip-member for odd doc_ids) WARC record — then ingested back
+    through the REAL pipeline: parse_warc → parse_http_response →
+    decode_http_body.
     Every coding is lossless, so the DuckDB oracle replays the decoded
     length and md5 straight from the document text; a defect in the
     chunk walker or ANY of the four content codecs breaks the strict
@@ -956,8 +955,7 @@ def pipe_crawl_encoded(spark, sf_dir):
 
     import pandas as pd
 
-    from impala_cut_spark.sources import brotli as brotli_mod
-    from impala_cut_spark.sources import zstd as zstd_mod
+    from impala_cut_spark.sources import codecs
     from impala_cut_spark.sources.warc import (
         build_warc,
         decode_http_body,
@@ -982,9 +980,9 @@ def pipe_crawl_encoded(spark, sf_dir):
                 elif arm == 2:
                     enc, body = "deflate", zlib_mod.compress(raw)
                 elif arm == 3:
-                    enc, body = "br", brotli_mod.compress(raw)
+                    enc, body = "br", codecs.compress("brotli", raw)
                 else:
-                    enc, body = "zstd", zstd_mod.compress(raw)
+                    enc, body = "zstd", codecs.compress("zstd", raw)
                 headers = b"HTTP/1.1 200 OK\r\nContent-Type: text/plain\r\n"
                 if enc != "identity":
                     headers += b"Content-Encoding: " + enc.encode() + b"\r\n"

@@ -13,12 +13,10 @@ Scope (the flat-table surface Impala-era avro tables actually use):
 records of primitives — null / boolean / int / long / float / double /
 bytes / string — plus nullable unions ``[T, "null"]`` and enums;
 ``null``, ``deflate``, ``snappy``, ``bzip2``, ``xz`` and
-``zstandard`` codecs (the spec's full list — zstd via the from-scratch
-RFC 8878 decoder in ``sources/zstd.py``)
-(snappy blocks carry a 4-byte big-endian CRC32 of the uncompressed
-bytes per the spec; the snappy codec itself is the from-scratch
-``sources/snappy.py``; bzip2/xz ride the stdlib). Nested
-records/arrays/maps raise a clear error.
+``zstandard`` codecs (the spec's full list: snappy and zstandard via
+``sources/codecs.py``, the rest via the stdlib; snappy blocks carry a
+4-byte big-endian CRC32 of the uncompressed bytes per the spec).
+Nested records/arrays/maps raise a clear error.
 
 Scale: the file list shards the scan (scan-range analogue); each
 partition streams blocks of one file — no driver involvement. A
@@ -37,6 +35,7 @@ import struct
 import zlib
 from collections.abc import Iterator, Sequence
 
+from impala_cut_spark.sources import codecs
 from impala_cut_spark.sources.external import ExternalSource, make_datasource
 
 _MAGIC = b"Obj\x01"
@@ -162,10 +161,8 @@ def read_avro_file(path: str) -> Iterator[tuple]:
             if codec == "deflate":
                 block = zlib.decompress(block, -15)
             elif codec == "snappy":
-                from impala_cut_spark.sources import snappy as _snappy
-
                 raw, crc = block[:-4], block[-4:]
-                block = _snappy.decompress(raw)
+                block = codecs.decompress("snappy", raw)
                 if struct.pack(">I", zlib.crc32(block) & 0xFFFFFFFF) != crc:
                     raise ValueError("avro snappy block CRC mismatch")
             elif codec == "bzip2":
@@ -177,9 +174,7 @@ def read_avro_file(path: str) -> Iterator[tuple]:
 
                 block = lzma.decompress(block)
             elif codec == "zstandard":
-                from impala_cut_spark.sources import zstd as _zstd
-
-                block = _zstd.decompress(block)
+                block = codecs.decompress("zstd", block)
             buf = io.BytesIO(block)
             for _ in range(count):
                 yield tuple(d(buf) for d in decoders)
@@ -338,9 +333,7 @@ def write_avro(path: str, fields: list[tuple[str, object]], rows: list[tuple],
         comp = zlib.compressobj(wbits=-15)
         data = comp.compress(data) + comp.flush()
     elif codec == "snappy":
-        from impala_cut_spark.sources import snappy as _snappy
-
-        data = _snappy.compress(data) + struct.pack(
+        data = codecs.compress("snappy", data) + struct.pack(
             ">I", zlib.crc32(data) & 0xFFFFFFFF
         )
     elif codec == "bzip2":
@@ -352,9 +345,7 @@ def write_avro(path: str, fields: list[tuple[str, object]], rows: list[tuple],
 
         data = lzma.compress(data, format=lzma.FORMAT_XZ)
     elif codec == "zstandard":
-        from impala_cut_spark.sources import zstd as _zstd
-
-        data = _zstd.compress(data)  # own-encoder frame (zstd.py docstring)
+        data = codecs.compress("zstd", data)
     elif codec != "null":
         raise ValueError(f"unsupported write codec {codec!r}")
     sync = b"\x00" * 8 + b"impala16"  # any 16 bytes

@@ -28,11 +28,11 @@ requested columns' buffers and SKIPS the rest (the scanner's selling
 point, hdfs-rcfile-scanner.h:214-218) — ``read_rcfile`` takes the
 projected column list for exactly this.
 
-Compression: uncompressed, zlib/gzip ("DefaultCodec"/"GzipCodec") and
-snappy ("SnappyCodec", Hadoop BlockCompressorStream framing over the
-from-scratch ``sources/snappy.py`` codec — the reference's scanner
-matrix carries a snap/block axis) key+column blocks; anything else
-raises the documented codec boundary.
+Compression: uncompressed, zlib/gzip ("DefaultCodec"/"GzipCodec"),
+bzip2 ("BZip2Codec"), and snappy/lz4 ("SnappyCodec"/"Lz4Codec", Hadoop
+BlockCompressorStream framing from ``sources/codecs.py`` — the
+reference's scanner matrix carries a snap/block axis) key+column
+blocks; anything else raises the documented codec boundary.
 
 Scale note: like the Avro reader, one scan range per FILE (the Python
 decoder does not split on sync markers mid-file); many files scan in
@@ -48,6 +48,8 @@ import zlib
 from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
+
+from impala_cut_spark.sources import codecs
 
 RCFILE_V1_MAGIC = b"RCF\x01"
 SEQ6_MAGIC = b"SEQ\x06"
@@ -133,6 +135,10 @@ def _rle_encode_lengths(lengths: list[int]) -> bytes:
     return bytes(out)
 
 
+def _block_codec(codec: str) -> str:
+    return "snappy" if "Snappy" in codec else "lz4_raw"
+
+
 def _decompress(codec: str | None, data: bytes, uncompressed_len: int) -> bytes:
     if codec is None:
         return data
@@ -140,16 +146,9 @@ def _decompress(codec: str | None, data: bytes, uncompressed_len: int) -> bytes:
         return zlib.decompress(data, wbits=31)
     if "Default" in codec:
         return zlib.decompress(data)
-    if "Snappy" in codec:
-        # SnappyCodec wraps buffers in Hadoop's BlockCompressorStream
-        # framing (from-scratch codec: sources/snappy.py)
-        from impala_cut_spark.sources import snappy as _snappy
-
-        return _snappy.hadoop_decompress(data)
-    if "Lz4" in codec:  # same framing over the from-scratch lz4 block
-        from impala_cut_spark.sources import lz4 as _lz4
-
-        return _lz4.hadoop_decompress(data)
+    if "Snappy" in codec or "Lz4" in codec:
+        # Hadoop's BlockCompressorStream framing around raw blocks
+        return codecs.hadoop_decompress(_block_codec(codec), data)
     if "BZip2" in codec:  # Hadoop BZip2Codec writes plain .bz2 streams
         import bz2
 
@@ -169,14 +168,8 @@ def _compress(codec: str | None, data: bytes) -> bytes:
         return co.compress(data) + co.flush()
     if "Default" in codec:
         return zlib.compress(data)
-    if "Snappy" in codec:
-        from impala_cut_spark.sources import snappy as _snappy
-
-        return _snappy.hadoop_compress(data)
-    if "Lz4" in codec:
-        from impala_cut_spark.sources import lz4 as _lz4
-
-        return _lz4.hadoop_compress(data)
+    if "Snappy" in codec or "Lz4" in codec:
+        return codecs.hadoop_compress(_block_codec(codec), data)
     if "BZip2" in codec:
         import bz2
 

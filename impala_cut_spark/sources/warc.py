@@ -290,8 +290,10 @@ MAX_DECODED_BODY = 256 * 1024 * 1024
 def _zlib_capped(body: bytes, wbits: int, cap: int) -> bytes:
     d = zlib.decompressobj(wbits=wbits)
     out = d.decompress(body, cap + 1)
-    if len(out) > cap or (d.unconsumed_tail and not d.eof):
+    if len(out) > cap:
         raise ValueError("http: decoded body exceeds allowed size")
+    if not d.eof:
+        raise ValueError("http: truncated compressed body")
     return out
 
 
@@ -302,11 +304,10 @@ def decode_http_body(
     ``Transfer-Encoding: chunked`` framing, then ``Content-Encoding``
     — every arm bounded by ``max_output`` (bomb guard) —
     — gzip/x-gzip and deflate (zlib, both the RFC 1950-wrapped and the
-    raw form real servers emit), br (the from-scratch RFC 7932 decoder
-    in sources/brotli.py), and zstd (the from-scratch RFC 8878 decoder
-    in sources/zstd.py).  Raw crawls store bodies exactly as received,
-    so this is the step between parse_http_response and any
-    content handling.  Returns (decoded bytes, the encoding undone —
+    raw form real servers emit), br and zstd (sources/codecs.py).  A
+    truncated body raises in every arm.  Raw crawls store bodies
+    exactly as received, so this is the step between
+    parse_http_response and any content handling.  Returns (decoded bytes, the encoding undone —
     'identity' when none).  Unknown encodings raise ValueError (the
     crawl operators degrade that to parse_ok=false)."""
     te = headers.get("transfer-encoding", "").lower()
@@ -322,14 +323,11 @@ def decode_http_body(
             return _zlib_capped(body, 15, max_output), enc  # RFC 1950 wrapped
         except zlib.error:
             return _zlib_capped(body, -15, max_output), enc  # raw-deflate servers
-    if enc == "br":
-        from impala_cut_spark.sources import brotli
+    if enc in ("br", "zstd"):
+        from impala_cut_spark.sources import codecs
 
-        return brotli.decompress(body, max_output=max_output), enc
-    if enc == "zstd":
-        from impala_cut_spark.sources import zstd
-
-        return zstd.decompress(body, max_output=max_output), enc
+        codec = "brotli" if enc == "br" else "zstd"
+        return codecs.decompress(codec, body, max_output=max_output), enc
     raise ValueError(f"http: unsupported content-encoding {enc!r}")
 
 

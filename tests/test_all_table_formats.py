@@ -191,19 +191,18 @@ def test_formats_cross_join_text_with_parquet(isession, frames, expected, tmp_pa
 @pytest.mark.parametrize("ext", ["snappy", "lz4"])
 def test_formats_compressed_text(isession, frames, expected, tmp_path_factory, ext):
     """The text/snap-block axis of the reference's format x codec grid:
-    delimited text compressed with the from-scratch snappy/lz4 codecs
-    in Hadoop framing, named .snappy/.lz4 — Spark's text reader
+    delimited text compressed with snappy/lz4 (sources/codecs.py) in
+    Hadoop framing, named .snappy/.lz4 — Spark's text reader
     resolves the codec BY EXTENSION through the Hadoop codec factory
     (i.e. the JVM SnappyCodec/Lz4Codec decodes OUR framed bytes in the
     real scan path, a second independent conformance check), and the
     scan result must match parquet exactly."""
-    from impala_cut_spark.sources import lz4 as lz4mod
-    from impala_cut_spark.sources import snappy as snappymod
+    from impala_cut_spark.sources import codecs
     from impala_cut_spark.sources.sinks import read_text_table
 
     base = tmp_path_factory.mktemp(f"fmt_text_{ext}")
     nation, region = frames
-    comp = {"snappy": snappymod.hadoop_compress, "lz4": lz4mod.hadoop_compress}[ext]
+    codec = {"snappy": "snappy", "lz4": "lz4_raw"}[ext]
     for name, df in (("nation", nation), ("region", region)):
         rows = df.collect()
         lines = (
@@ -212,7 +211,7 @@ def test_formats_compressed_text(isession, frames, expected, tmp_path_factory, e
         ).encode()
         d = base / name
         d.mkdir()
-        (d / f"part-0.{ext}").write_bytes(comp(lines))
+        (d / f"part-0.{ext}").write_bytes(codecs.hadoop_compress(codec, lines))
     read_text_table(
         isession.spark, str(base / "nation"),
         "n_nationkey int, n_name string, n_regionkey int",

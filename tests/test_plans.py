@@ -362,21 +362,6 @@ def test_jaccard_df_cap_prefilter_in_plan(spark, sf_dir):
     assert "LeftAnti" not in final
 
 
-def test_jaccard_prefix_filter_matches_count_form(spark, sf_dir):
-    """PPJoin prefix filtering is EXACT: the prefix-filtered form and
-    the count-based inverted-index form must produce identical pairs."""
-    from impala_cut_spark.operators.dedup import (
-        ngram_jaccard_pairs,
-        ngram_jaccard_pairs_prefix,
-    )
-    from impala_cut_spark.plans._util import t
-
-    docs = t(spark, sf_dir, "documents")
-    got = {tuple(r) for r in ngram_jaccard_pairs_prefix(docs).collect()}
-    want = {tuple(r) for r in ngram_jaccard_pairs(docs).collect()}
-    assert got == want and len(want) > 0
-
-
 def _load_plan_pins():
     import json
     from pathlib import Path

@@ -166,85 +166,12 @@ def main() -> None:
         encode_tiff(img, compression=5, predictor=2), decode_tiff, mp)
     add("tiff-packbits", "our PackBits, 1 MP",
         encode_tiff(img, compression=32773), decode_tiff, mp)
-    # snappy (round 9): container-codec throughput on realistic bytes —
-    # 4 MB of delimited-text rows, the RCFile/SeqFile/Avro payload shape
-    text_blob = (
-        b"\n".join(
-            b"%d,customer_name_%d,address line %d,%d.%02d,BUILDING comment"
-            % (i, i, i % 997, i % 5000, i % 100)
-            for i in range(40000)
-        )
-    )
-    from impala_cut_spark.sources import snappy as _snappy
-
-    comp = _snappy.compress(text_blob)
-    dt = _time(_snappy.decompress, comp, 3)
-    rows.append(
-        ("snappy", f"4 MB delimited text ({len(comp)/1e6:.1f} MB compressed)",
-         round(len(comp) / 1e3, 1), round(dt, 3),
-         round(len(text_blob) / 1e6 / dt, 3), "—")
-    )
-    ct = _time(_snappy.compress, text_blob, 3)
-    rows.append(
-        ("snappy-encode", "4 MB delimited text",
-         round(len(text_blob) / 1e3, 1), round(ct, 3),
-         round(len(text_blob) / 1e6 / ct, 3), "—")
-    )
-    from impala_cut_spark.sources import lz4 as _lz4
-    from impala_cut_spark.sources import zstd as _zstd
-
-    lcomp = _lz4.compress(text_blob)
-    ldt = _time(_lz4.decompress, lcomp, 3)
-    rows.append(
-        ("lz4", f"4 MB delimited text ({len(lcomp)/1e6:.1f} MB compressed)",
-         round(len(lcomp) / 1e3, 1), round(ldt, 3),
-         round(len(text_blob) / 1e6 / ldt, 3), "—")
-    )
-    # brotli decode on a REAL entropy-coded stream (round 11): use the
-    # container's libbrotlienc via ctypes only to PRODUCE the payload
-    # (encode side, same role as zstd-jni below); decode is the
-    # from-scratch RFC 7932 decoder
-    try:
-        import ctypes as _ct
-
-        from impala_cut_spark.sources import brotli as _brotli
-
-        _benc = _ct.CDLL("libbrotlienc.so.1")
-        _benc.BrotliEncoderCompress.restype = _ct.c_int
-        _bout = _ct.create_string_buffer(len(text_blob) + 2048)
-        _bn = _ct.c_size_t(len(_bout))
-        assert _benc.BrotliEncoderCompress(
-            9, 22, 0, len(text_blob), text_blob, _ct.byref(_bn), _bout)
-        bc = _bout.raw[: _bn.value]
-        bdt = _time(_brotli.decompress, bc, 3)
-        rows.append(
-            ("brotli", f"4 MB delimited text ({len(bc)/1e6:.1f} MB q9 stream)",
-             round(len(bc) / 1e3, 1), round(bdt, 3),
-             round(len(text_blob) / 1e6 / bdt, 3), "—")
-        )
-        bet = _time(_brotli.compress, text_blob, 3)
-        rows.append(
-            ("brotli-encode", "4 MB delimited text (level-1 own encoder)",
-             round(len(_brotli.compress(text_blob)) / 1e3, 1), round(bet, 3),
-             round(len(text_blob) / 1e6 / bet, 3), "—")
-        )
-    except Exception as e:  # pragma: no cover - env-dependent
-        print(f"  brotli row skipped: {e}")
-    # zstd decode on a REAL entropy-coded frame: use the JVM encoder
-    # via a temp SparkSession only if available; else skip the row
+    # the JVM rows need a temp SparkSession; skipped when none starts
     try:
         from pyspark.sql import SparkSession
 
         sp = (SparkSession.builder.master("local[2]")
               .config("spark.ui.enabled", "false").getOrCreate())
-        jz = sp._sc._jvm.com.github.luben.zstd.Zstd
-        zc = bytes(jz.compress(bytearray(text_blob), 3))
-        zdt = _time(lambda p: _zstd.decompress(p), zc, 3)
-        rows.append(
-            ("zstd", f"4 MB delimited text ({len(zc)/1e6:.1f} MB lvl-3 frame)",
-             round(len(zc) / 1e3, 1), round(zdt, 3),
-             round(len(text_blob) / 1e6 / zdt, 3), "—")
-        )
         # CCITT G4: a 1 MP dithered bilevel scan written by ImageIO
         # (fixture built by PNG → ImageIO.read → drawImage onto a
         # TYPE_BYTE_BINARY canvas: one byte-array transfer instead of
@@ -300,16 +227,14 @@ def main() -> None:
         )
         sp.stop()
     except Exception as e:  # pragma: no cover
-        print(f"  zstd row skipped: {e}")
+        print(f"  JVM rows skipped: {e}")
 
     # --- SCALE.md section -------------------------------------------------
     lines = [
         "## Codec throughput (tools/codec_bench.py)\n\n",
         "Single-core decode on realistic payloads (the ImageIO-validated\n"
         "kitten photo and real progressive files; 1 MP = the same photo\n"
-        "tiled to 1024x768 and re-encoded).  min-of-N wall per decode.\n"
-        "Snappy rows (r9) measure UNCOMPRESSED MB/s on 4 MB of delimited\n"
-        "text — the RCFile/SeqFile/Avro payload shape.\n\n",
+        "tiled to 1024x768 and re-encoded).  min-of-N wall per decode.\n\n",
         "| codec | payload | KB | decode s | MB/s/core | MP/s/core |\n"
         "|---|---|---|---|---|---|\n",
     ]
