@@ -12,6 +12,11 @@ Cross-engine determinism rules: plans/registry.py docstring.
 
 from __future__ import annotations
 
+import hashlib
+import importlib
+import os
+from pathlib import Path
+
 from pyspark.sql import functions as F
 
 from impala_cut_spark.dialect import rewrite
@@ -23,6 +28,15 @@ from impala_cut_spark.sources.catalog import register_views
 def _sql(spark, sf_dir, text):
     register_views(spark, sf_dir)
     return spark.sql(rewrite(text))
+
+
+def _fixture_path(kind: str, sf_dir: str, *writer_modules: str) -> str:
+    """The cached ``kind`` fixture of ``sf_dir``, keyed also by a short hash of
+    its writer modules' source, so a changed writer writes a fresh one."""
+    h = hashlib.sha256()
+    for m in writer_modules:
+        h.update(Path(importlib.import_module(f"impala_cut_spark.sources.{m}").__file__).read_bytes())
+    return f"/tmp/impala_cut_spark_fixtures/{kind}_{os.path.basename(os.path.normpath(sf_dir))}_{h.hexdigest()[:12]}"
 
 
 # ---------------------------------------------------------------------------
@@ -853,14 +867,12 @@ def cov_seqfile_scan(spark, sf_dir):
     table round-trips through a text-payload SequenceFile fixture
     (written once per sf_dir) and must parse back value-identical to
     the parquet original, which the oracle reads directly."""
-    import os
-
     from impala_cut_spark.sources.seqfile import (
         read_sequencefile_text,
         write_sequencefile_text,
     )
 
-    fixture = f"/tmp/impala_cut_spark_fixtures/seqfile_nation_{os.path.basename(os.path.normpath(sf_dir))}"
+    fixture = _fixture_path("seqfile_nation", sf_dir, "seqfile")
     if not os.path.exists(os.path.join(fixture, "_SUCCESS")):
         write_sequencefile_text(t(spark, sf_dir, "nation"), fixture)
     return read_sequencefile_text(
@@ -886,11 +898,9 @@ def cov_rcfile_scan(spark, sf_dir):
     tests/test_rcfile.py anchors the reader against THAT file, so the
     round-trip cannot be wrong-but-consistent) and must parse back
     value-identical to the parquet original."""
-    import os
-
     from impala_cut_spark.sources.rcfile import read_rcfile, write_rcfile
 
-    fixture = f"/tmp/impala_cut_spark_fixtures/rcfile_nation_{os.path.basename(os.path.normpath(sf_dir))}"
+    fixture = _fixture_path("rcfile_nation", sf_dir, "rcfile", "codecs")
     if not os.path.exists(os.path.join(fixture, "part-1.rc")):
         os.makedirs(fixture, exist_ok=True)
         rows = [
@@ -923,11 +933,9 @@ def cov_lzo_scan(spark, sf_dir):
     sources/lzo.py) and must parse back value-identical to the parquet
     original.  The scan is block-split via the hadoop-lzo style .index
     sidecar — same parallelism model as DeprecatedLzoTextInputFormat."""
-    import os
-
     from impala_cut_spark.sources.lzo import read_lzo_text, write_lzo_text
 
-    fixture = f"/tmp/impala_cut_spark_fixtures/lzo_nation_{os.path.basename(os.path.normpath(sf_dir))}.lzo"
+    fixture = _fixture_path("lzo_nation", sf_dir, "lzo") + ".lzo"
     if not os.path.exists(fixture):
         write_lzo_text(t(spark, sf_dir, "nation"), fixture)
     return read_lzo_text(
@@ -950,12 +958,10 @@ def cov_text_compressed(spark, sf_dir):
     Hadoop codec factory, i.e. the JVM SnappyCodec/Lz4Codec decode our framed
     bytes inside the real scan path.  The union must parse back
     value-identical to the parquet original."""
-    import os
-
     from impala_cut_spark.sources import codecs
     from impala_cut_spark.sources.sinks import read_text_table
 
-    fixture = f"/tmp/impala_cut_spark_fixtures/ctext_nation_{os.path.basename(os.path.normpath(sf_dir))}"
+    fixture = _fixture_path("ctext_nation", sf_dir, "codecs")
     if not os.path.exists(os.path.join(fixture, "part-1.lz4")):
         os.makedirs(fixture, exist_ok=True)
         rows = [
@@ -1003,11 +1009,9 @@ def cov_warc_scan(spark, sf_dir):
     pipe_warc_ingest, now proven through actual files.  The fixture
     bootstrap collect is test scaffolding (production mounts an
     existing crawl directory; nothing is collected at scan time)."""
-    import os
-
     from impala_cut_spark.sources.warc import read_warc, write_warc_files
 
-    fixture = f"/tmp/impala_cut_spark_fixtures/warc_docs_{os.path.basename(os.path.normpath(sf_dir))}"
+    fixture = _fixture_path("warc_docs", sf_dir, "warc")
     if not os.path.exists(os.path.join(fixture, "_SUCCESS")):
         rows = sorted(
             t(spark, sf_dir, "documents").select("doc_id", "text").collect(),
@@ -1080,8 +1084,6 @@ def cov_text_exact(spark, sf_dir):
     writer and scanner are whole-stage-codegen maps, no collect; the
     multiline arm is one scan unit per FILE — the same file-granular
     parallelism .gz text has (sinks.py docstring)."""
-    import os
-
     from pyspark.sql import functions as F
 
     from impala_cut_spark.sources.sinks import (
@@ -1089,10 +1091,7 @@ def cov_text_exact(spark, sf_dir):
         write_text_table_exact,
     )
 
-    fixture = (
-        "/tmp/impala_cut_spark_fixtures/"
-        f"etext_nation_{os.path.basename(os.path.normpath(sf_dir))}"
-    )
+    fixture = _fixture_path("etext_nation", sf_dir, "sinks")
     if not os.path.exists(os.path.join(fixture, "_SUCCESS")):
         nation = t(spark, sf_dir, "nation")
         df = nation.select(

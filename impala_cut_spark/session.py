@@ -19,9 +19,15 @@ Scale notes (100 TB / 1000-executor design intent):
 
 from __future__ import annotations
 
+import atexit
+import contextlib
+import hashlib
 import os
 import re
+import shutil
+import subprocess
 import threading
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -71,6 +77,11 @@ ENGINE_CONF: dict[str, str] = {
     # changes heaps under 32 GB: the default 32 GB driver already gets
     # 16 MB regions (heap / 2048).  Executors keep G1's choice (1 MB
     # regions at the default 1 GB heap) until a workload measures one.
+    # The heap also splits the driver's class-data-sharing archives
+    # (_class_data_sharing): from 32 GB on, the JVM drops compressed
+    # oops and maps the JDK's classes_nocoops.jsa as its base, so it
+    # rejects an archive dumped under a smaller heap, and vice versa.
+    # The default 32 GB driver and a 4 GB one each get their own.
     "spark.driver.extraJavaOptions": "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing"
     " -XX:G1HeapRegionSize=16m",
     "spark.executor.extraJavaOptions": "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing",
@@ -92,6 +103,130 @@ ENGINE_CONF: dict[str, str] = {
     "spark.sql.sources.partitionOverwriteMode": "dynamic",
 }
 
+#: Launch-time sources of class-path directories other than the conf dir.
+_CLASS_PATH_ENV = ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH", "SPARK_PREPEND_CLASSES")
+_CDS_FLAG = re.compile(r"-Xshare|SharedArchiveFile|ArchiveClassesAtExit|SharedClassListFile")
+_UNIT_SHIFT = {"k": 10, "": 20, "m": 20, "g": 30, "t": 40}  # Spark reads a bare number as MiB
+
+
+def _take_lock(lock: Path) -> bool:
+    """Create ``lock`` holding this PID; first reclaim it, and its
+    holder's unpromoted dump, if that PID is gone."""
+    for _ in range(2):
+        try:
+            fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o644)
+        except FileExistsError:
+            try:
+                os.kill(pid := int(lock.read_text()), 0)
+                return False  # its holder runs
+            except ProcessLookupError:
+                lock.with_suffix(f".{pid}.tmp").unlink(missing_ok=True)
+            except (ValueError, FileNotFoundError):  # being written or released
+                pass
+            lock.unlink(missing_ok=True)
+            continue
+        with os.fdopen(fd, "w") as f:
+            f.write(str(os.getpid()))
+        return True
+    return False
+
+
+def _cds_plan(conf: dict[str, str]) -> tuple[str, Path, Path | None] | None:
+    """(flag, archive path stem, dump file or None), or None when no
+    class-data-sharing flag applies to the JVM about to launch."""
+    from pyspark import SparkContext
+    from pyspark.find_spark_home import _find_spark_home
+
+    spark_home = _find_spark_home()
+    conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+    if (
+        SparkContext._gateway is not None
+        or "PYSPARK_GATEWAY_PORT" in os.environ
+        or _CDS_FLAG.search(conf.get("spark.driver.extraJavaOptions", ""))
+        or any(os.environ.get(k) for k in _CLASS_PATH_ENV)
+        or "spark.driver.extraClassPath" in conf
+        or "class-path" in os.environ.get("PYSPARK_SUBMIT_ARGS", "")
+        or any(not n.endswith(".template") for n in os.listdir(conf_dir))
+    ):
+        return None
+    java = shutil.which("java")
+    java_home = os.environ.get("JAVA_HOME") or (java and Path(java).resolve().parents[1])
+    heap = re.fullmatch(r"(\d+)([kmgt]?)b?", conf.get("spark.driver.memory", "1g").lower())
+    if not java_home or heap is None:
+        return None
+    jdk = os.stat(os.path.join(java_home, "lib", "modules"))
+    jars = sorted(
+        (e.name, e.stat().st_size, e.stat().st_mtime_ns)
+        for e in os.scandir(os.path.join(spark_home, "jars"))
+    )
+    coops = int(heap[1]) << _UNIT_SHIFT[heap[2]] < 32 << 30  # see ENGINE_CONF's driver options
+    key = repr((str(java_home), jdk.st_size, jdk.st_mtime_ns, jars, coops))
+    cds = Path(os.environ.get("XDG_CACHE_HOME") or Path.home() / ".cache") / "impala_cut_spark" / "cds"
+    (cds / "conf").mkdir(parents=True, exist_ok=True)
+    stem = cds / hashlib.sha256(key.encode()).hexdigest()[:16]
+    for jsa in cds.glob(f"{stem.name}.*.jsa"):  # named with its size when promoted
+        if jsa.name.split(".")[1] == str(jsa.stat().st_size):
+            return f"-XX:SharedArchiveFile={jsa}", stem, None
+        jsa.unlink(missing_ok=True)  # truncated: JDK 17 maps it unchecked and dies of SIGBUS
+    tmp = Path(f"{stem}.{os.getpid()}.tmp")
+    if _take_lock(stem.with_suffix(".lock")):
+        return f"-XX:ArchiveClassesAtExit={tmp}", stem, tmp
+    return None
+
+
+def _promote(proc, tmp: Path, stem: Path) -> None:
+    """At exit: end the gateway JVM, which writes ``tmp`` as it exits,
+    and publish the dump only if the JVM exited cleanly."""
+    try:
+        proc.stdin.close()  # the gateway exits on EOF
+        if proc.wait(timeout=300) == 0:
+            os.replace(tmp, f"{stem}.{tmp.stat().st_size}.jsa")
+    except (OSError, subprocess.TimeoutExpired):  # no dump written: nothing to publish
+        pass
+    tmp.unlink(missing_ok=True)
+    stem.with_suffix(".lock").unlink(missing_ok=True)
+
+
+@contextlib.contextmanager
+def _class_data_sharing(conf: dict[str, str]):
+    """Launch the driver JVM with a class-data-sharing archive (JEP 350):
+    loading Spark's classes is most of a cold driver's set-up.
+
+    Maps the promoted archive for this JDK, ``$SPARK_HOME/jars`` listing
+    and compressed-oops mode; else the one process holding the archive's
+    lock dumps it at JVM exit.  Yields the options to append to
+    ``spark.driver.extraJavaOptions``, or None when a gateway exists, the
+    caller set a CDS flag, or a directory other than a templates-only
+    conf dir can reach the class path (a JDK 17 dump of one is fatal).
+    For the launch only, the conf dir is swapped for an empty one: Spark
+    reads no template.  A JVM that rejects the archive starts as without.
+    """
+    try:
+        plan = _cds_plan(conf)
+    except OSError:  # no JDK, jars or writable cache: launch as without an archive
+        plan = None
+    if plan is None:
+        yield None
+        return
+    flag, stem, tmp = plan
+    saved = os.environ.get("SPARK_CONF_DIR")
+    os.environ["SPARK_CONF_DIR"] = str(stem.parent / "conf")
+    try:
+        yield f'"{flag}" -Xlog:cds*=off'
+    except BaseException:
+        if tmp is not None:
+            stem.with_suffix(".lock").unlink(missing_ok=True)
+        raise
+    finally:
+        if saved is None:
+            del os.environ["SPARK_CONF_DIR"]
+        else:
+            os.environ["SPARK_CONF_DIR"] = saved
+    if tmp is not None:
+        from pyspark import SparkContext
+
+        atexit.register(_promote, SparkContext._gateway.proc, tmp, stem)
+
 
 def build_session(
     app_name: str = "impala-cut-spark",
@@ -102,7 +237,9 @@ def build_session(
     """Create (or reuse) the engine SparkSession.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` for local work;
-    on a real cluster pass None and let spark-submit own it.
+    on a real cluster pass None and let spark-submit own it.  A new
+    driver JVM starts from the host's class-data-sharing archive
+    (``_class_data_sharing``).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None:
@@ -130,7 +267,6 @@ def build_session(
             # a -XX flag wins, so caller overrides still apply.
             v = f"{ENGINE_CONF[k]} {v}"
         conf[k] = v
-    builder = SparkSession.builder.appName(app_name).master(master).config(map=conf)
     from pyspark import SparkContext
 
     sc = SparkContext._active_spark_context
@@ -154,7 +290,10 @@ def build_session(
             f"these settings do not apply: {fixed}",
             stacklevel=2,
         )
-    spark = builder.getOrCreate()
+    with _class_data_sharing(conf) if sc is None else contextlib.nullcontext() as cds:
+        if cds:
+            conf["spark.driver.extraJavaOptions"] += f" {cds}"
+        spark = SparkSession.builder.appName(app_name).master(master).config(map=conf).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     from impala_cut_spark.functions.registry import register_all

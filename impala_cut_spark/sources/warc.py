@@ -288,13 +288,22 @@ MAX_DECODED_BODY = 256 * 1024 * 1024
 
 
 def _zlib_capped(body: bytes, wbits: int, cap: int) -> bytes:
-    d = zlib.decompressobj(wbits=wbits)
-    out = d.decompress(body, cap + 1)
-    if len(out) > cap:
-        raise ValueError("http: decoded body exceeds allowed size")
-    if not d.eof:
-        raise ValueError("http: truncated compressed body")
-    return out
+    """Inflate ``body`` into at most ``cap`` bytes.  Further gzip members
+    are decoded too (RFC 1952 allows several); other trailing bytes raise."""
+    out, n = [], 0
+    while True:
+        d = zlib.decompressobj(wbits=wbits)
+        out.append(d.decompress(body, cap + 1 - n))
+        n += len(out[-1])
+        if n > cap:
+            raise ValueError("http: decoded body exceeds allowed size")
+        if not d.eof:
+            raise ValueError("http: truncated compressed body")
+        body = d.unused_data
+        if not body:
+            return b"".join(out)
+        if wbits != 47 or not body.startswith(b"\x1f\x8b"):  # 47: the gzip arm
+            raise ValueError("http: trailing bytes after compressed body")
 
 
 def decode_http_body(
@@ -305,7 +314,8 @@ def decode_http_body(
     — every arm bounded by ``max_output`` (bomb guard) —
     — gzip/x-gzip and deflate (zlib, both the RFC 1950-wrapped and the
     raw form real servers emit), br and zstd (sources/codecs.py).  A
-    truncated body raises in every arm.  Raw crawls store bodies
+    truncated body, or bytes after its end, raise in every arm; a gzip
+    body may hold several members.  Raw crawls store bodies
     exactly as received, so this is the step between
     parse_http_response and any content handling.  Returns (decoded bytes, the encoding undone —
     'identity' when none).  Unknown encodings raise ValueError (the

@@ -210,12 +210,22 @@ def test_lz4_truncated_blocks_raise_clearly():
 _HOSTILE_PAYLOAD = b"the quick brown fox jumps over the lazy dog. " * 1500
 
 
+HTTP_ZLIB_ARMS = ["http-gzip", "http-deflate", "http-raw-deflate"]
+
+
 def _arms():
+    from impala_cut_spark.sources.warc import decode_http_body
+
     arms = {c: (codecs.compress(c, _HOSTILE_PAYLOAD),
                 lambda b, c=c: codecs.decompress(c, b)) for c in CODECS}
     for c in BLOCK_CODECS:
         arms[f"hadoop-{c}"] = (codecs.hadoop_compress(c, _HOSTILE_PAYLOAD),
                                lambda b, c=c: codecs.hadoop_decompress(c, b))
+    wrapped = zlib.compress(_HOSTILE_PAYLOAD)
+    for arm, enc, good in (("http-gzip", "gzip", _gzip(_HOSTILE_PAYLOAD)),
+                           ("http-deflate", "deflate", wrapped),
+                           ("http-raw-deflate", "deflate", wrapped[2:-4])):
+        arms[arm] = (good, lambda b, enc=enc: decode_http_body({"content-encoding": enc}, b)[0])
     return arms
 
 
@@ -234,12 +244,29 @@ def _hostile(arm: str, good: bytes) -> dict[str, bytes]:
 
 @pytest.mark.parametrize("case", ["cut-1", "cut-half", "cut-len-1",
                                   "trailing-garbage", "empty"])
-@pytest.mark.parametrize("arm", CODECS + [f"hadoop-{c}" for c in BLOCK_CODECS])
+@pytest.mark.parametrize("arm", CODECS + [f"hadoop-{c}" for c in BLOCK_CODECS] + HTTP_ZLIB_ARMS)
 def test_hostile_bytes_raise(arm, case):
     good, dec = _arms()[arm]
     assert dec(good) == _HOSTILE_PAYLOAD
     with pytest.raises(ValueError):
         dec(_hostile(arm, good)[case])
+
+
+def test_gzip_body_members_decode_within_one_cap():
+    """RFC 1952: a gzip body is a series of members.  They all decode,
+    under one max_output cap; bytes after the last one still raise, and
+    only the gzip arm reads on after a stream's end."""
+    from impala_cut_spark.sources.warc import decode_http_body
+
+    gz = {"content-encoding": "gzip"}
+    two = _gzip(_HOSTILE_PAYLOAD) + _gzip(b"tail")
+    assert decode_http_body(gz, two) == (_HOSTILE_PAYLOAD + b"tail", "gzip")
+    with pytest.raises(ValueError, match="exceeds allowed size"):
+        decode_http_body(gz, two, max_output=len(_HOSTILE_PAYLOAD) + 3)
+    with pytest.raises(ValueError, match="trailing bytes"):
+        decode_http_body(gz, two + b"garbage!")
+    with pytest.raises(ValueError, match="trailing bytes"):
+        decode_http_body({"content-encoding": "deflate"}, zlib.compress(b"a") + _gzip(b"b"))
 
 
 @pytest.mark.parametrize("codec", ["zstd", "brotli"])
