@@ -200,36 +200,6 @@ def top_ngrams(docs: DataFrame, n: int = 3, k: int = 25) -> DataFrame:
     )
 
 
-def curate_topk(
-    docs: DataFrame, k: int = 10, by: str = "source", text_col: str = "text"
-) -> DataFrame:
-    """Per-group quality curation: keep each group's top-k documents
-    by heuristic quality score (text.quality_score), doc_id as the
-    total-order tiebreak — the selection step of a quality-budgeted
-    data mix ("best k docs per source/domain").
-
-    One shuffle on the group key. The rn<=k predicate is a rank-limit
-    Spark plans as WindowGroupLimit (partial top-k BEFORE the
-    exchange, Spark 3.5+), so each map task forwards at most k rows
-    per group it sees — the window never sorts whole 100 TB groups.
-    Skewed sources therefore cost map-side heaps, not a giant sorted
-    partition.
-    """
-    from pyspark.sql import Window
-
-    from impala_cut_spark.operators.text import quality_score
-
-    scored = docs.select(
-        F.col(by), F.col("doc_id"), quality_score(F.col(text_col)).alias("quality")
-    )
-    w = Window.partitionBy(by).orderBy(F.desc("quality"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .orderBy(by, "rn")
-    )
-
-
 def misra_gries_candidates(stream: DataFrame, col: str, k: int) -> DataFrame:
     """Per-partition Misra-Gries frequency summaries over a 1-column
     string stream — the bounded-memory candidate pass of the exact

@@ -10,10 +10,10 @@ GIF87a/89a (from-scratch LZW, bit-exact vs ImageIO) — the same
 from-scratch precedent as the LZO codec.  Container/frame METADATA is
 real for MP4 (ISO 14496-12 box tree) and MPEG audio (ISO 11172-3
 frame headers) — the prune-before-decode stage.  Both WebP codings
-decode natively since r10 (operators/vp8.py, operators/vp8l.py) and
-animated GIF/WebP compose natively since r11 (decode_gif_frames /
-vp8l.decode_webp_anim).  Remaining codec formats (MP3/AAC sample
-data, video codecs) stay STUBBED:
+decode through the system's libwebp (operators/vp8l.py decode_webp,
+a runtime dependency), and animated GIF/WebP compose here
+(decode_gif_frames / vp8l.decode_webp_anim).  Remaining codec
+formats (MP3/AAC sample data, video codecs) stay STUBBED:
 ``decode_image`` raises NotImplementedError for those, and
 ``fake_features`` is the deterministic stand-in.  The
 Spark-side plumbing is identical either way: schema, Arrow batch
@@ -99,9 +99,7 @@ def decode_image(payload: bytes) -> "np.ndarray":
     Real for PPM (P6), uncompressed 24-bit BMP, PNG (stdlib zlib —
     _decode_png), baseline JPEG (operators/jpeg.py), GIF87a/89a
     (decode_gif), baseline TIFF (operators/tiff.py) and BOTH WebP
-    codings (round 10, libwebp-validated: lossless VP8L in
-    operators/vp8l.py; lossy VP8 key frames in operators/vp8.py, YUV
-    byte-exact, RGB via the documented vp8_to_rgb conversion).
+    codings (libwebp through operators/vp8l.py decode_webp).
     Remaining boundaries (animations, inter frames) raise."""
     if payload[:2] == b"P6":
         return _decode_ppm(payload)
@@ -122,216 +120,12 @@ def decode_image(payload: bytes) -> "np.ndarray":
     if payload[:4] == b"RIFF" and payload[8:12] == b"WEBP":
         from impala_cut_spark.operators.vp8l import decode_webp
 
-        # both codings decode natively (round 10, libwebp-validated)
         return decode_webp(payload)[..., :3].copy()
     raise NotImplementedError(
         "image decode stub for remaining codec formats: "
         "install pillow and replace with PIL.Image.open (PPM/BMP/PNG/GIF/"
         "TIFF, baseline JPEG and both WEBP codings decode natively here)"
     )
-
-
-# -- Alternate decode kernel: JDK ImageIO (r9 verdict #3) --------------------
-#
-# The mapInPandas batch functions are the documented swap-in seam for a
-# native decoder; this proves the seam with a kernel that is actually
-# in-container: javax.imageio via py4j.  On the driver it reuses the
-# SparkContext gateway; inside an executor Python worker (no gateway)
-# it lazily launches ONE sidecar JVM per worker process and reuses it
-# across batches — the same one-helper-per-worker shape a
-# libjpeg-turbo/ffmpeg sidecar would take at 100 TB.  Pixel transfer is
-# a single byte array (JVM re-encodes to 24-bit BMP, lossless), never
-# a per-pixel py4j call.
-
-_IMAGEIO_GATEWAY = None
-
-
-def _imageio_jvm():
-    global _IMAGEIO_GATEWAY
-    if _IMAGEIO_GATEWAY is None:
-        try:
-            from pyspark import SparkContext
-
-            sc = SparkContext._active_spark_context
-        except Exception:  # pragma: no cover - pyspark always importable here
-            sc = None
-        if sc is not None and sc._gateway is not None:
-            _IMAGEIO_GATEWAY = sc._gateway
-        else:
-            from py4j.java_gateway import (
-                GatewayParameters,
-                JavaGateway,
-                launch_gateway,
-            )
-
-            port = launch_gateway(
-                die_on_exit=True, javaopts=["-Djava.awt.headless=true"]
-            )
-            _IMAGEIO_GATEWAY = JavaGateway(
-                gateway_parameters=GatewayParameters(port=port, auto_convert=True)
-            )
-    return _IMAGEIO_GATEWAY.jvm
-
-
-def imageio_decode(payload: bytes) -> "np.ndarray":
-    """decode_image twin backed by JDK ImageIO: read → draw onto a
-    TYPE_3BYTE_BGR canvas (normalizes palette/gray/alpha variants) →
-    re-encode as 24-bit BMP (lossless) → one byte-array transfer →
-    _decode_bmp.  Decode failures degrade exactly like the pure
-    kernel's (`parse_ok=false` contract): raised as NotImplementedError
-    /ValueError, both in _DECODE_ERRORS."""
-    jvm = _imageio_jvm()
-    try:
-        bi = jvm.javax.imageio.ImageIO.read(
-            jvm.java.io.ByteArrayInputStream(bytearray(payload))
-        )
-    except Exception as e:  # Py4JJavaError on corrupt container bytes
-        raise ValueError(f"imageio: unreadable payload: {e}") from None
-    if bi is None:
-        raise NotImplementedError("imageio: no registered reader for payload")
-    rgb = jvm.java.awt.image.BufferedImage(bi.getWidth(), bi.getHeight(), 5)
-    g = rgb.createGraphics()
-    g.drawImage(bi, 0, 0, None)
-    g.dispose()
-    baos = jvm.java.io.ByteArrayOutputStream()
-    if not jvm.javax.imageio.ImageIO.write(rgb, "bmp", baos):
-        raise ValueError("imageio: BMP transfer encode failed")
-    return _decode_bmp(bytes(baos.toByteArray()))
-
-
-_LIBWEBP = None
-
-
-def _libwebp():
-    """Lazily dlopen the container's own libwebp (the library the
-    conformance tests already validate the pure decoders against);
-    one handle per executor Python worker."""
-    global _LIBWEBP
-    if _LIBWEBP is None:
-        import ctypes
-
-        lw = ctypes.CDLL("libwebp.so.7")
-        lw.WebPDecodeRGBA.restype = ctypes.POINTER(ctypes.c_ubyte)
-        lw.WebPDecodeRGBA.argtypes = [
-            ctypes.c_char_p,
-            ctypes.c_size_t,
-            ctypes.POINTER(ctypes.c_int),
-            ctypes.POINTER(ctypes.c_int),
-        ]
-        lw.WebPFree.argtypes = [ctypes.c_void_p]
-        lw.WebPFree.restype = None
-        _LIBWEBP = lw
-    return _LIBWEBP
-
-
-def webp_native_decode(payload: bytes) -> "np.ndarray":
-    """decode_image twin with RIFF/WEBP payloads routed to libwebp
-    (r10 verdict Missing #2: JDK ImageIO cannot read WebP, leaving the
-    slowest pure-Python kernel — lossy VP8 — without a native swap-in).
-    Both codings are pixel-identical to the pure kernel by the vp8/vp8l
-    conformance suites (YUV and RGB byte-exact vs WebPDecodeRGBA), so
-    kernel choice cannot change query results.  Every other format
-    falls through to the pure decoder; a payload libwebp rejects
-    degrades through the same _DECODE_ERRORS contract."""
-    if payload[:4] == b"RIFF" and payload[8:12] == b"WEBP":
-        import ctypes
-
-        lw = _libwebp()
-        w, h = ctypes.c_int(), ctypes.c_int()
-        ptr = lw.WebPDecodeRGBA(
-            payload, len(payload), ctypes.byref(w), ctypes.byref(h)
-        )
-        if not ptr:
-            raise ValueError("webp-native: libwebp rejected payload")
-        try:
-            arr = np.ctypeslib.as_array(ptr, shape=(h.value, w.value, 4))
-            rgb = np.ascontiguousarray(arr[..., :3])
-        finally:
-            lw.WebPFree(ctypes.cast(ptr, ctypes.c_void_p))
-        return rgb
-    return decode_image(payload)
-
-
-#: the pluggable decode kernels; plan builders read the selection from
-#: $SPARK_GRAFT_IMAGE_KERNEL at PLAN TIME (driver) and close over the
-#: NAME, so workers resolve the callable locally and a test/operator
-#: can flip kernels without restarting the session.
-IMAGE_KERNELS: dict = {
-    "pure": decode_image,
-    "imageio": imageio_decode,
-    "webp-native": webp_native_decode,
-}
-
-
-def image_kernel_name() -> str:
-    import os
-
-    name = os.environ.get("SPARK_GRAFT_IMAGE_KERNEL", "pure")
-    if name not in IMAGE_KERNELS:
-        raise ValueError(
-            f"SPARK_GRAFT_IMAGE_KERNEL={name!r}: known kernels "
-            f"{sorted(IMAGE_KERNELS)}"
-        )
-    return name
-
-
-def _libwebp_rgba(payload: bytes) -> "np.ndarray":
-    """WebPDecodeRGBA keeping all four channels — the per-frame
-    decoder for the native animation kernel (the still kernel's
-    webp_native_decode drops alpha per decode_image's RGB contract;
-    animation composition needs it)."""
-    import ctypes
-
-    lw = _libwebp()
-    w, h = ctypes.c_int(), ctypes.c_int()
-    ptr = lw.WebPDecodeRGBA(payload, len(payload), ctypes.byref(w),
-                            ctypes.byref(h))
-    if not ptr:
-        raise ValueError("webp-native: libwebp rejected payload")
-    try:
-        arr = np.ctypeslib.as_array(ptr, shape=(h.value, w.value, 4))
-        rgba = arr.copy()
-    finally:
-        lw.WebPFree(ctypes.cast(ptr, ctypes.c_void_p))
-    return rgba
-
-
-def webp_anim_native_decode(payload: bytes) -> list:
-    """decode_webp_anim twin with the per-FRAME pixel decode routed to
-    libwebp (r11 verdict Missing #2: bulk animated-WebP decode is the
-    second-heaviest new family and had no native arm).  This container
-    ships libwebp.so.7 WITHOUT the demux library (no WebPAnimDecoder
-    symbol), so the cheap pure ANMF chunk walk and the numpy
-    blend/dispose composition stay shared with the pure kernel and
-    only the per-pixel VP8/VP8L frame decode — where the time goes —
-    swaps to WebPDecodeRGBA on the rewrapped sub-bitstream.  Frames
-    are byte-identical to the pure kernel's (vp8/vp8l conformance
-    suites + test_multimodal parity), so kernel choice cannot change
-    query results."""
-    from impala_cut_spark.operators.vp8l import decode_webp_anim
-
-    return decode_webp_anim(payload, frame_decode=_libwebp_rgba)
-
-
-#: pluggable animation kernels, selected like IMAGE_KERNELS at PLAN
-#: time via $SPARK_GRAFT_ANIM_KERNEL (name closed over, callable
-#: resolved worker-side).  The GIF branch is pure in both kernels.
-ANIM_KERNELS: dict = {
-    "pure": None,  # resolved lazily to vp8l.decode_webp_anim
-    "webp-native": webp_anim_native_decode,
-}
-
-
-def anim_kernel_name() -> str:
-    import os
-
-    name = os.environ.get("SPARK_GRAFT_ANIM_KERNEL", "pure")
-    if name not in ANIM_KERNELS:
-        raise ValueError(
-            f"SPARK_GRAFT_ANIM_KERNEL={name!r}: known kernels "
-            f"{sorted(ANIM_KERNELS)}"
-        )
-    return name
 
 
 def _decode_ppm(payload: bytes) -> np.ndarray:
@@ -1180,18 +974,15 @@ def fake_features(payload: bytes, dim: int = FEATURE_DIM) -> np.ndarray:
 def extract_features(assets: DataFrame) -> DataFrame:
     """mapInPandas feature extraction — the production shape: Arrow
     batches in, one feature row per asset out, no driver involvement.
-    The image-decode kernel is pluggable ($SPARK_GRAFT_IMAGE_KERNEL,
-    resolved at plan time on the driver, name closed over into the
-    batch function) — the native-decoder swap-in seam, proven by the
-    'imageio' kernel."""
-    kernel_name = image_kernel_name()
+    A missing libwebp (OSError) is not a decode error: it fails the
+    query rather than degrading every WebP to byte features."""
 
     def _one(p: bytes | None) -> np.ndarray:
         import struct
 
         p = p if p is not None else b""
         try:
-            return image_features(IMAGE_KERNELS[kernel_name](bytes(p)))
+            return image_features(decode_image(bytes(p)))
         except _DECODE_ERRORS:
             pass
         try:
@@ -2073,23 +1864,17 @@ def animation_frames(
     not stride slicing (frame_sample's stub contract stays for raw
     streams): GIF89a animations through decode_gif_frames (LZW +
     GCE disposal/transparency composition) and animated WebP through
-    decode_webp_anim (VP8X/ANIM/ANMF demux over the native VP8/VP8L
-    frame decoders, blend/dispose composition).  ``ts_ms`` is the
-    frame's start time (cumulative prior durations; GIF centiseconds
-    normalized to ms), ``mean_rgba`` the mean over the full RGBA
-    canvas.  The WebP frame-decode kernel is pluggable
-    ($SPARK_GRAFT_ANIM_KERNEL, resolved at plan time, name closed
-    over — same seam as extract_features' still kernel; 'webp-native'
-    routes per-frame pixel decode through libwebp).  Malformed
+    decode_webp_anim (VP8X/ANIM/ANMF demux, libwebp frame decode,
+    blend/dispose composition).  ``ts_ms`` is the frame's start time
+    (cumulative prior durations; GIF centiseconds normalized to ms),
+    ``mean_rgba`` the mean over the full RGBA canvas.  Malformed
     payloads degrade to ONE parse_ok=false row, never a job failure.
     Scale: Arrow-batched narrow map, no shuffle; one animation
     resident per iteration."""
-    kernel_name = anim_kernel_name()
 
     def _frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from impala_cut_spark.operators.vp8l import decode_webp_anim
 
-        anim_decode = ANIM_KERNELS[kernel_name] or decode_webp_anim
         for pdf in batches:
             rows = []
             for aid, p in zip(pdf[id_col], pdf[payload_col]):
@@ -2100,7 +1885,7 @@ def animation_frames(
                         frames = [(c, d * 10) for c, d in decode_gif_frames(raw)]
                     elif raw[:4] == b"RIFF" and raw[8:12] == b"WEBP":
                         codec = "webp"
-                        frames = anim_decode(raw)
+                        frames = decode_webp_anim(raw)
                     else:
                         raise ValueError("not an animation container")
                     ts = 0

@@ -1,22 +1,26 @@
-"""WebP lossless (VP8L) — from-scratch decoder + minimal encoder.
+"""WebP: one decoder binding, a minimal lossless encoder, and the
+animated-WebP container layer.
 
-Round 10: closes the "WEBP" arm of decode_image's stub boundary for
-the LOSSLESS coding (the lossy VP8 arm stays a documented stub — it
-is a full video-intra codec).  Everything here derives from the
-public "WebP Lossless Bitstream Specification" (the format shipped in
-RFC 9649's container): LSB-first bit stream, canonical prefix codes
-with the DEFLATE-style code-length code, meta prefix (entropy) images,
-a 2D-locality LZ77 distance mapping, a color cache, and the four
-transforms (predictor / color / subtract-green / color-indexing with
-pixel bundling).
+Decode goes through the system's libwebp (``libwebp.so.7``, a runtime
+dependency of the engine, loaded lazily once per process by
+``_libwebp``): ``decode_webp`` hands a whole RIFF/WEBP still (lossy VP8
+with or without an ALPH plane, or lossless VP8L) to ``WebPDecodeRGBA``.
+libwebp answers a payload it rejects (truncated, corrupt, animated,
+oversized) with NULL, which surfaces here as ValueError and which the
+multimodal operators degrade to ``parse_ok=false``.  A missing
+library is an OSError and is NOT degraded, so a host without libwebp
+fails the query instead of silently turning every WebP into byte
+features.
 
-Conformance anchors (tests/test_vp8l.py): the container's own
-libwebp.so.7 via ctypes encodes arbitrary images losslessly and this
-decoder must reproduce them byte-exactly (transforms, LZ77, cache and
-meta-huffman paths are all exercised by the real encoder); our
-encoder's output is decoded by libwebp byte-exactly in the other
-direction; and the REAL lossless-coded ALPH alpha plane of CPython's
-test `python.webp` must match libwebp's own alpha output.
+The encoder side derives from the public "WebP Lossless Bitstream
+Specification" (RFC 9649): LSB-first bit stream, canonical prefix codes
+with the DEFLATE-style code-length code, and the color-indexing
+transform with pixel bundling.  It builds the registry's WebP fixtures;
+libwebp decodes its output byte-exactly (tests/test_vp8l.py).
+
+The installed libwebp has no demux library (no WebPAnimDecoder), so the
+ANMF chunk walk and the canvas composition of animated files stay in
+Python below, with each frame decoded by ``decode_webp``.
 
 Reference parity note: the reference engine has no image codecs at all
 (multimodal ops are this repo's training-pipeline extension; see
@@ -28,50 +32,58 @@ from __future__ import annotations
 import numpy as np
 
 __all__ = [
-    "decode_vp8l",
-    "decode_vp8l_alpha",
+    "decode_webp",
+    "decode_webp_anim",
     "encode_vp8l",
+    "encode_webp_anim",
+    "encode_webp_lossless",
+    "webp_frames",
 ]
 
 
-# -- bit I/O (LSB-first, like DEFLATE) ---------------------------------------
+# -- decode: libwebp ------------------------------------------------------------
+
+_LIBWEBP = None
 
 
-class _LsbReader:
-    __slots__ = ("d", "i", "acc", "nbits")
+def _libwebp():
+    """The process's libwebp handle, dlopened on first use.  OSError
+    when the library is absent."""
+    global _LIBWEBP
+    if _LIBWEBP is None:
+        import ctypes
 
-    def __init__(self, data: bytes) -> None:
-        self.d = data
-        self.i = 0
-        self.acc = 0
-        self.nbits = 0
+        lw = ctypes.CDLL("libwebp.so.7")
+        lw.WebPDecodeRGBA.restype = ctypes.POINTER(ctypes.c_ubyte)
+        lw.WebPDecodeRGBA.argtypes = [
+            ctypes.c_char_p,
+            ctypes.c_size_t,
+            ctypes.POINTER(ctypes.c_int),
+            ctypes.POINTER(ctypes.c_int),
+        ]
+        lw.WebPFree.argtypes = [ctypes.c_void_p]
+        lw.WebPFree.restype = None
+        _LIBWEBP = lw
+    return _LIBWEBP
 
-    def read(self, n: int) -> int:
-        while self.nbits < n:
-            b = self.d[self.i] if self.i < len(self.d) else 0
-            if self.i >= len(self.d) + 8:  # way past the end: corrupt
-                raise ValueError("vp8l: bitstream exhausted")
-            self.i += 1
-            self.acc |= b << self.nbits
-            self.nbits += 8
-        v = self.acc & ((1 << n) - 1)
-        self.acc >>= n
-        self.nbits -= n
-        return v
 
-    def peek8(self) -> int:
-        while self.nbits < 8:
-            b = self.d[self.i] if self.i < len(self.d) else 0
-            if self.i >= len(self.d) + 8:
-                raise ValueError("vp8l: bitstream exhausted")
-            self.i += 1
-            self.acc |= b << self.nbits
-            self.nbits += 8
-        return self.acc & 0xFF
+def decode_webp(payload: bytes) -> np.ndarray:
+    """RIFF/WEBP still image → (H, W, 4) uint8 RGBA via libwebp's
+    WebPDecodeRGBA.  ValueError when libwebp rejects the payload."""
+    import ctypes
 
-    def drop(self, n: int) -> None:
-        self.acc >>= n
-        self.nbits -= n
+    lw = _libwebp()
+    w, h = ctypes.c_int(), ctypes.c_int()
+    ptr = lw.WebPDecodeRGBA(payload, len(payload), ctypes.byref(w), ctypes.byref(h))
+    if not ptr:
+        raise ValueError("webp: libwebp rejected payload")
+    try:
+        return np.ctypeslib.as_array(ptr, shape=(h.value, w.value, 4)).copy()
+    finally:
+        lw.WebPFree(ctypes.cast(ptr, ctypes.c_void_p))
+
+
+# -- encode: minimal conformant VP8L -------------------------------------------
 
 
 class _LsbWriter:
@@ -95,666 +107,12 @@ class _LsbWriter:
         return bytes(out)
 
 
-# -- canonical prefix codes ---------------------------------------------------
-
-
-class _Prefix:
-    """Canonical prefix decoder: codes assigned shortest-first, within a
-    length by ascending symbol (the DEFLATE rule the spec references).
-    First-read bit = MSB of the code; since the stream is LSB-first, an
-    8-bit peek keyed by the REVERSED code resolves every code of ≤ 8
-    bits in one table lookup (two-level scheme: longer codes fall back
-    to the bit-walk dict)."""
-
-    __slots__ = ("table", "single", "root")
-
-    def __init__(self, lengths: list[int]) -> None:
-        nz = [(ln, sym) for sym, ln in enumerate(lengths) if ln > 0]
-        if not nz:
-            raise ValueError("vp8l: empty prefix code")
-        if len(nz) == 1:
-            self.single = nz[0][1]
-            self.table = None
-            self.root = None
-            return
-        self.single = None
-        max_len = max(ln for ln, _ in nz)
-        bl_count = [0] * (max_len + 1)
-        for ln, _ in nz:
-            bl_count[ln] += 1
-        code = 0
-        next_code = [0] * (max_len + 1)
-        for ln in range(1, max_len + 1):
-            code = (code + bl_count[ln - 1]) << 1
-            next_code[ln] = code
-        table: dict[tuple[int, int], int] = {}
-        root: list = [None] * 256
-        for ln, sym in sorted(nz):
-            c = next_code[ln]
-            table[(ln, c)] = sym
-            next_code[ln] += 1
-            if ln <= 8:
-                rev = 0
-                cc = c
-                for _ in range(ln):
-                    rev = (rev << 1) | (cc & 1)
-                    cc >>= 1
-                for hi in range(1 << (8 - ln)):
-                    root[rev | (hi << ln)] = (sym, ln)
-        # completeness check (Kraft equality) — corrupt streams fail here
-        if sum(1 << (max_len - ln) for ln, _ in nz) != 1 << max_len:
-            raise ValueError("vp8l: prefix code is not complete")
-        self.table = table
-        self.root = root
-
-    def decode(self, br: _LsbReader) -> int:
-        if self.single is not None:
-            return self.single
-        e = self.root[br.peek8()]
-        if e is not None:
-            br.drop(e[1])
-            return e[0]
-        code = 0
-        ln = 0
-        table = self.table
-        while True:
-            code = (code << 1) | br.read(1)
-            ln += 1
-            sym = table.get((ln, code))
-            if sym is not None:
-                return sym
-            if ln > 15:
-                raise ValueError("vp8l: invalid prefix code in stream")
-
-
 #: order in which code-length-code lengths appear in the stream
 _CL_ORDER = [17, 18, 0, 1, 2, 3, 4, 5, 16, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15]
 
 
-def _read_prefix_code(br: _LsbReader, alphabet_size: int) -> _Prefix:
-    if br.read(1):  # simple code: 1 or 2 symbols
-        num_symbols = br.read(1) + 1
-        if br.read(1):  # first symbol is 8 bits
-            sym0 = br.read(8)
-        else:
-            sym0 = br.read(1)
-        lengths = [0] * alphabet_size
-        if num_symbols == 2:
-            sym1 = br.read(8)
-            if sym0 == sym1 or max(sym0, sym1) >= alphabet_size:
-                raise ValueError("vp8l: bad simple prefix code")
-            lengths[sym0] = 1
-            lengths[sym1] = 1
-        else:
-            if sym0 >= alphabet_size:
-                raise ValueError("vp8l: bad simple prefix code")
-            lengths[sym0] = 1  # placeholder; decoder short-circuits
-        return _Prefix(lengths)
-    # normal: code lengths themselves prefix-coded
-    num_codes = 4 + br.read(4)
-    cl_lengths = [0] * 19
-    for i in range(num_codes):
-        cl_lengths[_CL_ORDER[i]] = br.read(3)
-    cl = _Prefix(cl_lengths)
-    if br.read(1):  # explicit max symbol count
-        length_nbits = 2 + 2 * br.read(3)
-        max_symbol = 2 + br.read(length_nbits)
-    else:
-        max_symbol = alphabet_size
-    lengths = [0] * alphabet_size
-    symbol = 0
-    prev_len = 8
-    # inlined root-table decode of the code-length code: this loop
-    # runs once per alphabet entry (280 + 3x256 + 40 per image) and
-    # the bound-method round-trip dominated tiny-image decode (r11)
-    single = cl.single
-    root = cl.root
-    peek8 = br.peek8
-    drop = br.drop
-    while symbol < alphabet_size:
-        if max_symbol <= 0:
-            break
-        max_symbol -= 1
-        if single is not None:
-            code_len = single
-        else:
-            e = root[peek8()]
-            if e is not None:
-                drop(e[1])
-                code_len = e[0]
-            else:
-                code_len = cl.decode(br)  # >8-bit fallback (rare)
-        if code_len < 16:
-            lengths[symbol] = code_len
-            symbol += 1
-            if code_len:
-                prev_len = code_len
-        else:
-            if code_len == 16:
-                repeat, fill = 3 + br.read(2), prev_len
-            elif code_len == 17:
-                repeat, fill = 3 + br.read(3), 0
-            else:
-                repeat, fill = 11 + br.read(7), 0
-            if symbol + repeat > alphabet_size:
-                raise ValueError("vp8l: code-length repeat overruns alphabet")
-            for _ in range(repeat):
-                lengths[symbol] = fill
-                symbol += 1
-    return _Prefix(lengths)
-
-
-# -- LZ77 value coding ---------------------------------------------------------
-
-
-def _lz77_value(code: int, br: _LsbReader) -> int:
-    """Length/distance prefix value: 24 codes, codes ≥ 4 carry extra
-    bits (spec §4.2.2)."""
-    if code < 4:
-        return code + 1
-    extra = (code - 2) >> 1
-    offset = (2 + (code & 1)) << extra
-    return offset + br.read(extra) + 1
-
-
-#: 2D distance mapping: codes 1..120 address a local pixel neighborhood
-#: (byte = (dy << 4) | (8 - dx), the spec's table — note the 8-MINUS-x
-#: convention); codes > 120 are linear distances - 120.
-_CODE_TO_PLANE = [
-    0x18, 0x07, 0x17, 0x19, 0x28, 0x06, 0x27, 0x29, 0x16, 0x1A,
-    0x26, 0x2A, 0x38, 0x05, 0x37, 0x39, 0x15, 0x1B, 0x36, 0x3A,
-    0x25, 0x2B, 0x48, 0x04, 0x47, 0x49, 0x14, 0x1C, 0x35, 0x3B,
-    0x46, 0x4A, 0x24, 0x2C, 0x58, 0x45, 0x4B, 0x34, 0x3C, 0x03,
-    0x57, 0x59, 0x13, 0x1D, 0x56, 0x5A, 0x23, 0x2D, 0x44, 0x4C,
-    0x55, 0x5B, 0x33, 0x3D, 0x68, 0x02, 0x67, 0x69, 0x12, 0x1E,
-    0x66, 0x6A, 0x22, 0x2E, 0x54, 0x5C, 0x43, 0x4D, 0x65, 0x6B,
-    0x32, 0x3E, 0x78, 0x01, 0x77, 0x79, 0x53, 0x5D, 0x11, 0x1F,
-    0x64, 0x6C, 0x42, 0x4E, 0x76, 0x7A, 0x21, 0x2F, 0x75, 0x7B,
-    0x31, 0x3F, 0x63, 0x6D, 0x52, 0x5E, 0x00, 0x74, 0x7C, 0x41,
-    0x4F, 0x10, 0x20, 0x62, 0x6E, 0x30, 0x73, 0x7D, 0x51, 0x5F,
-    0x40, 0x72, 0x7E, 0x61, 0x6F, 0x50, 0x71, 0x7F, 0x60, 0x70,
-]
-
-
-def _plane_to_distance(code: int, xsize: int) -> int:
-    if code > 120:
-        return code - 120
-    b = _CODE_TO_PLANE[code - 1]
-    dy = b >> 4
-    dx = 8 - (b & 0xF)  # xoffset = 8 - low nibble (sign convention!)
-    dist = dy * xsize + dx
-    return dist if dist >= 1 else 1
-
-
-# -- entropy-coded image -------------------------------------------------------
-
-
 def _subsample_size(size: int, bits: int) -> int:
     return (size + (1 << bits) - 1) >> bits
-
-
-def _read_prefix_group(br: _LsbReader, cache_size: int) -> list[_Prefix]:
-    sizes = [256 + 24 + cache_size, 256, 256, 256, 40]
-    return [_read_prefix_code(br, s) for s in sizes]
-
-
-def _decode_pixels(
-    br: _LsbReader,
-    w: int,
-    h: int,
-    groups: list[list[_Prefix]],
-    meta: "np.ndarray | None",
-    meta_bits: int,
-    cache_bits: int,
-) -> np.ndarray:
-    """The spatially-coded image: returns (h*w,) uint32 ARGB.
-
-    Round 11: the per-symbol prefix decode is inlined on LOCAL
-    bit-reader state (root-table fast path; the object decoder stays
-    the >8-bit-code fallback) and pixels land in a plain Python list —
-    the per-pixel numpy scalar writes and bound-method decode
-    round-trips were ~60% of large-image decode wall."""
-    npix = w * h
-    out = [0] * npix
-    cache = [0] * (1 << cache_bits) if cache_bits else None
-    shift = 32 - cache_bits if cache_bits else 0
-    pos = 0
-    green_c, red_c, blue_c, alpha_c, dist_c = groups[0]
-    use_meta = meta is not None
-    mw = _subsample_size(w, meta_bits) if use_meta else 0
-    meta_l = meta.tolist() if use_meta else None
-    cur_row = -1
-    d = br.d
-    dlen = len(d)
-    hard = dlen + 8
-    acc = br.acc
-    nbits = br.nbits
-    i = br.i
-    groot, gsingle = green_c.root, green_c.single
-    rroot, rsingle = red_c.root, red_c.single
-    broot, bsingle = blue_c.root, blue_c.single
-    aroot, asingle = alpha_c.root, alpha_c.single
-    while pos < npix:
-        if use_meta:
-            x = pos % w
-            y = pos // w
-            if (x & ((1 << meta_bits) - 1)) == 0 or y != cur_row:
-                cur_row = y
-                gi = meta_l[(y >> meta_bits) * mw + (x >> meta_bits)]
-                green_c, red_c, blue_c, alpha_c, dist_c = groups[gi]
-                groot, gsingle = green_c.root, green_c.single
-                rroot, rsingle = red_c.root, red_c.single
-                broot, bsingle = blue_c.root, blue_c.single
-                aroot, asingle = alpha_c.root, alpha_c.single
-        if gsingle is not None:
-            code = gsingle
-        else:
-            while nbits < 8:
-                if i >= hard:
-                    raise ValueError("vp8l: bitstream exhausted")
-                acc |= (d[i] if i < dlen else 0) << nbits
-                i += 1
-                nbits += 8
-            e = groot[acc & 0xFF]
-            if e is not None:
-                code = e[0]
-                acc >>= e[1]
-                nbits -= e[1]
-            else:
-                br.acc, br.nbits, br.i = acc, nbits, i
-                code = green_c.decode(br)
-                acc, nbits, i = br.acc, br.nbits, br.i
-        if code < 256:  # literal
-            if rsingle is not None:
-                r = rsingle
-            else:
-                while nbits < 8:
-                    if i >= hard:
-                        raise ValueError("vp8l: bitstream exhausted")
-                    acc |= (d[i] if i < dlen else 0) << nbits
-                    i += 1
-                    nbits += 8
-                e = rroot[acc & 0xFF]
-                if e is not None:
-                    r = e[0]
-                    acc >>= e[1]
-                    nbits -= e[1]
-                else:
-                    br.acc, br.nbits, br.i = acc, nbits, i
-                    r = red_c.decode(br)
-                    acc, nbits, i = br.acc, br.nbits, br.i
-            if bsingle is not None:
-                b = bsingle
-            else:
-                while nbits < 8:
-                    if i >= hard:
-                        raise ValueError("vp8l: bitstream exhausted")
-                    acc |= (d[i] if i < dlen else 0) << nbits
-                    i += 1
-                    nbits += 8
-                e = broot[acc & 0xFF]
-                if e is not None:
-                    b = e[0]
-                    acc >>= e[1]
-                    nbits -= e[1]
-                else:
-                    br.acc, br.nbits, br.i = acc, nbits, i
-                    b = blue_c.decode(br)
-                    acc, nbits, i = br.acc, br.nbits, br.i
-            if asingle is not None:
-                a = asingle
-            else:
-                while nbits < 8:
-                    if i >= hard:
-                        raise ValueError("vp8l: bitstream exhausted")
-                    acc |= (d[i] if i < dlen else 0) << nbits
-                    i += 1
-                    nbits += 8
-                e = aroot[acc & 0xFF]
-                if e is not None:
-                    a = e[0]
-                    acc >>= e[1]
-                    nbits -= e[1]
-                else:
-                    br.acc, br.nbits, br.i = acc, nbits, i
-                    a = alpha_c.decode(br)
-                    acc, nbits, i = br.acc, br.nbits, br.i
-            px = (a << 24) | (r << 16) | (code << 8) | b
-            out[pos] = px
-            if cache is not None:
-                cache[((px * 0x1E35A7BD) & 0xFFFFFFFF) >> shift] = px
-            pos += 1
-        elif code < 256 + 24:  # LZ77 backward reference
-            br.acc, br.nbits, br.i = acc, nbits, i
-            length = _lz77_value(code - 256, br)
-            dist_code = _lz77_value(dist_c.decode(br), br)
-            acc, nbits, i = br.acc, br.nbits, br.i
-            dist = _plane_to_distance(dist_code, w)
-            if dist > pos or pos + length > npix:
-                raise ValueError("vp8l: backward reference out of range")
-            if cache is None:
-                if dist >= length:
-                    out[pos : pos + length] = out[pos - dist : pos - dist + length]
-                else:
-                    for k in range(pos, pos + length):
-                        out[k] = out[k - dist]
-            else:
-                for k in range(pos, pos + length):
-                    px = out[k - dist]
-                    out[k] = px
-                    cache[((px * 0x1E35A7BD) & 0xFFFFFFFF) >> shift] = px
-            pos += length
-            cur_row = -1  # force group re-lookup after a copy
-        else:  # color cache hit
-            if cache is None:
-                raise ValueError("vp8l: cache reference without a cache")
-            px = cache[code - 256 - 24]
-            out[pos] = px
-            pos += 1
-    br.acc, br.nbits, br.i = acc, nbits, i
-    return np.asarray(out, dtype=np.uint32)
-
-
-def _decode_image_stream(
-    br: _LsbReader, w: int, h: int, top_level: bool
-) -> tuple[np.ndarray, int]:
-    """Decode one spatially-coded image (entropy image / transform data
-    / main image).  Returns ((h*w,) uint32 ARGB, effective width)."""
-    transforms: list[tuple] = []
-    cur_w = w
-    if top_level:
-        seen = set()
-        while br.read(1):
-            ttype = br.read(2)
-            if ttype in seen:
-                raise ValueError("vp8l: duplicate transform")
-            seen.add(ttype)
-            if ttype == 0 or ttype == 1:  # predictor / color transform
-                bits = br.read(3) + 2
-                tw = _subsample_size(cur_w, bits)
-                th = _subsample_size(h, bits)
-                data, _ = _decode_image_stream(br, tw, th, False)
-                transforms.append((ttype, bits, data, cur_w))
-            elif ttype == 2:  # subtract green
-                transforms.append((2, 0, None, cur_w))
-            else:  # color indexing
-                n_colors = br.read(8) + 1
-                pal, _ = _decode_image_stream(br, n_colors, 1, False)
-                # palette entries are delta-coded per channel
-                pal = pal.view(np.uint8).reshape(-1, 4)
-                pal = np.cumsum(pal.astype(np.uint32), axis=0).astype(np.uint8)
-                pal = pal.copy().view(np.uint32).reshape(-1)
-                if n_colors <= 2:
-                    width_bits = 3
-                elif n_colors <= 4:
-                    width_bits = 2
-                elif n_colors <= 16:
-                    width_bits = 1
-                else:
-                    width_bits = 0
-                transforms.append((3, width_bits, pal, cur_w))
-                cur_w = _subsample_size(cur_w, width_bits)
-    cache_bits = br.read(4) if br.read(1) else 0
-    if cache_bits > 11:
-        raise ValueError(f"vp8l: color cache bits {cache_bits} out of range")
-    cache_size = (1 << cache_bits) if cache_bits else 0
-    meta = None
-    meta_bits = 0
-    n_groups = 1
-    if top_level and br.read(1):  # meta prefix codes
-        meta_bits = br.read(3) + 2
-        mw = _subsample_size(cur_w, meta_bits)
-        mh = _subsample_size(h, meta_bits)
-        ent, _ = _decode_image_stream(br, mw, mh, False)
-        meta = (ent >> 8) & 0xFFFF  # (red << 8) | green
-        n_groups = int(meta.max()) + 1
-    groups = [_read_prefix_group(br, cache_size) for _ in range(n_groups)]
-    img = _decode_pixels(br, cur_w, h, groups, meta, meta_bits, cache_bits)
-    for ttype, bits, data, t_w in reversed(transforms):
-        if ttype == 3:
-            img = _inv_color_indexing(img, data, bits, t_w, h)
-            cur_w = t_w
-        elif ttype == 2:
-            img = _inv_subtract_green(img)
-        elif ttype == 1:
-            img = _inv_color_transform(img, data, bits, t_w, h)
-        else:
-            img = _inv_predictor(img, data, bits, t_w, h)
-    return img, cur_w
-
-
-# -- inverse transforms --------------------------------------------------------
-
-
-def _inv_subtract_green(img: np.ndarray) -> np.ndarray:
-    g = (img >> 8) & 0xFF
-    r = (((img >> 16) & 0xFF) + g) & 0xFF
-    b = ((img & 0xFF) + g) & 0xFF
-    return (img & np.uint32(0xFF00FF00)) | (r << 16) | b
-
-
-def _inv_color_transform(
-    img: np.ndarray, tdata: np.ndarray, bits: int, w: int, h: int
-) -> np.ndarray:
-    tw = _subsample_size(w, bits)
-    px = img.reshape(h, w)
-    te = tdata.reshape(-1, tw)
-    out = px.copy()
-    ys = np.arange(h) >> bits
-    xs = np.arange(w) >> bits
-    t = te[ys][:, xs]  # per-pixel transform element
-    g2r = (t & 0xFF).astype(np.int64)
-    g2b = ((t >> 8) & 0xFF).astype(np.int64)
-    r2b = ((t >> 16) & 0xFF).astype(np.int64)
-    # ColorTransformDelta: (int8 t * int8 c) >> 5, arithmetic shift
-    s8 = lambda v: ((v + 128) & 0xFF) - 128  # noqa: E731
-    g = ((out >> 8) & 0xFF).astype(np.int64)
-    r = (((out >> 16) & 0xFF).astype(np.int64) + ((s8(g2r) * s8(g)) >> 5)) & 0xFF
-    b = ((out & 0xFF).astype(np.int64) + ((s8(g2b) * s8(g)) >> 5)) & 0xFF
-    b = (b + ((s8(r2b) * s8(r)) >> 5)) & 0xFF
-    return (
-        (out & np.uint32(0xFF00FF00))
-        | (r.astype(np.uint32) << 16)
-        | b.astype(np.uint32)
-    ).reshape(-1)
-
-
-def _clamp_add_full(l: int, t: int, tl: int) -> int:
-    out = 0
-    for sh in (0, 8, 16, 24):
-        v = ((l >> sh) & 0xFF) + ((t >> sh) & 0xFF) - ((tl >> sh) & 0xFF)
-        v = 0 if v < 0 else (255 if v > 255 else v)
-        out |= v << sh
-    return out
-
-
-def _clamp_add_half(ave: int, tl: int) -> int:
-    out = 0
-    for sh in (0, 8, 16, 24):
-        a = (ave >> sh) & 0xFF
-        b = (tl >> sh) & 0xFF
-        d = a - b
-        # a + (a - b) / 2 with C division (truncation TOWARD ZERO:
-        # -1/2 == 0, where Python's // would floor to -1)
-        v = a - ((-d) // 2) if d < 0 else a + d // 2
-        v = 0 if v < 0 else (255 if v > 255 else v)
-        out |= v << sh
-    return out
-
-
-def _inv_predictor(
-    img: np.ndarray, pdata: np.ndarray, bits: int, w: int, h: int
-) -> np.ndarray:
-    """Inverse predictor transform, all-Python-int hot loop (numpy
-    scalar boxing measured ~3x slower) with the packed per-channel
-    tricks: ARGB add/average never unpack to channels."""
-    tw = _subsample_size(w, bits)
-    mode_rows = (
-        ((pdata.reshape(-1, tw) >> np.uint32(8)) & np.uint32(0xFF))
-        .astype(np.int64)
-        .tolist()
-    )
-    buf: list[int] = img.astype(np.int64).tolist()
-    npix = w * h
-
-    def addpx(v: int, p: int) -> int:
-        return (((v & 0xFF00FF) + (p & 0xFF00FF)) & 0xFF00FF) | (
-            ((v & 0xFF00FF00) + (p & 0xFF00FF00)) & 0xFF00FF00
-        )
-
-    if npix:
-        buf[0] = addpx(buf[0], 0xFF000000)
-    for x in range(1, min(w, npix)):  # top row: left predictor
-        buf[x] = addpx(buf[x], buf[x - 1])
-    pos = w
-    for y in range(1, h):
-        mrow = mode_rows[y >> bits]
-        buf[pos] = addpx(buf[pos], buf[pos - w])  # left column: top
-        pos += 1
-        for x in range(1, w):
-            mode = mrow[x >> bits]
-            if mode == 7:  # Average2(L, T) — the most common mode
-                l = buf[pos - 1]
-                t = buf[pos - w]
-                pred = (((l ^ t) & 0xFEFEFEFE) >> 1) + (l & t)
-            elif mode == 1:
-                pred = buf[pos - 1]
-            elif mode == 2:
-                pred = buf[pos - w]
-            elif mode == 3:
-                pred = buf[pos - w + 1]  # contiguous-buffer semantics
-            elif mode == 4:
-                pred = buf[pos - w - 1]
-            elif mode == 0:
-                pred = 0xFF000000
-            elif mode == 5:
-                l = buf[pos - 1]
-                t = buf[pos - w]
-                tr = buf[pos - w + 1]
-                a = (((l ^ tr) & 0xFEFEFEFE) >> 1) + (l & tr)
-                pred = (((a ^ t) & 0xFEFEFEFE) >> 1) + (a & t)
-            elif mode == 6:
-                l = buf[pos - 1]
-                tl = buf[pos - w - 1]
-                pred = (((l ^ tl) & 0xFEFEFEFE) >> 1) + (l & tl)
-            elif mode == 8:
-                tl = buf[pos - w - 1]
-                t = buf[pos - w]
-                pred = (((tl ^ t) & 0xFEFEFEFE) >> 1) + (tl & t)
-            elif mode == 9:
-                t = buf[pos - w]
-                tr = buf[pos - w + 1]
-                pred = (((t ^ tr) & 0xFEFEFEFE) >> 1) + (t & tr)
-            elif mode == 10:
-                l = buf[pos - 1]
-                tl = buf[pos - w - 1]
-                t = buf[pos - w]
-                tr = buf[pos - w + 1]
-                a = (((l ^ tl) & 0xFEFEFEFE) >> 1) + (l & tl)
-                b2 = (((t ^ tr) & 0xFEFEFEFE) >> 1) + (t & tr)
-                pred = (((a ^ b2) & 0xFEFEFEFE) >> 1) + (a & b2)
-            elif mode == 11:  # Select — inlined (round 11: ~30% of
-                # real libwebp-photo pixels land here)
-                l = buf[pos - 1]
-                t = buf[pos - w]
-                tl = buf[pos - w - 1]
-                lc = l & 0xFF
-                tc = t & 0xFF
-                pp = lc + tc - (tl & 0xFF)
-                pl = abs(pp - lc)
-                pt = abs(pp - tc)
-                lc = (l >> 8) & 0xFF
-                tc = (t >> 8) & 0xFF
-                pp = lc + tc - ((tl >> 8) & 0xFF)
-                pl += abs(pp - lc)
-                pt += abs(pp - tc)
-                lc = (l >> 16) & 0xFF
-                tc = (t >> 16) & 0xFF
-                pp = lc + tc - ((tl >> 16) & 0xFF)
-                pl += abs(pp - lc)
-                pt += abs(pp - tc)
-                lc = l >> 24
-                tc = t >> 24
-                pp = lc + tc - (tl >> 24)
-                pl += abs(pp - lc)
-                pt += abs(pp - tc)
-                pred = t if pt <= pl else l
-            elif mode == 12:
-                pred = _clamp_add_full(
-                    buf[pos - 1], buf[pos - w], buf[pos - w - 1]
-                )
-            elif mode == 13:
-                l = buf[pos - 1]
-                t = buf[pos - w]
-                ave = (((l ^ t) & 0xFEFEFEFE) >> 1) + (l & t)
-                pred = _clamp_add_half(ave, buf[pos - w - 1])
-            else:
-                raise ValueError(f"vp8l: predictor mode {mode} out of range")
-            v = buf[pos]  # addpx inlined (786k calls/MP)
-            buf[pos] = (
-                ((v & 0xFF00FF) + (pred & 0xFF00FF)) & 0xFF00FF
-            ) | (((v & 0xFF00FF00) + (pred & 0xFF00FF00)) & 0xFF00FF00)
-            pos += 1
-    return np.array(buf, dtype=np.uint32)
-
-
-def _inv_color_indexing(
-    img: np.ndarray, pal: np.ndarray, width_bits: int, w: int, h: int
-) -> np.ndarray:
-    if width_bits == 0:
-        idx = (img >> 8) & 0xFF
-        if int(idx.max(initial=0)) >= len(pal):
-            raise ValueError("vp8l: palette index out of range")
-        return pal[idx]
-    packed_w = _subsample_size(w, width_bits)
-    per = 1 << width_bits  # pixels per packed byte
-    ibits = 8 >> width_bits  # bits per index
-    g = ((img >> 8) & 0xFF).reshape(h, packed_w).astype(np.uint32)
-    ks = np.arange(per) * ibits
-    idx = (g[:, :, None] >> ks[None, None, :]) & ((1 << ibits) - 1)
-    idx = idx.reshape(h, packed_w * per)[:, :w]
-    if int(idx.max(initial=0)) >= len(pal):
-        raise ValueError("vp8l: palette index out of range")
-    return pal[idx].reshape(-1)
-
-
-# -- public decode -------------------------------------------------------------
-
-
-def decode_vp8l(payload: bytes) -> np.ndarray:
-    """VP8L chunk body → (H, W, 4) uint8 RGBA."""
-    if not payload or payload[0] != 0x2F:
-        raise ValueError("vp8l: bad signature byte")
-    br = _LsbReader(payload[1:])
-    w = br.read(14) + 1
-    h = br.read(14) + 1
-    br.read(1)  # alpha-is-used hint
-    if br.read(3) != 0:
-        raise ValueError("vp8l: unsupported version")
-    argb, _ = _decode_image_stream(br, w, h, True)
-    return _argb_to_rgba(argb, w, h)
-
-
-def decode_vp8l_alpha(data: bytes, w: int, h: int) -> np.ndarray:
-    """Headerless lossless-coded ALPH plane (compression method 1):
-    the alpha values ride the GREEN channel of a w×h VP8L image with
-    no signature/size/version bits."""
-    br = _LsbReader(data)
-    argb, _ = _decode_image_stream(br, w, h, True)
-    return ((argb >> 8) & 0xFF).astype(np.uint8).reshape(h, w)
-
-
-def _argb_to_rgba(argb: np.ndarray, w: int, h: int) -> np.ndarray:
-    out = np.empty((h, w, 4), dtype=np.uint8)
-    px = argb.reshape(h, w)
-    out[..., 0] = (px >> 16) & 0xFF
-    out[..., 1] = (px >> 8) & 0xFF
-    out[..., 2] = px & 0xFF
-    out[..., 3] = (px >> 24) & 0xFF
-    return out
-
-
-# -- minimal conformant encoder ------------------------------------------------
 
 
 def _huffman_lengths(freqs: list[int], max_len: int = 15) -> list[int]:
@@ -970,13 +328,11 @@ def encode_vp8l(arr: np.ndarray) -> bytes:
 
     Minimal-but-conformant: no color cache, no LZ77, one prefix-code
     group — every symbol a literal under real entropy coding (libwebp
-    decodes the output byte-exactly; fixture/round-trip twin of
-    decode_vp8l).  Images with ≤ 256 distinct colors take the
-    COLOR-INDEXING arm (round 11): the palette rides a delta-coded
-    1×n sub-image and pixels become bundled indices on the green
-    channel — up to 8 pixels per coded byte for bilevel content —
-    exercising the same transform + pixel-bundling path the decoder
-    handles for libwebp output, now in BOTH directions."""
+    decodes the output byte-exactly).  Images with ≤ 256 distinct
+    colors take the COLOR-INDEXING arm: the palette rides a
+    delta-coded 1×n sub-image and pixels become bundled indices on the
+    green channel — up to 8 pixels per coded byte for bilevel
+    content."""
     if arr.ndim != 3 or arr.shape[2] not in (3, 4):
         raise ValueError("encode_vp8l: need (H, W, 3|4) uint8")
     h, w = arr.shape[:2]
@@ -1064,97 +420,6 @@ def encode_vp8l(arr: np.ndarray) -> bytes:
     return bw.bytes()
 
 
-def decode_webp(payload: bytes) -> np.ndarray:
-    """RIFF/WEBP container → (H, W, 4) uint8 RGBA.
-
-    LOSSLESS (VP8L) decodes via this module; LOSSY (VP8 key frames)
-    via operators/vp8.py (round 10 — YUV planes byte-exact vs libwebp,
-    RGB via vp8_to_rgb's documented conversion, alpha 255; a lossless-
-    coded ALPH plane, when present, is decoded via decode_vp8l_alpha).
-    Animated containers route to decode_webp_anim (round 11)."""
-    import struct
-
-    if len(payload) < 16 or payload[:4] != b"RIFF" or payload[8:12] != b"WEBP":
-        raise ValueError("webp: not a RIFF/WEBP payload")
-    pos = 12
-    lossy = None
-    alph = None
-    while pos + 8 <= len(payload):
-        fourcc = payload[pos : pos + 4]
-        (size,) = struct.unpack_from("<I", payload, pos + 4)
-        if pos + 8 + size > len(payload):
-            # trusting the RIFF size field would silently truncate and
-            # surface later as a confusing entropy-decode error
-            raise ValueError("webp: truncated chunk")
-        body = payload[pos + 8 : pos + 8 + size]
-        if fourcc == b"VP8L":
-            return decode_vp8l(body)
-        if fourcc == b"VP8 ":
-            lossy = body
-        elif fourcc == b"ALPH":
-            alph = body
-        pos += 8 + size + (size & 1)
-    if lossy is not None:
-        from impala_cut_spark.operators.vp8 import decode_vp8, vp8_to_rgb
-
-        y, u, v = decode_vp8(lossy)
-        rgb = vp8_to_rgb(y, u, v)
-        h, w = rgb.shape[:2]
-        out = np.empty((h, w, 4), dtype=np.uint8)
-        out[..., :3] = rgb
-        out[..., 3] = 255
-        if alph is not None and len(alph) >= 1:
-            b0 = alph[0]
-            method = b0 & 3
-            filt = (b0 >> 2) & 3
-            if method == 0:  # raw bytes
-                plane = np.frombuffer(
-                    alph, dtype=np.uint8, count=w * h, offset=1
-                ).reshape(h, w).copy()
-                out[..., 3] = _alpha_unfilter(plane, filt)
-            elif method == 1:  # lossless-coded
-                plane = decode_vp8l_alpha(alph[1:], w, h)
-                out[..., 3] = _alpha_unfilter(plane, filt)
-            # other methods: alpha stays opaque (documented boundary)
-        return out
-    raise ValueError("webp: no still-image chunk found (animation?)")
-
-
-def _alpha_unfilter(plane: np.ndarray, filt: int) -> np.ndarray:
-    """Invert the ALPH plane filter (container spec §alpha filtering):
-    0 none, 1 horizontal (left), 2 vertical (above), 3 gradient
-    (clamp(left+above-aboveleft)); the first row of every mode and the
-    first pixel of every row fall back per the reference unfilters."""
-    if filt == 0:
-        return plane
-    h, w = plane.shape
-    out = plane.astype(np.int64)
-    if filt == 1:  # horizontal: rows are prefix sums; row starts at
-        out[0] = np.cumsum(out[0]) & 0xFF  # 0 (no previous row)
-        for y in range(1, h):
-            out[y, 0] = (out[y, 0] + out[y - 1, 0]) & 0xFF
-            out[y] = np.cumsum(out[y]) & 0xFF
-        return out.astype(np.uint8)
-    if filt == 2:  # vertical: first row horizontal-from-0, then columns
-        out[0] = np.cumsum(out[0]) & 0xFF
-        out = np.cumsum(out, axis=0) & 0xFF
-        return out.astype(np.uint8)
-    # gradient
-    out[0] = np.cumsum(out[0]) & 0xFF
-    for y in range(1, h):
-        row = out[y]
-        prev = out[y - 1]
-        left = int(prev[0])
-        tl = left
-        for x in range(w):
-            top = int(prev[x])
-            g = left + top - tl
-            g = 0 if g < 0 else (255 if g > 255 else g)
-            left = (int(row[x]) + g) & 0xFF
-            tl = top
-            row[x] = left
-    return out.astype(np.uint8)
-
 
 def encode_webp_lossless(arr: np.ndarray) -> bytes:
     """Wrap encode_vp8l in the RIFF/WEBP container."""
@@ -1172,28 +437,20 @@ def encode_webp_lossless(arr: np.ndarray) -> bytes:
 # WebP animations carry standalone VP8/VP8L key-frame bitstreams inside
 # ANMF chunks (the format has no inter-frame prediction across frames —
 # frames composite onto a canvas via per-frame blend/dispose flags), so
-# the round-10 still-image decoders above are the complete codec layer;
-# this section adds the container demux, the canvas composition rules
-# from the container spec, and a mux twin for fixtures/round-trips.
+# decode_webp is the complete codec layer; this section adds the
+# container demux, the canvas composition rules from the container
+# spec, and a mux twin for fixtures/round-trips.
 
 
-def webp_frames(payload: bytes, frame_decode=None) -> dict:
+def webp_frames(payload: bytes) -> dict:
     """Demux an animated WebP: RIFF → VP8X (animation flag) → ANIM
     (background color, loop count) → one entry per ANMF chunk.  Each
-    frame decodes through the SAME still-image path (decode_webp on a
-    rewrapped minimal container), so demux adds no codec surface.
-    ``frame_decode`` swaps the per-frame still decoder (the native
-    kernel seam: multimodal.webp_anim_native_decode injects libwebp's
-    WebPDecodeRGBA here — the per-pixel work — while this chunk walk
-    and the composition stay shared, so kernel choice cannot change
-    composition semantics).  Returns ``{w, h, bg_rgba, loop, frames:
-    [{x, y, duration_ms, blend, dispose, rgba}]}``.  Raises on still
-    images (callers route those to decode_webp directly) and on
-    malformed containers."""
+    frame decodes through decode_webp on a rewrapped minimal
+    container, so demux adds no codec surface.  Returns ``{w, h,
+    bg_rgba, loop, frames: [{x, y, duration_ms, blend, dispose,
+    rgba}]}``.  Raises on still images (callers route those to
+    decode_webp directly) and on malformed containers."""
     import struct
-
-    if frame_decode is None:
-        frame_decode = decode_webp
 
     if len(payload) < 16 or payload[:4] != b"RIFF" or payload[8:12] != b"WEBP":
         raise ValueError("webp: not a RIFF/WEBP payload")
@@ -1234,7 +491,7 @@ def webp_frames(payload: bytes, frame_decode=None) -> dict:
             sub = body[16:]
             wrapped = (b"RIFF"
                        + struct.pack("<I", 4 + len(sub)) + b"WEBP" + sub)
-            rgba = frame_decode(wrapped)
+            rgba = decode_webp(wrapped)
             if rgba.shape[:2] != (fh, fw):
                 raise ValueError("webp: ANMF size disagrees with bitstream")
             out["frames"].append({
@@ -1251,9 +508,7 @@ def webp_frames(payload: bytes, frame_decode=None) -> dict:
     return out
 
 
-def decode_webp_anim(
-    payload: bytes, frame_decode=None
-) -> list[tuple[np.ndarray, int]]:
+def decode_webp_anim(payload: bytes) -> list[tuple[np.ndarray, int]]:
     """Animated WebP → [(composited RGBA canvas, duration ms)], one
     per frame, composed per the container spec: the canvas starts
     fully transparent; blending method 0 alpha-composites the frame
@@ -1261,14 +516,11 @@ def decode_webp_anim(
     clears the frame rectangle back to transparent AFTER the frame is
     shown (the libwebp demuxer's behavior — the ANIM background color
     is a renderer hint, not part of the composition).  Still images
-    return a single (decode(payload), 0) entry.  ``frame_decode``
-    swaps the per-frame still decoder (see webp_frames)."""
-    if frame_decode is None:
-        frame_decode = decode_webp
+    return a single (decode_webp(payload), 0) entry."""
     try:
-        anim = webp_frames(payload, frame_decode=frame_decode)
+        anim = webp_frames(payload)
     except ValueError:
-        return [(frame_decode(payload), 0)]
+        return [(decode_webp(payload), 0)]
     canvas = np.zeros((anim["h"], anim["w"], 4), dtype=np.uint8)
     shown: list[tuple[np.ndarray, int]] = []
     for fr in anim["frames"]:

@@ -73,15 +73,16 @@ ENGINE_CONF: dict[str, str] = {
     # G1HeapRegionSize=16m (driver only): keeps Spark's 1-4 MB per-query
     # buffers (4 MB broadcast blocks, 1 MB serializer chunks) out of
     # humongous regions; a 4 GB driver heap's 2 MB regions let 0.9-1.4 GB
-    # of them pile up between young GCs while ~95 MB was live.  It only
-    # changes heaps under 32 GB: the default 32 GB driver already gets
-    # 16 MB regions (heap / 2048).  Executors keep G1's choice (1 MB
-    # regions at the default 1 GB heap) until a workload measures one.
+    # of them pile up between young GCs while ~95 MB was live.  G1 picks
+    # 16 MB itself only from a 32 GB heap (heap / 2048), above the
+    # default driver (build_session: half the host, at most 31 GB).
+    # Executors keep G1's choice (1 MB regions at the default 1 GB heap)
+    # until a workload measures one.
     # The heap also splits the driver's class-data-sharing archives
     # (_class_data_sharing): from 32 GB on, the JVM drops compressed
     # oops and maps the JDK's classes_nocoops.jsa as its base, so it
     # rejects an archive dumped under a smaller heap, and vice versa.
-    # The default 32 GB driver and a 4 GB one each get their own.
+    # Heaps on either side of 32 GB each get their own.
     "spark.driver.extraJavaOptions": "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing"
     " -XX:G1HeapRegionSize=16m",
     "spark.executor.extraJavaOptions": "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing",
@@ -228,6 +229,12 @@ def _class_data_sharing(conf: dict[str, str]):
         atexit.register(_promote, SparkContext._gateway.proc, tmp, stem)
 
 
+def _half_host_memory() -> str:
+    """Half the host's physical memory in MB, capped at 31g."""
+    host = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(host >> 21, 31 << 10)}m"
+
+
 def build_session(
     app_name: str = "impala-cut-spark",
     master: str | None = None,
@@ -252,10 +259,13 @@ def build_session(
         "spark.sql.shuffle.partitions": str(shuffle_partitions),
         # local mode: the driver JVM IS the executor — 32 threads at 16g
         # (~0.5g/thread) was GC-bound on cached indexes + broadcasts
-        # (measured: minhash bench -40% at a larger heap); 32g leaves
-        # headroom for the rest of the box. Cluster mode: spark-submit owns
-        # executor sizing and this only affects the driver process.
-        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEM", "32g"),
+        # (measured: minhash bench -40% at a larger heap), so the default
+        # is as large as the host allows: half its physical memory, the
+        # rest left to Python workers and the OS, at most 31g so the heap
+        # keeps compressed oops.  $SPARK_DRIVER_MEM overrides it.
+        # Cluster mode: spark-submit owns executor sizing and this only
+        # affects the driver process.
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEM") or _half_host_memory(),
         "spark.ui.enabled": "false",
         **ENGINE_CONF,
     }

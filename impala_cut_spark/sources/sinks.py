@@ -4,8 +4,7 @@ Mirrors the reference's ``HdfsTableSink``
 (``/root/reference/be/src/exec/hdfs-table-sink.cc:341-347`` — INSERT
 INTO/OVERWRITE into TEXT or PARQUET tables, static + dynamic
 partitions; FE semantics ``fe/.../analysis/InsertStmt.java:63-110``)
-plus LOAD DATA (``sql-parser.y:470-481``) and CTAS
-(``sql-parser.y:645``).
+plus LOAD DATA (``sql-parser.y:470-481``).
 
 Scale notes:
 - Writers inherit the input DataFrame's partitioning — an INSERT of a
@@ -35,40 +34,6 @@ def _provider(fmt: str) -> str:
             "parquet only (reference hdfs-table-sink.cc:341-347)"
         )
     return p
-
-
-def create_table(
-    spark: SparkSession,
-    name: str,
-    schema_ddl: str,
-    fmt: str = "parquet",
-    partitioned_by: list[str] | None = None,
-    location: str | None = None,
-    options: dict[str, str] | None = None,
-) -> None:
-    """CREATE TABLE … [PARTITIONED BY …] STORED AS fmt [LOCATION …]."""
-    parts = [f"CREATE TABLE {name} ({schema_ddl}) USING {_provider(fmt)}"]
-    if options:
-        parts.append("OPTIONS (" + ", ".join(f"{k} '{v}'" for k, v in options.items()) + ")")
-    if partitioned_by:
-        parts.append(f"PARTITIONED BY ({', '.join(partitioned_by)})")
-    if location:
-        parts.append(f"LOCATION '{location}'")
-    spark.sql(" ".join(parts))
-
-
-def ctas(
-    spark: SparkSession,
-    name: str,
-    df: DataFrame,
-    fmt: str = "parquet",
-    partitioned_by: list[str] | None = None,
-) -> None:
-    """CREATE TABLE AS SELECT (sql-parser.y:645)."""
-    writer = df.write.format(_provider(fmt))
-    if partitioned_by:
-        writer = writer.partitionBy(*partitioned_by)
-    writer.saveAsTable(name)
 
 
 def cluster_by_partitions(df: DataFrame, partition_cols: list[str]) -> DataFrame:

@@ -1,10 +1,10 @@
 """Animation layer (GIF89a + animated WebP) — demux, composition,
 mux round-trips, and the animation_frames operator.
 
-Independent anchors: the JDK ImageIO GIF reader decodes every frame
-of the engine's own animated-GIF mux (raster parity per frame), and
-the container's libwebp decodes every ANMF frame the WebP demuxer
-slices out (RGBA parity per frame).  Composition rules (blend,
+Independent anchors: the JDK ImageIO GIF reader (through the test
+session's JVM) decodes every frame of the engine's own animated-GIF
+mux (raster parity per frame), and libwebp decodes every ANMF frame
+the WebP demuxer slices out (RGBA parity per frame).  Composition rules (blend,
 dispose-to-background, restore-previous, GIF transparency) are
 asserted against hand-computed canvases from the container specs.
 """
@@ -52,10 +52,7 @@ class TestWebpAnim:
         """Each ANMF sub-bitstream the demuxer slices out must decode
         to the same RGBA via libwebp — independent validation of the
         chunk walk, sizes, and the VP8L frame payloads."""
-        try:
-            lw = ctypes.CDLL("libwebp.so.7")
-        except OSError:
-            pytest.skip("libwebp not available")
+        lw = ctypes.CDLL("libwebp.so.7")
         rng = np.random.default_rng(6)
         frames = [rng.integers(0, 256, (8, 8, 4), dtype=np.uint8) for _ in range(3)]
         p = encode_webp_anim(frames, [10, 10, 10])
@@ -133,6 +130,68 @@ class TestWebpAnim:
             encode_webp_anim([img], [10], offsets=[(1, 0)])  # odd offset
 
 
+    def test_lossy_vp8_frames(self):
+        """ANMF frames carrying lossy VP8 (+ALPH) bitstreams decode
+        through the same path as lossless ones: two libwebp-encoded
+        stills muxed by hand come back with their durations, the
+        canvas shape and pixels close to the input."""
+        import struct
+
+        lw = ctypes.CDLL("libwebp.so.7")
+        lw.WebPEncodeRGBA.restype = ctypes.c_size_t
+        lw.WebPEncodeRGBA.argtypes = [
+            ctypes.c_char_p, ctypes.c_int, ctypes.c_int, ctypes.c_int,
+            ctypes.c_float, ctypes.POINTER(ctypes.c_char_p),
+        ]
+
+        def lossy_still(img):
+            out = ctypes.c_char_p()
+            n = lw.WebPEncodeRGBA(
+                np.ascontiguousarray(img).tobytes(), img.shape[1],
+                img.shape[0], img.shape[1] * 4, 90.0, ctypes.byref(out))
+            assert n > 0
+            return ctypes.string_at(out, n)
+
+        def chunk(fourcc, body):
+            return (fourcc + struct.pack("<I", len(body)) + body
+                    + (b"\x00" if len(body) & 1 else b""))
+
+        def inner_chunks(riff):
+            # keep ALPH/VP8/VP8L sub-chunks, drop any VP8X
+            pos, keep = 12, b""
+            while pos + 8 <= len(riff):
+                fc = riff[pos:pos + 4]
+                (sz,) = struct.unpack_from("<I", riff, pos + 4)
+                if fc in (b"ALPH", b"VP8 ", b"VP8L"):
+                    keep += riff[pos:pos + 8 + sz + (sz & 1)]
+                pos += 8 + sz + (sz & 1)
+            return keep
+
+        w, h = 16, 10
+        gy, gx = np.mgrid[0:h, 0:w]
+        opaque = [
+            np.stack([gx * 15, gy * 25, np.full_like(gx, c), np.full_like(gx, 255)],
+                     axis=-1).astype(np.uint8)
+            for c in (40, 200)
+        ]
+        parts = [chunk(b"VP8X", bytes([0x02, 0, 0, 0])
+                       + (w - 1).to_bytes(3, "little")
+                       + (h - 1).to_bytes(3, "little")),
+                 chunk(b"ANIM", b"\x00\x00\x00\x00\x00\x00")]
+        for img, dur in zip(opaque, (40, 60)):
+            hdr = (bytes(3) + bytes(3)
+                   + (w - 1).to_bytes(3, "little")
+                   + (h - 1).to_bytes(3, "little")
+                   + dur.to_bytes(3, "little") + bytes([0x02]))
+            parts.append(chunk(b"ANMF", hdr + inner_chunks(lossy_still(img))))
+        body = b"WEBP" + b"".join(parts)
+        out = decode_webp_anim(b"RIFF" + struct.pack("<I", len(body)) + body)
+        assert [d for _, d in out] == [40, 60]
+        for (canvas, _), img in zip(out, opaque):
+            assert canvas.shape == (h, w, 4) and (canvas[..., 3] == 255).all()
+            assert np.abs(canvas.astype(int) - img).mean() < 4
+
+
 class TestGifAnim:
     def test_roundtrip_fullscreen_frames(self):
         rng = np.random.default_rng(7)
@@ -150,15 +209,13 @@ class TestGifAnim:
     def test_imageio_reads_every_frame_of_our_mux(self, spark):
         """Independent reader: the JDK ImageIO GIF plugin must see the
         same frame count and identical per-frame rasters."""
-        from impala_cut_spark.operators.multimodal import _imageio_jvm
-
         rng = np.random.default_rng(8)
         frames = [
             (rng.integers(0, 4, (6, 6, 1), dtype=np.uint8).repeat(3, 2) * 63)
             for _ in range(4)
         ]
         p = encode_gif_anim(frames, [10] * 4)
-        jvm = _imageio_jvm()
+        jvm = spark._jvm
         stream = jvm.javax.imageio.ImageIO.createImageInputStream(
             jvm.java.io.ByteArrayInputStream(bytearray(p)))
         reader = jvm.javax.imageio.ImageIO.getImageReaders(stream).next()
@@ -238,121 +295,3 @@ class TestAnimationFramesOperator:
         assert rows[(2, 2)].codec == "gif" and rows[(2, 2)].ts_ms == 100
         assert rows[(3, -1)].parse_ok is False
         assert all(r.parse_ok for k, r in rows.items() if k[0] != 3)
-
-
-class TestAnimNativeKernel:
-    def test_anim_native_kernel_matches_pure(self):
-        """r11 verdict Next #3: the native animation arm must be
-        frame-by-frame byte-identical to the pure kernel.  The
-        container ships libwebp WITHOUT the demux library, so the
-        native arm shares the pure ANMF walk/composition and swaps
-        only the per-frame pixel decode to WebPDecodeRGBA — parity
-        covers lossless frames with blend+dispose+offsets, a
-        hand-muxed LOSSY (VP8) frame animation, and the still-image
-        fallthrough."""
-        try:
-            ctypes.CDLL("libwebp.so.7")
-        except OSError:
-            pytest.skip("libwebp not available")
-        import struct
-
-        from impala_cut_spark.operators import multimodal as mm
-        from impala_cut_spark.operators.vp8l import encode_webp_lossless
-
-        rng = np.random.default_rng(21)
-        frames = [rng.integers(0, 256, (10, 12, 4), dtype=np.uint8)
-                  for _ in range(3)]
-        p = encode_webp_anim(frames, [10, 20, 30],
-                             offsets=[(0, 0), (2, 2), (0, 0)],
-                             blend=True, dispose=True, canvas=(14, 12))
-        pure = decode_webp_anim(p)
-        native = mm.webp_anim_native_decode(p)
-        assert len(pure) == len(native) == 3
-        for (pc, pd_), (nc, nd) in zip(pure, native):
-            assert pd_ == nd
-            assert np.array_equal(pc, nc)
-
-        # lossy VP8 frames: mux two libwebp-encoded stills into ANMF
-        lw = ctypes.CDLL("libwebp.so.7")
-        lw.WebPEncodeRGBA.restype = ctypes.c_size_t
-        lw.WebPEncodeRGBA.argtypes = [
-            ctypes.c_char_p, ctypes.c_int, ctypes.c_int, ctypes.c_int,
-            ctypes.c_float, ctypes.POINTER(ctypes.c_char_p),
-        ]
-
-        def lossy_still(img):
-            out = ctypes.c_char_p()
-            n = lw.WebPEncodeRGBA(
-                np.ascontiguousarray(img).tobytes(), img.shape[1],
-                img.shape[0], img.shape[1] * 4, 75.0, ctypes.byref(out))
-            assert n > 0
-            return ctypes.string_at(out, n)
-
-        def chunk(fourcc, body):
-            return (fourcc + struct.pack("<I", len(body)) + body
-                    + (b"\x00" if len(body) & 1 else b""))
-
-        def inner_chunks(riff):
-            # keep ALPH/VP8/VP8L sub-chunks, drop any VP8X
-            pos, keep = 12, b""
-            while pos + 8 <= len(riff):
-                fc = riff[pos:pos + 4]
-                (sz,) = struct.unpack_from("<I", riff, pos + 4)
-                if fc in (b"ALPH", b"VP8 ", b"VP8L"):
-                    keep += riff[pos:pos + 8 + sz + (sz & 1)]
-                pos += 8 + sz + (sz & 1)
-            return keep
-
-        w, h = 16, 10
-        opaque = [rng.integers(0, 256, (h, w, 4), dtype=np.uint8)
-                  for _ in range(2)]
-        for f in opaque:
-            f[..., 3] = 255
-        parts = [chunk(b"VP8X", bytes([0x02, 0, 0, 0])
-                       + (w - 1).to_bytes(3, "little")
-                       + (h - 1).to_bytes(3, "little")),
-                 chunk(b"ANIM", b"\x00\x00\x00\x00\x00\x00")]
-        for img, dur in zip(opaque, (40, 60)):
-            hdr = (bytes(3) + bytes(3)
-                   + (w - 1).to_bytes(3, "little")
-                   + (h - 1).to_bytes(3, "little")
-                   + dur.to_bytes(3, "little") + bytes([0x02]))
-            parts.append(chunk(b"ANMF", hdr + inner_chunks(lossy_still(img))))
-        body = b"WEBP" + b"".join(parts)
-        lossy_anim = b"RIFF" + struct.pack("<I", len(body)) + body
-        pure = decode_webp_anim(lossy_anim)
-        native = mm.webp_anim_native_decode(lossy_anim)
-        assert [d for _, d in pure] == [d for _, d in native] == [40, 60]
-        for (pc, _), (nc, _) in zip(pure, native):
-            assert np.array_equal(pc, nc)
-
-        # still-image fallthrough: both kernels return one frame
-        still = encode_webp_lossless(frames[0][..., :3])
-        sp, sn = decode_webp_anim(still), mm.webp_anim_native_decode(still)
-        assert len(sp) == len(sn) == 1
-        assert np.array_equal(sp[0][0], sn[0][0])
-
-    def test_anim_kernel_selector(self, spark, monkeypatch):
-        """$SPARK_GRAFT_ANIM_KERNEL resolves at plan time and the
-        operator output is identical under both kernels."""
-        from impala_cut_spark.operators import multimodal as mm
-
-        assert mm.anim_kernel_name() == "pure"
-        monkeypatch.setenv("SPARK_GRAFT_ANIM_KERNEL", "nope")
-        with pytest.raises(ValueError, match="known kernels"):
-            mm.anim_kernel_name()
-        webp = encode_webp_anim(
-            [_solid(4, 4, (1, 2, 3, 255)), _solid(4, 4, (4, 5, 6, 255))],
-            [40, 60],
-        )
-        df = spark.createDataFrame(
-            [(1, bytearray(webp)), (2, b"garbage")],
-            "asset_id bigint, payload binary",
-        )
-        monkeypatch.setenv("SPARK_GRAFT_ANIM_KERNEL", "webp-native")
-        assert mm.anim_kernel_name() == "webp-native"
-        native_rows = sorted(map(tuple, animation_frames(df).collect()))
-        monkeypatch.delenv("SPARK_GRAFT_ANIM_KERNEL")
-        pure_rows = sorted(map(tuple, animation_frames(df).collect()))
-        assert native_rows == pure_rows
-        assert len(native_rows) == 3

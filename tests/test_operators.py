@@ -404,21 +404,20 @@ class TestSimilarity:
 
 class TestMultimodal:
     def test_decode_image_stub_for_remaining_codecs(self):
-        # Both WebP codings decode natively since round 10 (VP8L
-        # lossless + VP8 key-frame); what remains inside the
-        # _DECODE_ERRORS degrade contract: corrupt VP8 payloads
-        # (ValueError from the keyframe checks), junk containers, and
-        # inter frames (NotImplementedError — need reference buffers)
+        # Both WebP codings decode through libwebp; it rejects corrupt
+        # VP8 payloads, junk containers and inter frames, which surface
+        # as ValueError inside the _DECODE_ERRORS degrade contract
         with pytest.raises(ValueError):
             multimodal.decode_image(
                 b"RIFF\x10\x00\x00\x00WEBPVP8 \x04\x00\x00\x00abcd"
             )
         with pytest.raises(ValueError):
             multimodal.decode_image(b"RIFF\x00\x00\x00\x00WEBPwebp-ish")
-        from impala_cut_spark.operators.vp8 import decode_vp8
-
-        with pytest.raises(NotImplementedError):  # inter-frame tag bit
-            decode_vp8(b"\x01\x00\x00\x9d\x01\x2a\x10\x00\x10\x00" + b"\x00" * 8)
+        with pytest.raises(ValueError):  # inter-frame tag bit
+            multimodal.decode_image(
+                b"RIFF\x1a\x00\x00\x00WEBPVP8 \x12\x00\x00\x00"
+                b"\x01\x00\x00\x9d\x01\x2a\x10\x00\x10\x00" + b"\x00" * 8
+            )
 
     def test_tiff_roundtrip_all_compressions(self):
         """Lossless round-trips across none / LZW(+predictor) /

@@ -204,31 +204,29 @@ def test_http_response_split():
         parse_http_response(b"GARBAGE line\r\n\r\nbody")
 
 
-def test_crawl_images_imageio_kernel_matches_pure(spark, sf_dir, monkeypatch):
-    """r9 verdict #3: the decode-kernel seam is real — running the
-    full pipe_crawl_images path (WARC → HTTP → image decode → mean)
-    with the JDK-ImageIO kernel produces row-identical output to the
-    pure-Python kernel.  Kernel name is resolved at PLAN time on the
-    driver and closed over into the mapInPandas function, so the flag
-    flips per-query without a session restart; executor Python workers
-    lazily launch one sidecar JVM each."""
-    from impala_cut_spark.plans import REGISTRY
-
-    spec = REGISTRY["pipe_crawl_images"]
-    pure = sorted(map(tuple, spec.spark(spark, sf_dir).collect()))
-    monkeypatch.setenv("SPARK_GRAFT_IMAGE_KERNEL", "imageio")
-    alt = sorted(map(tuple, spec.spark(spark, sf_dir).collect()))
-    assert alt == pure
-    assert len(pure) > 0
-
-
-def test_imageio_kernel_decode_parity():
-    """imageio_decode is a decode_image twin: exact pixels on the
-    lossless formats (PNG gray+RGB, BMP, GIF); unknown payloads degrade
-    through the same _DECODE_ERRORS contract."""
+def test_imageio_kernel_decode_parity(spark):
+    """decode_image agrees with the JDK's ImageIO, an independent
+    reader reached through the test session's JVM: exact pixels on the
+    lossless formats (PNG gray+RGB, BMP, GIF).  ImageIO's raster is
+    drawn onto a 24-bit BGR canvas (normalizing palette/gray/alpha) and
+    shipped back as one BMP byte array."""
     import numpy as np
 
     from impala_cut_spark.operators import multimodal as mm
+
+    jvm = spark._jvm
+
+    def imageio_rgb(payload: bytes) -> np.ndarray:
+        bi = jvm.javax.imageio.ImageIO.read(
+            jvm.java.io.ByteArrayInputStream(bytearray(payload))
+        )
+        rgb = jvm.java.awt.image.BufferedImage(bi.getWidth(), bi.getHeight(), 5)
+        g = rgb.createGraphics()
+        g.drawImage(bi, 0, 0, None)
+        g.dispose()
+        baos = jvm.java.io.ByteArrayOutputStream()
+        assert jvm.javax.imageio.ImageIO.write(rgb, "bmp", baos)
+        return mm.decode_image(bytes(baos.toByteArray()))
 
     rng = np.random.default_rng(10)
     img = rng.integers(0, 256, size=(9, 6, 3), dtype=np.uint8)
@@ -241,7 +239,5 @@ def test_imageio_kernel_decode_parity():
         mm.encode_gif(poster),
     ):
         a = mm.decode_image(payload)
-        b = mm.imageio_decode(payload)
+        b = imageio_rgb(payload)
         assert a.shape == b.shape and (a == b).all()
-    with pytest.raises(mm._DECODE_ERRORS):
-        mm.imageio_decode(b"not an image at all")

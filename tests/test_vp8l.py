@@ -1,17 +1,16 @@
-"""WebP lossless (operators/vp8l.py) — conformance vs the container's
-own libwebp.so.7 (ctypes, tests-only dependency, same role zstd-jni
-plays for the zstd decoder).
+"""WebP (operators/vp8l.py): the libwebp decode binding and the
+minimal VP8L encoder.
 
-Both directions: libwebp's lossless ENCODER output (which exercises
-subtract-green, predictor and color transforms, palettes with pixel
-bundling, color cache, 2D-LZ77 and meta prefix codes) must decode
-byte-exactly here; our minimal encoder's frames must decode byte-
-exactly under libwebp.  Plus the REAL lossless-coded ALPH alpha plane
-of CPython's test python.webp.
+libwebp.so.7 is a runtime dependency of the engine, so these tests
+load it unconditionally.  The binding must return libwebp's lossless
+ENCODER output (subtract-green, predictor and color transforms,
+palettes with pixel bundling, color cache, 2D-LZ77, meta prefix codes)
+as the original pixels; our minimal encoder's frames must decode
+byte-exactly under libwebp; hostile bytes must raise inside
+``_DECODE_ERRORS``; and a missing library must fail loudly.
 
 NOTE: libwebp's simple lossless encoder may rewrite RGB under alpha=0
-pixels (non-exact cleanup) — ground truth is therefore libwebp's own
-DECODE of its frame, not the input array.
+pixels (non-exact cleanup), so RGB is compared only where alpha > 0.
 """
 
 from __future__ import annotations
@@ -29,10 +28,7 @@ pytestmark = pytest.mark.filterwarnings("ignore::DeprecationWarning")
 
 @pytest.fixture(scope="module")
 def libwebp():
-    try:
-        lw = ctypes.CDLL("libwebp.so.7")
-    except OSError:
-        pytest.skip("libwebp.so.7 not present")
+    lw = ctypes.CDLL("libwebp.so.7")
     lw.WebPEncodeLosslessRGBA.restype = ctypes.c_size_t
     lw.WebPEncodeLosslessRGBA.argtypes = [
         ctypes.c_char_p, ctypes.c_int, ctypes.c_int, ctypes.c_int,
@@ -60,17 +56,6 @@ def _lw_decode(lw, payload: bytes) -> np.ndarray:
     ptr = lw.WebPDecodeRGBA(payload, len(payload), ctypes.byref(w), ctypes.byref(h))
     assert ptr, "libwebp rejected payload"
     return np.ctypeslib.as_array(ptr, shape=(h.value, w.value, 4)).copy()
-
-
-def _vp8l_chunk(payload: bytes) -> bytes:
-    pos = 12
-    while pos + 8 <= len(payload):
-        four = payload[pos : pos + 4]
-        (size,) = struct.unpack_from("<I", payload, pos + 4)
-        if four == b"VP8L":
-            return payload[pos + 8 : pos + 8 + size]
-        pos += 8 + size + (size & 1)
-    raise AssertionError("no VP8L chunk")
 
 
 def _cases() -> dict[str, np.ndarray]:
@@ -126,13 +111,15 @@ def _cases() -> dict[str, np.ndarray]:
 
 
 def test_decodes_libwebp_lossless_output(libwebp):
-    """Real-encoder conformance across every feature family."""
+    """decode_webp returns the original pixels of libwebp's lossless
+    encoding across every feature family and shape (rows, columns and
+    channels in order)."""
     for name, img in _cases().items():
-        payload = _lw_encode(libwebp, img)
-        ref = _lw_decode(libwebp, payload)
-        got = vp8l.decode_vp8l(_vp8l_chunk(payload))
-        assert got.shape == ref.shape, name
-        assert (got == ref).all(), name
+        got = vp8l.decode_webp(_lw_encode(libwebp, img))
+        assert got.shape == img.shape, name
+        assert (got[..., 3] == img[..., 3]).all(), name
+        seen = img[..., 3] > 0
+        assert (got[seen][:, :3] == img[seen][:, :3]).all(), name
 
 
 def test_libwebp_decodes_our_encoder(libwebp):
@@ -152,42 +139,14 @@ def test_libwebp_decodes_our_encoder(libwebp):
         riff = vp8l.encode_webp_lossless(img)
         got = _lw_decode(libwebp, riff)
         assert (got == img).all()
-        # and our own decoder agrees
-        assert (vp8l.decode_vp8l(vp8l.encode_vp8l(img)) == img).all()
-
-
-def test_real_alph_plane_matches_libwebp(libwebp):
-    """The REAL libwebp-encoded lossless ALPH plane inside CPython's
-    python.webp (compression method 1: headerless VP8L, alpha in the
-    green channel) must decode to the same alpha bytes libwebp's full
-    decoder produces."""
-    path = (
-        "/root/.pyenv/versions/3.13.0/lib/python3.13/test/"
-        "test_email/data/python.webp"
-    )
-    try:
-        payload = open(path, "rb").read()
-    except OSError:
-        pytest.skip("stdlib python.webp not present")
-    ref = _lw_decode(libwebp, payload)
-    h, w = ref.shape[:2]
-    pos = 12
-    alph = None
-    while pos + 8 <= len(payload):
-        four = payload[pos : pos + 4]
-        (size,) = struct.unpack_from("<I", payload, pos + 4)
-        if four == b"ALPH":
-            alph = payload[pos + 8 : pos + 8 + size]
-        pos += 8 + size + (size & 1)
-    assert alph is not None and alph[0] & 3 == 1  # method 1 = lossless
-    got = vp8l.decode_vp8l_alpha(alph[1:], w, h)
-    assert (got == ref[..., 3]).all()
+        # and the engine's binding agrees
+        assert (vp8l.decode_webp(riff) == img).all()
 
 
 def test_decode_image_dispatch(libwebp):
-    """decode_image routes RIFF/WEBP: lossless → exact RGB pixels;
-    lossy VP8 (round 10) → real decoded pixels through
-    operators/vp8.py + the documented vp8_to_rgb conversion."""
+    """decode_image routes RIFF/WEBP to libwebp and keeps RGB: lossless
+    → exact pixels; lossy VP8 with an ALPH plane (CPython's
+    python.webp) → libwebp's RGB."""
     rng = np.random.default_rng(5)
     img = rng.integers(0, 256, (8, 11, 3), np.uint8)
     rgba = np.dstack([img, np.full((8, 11, 1), 255, np.uint8)])
@@ -203,9 +162,6 @@ def test_decode_image_dispatch(libwebp):
     except OSError:
         pytest.skip("stdlib python.webp not present")
     got = multimodal.decode_image(data)
-    # lossy decode is byte-exact END-TO-END: exact YUV planes
-    # (tests/test_vp8.py) + libwebp's fancy upsampler and fixed-point
-    # YUV→RGB reproduced in vp8_to_rgb
     ref = _lw_decode(libwebp, data)[..., :3]
     assert got.shape == ref.shape and (got == ref).all()
 
@@ -223,7 +179,7 @@ def test_hypothesis_roundtrip():
     def rt(w, h, seed, vals):
         rng = np.random.default_rng(seed)
         img = rng.integers(0, vals, (h, w, 4), np.uint8) * (255 // (vals - 1))
-        assert (vp8l.decode_vp8l(vp8l.encode_vp8l(img)) == img).all()
+        assert (vp8l.decode_webp(vp8l.encode_webp_lossless(img)) == img).all()
 
     rt()
 
@@ -237,97 +193,57 @@ def test_hypothesis_roundtrip():
     def rt_palette(w, h, seed, vals):
         rng = np.random.default_rng(seed)
         img = rng.integers(0, vals, (h, w, 4), np.uint8) * (255 // max(vals - 1, 1))
-        assert (vp8l.decode_vp8l(vp8l.encode_vp8l(img)) == img).all()
+        assert (vp8l.decode_webp(vp8l.encode_webp_lossless(img)) == img).all()
 
     rt_palette()
 
 
 def test_corrupt_streams_rejected():
+    def riff(body: bytes) -> bytes:
+        chunk = b"VP8L" + struct.pack("<I", len(body)) + body
+        chunk += b"\x00" * (len(body) & 1)
+        return b"RIFF" + struct.pack("<I", 4 + len(chunk)) + b"WEBP" + chunk
+
     with pytest.raises(ValueError):
-        vp8l.decode_vp8l(b"\x00junk")
+        vp8l.decode_webp(riff(b"\x00junk"))
     good = bytearray(vp8l.encode_vp8l(np.full((4, 4, 3), 9, np.uint8)))
     good[9] ^= 0xFF  # flip bits inside the prefix-code section
-    with pytest.raises((ValueError, IndexError)):
-        vp8l.decode_vp8l(bytes(good))
+    with pytest.raises(ValueError):
+        vp8l.decode_webp(riff(bytes(good)))
     with pytest.raises(ValueError):
         vp8l.decode_webp(b"RIFF\x04\x00\x00\x00WAVE")
+
 
 def test_uniform_histogram_roundtrip(libwebp):
     """All 256 symbols of a channel equally frequent → every code
     length 8 → the code-length code has a SINGLE symbol.  The r10
     encoder emitted 1 bit per length there while decoders consume 0,
     desyncing the stream silently (ADVICE r10, medium).  The fix pads
-    the code-length code with a dummy 1-bit symbol; both our decoder
-    and libwebp must now round-trip the frame."""
+    the code-length code with a dummy 1-bit symbol; libwebp must now
+    round-trip the frame."""
     ramp = np.arange(256, dtype=np.uint8).reshape(16, 16)
     img = np.stack([ramp, ramp.T, ramp[::-1], ramp[:, ::-1]], axis=-1)
-    body = vp8l.encode_vp8l(img)
-    assert (vp8l.decode_vp8l(body) == img).all()
     riff = vp8l.encode_webp_lossless(img)
+    assert (vp8l.decode_webp(riff) == img).all()
     assert (_lw_decode(libwebp, riff) == img).all()
 
 
 def test_truncated_chunk_rejected():
-    """A RIFF size field pointing past the payload must fail loudly at
-    the container layer, not as a downstream entropy-decode error
-    (ADVICE r10, low)."""
+    """A RIFF size field pointing past the payload must fail loudly,
+    not decode a partial image (ADVICE r10, low)."""
     good = vp8l.encode_webp_lossless(np.full((4, 4, 3), 9, np.uint8))
-    with pytest.raises(ValueError, match="truncated chunk"):
+    with pytest.raises(ValueError, match="libwebp rejected"):
         vp8l.decode_webp(good[:-3])
     bad = bytearray(good)
     bad[16:20] = (2 ** 30).to_bytes(4, "little")  # VP8L chunk size
-    with pytest.raises(ValueError, match="truncated chunk"):
-        vp8l.decode_webp(bytes(bad))
-
-
-def test_webp_native_kernel_matches_pure(libwebp):
-    """r10 verdict #4: the ctypes-libwebp kernel behind
-    $SPARK_GRAFT_IMAGE_KERNEL must be pixel-identical to the pure
-    decoders on BOTH codings and fall through to decode_image for
-    every non-WebP format (same parity pattern as
-    test_crawl_images_imageio_kernel_matches_pure)."""
-    import ctypes
-
-    from impala_cut_spark.operators import multimodal as mm
-
-    rng = np.random.default_rng(11)
-    img = rng.integers(0, 256, (24, 17, 4), np.uint8)
-    lossless = _lw_encode(libwebp, img)
-    assert (mm.webp_native_decode(lossless) == mm.decode_image(lossless)).all()
-    # lossy VP8 (quality 75) — RGB path is byte-exact vs WebPDecodeRGBA
-    libwebp.WebPEncodeRGBA.restype = ctypes.c_size_t
-    libwebp.WebPEncodeRGBA.argtypes = [
-        ctypes.c_char_p, ctypes.c_int, ctypes.c_int, ctypes.c_int,
-        ctypes.c_float, ctypes.POINTER(ctypes.c_char_p),
-    ]
-    rgba = np.ascontiguousarray(img)
-    out = ctypes.c_char_p()
-    n = libwebp.WebPEncodeRGBA(
-        rgba.tobytes(), 17, 24, 17 * 4, 75.0, ctypes.byref(out)
-    )
-    assert n > 0
-    lossy = ctypes.string_at(out, n)
-    assert (mm.webp_native_decode(lossy) == mm.decode_image(lossy)).all()
-    # non-WebP payloads fall through to the pure decoder unchanged
-    png = mm.encode_png(img[..., :3])
-    assert (mm.webp_native_decode(png) == mm.decode_image(png)).all()
     with pytest.raises(ValueError, match="libwebp rejected"):
-        mm.webp_native_decode(b"RIFF\x04\x00\x00\x00WEBPjunkjunk")
-    # and the selector accepts the new arm
-    import os
-
-    os.environ["SPARK_GRAFT_IMAGE_KERNEL"] = "webp-native"
-    try:
-        assert mm.image_kernel_name() == "webp-native"
-        assert mm.IMAGE_KERNELS[mm.image_kernel_name()] is mm.webp_native_decode
-    finally:
-        del os.environ["SPARK_GRAFT_IMAGE_KERNEL"]
+        vp8l.decode_webp(bytes(bad))
 
 
 def test_webp_metadata_truncated_chunk_rejected():
     """webp_metadata must not report a phantom canvas from a truncated
     VP8X/VP8L chunk (short slices int.from_bytes to zeros) — round-11
-    hardening, same policy as decode_webp."""
+    hardening, same policy as the animation demuxer."""
     from impala_cut_spark.operators.multimodal import webp_metadata
 
     good = vp8l.encode_webp_lossless(np.full((6, 5, 3), 3, np.uint8))
@@ -340,8 +256,8 @@ def test_webp_metadata_truncated_chunk_rejected():
 def test_palette_encoding_all_bundle_tiers(libwebp):
     """Round-11 encoder arm: ≤256-color images take the color-indexing
     transform with pixel bundling (8/4/2/1 px per coded byte).  Each
-    tier must round-trip through OUR decoder and through libwebp, at
-    odd widths that leave a partial packed byte at row end."""
+    tier must round-trip through libwebp, at odd widths that leave a
+    partial packed byte at row end."""
     rng = np.random.default_rng(12)
     for n_colors, shape in ((2, (17, 23)), (4, (19, 21)), (16, (40, 41)),
                             (200, (23, 17)), (1, (15, 29))):
@@ -350,8 +266,8 @@ def test_palette_encoding_all_bundle_tiers(libwebp):
         idx = rng.integers(0, len(pal), shape)
         img = pal[idx]  # (h, w, 4)
         body = vp8l.encode_vp8l(img)
-        assert (vp8l.decode_vp8l(body) == img).all(), n_colors
         riff = vp8l.encode_webp_lossless(img)
+        assert (vp8l.decode_webp(riff) == img).all(), n_colors
         assert (_lw_decode(libwebp, riff) == img).all(), n_colors
         if len(pal) <= 16:
             # the transform flag is stream bit 40 (after the 8-bit
@@ -362,4 +278,119 @@ def test_palette_encoding_all_bundle_tiers(libwebp):
     tiny = rng.integers(0, 256, (4, 4, 3), np.uint8)
     tbody = vp8l.encode_vp8l(tiny)
     assert not (tbody[5] & 1)  # no transform
-    assert (vp8l.decode_vp8l(tbody)[..., :3] == tiny).all()
+    assert (multimodal.decode_image(vp8l.encode_webp_lossless(tiny)) == tiny).all()
+
+
+# -- hostile bytes -------------------------------------------------------------
+
+
+def _riff(*chunks: tuple[bytes, bytes]) -> bytes:
+    body = b"".join(
+        four + struct.pack("<I", len(b)) + b + b"\x00" * (len(b) & 1)
+        for four, b in chunks
+    )
+    return b"RIFF" + struct.pack("<I", 4 + len(body)) + b"WEBP" + body
+
+
+def _hostile() -> dict[str, bytes]:
+    good = vp8l.encode_webp_lossless(np.full((4, 4, 3), 9, np.uint8))
+    past_end = bytearray(good)
+    past_end[16:20] = (2 ** 30).to_bytes(4, "little")  # VP8L chunk size
+    lw = ctypes.CDLL("libwebp.so.7")
+    lw.WebPEncodeRGBA.restype = ctypes.c_size_t
+    lw.WebPEncodeRGBA.argtypes = [
+        ctypes.c_char_p, ctypes.c_int, ctypes.c_int, ctypes.c_int,
+        ctypes.c_float, ctypes.POINTER(ctypes.c_char_p),
+    ]
+    rgba = np.random.default_rng(7).integers(0, 256, (8, 8, 4), np.uint8)
+    out = ctypes.c_char_p()
+    n = lw.WebPEncodeRGBA(rgba.tobytes(), 8, 8, 32, 75.0, ctypes.byref(out))
+    lossy = ctypes.string_at(out, n)  # VP8X + ALPH + VP8
+    alpha_junk = bytearray(lossy)
+    i = lossy.index(b"ALPH") + 8
+    alpha_junk[i : i + 21] = b"\x01" + b"\xa5" * 20
+    frames = [np.full((4, 4, 4), 200, np.uint8)] * 2
+    anim = vp8l.encode_webp_anim(frames, [10, 10])
+    oversized = bytearray(anim)  # VP8X canvas 2x2 under 4x4 frames
+    i = anim.index(b"VP8X") + 12
+    oversized[i : i + 6] = (1).to_bytes(3, "little") * 2
+    huge = bytes([0x2F]) + (16382 | 16382 << 14).to_bytes(4, "little")
+    return {
+        "truncated-riff": good[: len(good) // 2],
+        "chunk-past-end": bytes(past_end),
+        "junk-vp8": _riff((b"VP8 ", bytes(range(20)))),
+        "junk-vp8l": _riff((b"VP8L", b"\x2f" + b"\xff" * 20)),
+        "junk-alph": bytes(alpha_junk),
+        "animation-to-still": anim,
+        "anmf-exceeds-canvas": bytes(oversized),
+        "vp8l-16383-square": _riff((b"VP8L", huge + bytes(27))),
+    }
+
+
+HOSTILE = _hostile()
+#: a well-formed animation is hostile only to the still path
+STILL_ONLY = {"animation-to-still"}
+
+
+@pytest.fixture(scope="module")
+def hostile_frames(spark):
+    from impala_cut_spark.operators.multimodal import animation_frames
+
+    names = sorted(HOSTILE)
+    df = spark.createDataFrame(
+        [(i, bytearray(HOSTILE[n])) for i, n in enumerate(names)],
+        "asset_id bigint, payload binary",
+    )
+    rows: dict[str, list] = {n: [] for n in names}
+    for r in animation_frames(df).collect():
+        rows[names[r.asset_id]].append(r)
+    return rows
+
+
+@pytest.mark.parametrize("name", sorted(HOSTILE))
+def test_hostile_webp_bytes(name, hostile_frames):
+    """ROADMAP aim 3: every hostile WebP payload raises inside
+    _DECODE_ERRORS on the still path and the animation path, and
+    animation_frames degrades it to one parse_ok=false row."""
+    payload = HOSTILE[name]
+    with pytest.raises(multimodal._DECODE_ERRORS):
+        multimodal.decode_image(payload)
+    if name in STILL_ONLY:
+        assert all(r.parse_ok for r in hostile_frames[name])
+        return
+    with pytest.raises(multimodal._DECODE_ERRORS):
+        vp8l.decode_webp_anim(payload)
+    (row,) = hostile_frames[name]
+    assert row.parse_ok is False and row.frame_idx == -1
+
+
+def test_missing_libwebp_fails_loudly(monkeypatch):
+    """Without libwebp the loader's OSError is not a decode error:
+    decode_image raises it and extract_features' per-asset decode does
+    not degrade it to byte features."""
+    import pandas as pd
+
+    def no_library():
+        raise OSError("libwebp.so.7: cannot open shared object file")
+
+    monkeypatch.setattr(vp8l, "_libwebp", no_library)
+    payload = vp8l.encode_webp_lossless(np.full((4, 4, 3), 9, np.uint8))
+    assert not issubclass(OSError, multimodal._DECODE_ERRORS)
+    with pytest.raises(OSError):
+        multimodal.decode_image(payload)
+
+    class _Plan:  # stands in for fan_out(assets): hands back the batch fn
+        def mapInPandas(self, fn, schema):
+            return fn
+
+    monkeypatch.setattr(multimodal, "fan_out", lambda assets: _Plan())
+    extract = multimodal.extract_features(None)
+    batch = pd.DataFrame(
+        {"asset_id": [1], "modality": ["image"], "payload": [payload]}
+    )
+    with pytest.raises(OSError):
+        list(extract(iter([batch])))
+    # the same batch function still serves PNG without libwebp
+    png = multimodal.encode_png(np.full((2, 2, 3), 5, np.uint8))
+    out = next(extract(iter([batch.assign(payload=[png])])))
+    assert out["n_bytes"].tolist() == [len(png)]

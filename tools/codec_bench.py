@@ -85,83 +85,58 @@ def main() -> None:
     # GIF needs <=256 colors: web-safe posterize keeps photo statistics
     poster = (img // 51 * 51).astype(np.uint8)
     add("gif", "our LZW 216-color, 1 MP", encode_gif(poster), decode_gif, mp)
-    # webp-lossless (round 10): decode a REAL libwebp-encoded frame —
-    # subtract-green + predictor + color transform + meta prefix codes
-    try:
-        import ctypes
+    # WebP: libwebp-encoded payloads through decode_webp (libwebp's
+    # own decoder behind the engine's one ctypes binding)
+    import ctypes
 
-        lwc = ctypes.CDLL("libwebp.so.7")
-        lwc.WebPEncodeLosslessRGBA.restype = ctypes.c_size_t
-        lwc.WebPEncodeLosslessRGBA.argtypes = [
-            ctypes.c_char_p, ctypes.c_int, ctypes.c_int, ctypes.c_int,
-            ctypes.POINTER(ctypes.c_char_p)]
-        rgba = np.dstack([img, np.full(img.shape[:2] + (1,), 255, np.uint8)])
-        wout = ctypes.c_char_p()
-        wn = lwc.WebPEncodeLosslessRGBA(
-            np.ascontiguousarray(rgba).tobytes(),
-            img.shape[1], img.shape[0], img.shape[1] * 4, ctypes.byref(wout))
-        wpayload = ctypes.string_at(wout, wn)
-        from impala_cut_spark.operators.vp8l import decode_webp
+    from impala_cut_spark.operators.vp8l import decode_webp, decode_webp_anim
 
-        add("webp-lossless", "libwebp VP8L photo, 1 MP", wpayload,
-            decode_webp, mp, reps=5)
-        # vp8 lossy (round 10): YUV-exact key-frame decode
-        lwc.WebPEncodeRGBA.restype = ctypes.c_size_t
-        lwc.WebPEncodeRGBA.argtypes = [
-            ctypes.c_char_p, ctypes.c_int, ctypes.c_int, ctypes.c_int,
-            ctypes.c_float, ctypes.POINTER(ctypes.c_char_p)]
-        lout = ctypes.c_char_p()
-        ln = lwc.WebPEncodeRGBA(
-            np.ascontiguousarray(rgba).tobytes(),
-            img.shape[1], img.shape[0], img.shape[1] * 4, 75.0,
-            ctypes.byref(lout))
-        lossy_payload = ctypes.string_at(lout, ln)
-        add("webp-vp8", "libwebp q75 VP8 photo, 1 MP",
-            lossy_payload, decode_webp, mp, reps=5)
-        # the native swap-in behind $SPARK_GRAFT_IMAGE_KERNEL (r10
-        # verdict #4): same payloads through the ctypes libwebp kernel
-        from impala_cut_spark.operators.multimodal import webp_native_decode
+    lwc = ctypes.CDLL("libwebp.so.7")
+    lwc.WebPEncodeLosslessRGBA.restype = ctypes.c_size_t
+    lwc.WebPEncodeLosslessRGBA.argtypes = [
+        ctypes.c_char_p, ctypes.c_int, ctypes.c_int, ctypes.c_int,
+        ctypes.POINTER(ctypes.c_char_p)]
+    lwc.WebPEncodeRGBA.restype = ctypes.c_size_t
+    lwc.WebPEncodeRGBA.argtypes = [
+        ctypes.c_char_p, ctypes.c_int, ctypes.c_int, ctypes.c_int,
+        ctypes.c_float, ctypes.POINTER(ctypes.c_char_p)]
+    rgba = np.dstack([img, np.full(img.shape[:2] + (1,), 255, np.uint8)])
+    wout = ctypes.c_char_p()
+    wn = lwc.WebPEncodeLosslessRGBA(
+        np.ascontiguousarray(rgba).tobytes(),
+        img.shape[1], img.shape[0], img.shape[1] * 4, ctypes.byref(wout))
+    add("webp-lossless", "libwebp VP8L photo, 1 MP",
+        ctypes.string_at(wout, wn), decode_webp, mp, reps=5)
+    lout = ctypes.c_char_p()
+    ln = lwc.WebPEncodeRGBA(
+        np.ascontiguousarray(rgba).tobytes(),
+        img.shape[1], img.shape[0], img.shape[1] * 4, 75.0,
+        ctypes.byref(lout))
+    add("webp-vp8", "libwebp q75 VP8 photo, 1 MP",
+        ctypes.string_at(lout, ln), decode_webp, mp, reps=5)
+    # animated WebP: 8 quarter-MP lossy frames through the Python ANMF
+    # walk and composition, each frame decoded by libwebp
+    qimg = np.ascontiguousarray(rgba[:500, :500])
+    aout = ctypes.c_char_p()
+    an = lwc.WebPEncodeRGBA(
+        qimg.tobytes(), 500, 500, 500 * 4, 75.0, ctypes.byref(aout))
+    astill = ctypes.string_at(aout, an)
 
-        add("webp-lossless-native", "same VP8L payload, libwebp kernel",
-            wpayload, webp_native_decode, mp, reps=5)
-        add("webp-vp8-native", "same VP8 payload, libwebp kernel",
-            lossy_payload, webp_native_decode, mp, reps=5)
-        # animated WebP (r11 verdict Next #3): 8 quarter-MP lossy
-        # frames through the shared ANMF walk — pure per-frame decode
-        # vs the $SPARK_GRAFT_ANIM_KERNEL libwebp arm (no demux
-        # library in this container, so composition is shared and
-        # only the per-frame pixel decode differs)
-        from impala_cut_spark.operators.multimodal import (
-            webp_anim_native_decode,
-        )
-        from impala_cut_spark.operators.vp8l import decode_webp_anim
+    def _chunkit(fourcc, bod):
+        return (fourcc + struct.pack("<I", len(bod)) + bod
+                + (b"\x00" if len(bod) & 1 else b""))
 
-        qimg = np.ascontiguousarray(rgba[:500, :500])
-        aout = ctypes.c_char_p()
-        an = lwc.WebPEncodeRGBA(
-            qimg.tobytes(), 500, 500, 500 * 4, 75.0, ctypes.byref(aout))
-        astill = ctypes.string_at(aout, an)
-
-        def _chunkit(fourcc, bod):
-            return (fourcc + struct.pack("<I", len(bod)) + bod
-                    + (b"\x00" if len(bod) & 1 else b""))
-
-        sub = astill[12:]  # the VP8 chunk of the still container
-        hdr = (bytes(6) + (499).to_bytes(3, "little") * 2
-               + (40).to_bytes(3, "little") + bytes([0x02]))
-        aparts = [_chunkit(b"VP8X", bytes([0x02, 0, 0, 0])
-                           + (499).to_bytes(3, "little") * 2),
-                  _chunkit(b"ANIM", bytes(6))]
-        aparts += [_chunkit(b"ANMF", hdr + sub)] * 8
-        abody = b"WEBP" + b"".join(aparts)
-        anim_payload = b"RIFF" + struct.pack("<I", len(abody)) + abody
-        anim_mp = 8 * 0.25
-        add("webp-anim", "8x quarter-MP VP8 frames, pure",
-            anim_payload, decode_webp_anim, anim_mp, reps=3)
-        add("webp-anim-native", "same animation, libwebp frame kernel",
-            anim_payload, webp_anim_native_decode, anim_mp, reps=3)
-    except OSError:
-        print("  webp rows skipped: no libwebp")
+    sub = astill[12:]  # the VP8 chunk of the still container
+    hdr = (bytes(6) + (499).to_bytes(3, "little") * 2
+           + (40).to_bytes(3, "little") + bytes([0x02]))
+    aparts = [_chunkit(b"VP8X", bytes([0x02, 0, 0, 0])
+                       + (499).to_bytes(3, "little") * 2),
+              _chunkit(b"ANIM", bytes(6))]
+    aparts += [_chunkit(b"ANMF", hdr + sub)] * 8
+    abody = b"WEBP" + b"".join(aparts)
+    add("webp-anim", "8x quarter-MP VP8 frames",
+        b"RIFF" + struct.pack("<I", len(abody)) + abody,
+        decode_webp_anim, 8 * 0.25, reps=3)
     add("tiff-lzw", "our LZW+predictor, 1 MP",
         encode_tiff(img, compression=5, predictor=2), decode_tiff, mp)
     add("tiff-packbits", "our PackBits, 1 MP",
@@ -204,26 +179,6 @@ def main() -> None:
             ("tiff-ccitt-g4", "ImageIO bilevel scan, 1 MP",
              round(len(g4) / 1e3, 1), round(gdt, 3),
              round(len(g4) / 1e6 / gdt, 3), round(mp / gdt, 3))
-        )
-        # imageio-kernel (r9 verdict #3): the alternate decode kernel
-        # behind $SPARK_GRAFT_IMAGE_KERNEL — JDK ImageIO through py4j
-        # (decode + lossless BMP transfer + _decode_bmp), here reusing
-        # the live gateway exactly as the driver path does.
-        from impala_cut_spark.operators.multimodal import imageio_decode
-
-        jq90 = encode_jpeg(img, quality=90)
-        it = _time(imageio_decode, jq90, 3)
-        rows.append(
-            ("imageio-kernel", "same q90 JPEG via JDK ImageIO, 1 MP",
-             round(len(jq90) / 1e3, 1), round(it, 3),
-             round(len(jq90) / 1e6 / it, 3), round(mp / it, 3))
-        )
-        pngp = encode_png(img)
-        ipt = _time(imageio_decode, pngp, 3)
-        rows.append(
-            ("imageio-kernel", "same filter-0 PNG via JDK ImageIO, 1 MP",
-             round(len(pngp) / 1e3, 1), round(ipt, 3),
-             round(len(pngp) / 1e6 / ipt, 3), round(mp / ipt, 3))
         )
         sp.stop()
     except Exception as e:  # pragma: no cover
@@ -280,37 +235,13 @@ per-block Python loop); progressive ~4x (list-local AC refinement).
             f"{g4_row[5]} MP/s/core vs 1.1 MP/s in round 9 "
             f"(~{float(g4_row[5]) / 1.1:.0f}x).\n\n"
         )
-    webp_rows = [r for r in rows if r[0].startswith("webp")]
-    if webp_rows:
-        lines.append(
-            "Round-10: BOTH WebP codings decode natively and "
-            "libwebp-validated — VP8L lossless (byte-exact pixels both "
-            "directions, incl. the real lossless ALPH plane of CPython's "
-            "python.webp) and VP8 lossy key frames (loop-filtered YUV "
-            "planes byte-exact vs WebPDecodeYUV across quality 0-100; "
-            "RGB via the documented vp8_to_rgb conversion).  Like every "
-            "codec here these are CONFORMANCE components; at 100 TB the "
-            "kernel inside the batch function swaps for a native library "
-            "(the $SPARK_GRAFT_IMAGE_KERNEL seam), plumbing unchanged.\n\n"
-        )
-    pure_q90 = next(
-        (r for r in rows if r[0] == "jpeg-baseline" and "q90" in r[1]), None
+    lines.append(
+        "WebP rows decode through libwebp (the engine's only WebP "
+        "decoder, a runtime dependency) behind decode_webp; the "
+        "animation row adds the Python ANMF walk and canvas "
+        "composition, since the installed libwebp has no demux "
+        "library.\n\n"
     )
-    io_q90 = next(
-        (r for r in rows if r[0] == "imageio-kernel" and "JPEG" in r[1]), None
-    )
-    if pure_q90 and io_q90:
-        lines.append(
-            f"Round-10 kernel seam (r9 verdict #3): the imageio-kernel "
-            f"rows decode the SAME 1 MP payloads through the alternate "
-            f"JDK-ImageIO kernel behind $SPARK_GRAFT_IMAGE_KERNEL "
-            f"(pipe_crawl_images is row-identical under it — "
-            f"tests/test_pipeline5_ops.py): q90 JPEG "
-            f"{io_q90[3]} s vs {pure_q90[3]} s pure-Python "
-            f"({pure_q90[3] / io_q90[3]:.1f}x) — the measured gain a "
-            f"native-kernel swap buys with schema, partitioning and "
-            f"degradation contract unchanged.\n\n"
-        )
     scale = Path(__file__).resolve().parent.parent / "SCALE.md"
     text = scale.read_text()
     header = "## Codec throughput"
