@@ -1,20 +1,18 @@
 """Multimodal-column plumbing: opaque ``binary`` payloads + typed metadata.
 
-Decode is REAL for the formats real crawls are made of — binary PPM
-(P6), uncompressed 24-bit BMP, and (round 8) PNG (stdlib zlib, gray /
-gray+alpha / RGB / RGBA / palette at every legal bit depth 1/2/4/8/16,
-Adam7 interlace, all five scanline filters; RFC 2083 / ISO 15948),
-baseline JPEG (operators/jpeg.py: from-scratch huffman + IDCT per
-ITU-T T.81, validated against the JVM's ImageIO decoder) AND
-GIF87a/89a (from-scratch LZW, bit-exact vs ImageIO) — the same
-from-scratch precedent as the LZO codec.  Container/frame METADATA is
-real for MP4 (ISO 14496-12 box tree) and MPEG audio (ISO 11172-3
-frame headers) — the prune-before-decode stage.  Both WebP codings
-decode through the system's libwebp (operators/vp8l.py decode_webp,
-a runtime dependency), and animated GIF/WebP compose here
-(decode_gif_frames / vp8l.decode_webp_anim).  Remaining codec
-formats (MP3/AAC sample data, video codecs) stay STUBBED:
-``decode_image`` raises NotImplementedError for those, and
+Decode is REAL for the formats real crawls are made of.  Binary PPM
+(P6) and uncompressed 24-bit BMP decode here, and baseline JPEG in
+operators/jpeg.py (from-scratch huffman + IDCT per ITU-T T.81,
+validated against the JVM's ImageIO decoder).  PNG, GIF and TIFF
+decode through the system's libpng, libgif and libtiff
+(operators/imagelibs.py), and both WebP codings through libwebp
+(operators/vp8l.py decode_webp); all four libraries are runtime
+dependencies.  Animated GIF/WebP compose in Python
+(imagelibs.decode_gif_frames / vp8l.decode_webp_anim).  Container/frame
+METADATA is real for MP4 (ISO 14496-12 box tree) and MPEG audio
+(ISO 11172-3 frame headers) — the prune-before-decode stage.
+Remaining codec formats (MP3/AAC sample data, video codecs) stay
+STUBBED: ``decode_image`` raises NotImplementedError for those, and
 ``fake_features`` is the deterministic stand-in.  The
 Spark-side plumbing is identical either way: schema, Arrow batch
 shape, mapInPandas signatures, and the partitioning story match what
@@ -38,13 +36,22 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from impala_cut_spark.operators.imagelibs import (
+    decode_gif,
+    decode_gif_frames,
+    decode_png,
+    decode_tiff,
+)
 from impala_cut_spark.partitioning import fan_out
 
 #: every exception a corrupt/truncated asset can surface from the decoders:
-#: zlib.error (PNG IDAT / TIFF deflate strips), EOFError (JPEG bit reader on
-#: truncated entropy data), KeyError (missing huffman/quant tables or TIFF
-#: tags), TypeError (malformed tag payload shapes). The extract/resize paths
-#: must never fail a job on one bad asset — they degrade to byte features.
+#: ValueError (a payload libpng/libgif/libtiff/libwebp reject, and the
+#: Python container walks), EOFError/IndexError/KeyError/OverflowError
+#: (the JPEG decoder on truncated entropy data, missing tables or
+#: flipped DC differences), TypeError/struct.error/zlib.error (the
+#: remaining Python parsers).  The extract/resize paths must never fail a
+#: job on one bad asset — they degrade to byte features.  OSError (a
+#: missing codec library) is deliberately absent: it fails the query.
 _DECODE_ERRORS = (
     NotImplementedError,
     ValueError,
@@ -52,6 +59,7 @@ _DECODE_ERRORS = (
     KeyError,
     TypeError,
     EOFError,
+    OverflowError,
     struct.error,
     zlib.error,
 )
@@ -96,9 +104,9 @@ def assets_from_documents(docs: DataFrame) -> DataFrame:
 def decode_image(payload: bytes) -> "np.ndarray":
     """Decode a raster payload to an (H, W, 3) uint8 array.
 
-    Real for PPM (P6), uncompressed 24-bit BMP, PNG (stdlib zlib —
-    _decode_png), baseline JPEG (operators/jpeg.py), GIF87a/89a
-    (decode_gif), baseline TIFF (operators/tiff.py) and BOTH WebP
+    Real for PPM (P6), uncompressed 24-bit BMP, baseline JPEG
+    (operators/jpeg.py), PNG, GIF87a/89a (first image) and TIFF (libpng,
+    libgif and libtiff through operators/imagelibs.py) and BOTH WebP
     codings (libwebp through operators/vp8l.py decode_webp).
     Remaining boundaries (animations, inter frames) raise."""
     if payload[:2] == b"P6":
@@ -106,7 +114,7 @@ def decode_image(payload: bytes) -> "np.ndarray":
     if payload[:2] == b"BM":
         return _decode_bmp(payload)
     if payload[:8] == PNG_SIG:
-        return _decode_png(payload)
+        return decode_png(payload)
     if payload[:2] == b"\xff\xd8":
         from impala_cut_spark.operators.jpeg import decode_jpeg
 
@@ -114,8 +122,6 @@ def decode_image(payload: bytes) -> "np.ndarray":
     if payload[:6] in (b"GIF87a", b"GIF89a"):
         return decode_gif(payload)
     if payload[:4] in (b"II*\x00", b"MM\x00*"):
-        from impala_cut_spark.operators.tiff import decode_tiff
-
         return decode_tiff(payload)
     if payload[:4] == b"RIFF" and payload[8:12] == b"WEBP":
         from impala_cut_spark.operators.vp8l import decode_webp
@@ -237,388 +243,7 @@ def encode_bmp(arr: np.ndarray) -> bytes:
     return bytes(hdr) + bytes(body)
 
 
-# -- PNG (public spec, RFC 2083 / ISO 15948; stdlib zlib) --------------------
-
-PNG_SIG = b"\x89PNG\r\n\x1a\n"
-#: color type → samples per pixel (0 gray, 2 RGB, 3 palette index,
-#: 4 gray+alpha, 6 RGBA)
-_PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
-
-
-def _paeth(a: int, b: int, c: int) -> int:
-    """PNG Paeth predictor (spec §6.6): nearest of left/up/up-left."""
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    return b if pb <= pc else c
-
-
-#: Adam7 pass origins and steps (spec §8.2): (x0, y0, dx, dy)
-_ADAM7 = (
-    (0, 0, 8, 8),
-    (4, 0, 8, 8),
-    (0, 4, 4, 8),
-    (2, 0, 4, 4),
-    (0, 2, 2, 4),
-    (1, 0, 2, 2),
-    (0, 1, 1, 2),
-)
-
-
-def _png_defilter(raw: bytes, h: int, stride: int, bpp: int) -> np.ndarray:
-    """Undo the five PNG scanline filters over ``h`` rows of ``stride``
-    filtered bytes each (spec §6: filtering is BYTE-wise; the "left"
-    byte sits ``bpp`` = ceil(bits-per-pixel/8) bytes back)."""
-    if len(raw) < h * (stride + 1):
-        raise ValueError("PNG scanline payload size mismatch")
-    out = np.empty((h, stride), dtype=np.uint8)
-    prev = np.zeros(stride, dtype=np.uint8)
-    for y in range(h):
-        f = raw[y * (stride + 1)]
-        line = np.frombuffer(
-            raw, dtype=np.uint8, count=stride, offset=y * (stride + 1) + 1
-        ).copy()
-        if f == 0:  # None
-            pass
-        elif f == 1:  # Sub (intra-row recurrence)
-            for x in range(bpp, stride):
-                line[x] = (int(line[x]) + int(line[x - bpp])) & 0xFF
-        elif f == 2:  # Up — no intra-row dependency: vectorized
-            line = ((line.astype(np.int16) + prev) & 0xFF).astype(np.uint8)
-        elif f == 3:  # Average
-            for x in range(stride):
-                a = int(line[x - bpp]) if x >= bpp else 0
-                line[x] = (int(line[x]) + ((a + int(prev[x])) >> 1)) & 0xFF
-        elif f == 4:  # Paeth
-            for x in range(stride):
-                a = int(line[x - bpp]) if x >= bpp else 0
-                c = int(prev[x - bpp]) if x >= bpp else 0
-                line[x] = (int(line[x]) + _paeth(a, int(prev[x]), c)) & 0xFF
-        else:
-            raise ValueError(f"bad PNG filter type {f}")
-        out[y] = line
-        prev = line
-    return out
-
-
-def _png_samples(rows: np.ndarray, w: int, ch: int, depth: int, ctype: int) -> np.ndarray:
-    """Defiltered scanline bytes → (H, w, ch) uint8 samples.  16-bit
-    samples reduce to their high byte (the spec's sample-depth scaling
-    for an 8-bit consumer); 1/2/4-bit gray scales to full range,
-    palette indices pass through unscaled."""
-    h = rows.shape[0]
-    if depth == 8:
-        return rows.reshape(h, w, ch)
-    if depth == 16:
-        return np.ascontiguousarray(rows.reshape(h, w, ch, 2)[..., 0])
-    # sub-byte depths: spec restricts them to 1-channel gray/palette
-    bits = np.unpackbits(rows, axis=1)
-    if depth == 1:
-        s = bits[:, :w]
-    else:
-        grp = bits.reshape(h, -1, depth)
-        weights = (1 << np.arange(depth - 1, -1, -1)).astype(np.uint8)
-        s = (grp * weights).sum(axis=2, dtype=np.uint16)[:, :w]
-    if ctype == 0:  # gray: scale to [0, 255]
-        s = s * (255 // ((1 << depth) - 1))
-    return s.reshape(h, w, 1).astype(np.uint8)
-
-
-def _decode_png(payload: bytes) -> np.ndarray:
-    """PNG → (H, W, 3) uint8: gray / gray+alpha / RGB / RGBA / palette
-    at every legal bit depth (1/2/4/8/16), interlace methods 0 and
-    Adam7, all five scanline filters (None/Sub/Up/Average/Paeth).
-    Alpha is dropped, gray replicated, and 16-bit samples reduced to
-    their high byte to match decode_image's 8-bit RGB contract.
-    Spec-conformance evidence: the filter-by-filter hypothesis
-    round-trip vs encode_png, decoding real-world PNGs from foreign
-    encoders, and bit-exact agreement with the JVM's ImageIO on
-    interlaced/16-bit/sub-byte variants it re-encodes
-    (tests/test_operators.py)."""
-    import struct
-    import zlib
-
-    if payload[:8] != PNG_SIG:
-        raise ValueError("not a PNG payload")
-    pos, ihdr, plte, idat = 8, None, None, bytearray()
-    while pos + 8 <= len(payload):
-        (ln,) = struct.unpack_from(">I", payload, pos)
-        typ = payload[pos + 4 : pos + 8]
-        pos += 8
-        data = payload[pos : pos + ln]
-        pos += ln + 4  # per-chunk CRC skipped; zlib's adler32 catches corruption
-        if typ == b"IHDR":
-            ihdr = struct.unpack(">IIBBBBB", data)
-        elif typ == b"PLTE":
-            plte = np.frombuffer(data, dtype=np.uint8).reshape(-1, 3)
-        elif typ == b"IDAT":
-            idat += data
-        elif typ == b"IEND":
-            break
-    if ihdr is None:
-        raise ValueError("PNG missing IHDR")
-    w, h, depth, ctype, _comp, _filt, interlace = ihdr
-    ch = _PNG_CHANNELS.get(ctype)
-    if ch is None:
-        raise ValueError(f"bad PNG color type {ctype}")
-    if depth not in (1, 2, 4, 8, 16) or (depth < 8 and ctype not in (0, 3)):
-        raise ValueError(f"illegal PNG depth {depth} for color type {ctype}")
-    if ctype == 3 and plte is None:
-        raise ValueError("palette PNG missing PLTE")
-    raw = zlib.decompress(bytes(idat))
-    bpp = max(1, ch * depth // 8)
-    if not interlace:
-        stride = (w * ch * depth + 7) // 8
-        out = _png_samples(_png_defilter(raw, h, stride, bpp), w, ch, depth, ctype)
-    elif interlace == 1:
-        out = np.zeros((h, w, ch), dtype=np.uint8)
-        off = 0
-        for x0, y0, dx, dy in _ADAM7:
-            rw = (w - x0 + dx - 1) // dx
-            rh = (h - y0 + dy - 1) // dy
-            if rw <= 0 or rh <= 0:
-                continue
-            stride = (rw * ch * depth + 7) // 8
-            size = rh * (stride + 1)
-            rows = _png_defilter(raw[off : off + size], rh, stride, bpp)
-            out[y0::dy, x0::dx] = _png_samples(rows, rw, ch, depth, ctype)
-            off += size
-    else:
-        raise ValueError(f"bad PNG interlace method {interlace}")
-    if ctype == 3:  # palette lookup: index plane → RGB
-        idx = out.reshape(h, w)
-        if int(idx.max(initial=0)) >= len(plte):
-            raise ValueError("PNG palette index out of range")
-        return np.ascontiguousarray(plte[idx])
-    img = out
-    if ch == 1:
-        img = np.repeat(img, 3, axis=2)
-    elif ch == 2:  # gray+alpha → gray replicated, alpha dropped
-        img = np.repeat(img[..., :1], 3, axis=2)
-    elif ch == 4:  # RGBA → alpha dropped
-        img = img[..., :3]
-    return np.ascontiguousarray(img)
-
-
-# -- GIF (public spec, GIF87a/89a; LZW like the LZO precedent) ---------------
-
-
-def decode_gif(payload: bytes) -> np.ndarray:
-    """GIF87a/89a → (H, W, 3) uint8 RGB of the FIRST image block
-    (animations: first frame), LZW per the spec (variable 3..12-bit
-    codes, LSB-first packing, clear/EOI), 4-pass interlace, local or
-    global color tables, frames painted onto the logical screen.
-    Conformance: bit-exact against the JVM ImageIO decoder on the
-    container's real-world GIFs (tests/test_operators.py)."""
-    if payload[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError("not a GIF payload")
-    sw = int.from_bytes(payload[6:8], "little")
-    sh = int.from_bytes(payload[8:10], "little")
-    flags = payload[10]
-    bg = payload[11]
-    pos = 13
-    gct = None
-    if flags & 0x80:
-        n = 2 << (flags & 7)
-        gct = np.frombuffer(payload, dtype=np.uint8, count=3 * n, offset=pos).reshape(n, 3)
-        pos += 3 * n
-    while pos < len(payload):
-        b = payload[pos]
-        if b == 0x3B:  # trailer
-            break
-        if b == 0x21:  # extension: label + length-prefixed sub-blocks
-            pos += 2
-            while payload[pos] != 0:
-                pos += 1 + payload[pos]
-            pos += 1
-            continue
-        if b != 0x2C:
-            raise ValueError(f"bad GIF block 0x{b:02x}")
-        ix = int.from_bytes(payload[pos + 1 : pos + 3], "little")
-        iy = int.from_bytes(payload[pos + 3 : pos + 5], "little")
-        iw = int.from_bytes(payload[pos + 5 : pos + 7], "little")
-        ih = int.from_bytes(payload[pos + 7 : pos + 9], "little")
-        iflags = payload[pos + 9]
-        pos += 10
-        ct = gct
-        if iflags & 0x80:
-            n = 2 << (iflags & 7)
-            ct = np.frombuffer(payload, dtype=np.uint8, count=3 * n, offset=pos).reshape(n, 3)
-            pos += 3 * n
-        if ct is None:
-            raise ValueError("GIF image with no color table")
-        interlaced = bool(iflags & 0x40)
-        min_code = payload[pos]
-        pos += 1
-        data = bytearray()
-        while payload[pos] != 0:
-            ln = payload[pos]
-            data += payload[pos + 1 : pos + 1 + ln]
-            pos += 1 + ln
-        pos += 1
-        idx = _gif_lzw_decode(bytes(data), min_code, iw * ih)
-        img = np.asarray(idx, dtype=np.int32).reshape(ih, iw)
-        if interlaced:
-            out = np.empty_like(img)
-            rows = (
-                list(range(0, ih, 8))
-                + list(range(4, ih, 8))
-                + list(range(2, ih, 4))
-                + list(range(1, ih, 2))
-            )
-            for src, dst in enumerate(rows):
-                out[dst] = img[src]
-            img = out
-        rgb = ct[np.clip(img, 0, len(ct) - 1)]
-        if (iw, ih) != (sw, sh) or ix or iy:
-            screen = np.zeros((sh, sw, 3), dtype=np.uint8)
-            if gct is not None and bg < len(gct):
-                screen[:, :] = gct[bg]
-            screen[iy : iy + ih, ix : ix + iw] = rgb
-            return screen
-        return np.ascontiguousarray(rgb.astype(np.uint8))
-    raise ValueError("GIF contained no image block")
-
-
-def decode_gif_frames(payload: bytes) -> list[tuple[np.ndarray, int]]:
-    """GIF87a/89a animation → [(composited RGBA canvas, delay in
-    centiseconds)], one per image block, per the GIF89a composition
-    rules: the logical screen starts fully transparent; each frame's
-    raster paints its rectangle skipping the Graphic Control
-    Extension's transparent index; disposal 0/1 keeps the canvas,
-    2 clears the frame rectangle back to transparent AFTER display
-    (the de-facto renderer behavior — the spec's background-color fill
-    predates transparency support), 3 restores the pre-frame canvas.
-    Single-image GIFs return one entry; decode_gif (first frame on an
-    opaque logical screen) is unchanged for still-image callers."""
-    if payload[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError("not a GIF payload")
-    sw = int.from_bytes(payload[6:8], "little")
-    sh = int.from_bytes(payload[8:10], "little")
-    flags = payload[10]
-    pos = 13
-    gct = None
-    if flags & 0x80:
-        n = 2 << (flags & 7)
-        gct = np.frombuffer(payload, dtype=np.uint8, count=3 * n, offset=pos).reshape(n, 3)
-        pos += 3 * n
-    canvas = np.zeros((sh, sw, 4), dtype=np.uint8)
-    frames: list[tuple[np.ndarray, int]] = []
-    delay = 0
-    transparent = -1
-    disposal = 0
-    while pos < len(payload):
-        b = payload[pos]
-        if b == 0x3B:  # trailer
-            break
-        if b == 0x21:  # extension
-            label = payload[pos + 1]
-            pos += 2
-            if label == 0xF9 and payload[pos] >= 4:  # Graphic Control Ext
-                gflags = payload[pos + 1]
-                delay = int.from_bytes(payload[pos + 2 : pos + 4], "little")
-                transparent = payload[pos + 4] if gflags & 1 else -1
-                disposal = (gflags >> 2) & 7
-            while payload[pos] != 0:
-                pos += 1 + payload[pos]
-            pos += 1
-            continue
-        if b != 0x2C:
-            raise ValueError(f"bad GIF block 0x{b:02x}")
-        ix = int.from_bytes(payload[pos + 1 : pos + 3], "little")
-        iy = int.from_bytes(payload[pos + 3 : pos + 5], "little")
-        iw = int.from_bytes(payload[pos + 5 : pos + 7], "little")
-        ih = int.from_bytes(payload[pos + 7 : pos + 9], "little")
-        iflags = payload[pos + 9]
-        pos += 10
-        ct = gct
-        if iflags & 0x80:
-            n = 2 << (iflags & 7)
-            ct = np.frombuffer(payload, dtype=np.uint8, count=3 * n, offset=pos).reshape(n, 3)
-            pos += 3 * n
-        if ct is None:
-            raise ValueError("GIF image with no color table")
-        min_code = payload[pos]
-        pos += 1
-        data = bytearray()
-        while payload[pos] != 0:
-            ln = payload[pos]
-            data += payload[pos + 1 : pos + 1 + ln]
-            pos += 1 + ln
-        pos += 1
-        idx = _gif_lzw_decode(bytes(data), min_code, iw * ih)
-        img = np.asarray(idx, dtype=np.int32).reshape(ih, iw)
-        if iflags & 0x40:  # interlaced
-            out = np.empty_like(img)
-            rows = (
-                list(range(0, ih, 8))
-                + list(range(4, ih, 8))
-                + list(range(2, ih, 4))
-                + list(range(1, ih, 2))
-            )
-            for src, dst in enumerate(rows):
-                out[dst] = img[src]
-            img = out
-        if iy + ih > sh or ix + iw > sw:
-            raise ValueError("GIF frame exceeds logical screen")
-        saved = canvas.copy() if disposal == 3 else None
-        region = canvas[iy : iy + ih, ix : ix + iw]
-        opaque = img != transparent
-        region[..., :3] = np.where(
-            opaque[..., None], ct[np.clip(img, 0, len(ct) - 1)], region[..., :3]
-        )
-        region[..., 3] = np.where(opaque, 255, region[..., 3])
-        frames.append((canvas.copy(), delay))
-        if disposal == 2:
-            region[:] = 0
-        elif disposal == 3 and saved is not None:
-            canvas = saved
-        delay = 0
-        transparent = -1
-        disposal = 0
-    if not frames:
-        raise ValueError("GIF contained no image block")
-    return frames
-
-
-def _gif_lzw_decode(data: bytes, min_code: int, limit: int) -> list[int]:
-    clear = 1 << min_code
-    eoi = clear + 1
-    out: list[int] = []
-    bitpos = 0
-    nbits = len(data) * 8
-    table = {i: (i,) for i in range(clear)}
-    width = min_code + 1
-    prev: tuple[int, ...] | None = None
-    next_code = eoi + 1
-    while bitpos + width <= nbits and len(out) < limit:
-        byte = bitpos >> 3
-        chunk = int.from_bytes(data[byte : byte + 3], "little")
-        code = (chunk >> (bitpos & 7)) & ((1 << width) - 1)
-        bitpos += width
-        if code == clear:
-            table = {i: (i,) for i in range(clear)}
-            width = min_code + 1
-            next_code = eoi + 1
-            prev = None
-            continue
-        if code == eoi:
-            break
-        if prev is None or code in table:
-            entry = table[code]
-        elif code == next_code:  # the KwKwK case
-            entry = prev + (prev[0],)
-        else:
-            raise ValueError("corrupt GIF LZW stream")
-        out.extend(entry)
-        if prev is not None and next_code < 4096:
-            table[next_code] = prev + (entry[0],)
-            next_code += 1
-            if next_code == (1 << width) and width < 12:
-                width += 1
-        prev = entry
-    return out[:limit]
+# -- GIF encoders (decode: operators/imagelibs.py, giflib) --------------------
 
 
 def encode_gif(arr: np.ndarray) -> bytes:
@@ -755,6 +380,20 @@ def encode_gif_anim(
     return bytes(out)
 
 
+# -- PNG encoder (decode: operators/imagelibs.py, libpng) ---------------------
+
+PNG_SIG = b"\x89PNG\r\n\x1a\n"
+
+
+def _paeth(a: int, b: int, c: int) -> int:
+    """PNG Paeth predictor (spec §6.6): nearest of left/up/up-left."""
+    p = a + b - c
+    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
+    if pa <= pb and pa <= pc:
+        return a
+    return b if pb <= pc else c
+
+
 def _png_chunk(typ: bytes, data: bytes) -> bytes:
     import struct
     import zlib
@@ -770,7 +409,7 @@ def _png_chunk(typ: bytes, data: bytes) -> bytes:
 def encode_png(arr: np.ndarray, filter_type: int = 0) -> bytes:
     """(H, W) | (H, W, 1|3|4) uint8 → PNG payload, every scanline
     forward-filtered with ``filter_type`` (0..4) — the fixture/sink
-    twin of _decode_png, parameterized so the round-trip test
+    twin of decode_png, parameterized so the round-trip test
     exercises each filter's inverse."""
     import struct
     import zlib
@@ -974,8 +613,8 @@ def fake_features(payload: bytes, dim: int = FEATURE_DIM) -> np.ndarray:
 def extract_features(assets: DataFrame) -> DataFrame:
     """mapInPandas feature extraction — the production shape: Arrow
     batches in, one feature row per asset out, no driver involvement.
-    A missing libwebp (OSError) is not a decode error: it fails the
-    query rather than degrading every WebP to byte features."""
+    A missing codec library (OSError) is not a decode error: it fails
+    the query rather than degrading every image to byte features."""
 
     def _one(p: bytes | None) -> np.ndarray:
         import struct
@@ -1862,8 +1501,8 @@ def animation_frames(
 ) -> DataFrame:
     """One output row per COMPOSITED animation frame — real decode,
     not stride slicing (frame_sample's stub contract stays for raw
-    streams): GIF89a animations through decode_gif_frames (LZW +
-    GCE disposal/transparency composition) and animated WebP through
+    streams): GIF89a animations through decode_gif_frames (giflib
+    decode + GCE disposal/transparency composition) and animated WebP through
     decode_webp_anim (VP8X/ANIM/ANMF demux, libwebp frame decode,
     blend/dispose composition).  ``ts_ms`` is the frame's start time
     (cumulative prior durations; GIF centiseconds normalized to ms),

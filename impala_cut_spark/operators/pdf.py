@@ -544,6 +544,8 @@ class _Document:
             if d[lex.pos : lex.pos + 7] == b"trailer":
                 lex.pos += 7
                 tr = lex.parse()
+                if not isinstance(tr, dict):
+                    raise ValueError("pdf: trailer is not a dictionary")
                 for k, v in tr.items():
                     if k not in self.trailer:
                         self.trailer[k] = v

@@ -515,12 +515,13 @@ def decode_webp_anim(payload: bytes) -> list[tuple[np.ndarray, int]]:
     over the canvas rectangle, method 1 overwrites it; disposal 1
     clears the frame rectangle back to transparent AFTER the frame is
     shown (the libwebp demuxer's behavior — the ANIM background color
-    is a renderer hint, not part of the composition).  Still images
-    return a single (decode_webp(payload), 0) entry."""
-    try:
-        anim = webp_frames(payload)
-    except ValueError:
+    is a renderer hint, not part of the composition).  Payloads whose
+    first chunk is not a VP8X with the animation flag are stills and
+    return a single (decode_webp(payload), 0) entry; a malformed
+    animation raises its own error."""
+    if not (payload[12:16] == b"VP8X" and payload[20:21] and payload[20] & 0x02):
         return [(decode_webp(payload), 0)]
+    anim = webp_frames(payload)
     canvas = np.zeros((anim["h"], anim["w"], 4), dtype=np.uint8)
     shown: list[tuple[np.ndarray, int]] = []
     for fr in anim["frames"]:

@@ -16,11 +16,8 @@ import ctypes
 import numpy as np
 import pytest
 
-from impala_cut_spark.operators.multimodal import (
-    animation_frames,
-    decode_gif_frames,
-    encode_gif_anim,
-)
+from impala_cut_spark.operators.imagelibs import decode_gif_frames
+from impala_cut_spark.operators.multimodal import animation_frames, encode_gif_anim
 from impala_cut_spark.operators.vp8l import (
     decode_webp_anim,
     encode_webp_anim,
@@ -261,7 +258,8 @@ class TestGifAnim:
         assert tuple(c2[0, 2, :3]) == (99, 99, 99)
 
     def test_decode_gif_still_unchanged(self):
-        from impala_cut_spark.operators.multimodal import decode_gif, encode_gif
+        from impala_cut_spark.operators.imagelibs import decode_gif
+        from impala_cut_spark.operators.multimodal import encode_gif
 
         rng = np.random.default_rng(9)
         img = rng.integers(0, 5, (8, 8, 1), dtype=np.uint8).repeat(3, 2) * 50

@@ -402,6 +402,18 @@ class TestSimilarity:
         assert len(multi) >= len(single)
 
 
+#: PNG Adam7 pass origins and steps (spec §8.2): (x0, y0, dx, dy)
+_ADAM7 = (
+    (0, 0, 8, 8),
+    (4, 0, 8, 8),
+    (0, 4, 4, 8),
+    (2, 0, 4, 4),
+    (0, 2, 2, 4),
+    (1, 0, 2, 2),
+    (0, 1, 1, 2),
+)
+
+
 class TestMultimodal:
     def test_decode_image_stub_for_remaining_codecs(self):
         # Both WebP codings decode through libwebp; it rejects corrupt
@@ -448,7 +460,8 @@ class TestMultimodal:
         both directions."""
         import numpy as np
 
-        from impala_cut_spark.operators.tiff import decode_tiff, encode_tiff
+        from impala_cut_spark.operators.imagelibs import decode_tiff
+        from impala_cut_spark.operators.tiff import encode_tiff
 
         jvm = spark._jvm
         rng = np.random.default_rng(11)
@@ -485,21 +498,23 @@ class TestMultimodal:
 
         import numpy as np
 
-        from impala_cut_spark.operators.tiff import decode_tiff, encode_tiff
+        from impala_cut_spark.operators.imagelibs import decode_tiff
+        from impala_cut_spark.operators.tiff import encode_tiff
 
         p = "/root/.pyenv/versions/3.13.0/lib/python3.13/test/test_email/data/python.tiff"
         if os.path.exists(p):  # real-world RGBA uncompressed, foreign writer
             img = decode_tiff(open(p, "rb").read())
             assert img.shape == (16, 16, 3) and img.dtype == np.uint8
             assert img.std() > 0
-        # odd sample depths stay a documented boundary
+        # odd sample depths stay a documented boundary: libtiff's RGBA
+        # reader refuses them
         import struct as st
 
         base = bytearray(encode_tiff(np.zeros((4, 4), dtype=np.uint8)))
         # patch BitsPerSample (258) value from 8 to 12
         idx = bytes(base).find(st.pack("<HHI", 258, 3, 1))
         base[idx + 8 : idx + 10] = st.pack("<H", 12)
-        with pytest.raises(NotImplementedError, match="bit"):
+        with pytest.raises(ValueError, match="12-bit"):
             decode_tiff(bytes(base))
 
     def test_tiff_16bit_gray_matches_jvm_imageio(self, spark, tmp_path):
@@ -508,7 +523,7 @@ class TestMultimodal:
         high byte of each sample."""
         import numpy as np
 
-        from impala_cut_spark.operators.tiff import decode_tiff
+        from impala_cut_spark.operators.imagelibs import decode_tiff
 
         jvm = spark._jvm
         rng = np.random.default_rng(13)
@@ -533,7 +548,7 @@ class TestMultimodal:
         Deflate tile compression."""
         import numpy as np
 
-        from impala_cut_spark.operators.tiff import decode_tiff
+        from impala_cut_spark.operators.imagelibs import decode_tiff
 
         jvm = spark._jvm
         rng = np.random.default_rng(12)
@@ -567,12 +582,14 @@ class TestMultimodal:
         sizes (1-bit to 8-bit code widths) and a table-growth image."""
         import numpy as np
 
+        from impala_cut_spark.operators.imagelibs import decode_gif
+
         rng = np.random.default_rng(9)
         for ncolors in (2, 5, 16, 200):
             pal = rng.integers(0, 256, size=(ncolors, 3), dtype=np.uint8)
             idx = rng.integers(0, ncolors, size=(21, 17))
             img = pal[idx]
-            got = multimodal.decode_gif(multimodal.encode_gif(img))
+            got = decode_gif(multimodal.encode_gif(img))
             assert (got == img).all(), ncolors
 
     def test_gif_matches_jvm_imageio_bit_exact(self, spark):
@@ -582,6 +599,8 @@ class TestMultimodal:
         import os
 
         import numpy as np
+
+        from impala_cut_spark.operators.imagelibs import decode_gif
 
         paths = [
             "/usr/share/doc/libxslt1-dev/html/Libxslt-Logo-180x168.gif",
@@ -598,12 +617,12 @@ class TestMultimodal:
             )
             ref_rgb = ref[..., :3][..., ::-1] if nc >= 3 else np.repeat(ref, 3, axis=2)
             local = "/" + im["origin"].split("file:", 1)[-1].lstrip("/")
-            mine = multimodal.decode_gif(open(local, "rb").read())
+            mine = decode_gif(open(local, "rb").read())
             assert (mine == ref_rgb).all(), im["origin"]
 
     def test_png_roundtrip_every_filter_and_layout(self):
         """encode_png forward-filters with each of the five spec
-        filters; _decode_png must invert all of them for gray, RGB and
+        filters; decode_png must invert all of them for gray, RGB and
         RGBA layouts (alpha dropped, gray replicated to RGB)."""
         import numpy as np
 
@@ -711,7 +730,7 @@ class TestMultimodal:
 
         raw = bytearray()
         if interlace:
-            for x0, y0, dx, dy in multimodal._ADAM7:
+            for x0, y0, dx, dy in _ADAM7:
                 sub = samples[y0::dy, x0::dx]
                 if sub.size:
                     raw += emit(sub)
@@ -754,17 +773,47 @@ class TestMultimodal:
         assert (ref == img).all()
         assert (multimodal.decode_image(open(path, "rb").read()) == img).all()
 
-    def test_png_16bit_reduces_to_high_byte(self):
+    def test_png_16bit_reduces_by_libpng_rounding(self):
+        """16-bit samples reduce to 8 bits by libpng's rounding,
+        (v + 128) // 257, whatever gAMA the file declares; alpha is
+        dropped without premultiplying the colour samples.  Adam7
+        images read as 16-bit linear samples (libpng's 8-bit read of
+        them is wrong), which libpng premultiplies: divided back out,
+        the colour is within 1 of the rounding wherever the alpha is
+        at least 129 (8-bit alpha above 0)."""
+        import struct
+
         import numpy as np
+
+        def to8(v):
+            return ((v.astype(np.int64) + 128) // 257).astype(np.uint8)
 
         rng = np.random.default_rng(5)
         s16 = rng.integers(0, 65536, size=(6, 5, 3), dtype=np.uint16)
         got = multimodal.decode_image(self._build_png(s16, 16, 2))
-        assert (got == (s16 >> 8).astype(np.uint8)).all()
+        assert (got == to8(s16)).all()
         # 16-bit gray + Adam7 combined
         g16 = rng.integers(0, 65536, size=(9, 4, 1), dtype=np.uint16)
         got = multimodal.decode_image(self._build_png(g16, 16, 0, interlace=1))
-        assert (got == np.repeat((g16 >> 8).astype(np.uint8), 3, axis=2)).all()
+        assert (got == np.repeat(to8(g16), 3, axis=2)).all()
+        # RGBA with a linear gAMA chunk: colour-space chunks are ignored
+        a16 = rng.integers(0, 65536, size=(64, 64, 4), dtype=np.uint16)
+        png = self._build_png(a16, 16, 6)
+        i = png.index(b"IDAT") - 4
+        png = (png[:i] + multimodal._png_chunk(b"gAMA", struct.pack(">I", 100000))
+               + png[i:])
+        assert (multimodal.decode_image(png) == to8(a16[..., :3])).all()
+        # Adam7: RGB exact in every pass; RGBA and gray+alpha within 1
+        # of the stored colour, over the whole alpha range
+        got = multimodal.decode_image(self._build_png(a16[:17, :13, :3], 16, 2, interlace=1))
+        assert (got == to8(a16[:17, :13, :3])).all()
+        a16[..., 3] = np.arange(64 * 64).reshape(64, 64) * 16
+        alpha = a16[:17, :13, 3]
+        for ctype, samples in ((6, a16[:17, :13]), (4, a16[:17, :13, 2:])):
+            got = multimodal.decode_image(self._build_png(samples, 16, ctype, interlace=1))
+            want = to8(np.broadcast_to(samples[..., :-1], (17, 13, 3)))
+            diff = np.abs(got.astype(np.int64) - want)
+            assert diff[alpha >= 129].max() <= 1 and (got[alpha == 0] == 0).all(), ctype
 
     def test_png_sub_byte_gray_scales_to_full_range(self):
         import numpy as np
@@ -967,10 +1016,16 @@ class TestMultimodal:
         wr.write(None, jvm.javax.imageio.IIOImage(bi, None, None), wr.getDefaultWriteParam())
         ios.close()
         data = open(path, "rb").read()
-        from impala_cut_spark.operators.tiff import _read_ifd, decode_tiff
+        import struct as st
+
+        from impala_cut_spark.operators.imagelibs import decode_tiff
 
         bo = "<" if data[:2] == b"II" else ">"
-        assert _read_ifd(data, bo)[262] == [3]  # really palette photometric
+        (ifd,) = st.unpack_from(bo + "I", data, 4)
+        (n,) = st.unpack_from(bo + "H", data, ifd)
+        entries = [st.unpack_from(bo + "HHIH", data, ifd + 2 + 12 * i)
+                   for i in range(n)]
+        assert (262, 3, 1, 3) in entries  # really palette photometric
         got = decode_tiff(data)
         # ground truth = what the JVM itself reads back (indexed quantizes)
         row = spark.read.format("image").load(path).collect()[0]["image"]
@@ -1002,6 +1057,32 @@ class TestMultimodal:
         feats = {r.asset_id: np.array(r.features) for r in multimodal.extract_features(assets).collect()}
         assert np.allclose(feats[1], multimodal.fake_features(bytes(rows[0][5])))
         assert np.allclose(feats[2], multimodal.fake_features(bytes(rows[1][5])))
+
+    def test_jpeg_dc_overflow_degrades_to_byte_features(self, spark):
+        """One flipped byte in the DC Huffman table (category 7 → 255)
+        makes a DC difference too large for the coefficient array.  The
+        OverflowError that raises is a decode error, so extract_features
+        emits byte features instead of failing the job."""
+        import numpy as np
+
+        from impala_cut_spark.operators.jpeg import encode_jpeg
+
+        yy, xx = np.mgrid[0:16, 0:16]
+        img = np.stack([(xx * 16) % 256, (yy * 16) % 256, ((xx + yy) * 8) % 256],
+                       axis=2).astype(np.uint8)
+        jp = bytearray(encode_jpeg(img, quality=90))
+        dht = bytes(jp).index(b"\xff\xc4")
+        symbols = dht + 2 + 2 + 1 + 16  # marker, length, class/id, counts
+        assert jp[symbols + 7] == 7
+        jp[symbols + 7] = 0xFF
+        with pytest.raises(OverflowError):
+            multimodal.decode_image(bytes(jp))
+        assert issubclass(OverflowError, multimodal._DECODE_ERRORS)
+        assets = spark.createDataFrame(
+            [(1, "image", "image/jpeg", 16, 16, jp)], multimodal.ASSET_SCHEMA
+        )
+        (row,) = multimodal.extract_features(assets).collect()
+        assert np.allclose(row.features, multimodal.fake_features(bytes(jp)))
 
     def test_jpeg_arithmetic_coding_is_stubbed(self):
         import struct
@@ -2108,14 +2189,14 @@ class TestWebpMetadata:
 
 
 class TestTiffSubByte:
-    """1/2/4-bit TIFF decode (operators/tiff.py _decode_subbyte) —
+    """1/2/4-bit TIFF decode (libtiff through imagelibs.decode_tiff) —
     bilevel scans and low-depth palettes, with the JVM ImageIO's
     1-bit TIFF writer as the independent anchor."""
 
     def test_bilevel_matches_jvm_imageio(self, spark, tmp_path):
         import numpy as np
 
-        from impala_cut_spark.operators.tiff import decode_tiff
+        from impala_cut_spark.operators.imagelibs import decode_tiff
 
         jvm = spark._jvm
         rng = np.random.default_rng(21)
@@ -2199,7 +2280,7 @@ class TestTiffSubByte:
     def test_gray_depths_scale_to_full_range(self):
         import numpy as np
 
-        from impala_cut_spark.operators.tiff import decode_tiff
+        from impala_cut_spark.operators.imagelibs import decode_tiff
 
         rng = np.random.default_rng(22)
         for depth, scale in ((1, 255), (2, 85), (4, 17)):
@@ -2214,7 +2295,7 @@ class TestTiffSubByte:
     def test_4bit_palette(self):
         import numpy as np
 
-        from impala_cut_spark.operators.tiff import decode_tiff
+        from impala_cut_spark.operators.imagelibs import decode_tiff
 
         rng = np.random.default_rng(23)
         pal = rng.integers(0, 256, size=(16, 3), dtype=np.uint8)
@@ -2224,9 +2305,9 @@ class TestTiffSubByte:
 
 
 class TestTiffCcitt:
-    """CCITT fax decode (tiff.py decode_ccitt): Modified Huffman
-    (comp 2), T.4 1D/2D (comp 3), Group 4 / T.6 (comp 4) — every mode
-    anchored on the JVM ImageIO CCITT writers."""
+    """CCITT fax decode (libtiff through imagelibs.decode_tiff):
+    Modified Huffman (comp 2), T.4 1D/2D (comp 3), Group 4 / T.6
+    (comp 4) — every mode anchored on the JVM ImageIO CCITT writers."""
 
     @staticmethod
     def _write(jvm, bits01, ctype, path):
@@ -2250,7 +2331,7 @@ class TestTiffCcitt:
     def test_matches_jvm_imageio(self, spark, tmp_path, ctype):
         import numpy as np
 
-        from impala_cut_spark.operators.tiff import decode_tiff
+        from impala_cut_spark.operators.imagelibs import decode_tiff
 
         jvm = spark._jvm
         rng = np.random.default_rng(31)
@@ -2270,33 +2351,52 @@ class TestTiffCcitt:
             want = np.repeat((img * 255)[:, :, None], 3, axis=2)
             assert got.shape == want.shape and (got == want).all(), i
 
+    @staticmethod
+    def _wrap(strip, w, h, comp):
+        """A one-strip 1-bit WhiteIsZero TIFF around a CCITT strip."""
+        import struct as st
+
+        entries = [(256, 4, w), (257, 4, h), (258, 3, 1), (259, 3, comp),
+                   (262, 3, 0), (273, 4, 122), (277, 3, 1), (278, 4, h),
+                   (279, 4, len(strip))]  # strip at 8 + 2 + 9 * 12 + 4
+        out = b"II*\x00" + st.pack("<IH", 8, len(entries))
+        for tag, typ, val in entries:
+            out += st.pack("<HHI", tag, typ, 1)
+            out += st.pack("<HH", val, 0) if typ == 3 else st.pack("<I", val)
+        return out + st.pack("<I", 0) + strip
+
     def test_handwritten_mh_row(self):
         """A hand-assembled Modified-Huffman row decodes to the spec's
         run lengths: white 4 (1011), black 2 (11), white 1000 =
         makeup 960 (011010100) + terminating 40 (00101001)…"""
         import numpy as np
 
-        from impala_cut_spark.operators.tiff import _MsbBits, _decode_mh_row
+        from impala_cut_spark.operators.imagelibs import decode_tiff
 
         bits = "1011" + "11" + "011010100" + "00101001" + "11"  # w4 b2 w1000 b2
         padded = bits + "0" * (-len(bits) % 8)
         data = bytes(int(padded[i : i + 8], 2) for i in range(0, len(padded), 8))
-        runs = _decode_mh_row(_MsbBits(data), 4 + 2 + 1000 + 2)
-        assert runs == [4, 2, 1000, 2]
+        got = decode_tiff(self._wrap(data, 4 + 2 + 1000 + 2, 1, 2))
+        want = np.repeat([255, 0, 255, 0], [4, 2, 1000, 2]).astype(np.uint8)
+        assert (got == want[None, :, None]).all()
 
     def test_corrupt_ccitt_raises(self):
         import struct as st
 
-        import numpy as np
+        from impala_cut_spark.operators.imagelibs import decode_tiff
 
-        from impala_cut_spark.operators.tiff import decode_ccitt
-
-        with pytest.raises(ValueError):
-            decode_ccitt([b"\xff\xff\xff"], 10, 1, 2, 1)  # runs exceed width
-        with pytest.raises(ValueError):
-            decode_ccitt([st.pack(">I", 0)], 10, 1, 2, 1)  # invalid code
-        assert (decode_ccitt([b"\x00" * 0 + b"\x35\x00"], 0, 0, 2, 1)
-                == np.zeros((0, 0))).all()
+        with pytest.raises(ValueError):  # MH runs exceed the width
+            decode_tiff(self._wrap(b"\xff\xff\xff", 10, 1, 2))
+        with pytest.raises(ValueError):  # invalid MH code
+            decode_tiff(self._wrap(st.pack(">I", 0), 10, 1, 2))
+        with pytest.raises(ValueError):  # G4 strip ends after 16 of 40 rows
+            decode_tiff(self._wrap(b"\xff\xff", 16, 40, 4))
+        with pytest.raises(ValueError):  # invalid G4 mode code
+            decode_tiff(self._wrap(b"\x00" * 8, 16, 4, 4))
+        with pytest.raises(ValueError):  # no EOL / invalid T.4 code
+            decode_tiff(self._wrap(b"\x00" * 8, 16, 2, 3))
+        with pytest.raises(ValueError):  # 0x0 image
+            decode_tiff(self._wrap(b"\x35\x00", 0, 0, 2))
 
 
 class TestLicenseDetect:

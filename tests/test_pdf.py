@@ -222,6 +222,27 @@ class TestOperator:
         assert rows[1].producer == "impala-cut-spark"
         assert rows[2].parse_ok is False and rows[3].parse_ok is False
 
+    def test_non_dict_trailer_degrades(self, spark):
+        """A trailer that is not a dictionary (``trailer (x)``) is a
+        damaged tail: the objects are recovered when present, and the
+        row is parse_ok=false when they are not — never an
+        AttributeError that fails the job."""
+        import re as _re
+
+        intact = _re.sub(rb"trailer\s*<<.*?>>\s*startxref",
+                         b"trailer (x)\nstartxref",
+                         build_pdf(["after a bad trailer"], compress=False),
+                         flags=_re.S)
+        bare = (b"%PDF-1.4\nxref\n0 1\n0000000000 65535 f \n"
+                b"trailer (x)\nstartxref\n9\n%%EOF\n")
+        df = spark.createDataFrame(
+            [(1, bytearray(intact)), (2, bytearray(bare))],
+            "asset_id bigint, payload binary",
+        )
+        rows = {r.asset_id: r for r in pdf_extract(df).collect()}
+        assert rows[1].parse_ok and rows[1].text == "after a bad trailer"
+        assert rows[2].parse_ok is False
+
 
 class TestXrefRecovery:
     """Real crawls carry PDFs whose tail (xref + trailer) is damaged

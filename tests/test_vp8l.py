@@ -364,6 +364,28 @@ def test_hostile_webp_bytes(name, hostile_frames):
     assert row.parse_ok is False and row.frame_idx == -1
 
 
+def test_corrupt_anmf_frame_raises_its_own_error(monkeypatch):
+    """A corrupt frame inside a well-formed animation raises from that
+    frame's decode; the whole payload is not re-decoded as a still."""
+    frames = [np.full((4, 4, 4), v, np.uint8) for v in (40, 120, 200)]
+    anim = bytearray(vp8l.encode_webp_anim(frames, [10, 10, 10]))
+    third = [i for i in range(len(anim)) if anim[i : i + 4] == b"ANMF"][2]
+    vp8l_at = third + 8 + 16 + 8  # ANMF header, then the VP8L chunk body
+    assert anim[vp8l_at] == 0x2F
+    anim[vp8l_at + 5 :] = b"\xff" * (len(anim) - vp8l_at - 5)
+    seen: list[int] = []
+    real = vp8l.decode_webp
+
+    def spy(payload):
+        seen.append(len(payload))
+        return real(payload)
+
+    monkeypatch.setattr(vp8l, "decode_webp", spy)
+    with pytest.raises(ValueError, match="libwebp rejected"):
+        vp8l.decode_webp_anim(bytes(anim))
+    assert len(seen) == 3 and len(anim) not in seen
+
+
 def test_missing_libwebp_fails_loudly(monkeypatch):
     """Without libwebp the loader's OSError is not a decode error:
     decode_image raises it and extract_features' per-asset decode does
