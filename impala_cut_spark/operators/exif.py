@@ -1,4 +1,5 @@
-"""EXIF metadata — extraction, injection, and stripping. Pure stdlib.
+"""EXIF metadata — extraction, injection, and stripping.  Pure stdlib,
+apart from the JPEG marker walker shared with ``imagelibs.decode_jpeg``.
 
 EXIF is the provenance/PII layer of crawled images: camera make and
 model, capture timestamps, orientation, and — the privacy-relevant
@@ -19,6 +20,8 @@ degradation tests on real container files (tests/test_exif.py).
 from __future__ import annotations
 
 import struct
+
+from impala_cut_spark.operators.imagelibs import jpeg_segments
 
 __all__ = ["exif_metadata", "build_exif_segment", "insert_exif",
            "strip_exif", "parse_exif_tiff"]
@@ -135,27 +138,6 @@ def parse_exif_tiff(data: bytes) -> dict:
     return out
 
 
-def _jpeg_segments(payload: bytes):
-    """Yield (marker, start, end) for each JPEG segment up to SOS."""
-    if payload[:2] != b"\xff\xd8":
-        raise ValueError("exif: not a JPEG payload")
-    pos = 2
-    n = len(payload)
-    while pos + 4 <= n:
-        if payload[pos] != 0xFF:
-            raise ValueError("exif: bad JPEG marker alignment")
-        marker = payload[pos + 1]
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            yield marker, pos, pos + 2
-            pos += 2
-            continue
-        (seglen,) = struct.unpack_from(">H", payload, pos + 2)
-        yield marker, pos, pos + 2 + seglen
-        if marker == 0xDA:  # SOS: entropy data follows
-            return
-        pos += 2 + seglen
-
-
 def exif_metadata(payload: bytes) -> dict:
     """Container-routing front end: JPEG APP1, PNG eXIf, WebP EXIF
     chunk, or a bare TIFF.  Returns the parse_exif_tiff facts plus
@@ -165,7 +147,7 @@ def exif_metadata(payload: bytes) -> dict:
              "datetime": None, "orientation": None, "has_gps": False,
              "gps_lat": None, "gps_lon": None}
     if payload[:2] == b"\xff\xd8":
-        for marker, s, e in _jpeg_segments(payload):
+        for marker, s, e in jpeg_segments(payload):
             if marker == 0xE1 and payload[s + 4 : s + 10] == b"Exif\x00\x00":
                 return {"container": "jpeg", **parse_exif_tiff(payload[s + 10 : e])}
         return {"container": "jpeg", **empty}
@@ -295,7 +277,7 @@ def strip_exif(payload: bytes) -> bytes:
     if payload[:2] == b"\xff\xd8":
         out = bytearray(b"\xff\xd8")
         last = 2
-        for marker, s, e in _jpeg_segments(payload):
+        for marker, s, e in jpeg_segments(payload):
             if marker == 0xE1 and payload[s + 4 : s + 10] == b"Exif\x00\x00":
                 out += payload[last:s]
                 last = e

@@ -1,15 +1,17 @@
-"""PNG, GIF and TIFF decode through the system's libpng, libgif and libtiff.
+"""PNG, GIF, TIFF and JPEG decode through the system's libpng, libgif,
+libtiff and libjpeg.
 
-``libpng16.so.16``, ``libgif.so.7`` (giflib 5.2) and ``libtiff.so.6``
-are runtime dependencies, like ``libwebp.so.7`` (``vp8l._libwebp``).
-Each is dlopened once per process by its loader (``_libpng``,
-``_libgif``, ``_libtiff``), the only place it is loaded.  A payload a
-library rejects raises ValueError, which the multimodal operators
-degrade; a missing library raises OSError, which they do not, so the
-query fails instead of turning every image into byte features.
-Headers declaring more than ``MAX_PIXELS`` are refused with ValueError
-before any raster is allocated.  All three decode to ``decode_image``'s
-(H, W, 3) uint8 RGB, alpha dropped:
+``libpng16.so.16``, ``libgif.so.7`` (giflib 5.2), ``libtiff.so.6`` and
+``libgd.so.3`` (gd 2.3, for its libjpeg read) are runtime dependencies,
+like ``libwebp.so.7`` (``vp8l._libwebp``).  Each is dlopened once per
+process by its loader (``_libpng``, ``_libgif``, ``_libtiff``,
+``_libgd``), the only place it is loaded.  A payload a library rejects
+raises ValueError, which the multimodal operators degrade; a missing
+library raises OSError, which they do not, so the query fails instead
+of turning every image into byte features.  Headers declaring more
+than ``MAX_PIXELS`` are refused with ValueError before any raster is
+allocated.  All four decode to ``decode_image``'s (H, W, 3) uint8 RGB,
+alpha dropped:
 
 - **PNG** through libpng's simplified API only: it catches libpng's
   errors inside the library, where the classic API's ``longjmp`` cannot
@@ -27,9 +29,17 @@ before any raster is allocated.  All three decode to ``decode_image``'s
   alpha is read as associated, so colour samples are not premultiplied;
   16-bit gray reduces to its high byte.  libtiff prints nothing to
   stderr: its error handler is cleared, and a warning while the raster
-  is read (the codecs only warn on some corrupt data) raises ValueError.
+  is read (the codecs only warn on some corrupt data) raises ValueError,
+  except the one that precedes a correct decode of an 8-bit colormap.
+- **JPEG** through libgd's ``gdImageCreateFromJpegPtrEx``, which wraps
+  libjpeg's ``longjmp`` error exit in its own ``setjmp`` and returns
+  NULL, with gd 2.3's image struct declared here (``gd.h`` is not
+  installed).  Every libjpeg warning (a truncated file, corrupt entropy
+  data) reaches libgd's error method and raises ValueError.
 
-Impala, too, links codec libraries rather than writing its own.
+Library messages are formatted from their ``va_list`` by libc's
+``vsnprintf``.  Impala, too, links codec libraries rather than writing
+its own.
 """
 
 from __future__ import annotations
@@ -41,7 +51,8 @@ import zlib
 
 import numpy as np
 
-__all__ = ["MAX_PIXELS", "decode_gif", "decode_gif_frames", "decode_png", "decode_tiff"]
+__all__ = ["MAX_PIXELS", "decode_gif", "decode_gif_frames", "decode_jpeg", "decode_png",
+           "decode_tiff", "jpeg_segments"]
 
 #: largest width × height a header may declare: WebP's 16383² ceiling
 MAX_PIXELS = 16383 * 16383
@@ -52,6 +63,18 @@ _int, _bool, _ptr = ctypes.c_int, ctypes.c_bool, ctypes.c_void_p
 def _check_size(w: int, h: int, fmt: str) -> None:
     if w * h > MAX_PIXELS:
         raise ValueError(f"{fmt}: {w}x{h} exceeds the {MAX_PIXELS}-pixel limit")
+
+
+_vsnprintf = ctypes.CDLL(None).vsnprintf  # libc's, already in the process
+_vsnprintf.argtypes = [ctypes.c_char_p, ctypes.c_size_t, ctypes.c_char_p, _ptr]
+
+
+def _vformat(fmt: bytes, args) -> str:
+    """A library message handler's printf format and ``va_list``
+    (passed on as the pointer the handler received) → the message."""
+    buf = ctypes.create_string_buffer(512)
+    _vsnprintf(buf, len(buf), fmt, args)
+    return buf.value.decode(errors="replace").strip()
 
 
 # -- PNG: libpng's simplified read API -----------------------------------------
@@ -345,15 +368,18 @@ _ASSOCALPHA, _UNASSALPHA = 1, 2  # EXTRASAMPLE_*
 _ORIENTATION_TOPLEFT = 1
 #: TIFFErrorHandler: module, printf format, va_list
 _TIFF_HANDLER = ctypes.CFUNCTYPE(None, ctypes.c_char_p, ctypes.c_char_p, _ptr)
+#: warnings libtiff gives before decoding the raster correctly
+_BENIGN_TIFF_WARNINGS = ("Assuming 8-bit colormap",)
 _tiff_warning = threading.local()
 
 
 @_TIFF_HANDLER
-def _note_warning(module, fmt, _args):
+def _note_warning(module, fmt, args):
     """libtiff's warning handler: keep the calling thread's first
-    warning since ``decode_tiff`` reset it (format unexpanded)."""
-    if getattr(_tiff_warning, "msg", None) is None:
-        _tiff_warning.msg = b"%s: %s" % (module or b"", fmt)
+    warning since ``decode_tiff`` reset it, benign ones aside."""
+    msg = _vformat(fmt, args)
+    if msg not in _BENIGN_TIFF_WARNINGS and getattr(_tiff_warning, "msg", None) is None:
+        _tiff_warning.msg = f"{(module or b'').decode(errors='replace')}: {msg}"
 
 
 _LIBTIFF = None
@@ -435,9 +461,124 @@ def decode_tiff(payload: bytes) -> np.ndarray:
         ok = lt.TIFFReadRGBAImageOriented(
             handle, w.value, h.value, raster.ctypes.data, _ORIENTATION_TOPLEFT, 1)
         if _tiff_warning.msg is not None:
-            raise ValueError(f"tiff: {_tiff_warning.msg.decode(errors='replace')}")
+            raise ValueError(f"tiff: {_tiff_warning.msg}")
         if not ok:
             raise ValueError("tiff: libtiff failed to decode the raster")
     finally:
         lt.TIFFClose(handle)
     return np.ascontiguousarray(raster[..., :3])
+
+
+# -- JPEG: libjpeg through libgd -----------------------------------------------
+
+#: SOFn markers: every frame type but DHT (C4), JPG (C8) and DAC (CC)
+_SOF_MARKERS = frozenset(range(0xC0, 0xD0)) - {0xC4, 0xC8, 0xCC}
+
+
+def jpeg_segments(payload: bytes):
+    """Yield (marker, start, end) for each JPEG segment up to SOS; 0xFF
+    fill bytes before a marker are skipped (T.81 B.1.1.2).  ValueError
+    when the payload lacks SOI or a segment is not followed by a
+    marker."""
+    if payload[:2] != b"\xff\xd8":
+        raise ValueError("jpeg: not a JPEG payload")
+    pos = 2
+    n = len(payload)
+    while pos + 4 <= n:
+        if payload[pos] != 0xFF:
+            raise ValueError("jpeg: bad marker alignment")
+        marker = payload[pos + 1]
+        if marker == 0xFF:
+            pos += 1
+            continue
+        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
+            yield marker, pos, pos + 2
+            pos += 2
+            continue
+        (seglen,) = struct.unpack_from(">H", payload, pos + 2)
+        yield marker, pos, pos + 2 + seglen
+        if marker == 0xDA:  # SOS: entropy data follows
+            return
+        pos += 2 + seglen
+
+
+# gd 2.3's gdImageStruct from gd.h, which is not installed, up to
+# tpixels, the last field read (tests/test_imagelibs.py pins the layout
+# against decoded pixels)
+
+
+class _GdImage(ctypes.Structure):
+    _fields_ = [("pixels", _ptr), ("sx", _int), ("sy", _int), ("colorsTotal", _int),
+                *((name, _int * 256) for name in ("red", "green", "blue", "open")),
+                ("transparent", _int), ("polyInts", _ptr), ("polyAllocated", _int),
+                ("brush", _ptr), ("tile", _ptr), ("brushColorMap", _int * 256),
+                ("tileColorMap", _int * 256), ("styleLength", _int), ("stylePos", _int),
+                ("style", _ptr), ("interlace", _int), ("thick", _int),
+                ("alpha", _int * 256), ("trueColor", _int),
+                ("tpixels", ctypes.POINTER(ctypes.POINTER(ctypes.c_uint32)))]
+
+
+#: gdErrorMethod: priority, printf format, va_list
+_GD_ERROR = ctypes.CFUNCTYPE(None, _int, ctypes.c_char_p, _ptr)
+_gd_message = threading.local()
+
+
+@_GD_ERROR
+def _note_gd_message(_priority, fmt, args):
+    """libgd's error method: keep the calling thread's first message
+    since ``decode_jpeg`` reset it."""
+    msg = _vformat(fmt, args)
+    if getattr(_gd_message, "msg", None) is None:
+        _gd_message.msg = msg
+
+
+_LIBGD = None
+
+
+def _libgd():
+    """The process's libgd handle, dlopened on first use (it maps
+    libjpeg, libheif, libavif and x265: about 4 ms and 7 MB RSS), with
+    ``_note_gd_message`` as its error method.  OSError when the library
+    is absent."""
+    global _LIBGD
+    if _LIBGD is None:
+        gd = ctypes.CDLL("libgd.so.3")
+        gd.gdSetErrorMethod.argtypes = [_GD_ERROR]
+        gd.gdSetErrorMethod.restype = None
+        gd.gdSetErrorMethod(_note_gd_message)
+        image = ctypes.POINTER(_GdImage)
+        gd.gdImageCreateFromJpegPtrEx.restype = image
+        gd.gdImageCreateFromJpegPtrEx.argtypes = [_int, ctypes.c_char_p, _int]
+        gd.gdImageDestroy.argtypes = [image]
+        gd.gdImageDestroy.restype = None
+        _LIBGD = gd
+    return _LIBGD
+
+
+def decode_jpeg(payload: bytes) -> np.ndarray:
+    """JPEG → (H, W, 3) uint8 RGB via libjpeg: baseline, extended,
+    progressive and arithmetic-coded frames, any subsampling and scan
+    layout; grayscale replicated.  The first frame header is checked
+    against ``MAX_PIXELS`` before libjpeg sees the payload."""
+    for marker, start, _end in jpeg_segments(payload):
+        if marker in _SOF_MARKERS and start + 9 <= len(payload):
+            h, w = struct.unpack_from(">HH", payload, start + 5)  # after length, precision
+            _check_size(w, h, "jpeg")
+            break
+    gd = _libgd()
+    _gd_message.msg = None
+    im = gd.gdImageCreateFromJpegPtrEx(len(payload), payload, 0)  # 0: report warnings
+    try:
+        if _gd_message.msg is not None:
+            raise ValueError(f"jpeg: {_gd_message.msg}")
+        if not im:
+            raise ValueError("jpeg: libgd rejected the payload")
+        g = im.contents
+        argb = np.empty((g.sy, g.sx), np.uint32)
+        for y in range(g.sy):  # gd allocates each row on its own
+            ctypes.memmove(argb[y].ctypes.data, g.tpixels[y], argb.strides[0])
+    finally:
+        if im:
+            gd.gdImageDestroy(im)
+    # gdTrueColor packs a pixel as 0xAARRGGBB; the cast keeps the low byte
+    return np.dstack([(argb >> shift).astype(np.uint8) for shift in (16, 8, 0)])

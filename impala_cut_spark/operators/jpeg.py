@@ -1,32 +1,16 @@
-"""Baseline JPEG (ITU-T T.81 / JFIF) codec — pure numpy + stdlib.
+"""Baseline JPEG (ITU-T T.81 / JFIF) encoder — pure numpy + stdlib.
 
-From-scratch implementation of the public spec, the same precedent as
-the LZO and PNG codecs (the container has no libjpeg/PIL): huffman
-entropy decode with 0xFF00 stuffing and DRI/RSTn restart handling,
-dequantization, zigzag, separable floating IDCT, general h/v chroma
-subsampling (the web-standard 4:2:0 kittens in Spark's own mllib test
-data decode bit-faithfully), BT.601 YCbCr→RGB.  The encoder is the
-fixture twin: baseline 4:4:4 with the spec's Annex-K huffman tables
-and quality-scaled standard quantization matrices — JPEG is lossy, so
-round-trip tests assert closeness, not equality.
+``encode_jpeg`` is the fixture twin of the engine's JPEG decode: baseline
+4:4:4 with the spec's Annex-K huffman tables and quality-scaled standard
+quantization matrices, optionally with restart markers or one scan per
+component.  It builds the registry's JPEG fixtures and
+``pipe_multimodal_codec``'s exact-by-construction JPEG arm.  JPEG is
+lossy, so round-trip tests assert closeness, not equality.
 
-Round 8 also implements PROGRESSIVE decoding (SOF2, T.81 §G):
-coefficients accumulate across scans — DC first/refinement, AC
-spectral-selection with EOB run-lengths, AC successive-approximation
-refinement with correction bits — then one shared dequantize+IDCT
-reconstruction (_decode_progressive).
-
-Conformance evidence (tests/test_operators.py): decoding Spark's
-bundled real-world photos agrees with the JVM's ImageIO decoder
-(spark.read.format("image")) to mean |diff| < 0.2 per sample — the
-residue is legal IDCT/chroma-upsampling variance the spec permits —
-and real progressive files decode to max |diff| ≤ 2 vs the same
-reference.  Hierarchical and arithmetic-coded JPEGs raise
-NotImplementedError — documented boundaries, not silent wrong output.
-
-The reference engine has no multimodal surface at all (extension
-component — SURVEY.md pipeline ops); decode_image in multimodal.py
-dispatches here on the SOI signature.
+Decode goes through the system's libjpeg (operators/imagelibs.py
+``decode_jpeg``; decode_image dispatches there on the SOI signature).
+libjpeg and the JVM's ImageIO decode this encoder's output, and real
+baseline and progressive photos, bit-exactly (tests/test_operators.py).
 """
 
 from __future__ import annotations
@@ -52,328 +36,6 @@ def _dct_matrix() -> np.ndarray:
     return m
 
 _DCT = _dct_matrix()
-
-
-class _Huff:
-    """Canonical huffman table: (bits-per-length, values) → decode map
-    plus a flat 16-bit-prefix fast table (round 9): entry =
-    (symbol << 5) | code_length for every 16-bit window starting with
-    that code, 0 = invalid — one list index replaces the per-bit tree
-    walk in the decoder's hottest loop."""
-
-    def __init__(self, counts: list[int], values: bytes):
-        self.lookup: dict[tuple[int, int], int] = {}
-        fast = [0] * 65536
-        code, k = 0, 0
-        for ln in range(1, 17):
-            for _ in range(counts[ln - 1]):
-                self.lookup[(ln, code)] = values[k]
-                packed = (values[k] << 5) | ln
-                base = code << (16 - ln)
-                for idx in range(base, base + (1 << (16 - ln))):
-                    fast[idx] = packed
-                code += 1
-                k += 1
-            code <<= 1
-        self.fast = fast
-
-
-class _BitReader:
-    """MSB-first bit reader over entropy-coded data with 0xFF00
-    stuffing; stops at any marker (0xFF xx, xx != 0).  Round 9: bulk
-    8-byte refills whenever the window ahead carries no 0xFF, a flat
-    16-bit-prefix huffman lookup, and mask-extraction receive — the
-    pure-Python bit-walk was the decoder's dominant cost."""
-
-    def __init__(self, data: bytes, pos: int):
-        self.d = data
-        self.i = pos
-        self.acc = 0
-        self.n = 0
-
-    def _fill(self) -> bool:
-        b = self.d[self.i]
-        if b == 0xFF:
-            nxt = self.d[self.i + 1]
-            if nxt == 0x00:
-                self.i += 2
-            else:  # a real marker: no more entropy bits
-                return False
-        else:
-            self.i += 1
-        # mask off already-consumed high bits BEFORE growing — without
-        # it acc accumulates every byte ever read and all shifts go
-        # O(stream length) (quadratic decode, found by profiling r9)
-        self.acc = (((self.acc & ((1 << self.n) - 1)) << 8)) | b
-        self.n += 8
-        return True
-
-    def _fill_to(self, want: int) -> None:
-        """Grow the buffer to >= want bits if the stream allows: 8
-        clean bytes at a time (no 0xFF anywhere in the window — never
-        crosses stuffing or a marker), else byte-at-a-time."""
-        d, i = self.d, self.i
-        acc = self.acc & ((1 << self.n) - 1)
-        n = self.n
-        while n < want:
-            chunk = d[i : i + 8]
-            if len(chunk) == 8 and b"\xff" not in chunk:
-                acc = (acc << 64) | int.from_bytes(chunk, "big")
-                n += 64
-                i += 8
-            else:
-                self.acc, self.n, self.i = acc, n, i
-                if not self._fill():
-                    return
-                acc, n, i = self.acc, self.n, self.i
-        self.acc, self.n, self.i = acc, n, i
-
-    def bit(self) -> int:
-        if self.n == 0 and not self._fill():
-            raise EOFError("entropy stream ended at a marker")
-        self.n -= 1
-        return (self.acc >> self.n) & 1
-
-    def receive(self, t: int) -> int:
-        if t == 0:
-            return 0
-        if self.n < t:
-            self._fill_to(t)
-            if self.n < t:
-                raise EOFError("entropy stream ended at a marker")
-        self.n -= t
-        return (self.acc >> self.n) & ((1 << t) - 1)
-
-    def decode(self, table: _Huff) -> int:
-        if self.n < 16:
-            self._fill_to(16)
-        n = self.n
-        if n >= 16:
-            v = table.fast[(self.acc >> (n - 16)) & 0xFFFF]
-            if v:
-                self.n = n - (v & 31)
-                return v >> 5
-            raise ValueError("bad huffman code")
-        # tail: fewer than 16 bits remain before a marker — bit walk
-        code, ln = 0, 0
-        for _ in range(16):
-            code = (code << 1) | self.bit()
-            ln += 1
-            v = table.lookup.get((ln, code))
-            if v is not None:
-                return v
-        raise ValueError("bad huffman code")
-
-    def align_past_rst(self) -> None:
-        """Discard pad bits, consume one RSTn marker."""
-        self.n = 0
-        while self.d[self.i] == 0xFF and self.d[self.i + 1] == 0x00:
-            # shouldn't happen right at a restart, defensive
-            self.i += 2
-        if self.d[self.i] != 0xFF or not (0xD0 <= self.d[self.i + 1] <= 0xD7):
-            raise ValueError("expected restart marker")
-        self.i += 2
-
-
-def _extend(v: int, t: int) -> int:
-    if t == 0:
-        return 0
-    return v if v >= (1 << (t - 1)) else v - (1 << t) + 1
-
-
-def decode_jpeg(payload: bytes) -> np.ndarray:
-    """Baseline (SOF0/SOF1) and progressive (SOF2) DCT JPEG →
-    (H, W, 3) uint8 RGB (grayscale replicated). Hierarchical and
-    arithmetic coding raise."""
-    if payload[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG payload")
-    qt: dict[int, np.ndarray] = {}
-    huff: dict[tuple[int, int], _Huff] = {}
-    frame = None
-    dri = 0
-    i = 2
-    while i < len(payload) - 1:
-        if payload[i] != 0xFF:
-            raise ValueError("bad marker stream")
-        m = payload[i + 1]
-        i += 2
-        if m in (0x01,) or 0xD0 <= m <= 0xD9:
-            continue
-        (ln,) = struct.unpack_from(">H", payload, i)
-        seg = payload[i + 2 : i + ln]
-        if m == 0xDB:  # DQT
-            p = 0
-            while p < len(seg):
-                prec, tid = seg[p] >> 4, seg[p] & 15
-                p += 1
-                if prec:
-                    tbl = np.frombuffer(seg, dtype=">u2", count=64, offset=p).astype(np.int32)
-                    p += 128
-                else:
-                    tbl = np.frombuffer(seg, dtype=np.uint8, count=64, offset=p).astype(np.int32)
-                    p += 64
-                qt[tid] = tbl
-        elif m in (0xC0, 0xC1):  # SOF0/1 baseline(+extended) huffman
-            h, w = struct.unpack_from(">HH", seg, 1)
-            nc = seg[5]
-            comps = []
-            for c in range(nc):
-                cid, hv, tq = seg[6 + 3 * c], seg[7 + 3 * c], seg[8 + 3 * c]
-                comps.append((cid, hv >> 4, hv & 15, tq))
-            frame = (h, w, comps)
-        elif m == 0xC2:
-            # progressive: coefficients accumulate across many scans —
-            # handled by a dedicated walk (round 8)
-            return _decode_progressive(payload)
-        elif m in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-            raise NotImplementedError(f"JPEG SOF{m - 0xC0} coding not supported")
-        elif m == 0xC4:  # DHT
-            p = 0
-            while p < len(seg):
-                tc, th = seg[p] >> 4, seg[p] & 15
-                counts = list(seg[p + 1 : p + 17])
-                nvals = sum(counts)
-                values = seg[p + 17 : p + 17 + nvals]
-                huff[(tc, th)] = _Huff(counts, values)
-                p += 17 + nvals
-        elif m == 0xDD:  # DRI
-            (dri,) = struct.unpack_from(">H", seg, 0)
-        elif m == 0xDA:  # SOS
-            if frame is None:
-                raise ValueError("SOS before SOF")
-            # one path for single- AND multi-scan baseline (T.81 lets a
-            # sequential frame carry one scan per component): quantized
-            # coefficients accumulate per component across every scan,
-            # then one vectorized dequantize+IDCT reconstruction
-            return _decode_baseline_multiscan(payload, i - 2, frame, qt, huff, dri)
-        i += ln
-    raise ValueError("no SOS in JPEG")
-
-
-def _decode_baseline_multiscan(payload, i, frame, qt, huff, dri) -> np.ndarray:
-    """Baseline JPEG whose entropy data spans several SOS segments
-    (T.81 lets a sequential frame carry one scan per component, or any
-    partial interleave): each scan's quantized coefficients land in the
-    shared per-component planes, then the progressive path's
-    reconstruction runs once.  ``i`` points at the first SOS marker."""
-    h, w, comps = frame
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
-    coefs = {
-        cid: np.zeros((mcuy * vi, mcux * hi, 64), dtype=np.int32)
-        for cid, hi, vi, _ in comps
-    }
-    while i < len(payload) - 1:
-        if payload[i] != 0xFF:
-            raise ValueError("bad marker stream")
-        m = payload[i + 1]
-        i += 2
-        if m == 0x01 or 0xD0 <= m <= 0xD7:
-            continue
-        if m == 0xD9:  # EOI
-            break
-        (ln,) = struct.unpack_from(">H", payload, i)
-        seg = payload[i + 2 : i + ln]
-        if m == 0xC4:  # later scans may re-define huffman tables
-            p = 0
-            while p < len(seg):
-                tc, th = seg[p] >> 4, seg[p] & 15
-                counts = list(seg[p + 1 : p + 17])
-                nvals = sum(counts)
-                huff[(tc, th)] = _Huff(counts, seg[p + 17 : p + 17 + nvals])
-                p += 17 + nvals
-        elif m == 0xDD:
-            (dri,) = struct.unpack_from(">H", seg, 0)
-        elif m == 0xDA:
-            ns = seg[0]
-            scan = []
-            for c in range(ns):
-                cs, tt = seg[1 + 2 * c], seg[2 + 2 * c]
-                scan.append((cs, tt >> 4, tt & 15))
-            i = _sequential_scan(payload, i + ln, frame, scan, huff, dri, coefs)
-            continue
-        i += ln
-    return _reconstruct_from_coefficients(frame, coefs, qt)
-
-
-def _sequential_scan(payload, pos, frame, scan, huff, dri, coefs) -> int:
-    """Decode one sequential (full DC+AC) scan's entropy data into the
-    shared coefficient planes; returns the position of the marker that
-    follows it.  Interleaved scans walk MCU order; single-component
-    scans walk that component's own block raster (T.81 §A.2.2)."""
-    h, w, comps = frame
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
-    by_id = {cid: (hi, vi) for cid, hi, vi, _ in comps}
-    r = _BitReader(payload, pos)
-    pred = {cs: 0 for cs, _, _ in scan}
-    # hoist per-component state out of the hot block loop: huffman
-    # tables, the coefficient plane, bound reader methods
-    tabs = {cs: (huff[(0, td)], huff[(1, ta)]) for cs, td, ta in scan}
-    decode, receive = r.decode, r.receive
-
-    def block(cs, by, bx):
-        dc_t, ac_t = tabs[cs]
-        zz = coefs[cs][by, bx]
-        t = decode(dc_t)
-        pred[cs] += _extend(receive(t), t)
-        zz[0] = pred[cs]
-        k = 1
-        while k < 64:
-            rs = decode(ac_t)
-            rr, s = rs >> 4, rs & 15
-            if s == 0:
-                if rr == 15:
-                    k += 16
-                    continue
-                break  # EOB
-            k += rr
-            if k > 63:
-                raise ValueError("AC index overflow")
-            zz[k] = _extend(receive(s), s)
-            k += 1
-
-    if len(scan) > 1:  # interleaved: MCU order
-        order = [(cs, *by_id[cs]) for cs, _, _ in scan]
-        for m_i in range(mcux * mcuy):
-            if dri and m_i and m_i % dri == 0:
-                r.align_past_rst()
-                pred = {cs: 0 for cs in pred}
-            my, mx = divmod(m_i, mcux)
-            for cs, hi, vi in order:
-                for byy in range(vi):
-                    for bxx in range(hi):
-                        block(cs, my * vi + byy, mx * hi + bxx)
-    else:  # non-interleaved: the component's own block raster
-        (cs, td, ta) = scan[0]
-        hi, vi = by_id[cs]
-        cw = -(-(w * hi) // (8 * hmax))
-        ch = -(-(h * vi) // (8 * vmax))
-        n = 0
-        for by in range(ch):
-            for bx in range(cw):
-                if dri and n and n % dri == 0:
-                    r.align_past_rst()
-                    pred = {cs: 0 for cs in pred}
-                block(cs, by, bx)
-                n += 1
-    pos = r.i
-    while pos < len(payload) - 1:  # skip pad bytes up to the next marker
-        if payload[pos] == 0xFF and payload[pos + 1] != 0x00 and not (
-            0xD0 <= payload[pos + 1] <= 0xD7
-        ):
-            break
-        pos += 1
-    return pos
-
-
-# ---------------------------------------------------------------------------
-# encoder (baseline, 4:4:4, Annex-K tables)
-# ---------------------------------------------------------------------------
 
 _STD_LUM_Q = np.array([
     16, 11, 10, 16, 24, 40, 51, 61, 12, 12, 14, 19, 26, 58, 60, 55,
@@ -478,10 +140,10 @@ def encode_jpeg(
     """(H, W, 3) or (H, W) uint8 → baseline JFIF JPEG, 4:4:4 (no
     subsampling), Annex-K huffman tables.  ``restart_interval`` > 0
     emits a DRI segment and RSTn markers every that-many MCUs (with
-    the spec's predictor reset + bit padding) so the decoder's
-    restart/resync path has a fixture.  ``interleave=False`` emits one
-    SOS per component (T.81 non-interleaved sequential mode — the
-    legal multi-scan baseline layout) instead of a single interleaved
+    the spec's predictor reset + bit padding) so decode has a
+    restart/resync fixture.  ``interleave=False`` emits one SOS per
+    component (T.81 non-interleaved sequential mode — the legal
+    multi-scan baseline layout) instead of a single interleaved
     scan."""
     if not interleave and restart_interval:
         raise ValueError("restart_interval only supported for interleaved scans")
@@ -608,270 +270,3 @@ def encode_jpeg(
             out += wtr.out
     out += b"\xff\xd9"
     return bytes(out)
-
-
-# ---------------------------------------------------------------------------
-# progressive (SOF2) decoding — round 8
-# ---------------------------------------------------------------------------
-
-
-def _decode_progressive(payload: bytes) -> np.ndarray:
-    """Progressive DCT JPEG (SOF2, T.81 §G): coefficients accumulate
-    across scans — DC first/refinement (interleaved or not), AC
-    spectral-selection first scans with EOB run-lengths, and AC
-    successive-approximation refinement with correction bits — then
-    one shared dequantize+IDCT reconstruction.  Differentially
-    validated against the JVM ImageIO decoder on real progressive
-    files (max |diff| ≤ 2, IDCT rounding)."""
-    qt: dict[int, np.ndarray] = {}
-    huff: dict[tuple[int, int], _Huff] = {}
-    frame = None
-    dri = 0
-    coefs: dict[int, np.ndarray] = {}  # cid → (by, bx, 64) zigzag-order ints
-    i = 2
-    while i < len(payload) - 1:
-        if payload[i] != 0xFF:
-            raise ValueError("bad marker stream")
-        m = payload[i + 1]
-        i += 2
-        if m in (0x01,) or 0xD0 <= m <= 0xD7:
-            continue
-        if m == 0xD9:  # EOI
-            break
-        (ln,) = struct.unpack_from(">H", payload, i)
-        seg = payload[i + 2 : i + ln]
-        if m == 0xDB:
-            p = 0
-            while p < len(seg):
-                prec, tid = seg[p] >> 4, seg[p] & 15
-                p += 1
-                if prec:
-                    qt[tid] = np.frombuffer(seg, dtype=">u2", count=64, offset=p).astype(np.int32)
-                    p += 128
-                else:
-                    qt[tid] = np.frombuffer(seg, dtype=np.uint8, count=64, offset=p).astype(np.int32)
-                    p += 64
-        elif m == 0xC2:
-            h, w = struct.unpack_from(">HH", seg, 1)
-            nc = seg[5]
-            comps = []
-            for c in range(nc):
-                cid, hv, tq = seg[6 + 3 * c], seg[7 + 3 * c], seg[8 + 3 * c]
-                comps.append((cid, hv >> 4, hv & 15, tq))
-            frame = (h, w, comps)
-            hmax = max(c[1] for c in comps)
-            vmax = max(c[2] for c in comps)
-            mcux = -(-w // (8 * hmax))
-            mcuy = -(-h // (8 * vmax))
-            for cid, hi, vi, tq in comps:
-                coefs[cid] = np.zeros((mcuy * vi, mcux * hi, 64), dtype=np.int32)
-        elif m == 0xC4:
-            p = 0
-            while p < len(seg):
-                tc, th = seg[p] >> 4, seg[p] & 15
-                counts = list(seg[p + 1 : p + 17])
-                nvals = sum(counts)
-                huff[(tc, th)] = _Huff(counts, seg[p + 17 : p + 17 + nvals])
-                p += 17 + nvals
-        elif m == 0xDD:
-            (dri,) = struct.unpack_from(">H", seg, 0)
-        elif m == 0xDA:
-            if frame is None:
-                raise ValueError("SOS before SOF")
-            ns = seg[0]
-            scan = []
-            for c in range(ns):
-                cs, tt = seg[1 + 2 * c], seg[2 + 2 * c]
-                scan.append((cs, tt >> 4, tt & 15))
-            ss, se = seg[1 + 2 * ns], seg[2 + 2 * ns]
-            a = seg[3 + 2 * ns]
-            i = _progressive_scan(
-                payload, i + ln, frame, scan, huff, dri, coefs, ss, se, a >> 4, a & 15
-            )
-            continue
-        i += ln
-    if frame is None:
-        raise ValueError("no SOF2 frame")
-    return _reconstruct_from_coefficients(frame, coefs, qt)
-
-
-def _progressive_scan(payload, pos, frame, scan, huff, dri, coefs, ss, se, ah, al):
-    """Decode one progressive scan's entropy data; returns the stream
-    position of the marker that follows it."""
-    h, w, comps = frame
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
-    by_id = {cid: (hi, vi) for cid, hi, vi, _ in comps}
-    r = _BitReader(payload, pos)
-    eobrun = 0
-    pred = {cs: 0 for cs, _, _ in scan}
-
-    def dc_first(cs, td, by, bx):
-        t = r.decode(huff[(0, td)])
-        pred[cs] += _extend(r.receive(t), t)
-        coefs[cs][by, bx, 0] = pred[cs] << al
-
-    def dc_refine(cs, by, bx):
-        if r.bit():
-            coefs[cs][by, bx, 0] |= 1 << al
-
-    def ac_first(cs, ta, by, bx):
-        nonlocal eobrun
-        if eobrun > 0:
-            eobrun -= 1
-            return
-        blk = coefs[cs][by, bx]
-        k = ss
-        while k <= se:
-            rs = r.decode(huff[(1, ta)])
-            rr, s = rs >> 4, rs & 15
-            if s == 0:
-                if rr == 15:  # ZRL: 16 zeros
-                    k += 16
-                    continue
-                eobrun = (1 << rr) - 1
-                if rr:
-                    eobrun += r.receive(rr)
-                return
-            k += rr
-            if k > se:
-                raise ValueError("AC index overflow")
-            blk[k] = _extend(r.receive(s), s) << al
-            k += 1
-
-    def ac_refine(cs, ta, by, bx):
-        # T.81 §G.1.2.3: weave new ±1<<al coefficients between
-        # correction bits for every already-nonzero coefficient.
-        # Walks a plain-int list copy of the block — per-element numpy
-        # scalar access made this the progressive decoder's dominant
-        # cost (profiled r9) — and writes back once.
-        nonlocal eobrun
-        row = coefs[cs][by, bx]
-        blk = row.tolist()
-        p1, m1 = 1 << al, -1 << al
-        bit = r.bit
-        k = ss
-        if eobrun == 0:
-            while k <= se:
-                rs = r.decode(huff[(1, ta)])
-                rr, s = rs >> 4, rs & 15
-                if s == 0:
-                    if rr != 15:
-                        eobrun = 1 << rr
-                        if rr:
-                            eobrun += r.receive(rr)
-                        break
-                    val = 0  # ZRL in a refinement scan
-                else:
-                    if s != 1:
-                        raise ValueError("bad AC refinement magnitude")
-                    val = p1 if bit() else m1
-                while k <= se:
-                    c = blk[k]
-                    if c != 0:
-                        if bit() and (c & p1) == 0:
-                            blk[k] = c + (p1 if c >= 0 else m1)
-                    else:
-                        if rr == 0:
-                            if val:
-                                blk[k] = val
-                            k += 1
-                            break
-                        rr -= 1
-                    k += 1
-        if eobrun > 0:
-            while k <= se:  # EOB band: correction bits only
-                c = blk[k]
-                if c != 0 and bit() and (c & p1) == 0:
-                    blk[k] = c + (p1 if c >= 0 else m1)
-                k += 1
-            eobrun -= 1
-        row[:] = blk
-
-    def maybe_restart(n):
-        nonlocal eobrun, pred
-        if dri and n and n % dri == 0:
-            r.align_past_rst()
-            pred = {cs: 0 for cs in pred}
-            eobrun = 0
-
-    if ss == 0 and len(scan) > 1:  # interleaved DC scan: MCU order
-        for m_i in range(mcux * mcuy):
-            maybe_restart(m_i)
-            my, mx = divmod(m_i, mcux)
-            for cs, td, _ta in scan:
-                hi, vi = by_id[cs]
-                for byy in range(vi):
-                    for bxx in range(hi):
-                        by, bx = my * vi + byy, mx * hi + bxx
-                        if ah == 0:
-                            dc_first(cs, td, by, bx)
-                        else:
-                            dc_refine(cs, by, bx)
-    else:  # non-interleaved: the component's own block raster
-        (cs, td, ta) = scan[0]
-        hi, vi = by_id[cs]
-        cw = -(-(w * hi) // (8 * hmax))
-        ch = -(-(h * vi) // (8 * vmax))
-        n = 0
-        for by in range(ch):
-            for bx in range(cw):
-                maybe_restart(n)
-                if ss == 0:
-                    if ah == 0:
-                        dc_first(cs, td, by, bx)
-                    else:
-                        dc_refine(cs, by, bx)
-                elif ah == 0:
-                    ac_first(cs, ta, by, bx)
-                else:
-                    ac_refine(cs, ta, by, bx)
-                n += 1
-    pos = r.i
-    while pos < len(payload) - 1:  # skip pad bytes up to the next marker
-        if payload[pos] == 0xFF and payload[pos + 1] != 0x00 and not (
-            0xD0 <= payload[pos + 1] <= 0xD7
-        ):
-            break
-        pos += 1
-    return pos
-
-
-def _reconstruct_from_coefficients(frame, coefs, qt) -> np.ndarray:
-    """Shared final stage: dequantize zigzag coefficient planes, one
-    BATCHED IDCT over all blocks of a component (broadcast matmul —
-    round 9; the per-block Python loop was quadratic overhead at 1 MP),
-    upsample chroma, color-convert."""
-    h, w, comps = frame
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    full = []
-    for cid, hi, vi, tq in comps:
-        cz = coefs[cid]
-        by, bx, _ = cz.shape
-        deq = cz.reshape(-1, 64).astype(np.float64) * qt[tq][None, :]
-        nat = np.zeros_like(deq)
-        nat[:, ZIGZAG] = deq
-        blocks = nat.reshape(-1, 8, 8)
-        spatial = _DCT.T @ blocks @ _DCT + 128.0  # (n, 8, 8), broadcast
-        plane = (
-            spatial.reshape(by, bx, 8, 8)
-            .transpose(0, 2, 1, 3)
-            .reshape(by * 8, bx * 8)
-        )
-        p = np.clip(np.round(plane), 0, 255).astype(np.uint8)
-        if hi != hmax or vi != vmax:
-            p = np.repeat(np.repeat(p, vmax // vi, axis=0), hmax // hi, axis=1)
-        full.append(p[:h, :w].astype(np.float64))
-    if len(full) == 1:
-        g = full[0].astype(np.uint8)
-        return np.repeat(g[:, :, None], 3, axis=2)
-    if len(full) != 3:
-        raise NotImplementedError(f"{len(full)}-component JPEG not supported")
-    y, cb, cr = full
-    r_ = y + 1.402 * (cr - 128.0)
-    g_ = y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0)
-    b_ = y + 1.772 * (cb - 128.0)
-    return np.clip(np.round(np.stack([r_, g_, b_], axis=2)), 0, 255).astype(np.uint8)

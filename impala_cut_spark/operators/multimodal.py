@@ -1,13 +1,11 @@
 """Multimodal-column plumbing: opaque ``binary`` payloads + typed metadata.
 
 Decode is REAL for the formats real crawls are made of.  Binary PPM
-(P6) and uncompressed 24-bit BMP decode here, and baseline JPEG in
-operators/jpeg.py (from-scratch huffman + IDCT per ITU-T T.81,
-validated against the JVM's ImageIO decoder).  PNG, GIF and TIFF
-decode through the system's libpng, libgif and libtiff
-(operators/imagelibs.py), and both WebP codings through libwebp
-(operators/vp8l.py decode_webp); all four libraries are runtime
-dependencies.  Animated GIF/WebP compose in Python
+(P6) and uncompressed 24-bit BMP decode here.  JPEG, PNG, GIF and TIFF
+decode through the system's libjpeg (via libgd), libpng, libgif and
+libtiff (operators/imagelibs.py), and both WebP codings through
+libwebp (operators/vp8l.py decode_webp); all five libraries are
+runtime dependencies.  Animated GIF/WebP compose in Python
 (imagelibs.decode_gif_frames / vp8l.decode_webp_anim).  Container/frame
 METADATA is real for MP4 (ISO 14496-12 box tree) and MPEG audio
 (ISO 11172-3 frame headers) — the prune-before-decode stage.
@@ -39,19 +37,20 @@ from pyspark.sql import types as T
 from impala_cut_spark.operators.imagelibs import (
     decode_gif,
     decode_gif_frames,
+    decode_jpeg,
     decode_png,
     decode_tiff,
 )
 from impala_cut_spark.partitioning import fan_out
 
 #: every exception a corrupt/truncated asset can surface from the decoders:
-#: ValueError (a payload libpng/libgif/libtiff/libwebp reject, and the
-#: Python container walks), EOFError/IndexError/KeyError/OverflowError
-#: (the JPEG decoder on truncated entropy data, missing tables or
-#: flipped DC differences), TypeError/struct.error/zlib.error (the
-#: remaining Python parsers).  The extract/resize paths must never fail a
-#: job on one bad asset — they degrade to byte features.  OSError (a
-#: missing codec library) is deliberately absent: it fails the query.
+#: ValueError (a payload libjpeg/libpng/libgif/libtiff/libwebp reject,
+#: and the Python container walks), NotImplementedError (formats with
+#: no decoder), and IndexError/KeyError/TypeError/EOFError/OverflowError/
+#: struct.error/zlib.error from the remaining Python parsers.  The
+#: extract/resize paths must never fail a job on one bad asset — they
+#: degrade to byte features.  OSError (a missing codec library) is
+#: deliberately absent: it fails the query.
 _DECODE_ERRORS = (
     NotImplementedError,
     ValueError,
@@ -104,11 +103,11 @@ def assets_from_documents(docs: DataFrame) -> DataFrame:
 def decode_image(payload: bytes) -> "np.ndarray":
     """Decode a raster payload to an (H, W, 3) uint8 array.
 
-    Real for PPM (P6), uncompressed 24-bit BMP, baseline JPEG
-    (operators/jpeg.py), PNG, GIF87a/89a (first image) and TIFF (libpng,
-    libgif and libtiff through operators/imagelibs.py) and BOTH WebP
-    codings (libwebp through operators/vp8l.py decode_webp).
-    Remaining boundaries (animations, inter frames) raise."""
+    Real for PPM (P6), uncompressed 24-bit BMP, JPEG, PNG, GIF87a/89a
+    (first image) and TIFF (libjpeg, libpng, libgif and libtiff through
+    operators/imagelibs.py) and BOTH WebP codings (libwebp through
+    operators/vp8l.py decode_webp).  Remaining boundaries (animations,
+    inter frames) raise."""
     if payload[:2] == b"P6":
         return _decode_ppm(payload)
     if payload[:2] == b"BM":
@@ -116,8 +115,6 @@ def decode_image(payload: bytes) -> "np.ndarray":
     if payload[:8] == PNG_SIG:
         return decode_png(payload)
     if payload[:2] == b"\xff\xd8":
-        from impala_cut_spark.operators.jpeg import decode_jpeg
-
         return decode_jpeg(payload)
     if payload[:6] in (b"GIF87a", b"GIF89a"):
         return decode_gif(payload)
@@ -130,7 +127,7 @@ def decode_image(payload: bytes) -> "np.ndarray":
     raise NotImplementedError(
         "image decode stub for remaining codec formats: "
         "install pillow and replace with PIL.Image.open (PPM/BMP/PNG/GIF/"
-        "TIFF, baseline JPEG and both WEBP codings decode natively here)"
+        "TIFF, JPEG and both WEBP codings decode natively here)"
     )
 
 

@@ -1,11 +1,12 @@
-"""PNG, GIF and TIFF through libpng, libgif and libtiff
+"""PNG, GIF, TIFF and JPEG through libpng, libgif, libtiff and libjpeg
 (operators/imagelibs.py).
 
 The pixel conformance tests (ImageIO parity, foreign-encoder files,
 round trips) live in tests/test_operators.py and tests/test_animation.py.
-This file pins what is specific to the bindings: the giflib struct
-layout declared by hand, the header size guard, a missing library
-failing loudly, and a table of hostile payloads.
+This file pins what is specific to the bindings: the giflib and gd
+struct layouts declared by hand, the header size guard, a missing
+library failing loudly, formatted library messages, the one libtiff
+warning let through, and a table of hostile payloads.
 
 Each hostile payload is decoded in a child process under a 1 GiB
 address-space cap and a wall cap, so a hang or a runaway allocation
@@ -30,6 +31,7 @@ import numpy as np
 import pytest
 
 from impala_cut_spark.operators import imagelibs, multimodal
+from impala_cut_spark.operators.jpeg import encode_jpeg
 from impala_cut_spark.operators.tiff import encode_tiff
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -109,6 +111,55 @@ def test_gif_struct_layout():
     assert np.array_equal(canvas[1:10, 5:13, :3], lct[second])
 
 
+def test_gd_struct_layout():
+    """The gd image fields the binding reads (sx, sy, tpixels) come
+    back as the frame header and the pixels wrote them: a 37×23 JPEG
+    with a flat colour in each quadrant decodes to that shape, with each
+    colour in its corner.  0xFF fill bytes before a marker are legal and
+    pass the size guard's marker walk."""
+    img = np.empty((23, 37, 3), np.uint8)
+    corners = np.array([[200, 30, 30], [30, 200, 30], [30, 30, 200], [240, 240, 240]])
+    img[:12, :19], img[:12, 19:], img[12:, :19], img[12:, 19:] = corners
+    payload = encode_jpeg(img, quality=95)
+    got = imagelibs.decode_jpeg(payload)
+    assert got.shape == (23, 37, 3)
+    for (y, x), want in zip(((0, 0), (0, 36), (22, 0), (22, 36)), corners):
+        assert np.abs(got[y, x].astype(int) - want).max() <= 4, ((y, x), got[y, x])
+    i = payload.index(b"\xff\xdb")
+    filled = payload[:i] + b"\xff\xff\xff" + payload[i:]
+    assert np.array_equal(imagelibs.decode_jpeg(filled), got)
+
+
+def _palette_tiff(colormap: np.ndarray, index: np.ndarray) -> bytes:
+    """A little-endian, one-strip, 8-bit palette TIFF (photometric 3)
+    with a 256-entry ColorMap of R, then G, then B SHORTs."""
+    import struct
+
+    h, w = index.shape
+    cmap = np.zeros((3, 256), "<u2")
+    cmap[:, : len(colormap)] = colormap.T
+    entries = [(256, 3, 1, w), (257, 3, 1, h), (258, 3, 1, 8), (259, 3, 1, 1),
+               (262, 3, 1, 3), (273, 4, 1, 0), (277, 3, 1, 1), (278, 3, 1, h),
+               (279, 4, 1, h * w), (320, 3, 768, 0)]
+    ifd_end = 8 + 2 + 12 * len(entries) + 4
+    offsets = {273: ifd_end + cmap.nbytes, 320: ifd_end}
+    out = b"II*\x00" + struct.pack("<IH", 8, len(entries))
+    for tag, typ, count, value in entries:
+        out += struct.pack("<HHII", tag, typ, count, offsets.get(tag, value))
+    return out + b"\x00" * 4 + cmap.tobytes() + index.astype(np.uint8).tobytes()
+
+
+def test_palette_tiff_with_8_bit_colormap_decodes():
+    """libtiff warns "Assuming 8-bit colormap" when no ColorMap entry
+    reaches 256 and then reads the entries as 8-bit; that warning alone
+    is let through, so both colormap widths give the same pixels."""
+    colours = np.array([[10, 20, 30], [200, 100, 50]])
+    index = np.array([[0, 1], [1, 0]])
+    want = colours[index]
+    for cmap in (colours, colours * 257):
+        assert np.array_equal(imagelibs.decode_tiff(_palette_tiff(cmap, index)), want)
+
+
 def test_size_guard_refuses_before_allocating(monkeypatch):
     """Headers declaring more than MAX_PIXELS raise ValueError before
     any raster is allocated."""
@@ -128,11 +179,16 @@ def test_size_guard_refuses_before_allocating(monkeypatch):
         i = bytes(tif).find(struct.pack("<HHI", tag, 3, 1))
         tif[i + 2 : i + 4] = struct.pack("<H", 4)
         tif[i + 8 : i + 12] = struct.pack("<I", 65535)
+    jpg = bytearray(encode_jpeg(np.zeros((4, 4, 3), np.uint8)))
+    i = bytes(jpg).index(b"\xff\xc0")  # SOF0: length, precision, height, width
+    jpg[i + 5 : i + 9] = struct.pack(">HH", 16384, 16384)
     monkeypatch.setattr(imagelibs.np, "empty", no_raster)
     monkeypatch.setattr(imagelibs.np, "zeros", no_raster)
+    monkeypatch.setattr(imagelibs, "_libgd", no_raster)  # libgd allocates the raster
     for fn, payload in ((imagelibs.decode_png, png),
                         (imagelibs.decode_gif_frames, gif),
-                        (imagelibs.decode_tiff, tif)):
+                        (imagelibs.decode_tiff, tif),
+                        (imagelibs.decode_jpeg, jpg)):
         with pytest.raises(ValueError, match="exceeds"):
             fn(bytes(payload))
 
@@ -143,6 +199,7 @@ def test_size_guard_refuses_before_allocating(monkeypatch):
         ("_libpng", multimodal.encode_png(np.full((2, 2, 3), 5, np.uint8))),
         ("_libgif", multimodal.encode_gif(np.full((2, 2, 3), 5, np.uint8))),
         ("_libtiff", encode_tiff(np.full((2, 2), 5, np.uint8))),
+        ("_libgd", encode_jpeg(np.full((2, 2, 3), 5, np.uint8))),
     ],
 )
 def test_missing_library_fails_loudly(monkeypatch, loader, payload):
@@ -158,7 +215,7 @@ def test_missing_library_fails_loudly(monkeypatch, loader, payload):
 # -- hostile bytes -------------------------------------------------------------
 
 FORMATS = ("png", "gif", "gif-anim", "tiff-lzw", "tiff-deflate",
-           "tiff-packbits", "tiff-g4")
+           "tiff-packbits", "tiff-g4", "jpeg", "jpeg-multiscan")
 CASES = sorted(
     [f"{f}/{m}" for f in FORMATS
      for m in ("truncated-1", "truncated-half", "truncated-minus-1", "bad-length")]
@@ -166,14 +223,16 @@ CASES = sorted(
        "gif/sub-block-length-255", "gif-anim/sub-block-length-255",
        "gif/screen-65535-square", "gif/image-65535-square",
        "gif/image-65535x32767-on-1x1-screen", "png/1000000-square",
-       "tiff-lzw/4294967295-square", "tiff-g4/strip-ends-early"]
+       "tiff-lzw/4294967295-square", "tiff-g4/strip-ends-early",
+       "jpeg/dc-symbol-255", "jpeg/16384-square", "jpeg/65535-square"]
 )
 #: cases that must decode to the intact payload's pixels: cutting the
 #: last byte of a GIF removes only its 0x3B trailer
 DECODES = {"gif/truncated-minus-1", "gif-anim/truncated-minus-1"}
 #: the binding each format is decoded with in the child
 DECODER = {"png": "decode_png", "gif": "decode_gif",
-           "gif-anim": "decode_gif_frames"}
+           "gif-anim": "decode_gif_frames", "jpeg": "decode_jpeg",
+           "jpeg-multiscan": "decode_jpeg"}
 WALL_S = 20
 
 _CHILD = """
@@ -225,6 +284,8 @@ def _intact(spark, tmp_path) -> dict[str, bytes]:
         "tiff-deflate": encode_tiff(img, compression=8),
         "tiff-packbits": encode_tiff(img, compression=32773),
         "tiff-g4": _g4_tiff(spark, tmp_path / "g4.tif"),
+        "jpeg": encode_jpeg(img, quality=90, restart_interval=3),
+        "jpeg-multiscan": encode_jpeg(img, quality=90, interleave=False),
     }
 
 
@@ -277,6 +338,9 @@ def _mutate(name: str, intact: dict[str, bytes]) -> bytes:
             p[i : i + 4] = struct.pack(">I", 2**31 - 1)
         elif fmt.startswith("gif"):  # first data sub-block ends at once
             p[_gif_image_data(p, 0) + 1] = 0
+        elif fmt.startswith("jpeg"):  # the first DQT runs 65535 bytes
+            i = bytes(p).index(b"\xff\xdb")
+            p[i + 2 : i + 4] = b"\xff\xff"
         else:  # the first IFD declares 65535 entries
             (ifd,) = struct.unpack_from("<I" if p[:2] == b"II" else ">I", p, 4)
             p[ifd : ifd + 2] = b"\xff\xff"
@@ -307,6 +371,13 @@ def _mutate(name: str, intact: dict[str, bytes]) -> bytes:
             i = bytes(p).find(struct.pack("<HHI", tag, 3, 1))
             p[i + 2 : i + 4] = struct.pack("<H", 4)
             p[i + 8 : i + 12] = struct.pack("<I", 2**32 - 1)
+    elif case == "dc-symbol-255":  # DC category 7 becomes symbol 255
+        i = bytes(p).index(b"\xff\xc4") + 2 + 2 + 1 + 16  # marker, length, class/id, counts
+        assert p[i + 7] == 7
+        p[i + 7] = 0xFF
+    elif case in ("16384-square", "65535-square"):  # the SOF0 frame size
+        i = bytes(p).index(b"\xff\xc0")
+        p[i + 5 : i + 9] = struct.pack(">HH", *[int(case.split("-")[0])] * 2)
     elif case == "strip-ends-early":  # the strip's codes stop halfway
         i = _first_strip_byte_count(bytes(p))
         e = "<" if p[:2] == b"II" else ">"
@@ -383,3 +454,12 @@ def test_hostile_raster_bytes(name, hostile, hostile_rows):
     assert np.allclose(feats[name], multimodal.fake_features(payload))
     (row,) = frames[name]
     assert row.parse_ok is False and row.frame_idx == -1
+
+
+def test_library_messages_are_formatted(hostile):
+    """libtiff's and libgd's printf-style messages reach the ValueError
+    formatted from their arguments, not as raw format strings."""
+    for name, text in (("tiff-g4/strip-ends-early", "Premature EOF at line"),
+                       ("jpeg/truncated-half", "Premature end of JPEG file")):
+        message = hostile[name][2]["raised"][2]
+        assert text in message and "%" not in message, message

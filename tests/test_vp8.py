@@ -56,7 +56,7 @@ def _err(got: np.ndarray, img: np.ndarray) -> float:
 def test_quality_sweep(libwebp):
     """q0-q100 on a photo: every quality decodes to the input's shape,
     opaque, with mean error falling as quality rises."""
-    from impala_cut_spark.operators.jpeg import decode_jpeg
+    from impala_cut_spark.operators.imagelibs import decode_jpeg
 
     kit = decode_jpeg(
         open("/opt/spark/data/mllib/images/origin/kittens/54893.jpg", "rb").read()

@@ -60,7 +60,7 @@ def _lw_decode(lw, payload: bytes) -> np.ndarray:
 
 def _cases() -> dict[str, np.ndarray]:
     rng = np.random.default_rng(3)
-    from impala_cut_spark.operators.jpeg import decode_jpeg
+    from impala_cut_spark.operators.imagelibs import decode_jpeg
 
     kit = decode_jpeg(
         open("/opt/spark/data/mllib/images/origin/kittens/54893.jpg", "rb").read()

@@ -22,10 +22,11 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from impala_cut_spark.operators.imagelibs import (  # noqa: E402
     decode_gif,
+    decode_jpeg,
     decode_png,
     decode_tiff,
 )
-from impala_cut_spark.operators.jpeg import decode_jpeg, encode_jpeg  # noqa: E402
+from impala_cut_spark.operators.jpeg import encode_jpeg  # noqa: E402
 from impala_cut_spark.operators.multimodal import encode_gif, encode_png  # noqa: E402
 from impala_cut_spark.operators.tiff import encode_tiff  # noqa: E402
 
@@ -72,15 +73,15 @@ def main() -> None:
 
     k = open(KITTEN, "rb").read()
     kit = decode_jpeg(k)
-    add("jpeg-baseline", "real 4:2:0 photo (311x300)", k, decode_jpeg,
+    add("jpeg-baseline", "libjpeg; real 4:2:0 photo (311x300)", k, decode_jpeg,
         kit.shape[0] * kit.shape[1] / 1e6, reps=5)
-    add("jpeg-baseline", "our q90 4:4:4, 1 MP",
+    add("jpeg-baseline", "libjpeg; our q90 4:4:4, 1 MP",
         encode_jpeg(img, quality=90), decode_jpeg, mp)
-    add("jpeg-multiscan", "our q90 non-interleaved, 1 MP",
+    add("jpeg-multiscan", "libjpeg; our q90 non-interleaved, 1 MP",
         encode_jpeg(img, quality=90, interleave=False), decode_jpeg, mp)
     p = open(PROGRESSIVE, "rb").read()
     pr = decode_jpeg(p)
-    add("jpeg-progressive", "real SOF2 (600x400)", p, decode_jpeg,
+    add("jpeg-progressive", "libjpeg; real SOF2 (600x400)", p, decode_jpeg,
         pr.shape[0] * pr.shape[1] / 1e6, reps=5)
     add("png", "libpng; our filter-0, 1 MP", encode_png(img), decode_png, mp)
     # GIF needs <=256 colors: web-safe posterize keeps photo statistics
@@ -201,8 +202,6 @@ def main() -> None:
         lines.append("| " + " | ".join(str(x) for x in r) + " |\n")
     jpeg_mbs = rows[0][4]
     core_hours = 100e12 / (jpeg_mbs * 1e6) / 3600
-    native_mbs = 150  # libjpeg-turbo ballpark, single core
-    native_hours = 100e12 / (native_mbs * 1e6) / 3600
     fleet_hours = core_hours / 8000  # 1000 executors × 8 cores
     lines.append(
         f"""
@@ -210,20 +209,12 @@ def main() -> None:
 dominant cost): at the measured ~{jpeg_mbs} MB/s/core for real
 baseline JPEG, 100 TB of JPEG payload costs ~{core_hours:,.0f}
 core-hours — ~{fleet_hours:.1f} wall-hours on a 1000-executor x
-8-core fleet, ~${core_hours*0.05:,.0f} at $0.05/core-hour.  A
-native decoder (libjpeg-turbo class, ~{native_mbs} MB/s/core) does the
-same work in ~{native_hours:,.0f} core-hours (~${native_hours*0.05:,.0f}).
-The pure-Python JPEG decoder is a CONFORMANCE component (oracle-checked,
-ImageIO-differential-tested) and the plumbing is the scale design:
-Arrow-batched mapInPandas, embarrassingly parallel, no shuffle — at
-production scale the decode kernel inside the batch function is the
-swap-in point for a native library, with schema, partitioning and
-degradation contract unchanged.  Round-9 speedups recorded here:
-baseline JPEG decode went ~53x (25.7 s -> 0.48 s per 1 MP: bounded
-bit-buffer masking — the unmasked accumulator made every shift
-O(stream length) — a flat 16-bit-prefix huffman table, bulk 8-byte
-bit refills, and one batched IDCT matmul per component instead of a
-per-block Python loop); progressive ~4x (list-local AC refinement).
+8-core fleet, ~${core_hours*0.05:,.0f} at $0.05/core-hour.
+JPEG rows decode through the system's libjpeg (libjpeg-turbo, reached
+through libgd's read; operators/imagelibs.py, a runtime dependency)
+and the plumbing is the scale design: Arrow-batched mapInPandas,
+embarrassingly parallel, no shuffle, with libgd loaded once per Python
+worker on its first JPEG.
 
 """
     )
