@@ -36,6 +36,8 @@ alpha dropped:
   NULL, with gd 2.3's image struct declared here (``gd.h`` is not
   installed).  Every libjpeg warning (a truncated file, corrupt entropy
   data) reaches libgd's error method and raises ValueError.
+  Arithmetic-coded frames, and frames with more 8×8 data units than the
+  payload has bits, are refused before libgd runs (``_check_frame``).
 
 Library messages are formatted from their ``va_list`` by libc's
 ``vsnprintf``.  Impala, too, links codec libraries rather than writing
@@ -473,6 +475,10 @@ def decode_tiff(payload: bytes) -> np.ndarray:
 
 #: SOFn markers: every frame type but DHT (C4), JPG (C8) and DAC (CC)
 _SOF_MARKERS = frozenset(range(0xC0, 0xD0)) - {0xC4, 0xC8, 0xCC}
+#: arithmetic-coded SOFn (SOF9-11, SOF13-15): libjpeg's arithmetic
+#: decoder reads any bytes without a warning, so a Huffman scan under a
+#: flipped SOF byte would decode to flat grey
+_ARITHMETIC_SOF = frozenset({0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF})
 
 
 def jpeg_segments(payload: bytes):
@@ -555,15 +561,40 @@ def _libgd():
     return _LIBGD
 
 
+def _check_frame(payload: bytes, marker: int, start: int, end: int) -> None:
+    """Refuse, before libgd allocates its raster, an arithmetic-coded
+    frame, one larger than ``MAX_PIXELS``, and one whose component with
+    the fewest 8×8 data units has more units than the payload has
+    bits.  The last bound holds for every frame libjpeg decodes without
+    a warning: a Huffman DC scan spends at least one bit per unit, and
+    an AC scan before its DC scan or truncated data warns."""
+    if marker in _ARITHMETIC_SOF:
+        raise ValueError(f"jpeg: arithmetic-coded frame (SOF{marker - 0xC0}) refused")
+    if start + 9 > len(payload):
+        return
+    h, w = struct.unpack_from(">HH", payload, start + 5)  # after length, precision
+    _check_size(w, h, "jpeg")
+    # (Ci, HiVi, Tq) per component after the count byte
+    hv = [(b >> 4, b & 15) for b in payload[start + 11 : min(end, len(payload)) : 3]]
+    if not hv or not all(hi and vi for hi, vi in hv):
+        return  # libjpeg rejects the sampling factors
+    hmax, vmax = max(hi for hi, _ in hv), max(vi for _, vi in hv)
+    units = min(-(-w * hi // (8 * hmax)) * -(-h * vi // (8 * vmax)) for hi, vi in hv)
+    if units > 8 * len(payload):
+        raise ValueError(f"jpeg: a {w}x{h} frame needs {units} data units,"
+                         f" more than the payload's {8 * len(payload)} bits")
+
+
 def decode_jpeg(payload: bytes) -> np.ndarray:
-    """JPEG → (H, W, 3) uint8 RGB via libjpeg: baseline, extended,
-    progressive and arithmetic-coded frames, any subsampling and scan
-    layout; grayscale replicated.  The first frame header is checked
-    against ``MAX_PIXELS`` before libjpeg sees the payload."""
-    for marker, start, _end in jpeg_segments(payload):
-        if marker in _SOF_MARKERS and start + 9 <= len(payload):
-            h, w = struct.unpack_from(">HH", payload, start + 5)  # after length, precision
-            _check_size(w, h, "jpeg")
+    """JPEG → (H, W, 3) uint8 RGB via libjpeg: baseline, extended and
+    progressive Huffman-coded frames, any subsampling and scan layout;
+    grayscale replicated.  The first frame header is checked by
+    ``_check_frame`` before libjpeg sees the payload: arithmetic-coded
+    frames, frames over ``MAX_PIXELS`` and frames with more data units
+    than the payload has bits raise ValueError."""
+    for marker, start, end in jpeg_segments(payload):
+        if marker in _SOF_MARKERS:
+            _check_frame(payload, marker, start, end)
             break
     gd = _libgd()
     _gd_message.msg = None

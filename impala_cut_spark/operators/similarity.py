@@ -1,17 +1,40 @@
 """Similarity search over the ``embeddings`` table (array<float> vecs).
 
-- cosine scoring via Arrow-batched numpy (pandas_udf / mapInPandas):
-  float32 inputs widen to float64, products are EXACT (24-bit
-  mantissas), and einsum's sequential inner-loop accumulation matches
-  the oracle's sequential list fold — 10-100× the interpreted
-  higher-order-function fold it replaced (round-1 verdict perf item 1).
-- brute_force_topk — exact baseline: corpus mapInPandas × broadcast
-  query matrix, per-batch top-k, windowed global top-k.
-- embedding_neardup_pairs — banded sign-bucket LSH candidates + exact
-  cosine verify (NO all-pairs join); the quadratic exact form survives
-  as embedding_neardup_pairs_exact for tests/oracles only.
-- lsh_topk — random-hyperplane signatures bucket the corpus; search
-  only same buckets.  ivf_topk — k-means inverted lists.
+Families:
+
+- exact: ``brute_force_topk`` — corpus mapInPandas × collected query
+  matrix, per-batch top-k, windowed global top-k.
+- near-dup pairs: ``embedding_neardup_pairs`` — banded sign-bucket LSH
+  candidates + exact cosine verify (no all-pairs join); the quadratic
+  ``embedding_neardup_pairs_exact`` is for tests and oracles only.
+- LSH: ``lsh_topk`` — random-hyperplane signatures bucket the corpus;
+  a query scans its own bucket (plus ``multi_probe`` one-bit flips).
+- IVF: ``ivf_topk`` (Lloyd's-trained quantizer), ``ivf_topk_fixed``
+  (frozen quantizer) and ``build_ivf_index`` / ``ivf_topk_from_index``
+  (cid-partitioned materialized lists).
+- SemDeDup: ``semdedup`` (frozen cells), ``semdedup_auto`` (√N cells).
+- PQ: ``pq_encode_fixed`` / ``pq_encode_trained``, ADC top-k
+  (``pq_adc_topk_fixed``), IVF-PQ (``ivfpq_topk_fixed``) and its exact
+  rerank (``ivfpq_rerank_topk_fixed``).
+- preprocessing: ``l2_normalize``, ``quantize_int8``,
+  ``label_centroids``.
+
+Every ANN operator is built from one set of private helpers, the way
+one TopN and one hash-join node serve every plan: ``_top_k`` (the
+per-query rank window), ``_side`` / ``_cos_scored`` (join sides and
+the Arrow cosine), ``_argmin`` / ``_probe_cids`` (cell assignment and
+probe lists over ``_centroid_scores`` or ``_rounded_centroid_dists``),
+``_frozen`` (a literal quantizer from fixed corpus rows),
+``_ivf_search``, ``_sample`` / ``_lloyd`` (driver-side training),
+``_same_cell_keep`` (SemDeDup's within-cell self-join), ``_plane_proj``
+(one hyperplane projection) and ``_pq_codes`` / ``_pq_table`` /
+``_adc_top_k`` (PQ encode and scoring).
+
+Cosine scoring runs as Arrow-batched numpy (pandas_udf / mapInPandas):
+float32 inputs widen to float64, products are exact (24-bit
+mantissas), and einsum's sequential inner-loop accumulation matches the
+oracle's sequential list fold — 10-100× the interpreted
+higher-order-function fold.
 """
 
 from __future__ import annotations
@@ -20,6 +43,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+# a DataType instance: a DDL string would need an active SparkSession
+# at import time
+from pyspark.sql.types import DoubleType
 
 from impala_cut_spark.partitioning import fan_out
 
@@ -35,10 +61,6 @@ def dot(a: Column, b: Column) -> Column:
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-
-
-from pyspark.sql.types import DoubleType  # noqa: E402  (DataType instance —
-# a DDL string here would require an active SparkSession at import time)
 
 
 @F.pandas_udf(DoubleType())
@@ -76,6 +98,91 @@ def cosine(a: Column, b: Column, norm_a: Column, norm_b: Column) -> Column:
     return dot(a, b) / (norm_a * norm_b)
 
 
+# ---------------------------------------------------------------------------
+# shared ANN steps
+# ---------------------------------------------------------------------------
+
+
+def _top_k(scored: DataFrame, k: int, order, score: str) -> DataFrame:
+    """Per-query top-k: row_number over (``score`` in ``order``, n_id
+    ASC) — a total order, so ties break the same in the oracle."""
+    w = Window.partitionBy("q_id").orderBy(order(score), F.asc("n_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("q_id", "n_id", "rank", score)
+    )
+
+
+def _side(vid: str, v: str, n: str, vec: str = "embedding") -> list[Column]:
+    """(vec_id, vector, _norm) renamed for one side of a pair join."""
+    return [F.col("vec_id").alias(vid), F.col(vec).alias(v), F.col("_norm").alias(n)]
+
+
+def _cos_scored(probed: DataFrame) -> DataFrame:
+    """Round-6 Arrow cosine of every (q, n) pair of a probe join of
+    ``_side("n_id", "n_vec", "n_norm")`` and
+    ``_side("q_id", "q_vec", "q_norm")``, self-matches dropped."""
+    return probed.filter(F.col("n_id") != F.col("q_id")).select(
+        "q_id",
+        "n_id",
+        F.round(
+            _cos_pairs(F.col("q_vec"), F.col("n_vec"), F.col("q_norm"), F.col("n_norm")), 6
+        ).alias("cos"),
+    )
+
+
+def _argmin(dists: Column) -> Column:
+    """1-based argmin with ties to the lowest index (array_position
+    returns the FIRST index of the min — the same tie rule as the
+    oracle's ORDER BY d, id)."""
+    return F.array_position(dists, F.array_min(dists)).cast("int")
+
+
+def _probe_cids(dists: Column, n_probe: int) -> Column:
+    """The 1-based ids of the ``n_probe`` smallest distances, nearest
+    first, ties to the lower id."""
+    return F.slice(
+        F.transform(
+            F.array_sort(
+                F.transform(dists, lambda d, i: F.struct(d.alias("d"), (i + 1).alias("cid")))
+            ),
+            lambda s: s["cid"],
+        ),
+        1,
+        n_probe,
+    )
+
+
+def _seq_sq(v: list[float]) -> float:
+    acc = 0.0
+    for x in v:  # sequential fold — matches DuckDB list_dot_product
+        acc = acc + x * x
+    return acc
+
+
+def _frozen(
+    embeddings: DataFrame, ids: tuple[int, ...], vec: str = "embedding"
+) -> tuple[list[list[float]], list[float]]:
+    """A frozen quantizer: the vectors of rows ``ids`` ordered by vec_id
+    and their ``_seq_sq`` norms.  Bounded collect by contract:
+    len(ids) rows — a production index trains its quantizer once and
+    ships it to every executor as literals."""
+    rows = (
+        embeddings.filter(F.col("vec_id").isin(list(ids)))
+        .orderBy("vec_id")
+        .select(vec)
+        .collect()
+    )
+    cents = [[float(x) for x in r[vec]] for r in rows]
+    return cents, [_seq_sq(c) for c in cents]
+
+
+# ---------------------------------------------------------------------------
+# exact search and near-dup pairs
+# ---------------------------------------------------------------------------
+
+
 def brute_force_topk(
     embeddings: DataFrame, queries: DataFrame, k: int = 5
 ) -> DataFrame:
@@ -84,22 +191,21 @@ def brute_force_topk(
     Execution: the (small-by-contract) query set is collected into a
     numpy matrix and captured by a mapInPandas kernel over the corpus —
     one ``corpus_batch @ Q.T`` einsum per Arrow batch, with a per-batch
-    (round(cos,6) DESC) top-k cut (plus a one-rounding-unit slack band
+    (round(cos,6) DESC) top-k cut (plus a two-rounding-unit slack band
     so FP round emulation can never under-keep), then a global windowed
     top-k over the ~batches×|Q|×k survivors.
 
     Scale: O(|Q|·|corpus|) compute but the corpus is read ONCE (no
     crossJoin row blow-up shipping duplicated vectors), each batch
     emits only |Q|·k candidate rows, and the final shuffle moves
-    ~nothing.  The bounded driver-side collect of the queries is the
-    same data movement the previous broadcast did.
+    ~nothing.  The bounded driver-side collect of the queries moves
+    the same data a broadcast of them would.
     """
-    # norms are computed in numpy on BOTH sides (guide §4.2: batch
-    # native code, not per-row interpreted HOF folds): sqrt of the
-    # einsum self-product is the same sequential float64 accumulation
-    # over exact f32 widenings as the JVM `dot` fold it replaces —
-    # bit-identical values, one less per-row interpreted expression
-    # over the corpus, and one less double in the Arrow batch.
+    # norms are computed in numpy on BOTH sides: sqrt of the einsum
+    # self-product is the same sequential float64 accumulation over
+    # exact f32 widenings as the JVM `dot` fold — bit-identical values,
+    # no per-row interpreted expression over the corpus, and one less
+    # double in the Arrow batch.
     qrows = queries.select("vec_id", "embedding").orderBy("vec_id").collect()
     if not qrows:
         schema = "q_id long, n_id long, rank int, cos double"
@@ -122,17 +228,15 @@ def brute_force_topk(
             for j in range(len(qids)):
                 keep = nids != qids[j]
                 cj, nj = cos[keep, j], nids[keep]
-                # per-batch top-k cut on the (round(cos,6) DESC, n_id
-                # ASC) key the final window (and the DuckDB oracle)
-                # rank by (ADVICE r2 #1), with TWO 1e-6 units of slack:
-                # the FP emulation of Spark's decimal HALF_UP round
-                # (floor(|x|*1e6+0.5)) can land one unit off at a
-                # boundary double on the candidate AND one on the kth
-                # keeper simultaneously (ADVICE r3 #1 — ±1 slack
-                # covered either drift alone, not both at once), so
-                # the cut OVER-keeps a 2-unit band — the final window
-                # re-ranks on Spark's exact rounding and discards
-                # extras; under-keeping would drop a true top-k member.
+                # per-batch top-k cut on the final window's (and the
+                # oracle's) (round(cos,6) DESC, n_id ASC) key, with TWO
+                # 1e-6 units of slack: the FP emulation of Spark's
+                # decimal HALF_UP round (floor(|x|*1e6+0.5)) can land
+                # one unit off at a boundary double on the candidate
+                # AND on the kth keeper at once, so the cut over-keeps
+                # a 2-unit band; the final window re-ranks on Spark's
+                # exact rounding, and under-keeping would drop a true
+                # top-k member.
                 cj_key = np.copysign(np.floor(np.abs(cj) * 1e6 + 0.5), cj)
                 # NaN cosines (zero-norm vectors) sort as the LARGEST
                 # value in Spark's DESC order — map them to +inf so the
@@ -162,12 +266,7 @@ def brute_force_topk(
     scored = corpus.mapInPandas(score, "q_id long, n_id long, cos double").withColumn(
         "cos", F.round("cos", 6)
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("n_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "rank", "cos")
-    )
+    return _top_k(scored, k, F.desc, "cos")
 
 
 #: sign-bucket banding layout for embedding_neardup_pairs
@@ -194,6 +293,25 @@ def sign_band_buckets(vec: Column, n_bands: int = NEARDUP_BANDS, band_bits: int 
     return F.array(*buckets)
 
 
+def _pair_sides(a: DataFrame, b: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(id_a, vec_a, norm_a) over ``a`` and (id_b, vec_b, norm_b) over ``b``."""
+    return (
+        with_norm(a).select(*_side("id_a", "vec_a", "norm_a")),
+        with_norm(b).select(*_side("id_b", "vec_b", "norm_b")),
+    )
+
+
+def _pair_cos(pairs: DataFrame) -> DataFrame:
+    """(id_a, id_b, round-6 cosine) of joined ``_pair_sides``."""
+    return pairs.select(
+        "id_a",
+        "id_b",
+        F.round(
+            _cos_pairs_once(F.col("vec_a"), F.col("vec_b"), F.col("norm_a"), F.col("norm_b")), 6
+        ).alias("cos"),
+    )
+
+
 def embedding_neardup_pairs(
     embeddings: DataFrame,
     threshold: float = 0.9,
@@ -203,8 +321,8 @@ def embedding_neardup_pairs(
     """Near-dup pairs (cosine ≥ threshold, id_a < id_b) via banded
     sign-bucket LSH candidates + exact vectorized cosine verify.
 
-    Plan shape (the 100 TB path — round-1 verdict What's-wrong #4
-    replaced the all-pairs ``id_a < id_b`` cartesian):
+    Plan shape (the 100 TB path: no all-pairs ``id_a < id_b``
+    cartesian):
       1. explode per-band buckets → (band, bucket) inverted index
       2. equi-self-join on (band, bucket), id_a < id_b, DISTINCT pairs
          — candidates ≪ n², one shuffle + dedup
@@ -237,19 +355,8 @@ def embedding_neardup_pairs(
         .select("id_a", "id_b")
         .distinct()
     )
-    va = with_norm(embeddings).select(
-        F.col("vec_id").alias("id_a"), F.col("embedding").alias("vec_a"), F.col("_norm").alias("norm_a")
-    )
-    vb = with_norm(embeddings).select(
-        F.col("vec_id").alias("id_b"), F.col("embedding").alias("vec_b"), F.col("_norm").alias("norm_b")
-    )
-    pairs = cand.join(va, "id_a").join(vb, "id_b").select(
-        "id_a",
-        "id_b",
-        F.round(
-            _cos_pairs_once(F.col("vec_a"), F.col("vec_b"), F.col("norm_a"), F.col("norm_b")), 6
-        ).alias("cos"),
-    )
+    va, vb = _pair_sides(embeddings, embeddings)
+    pairs = _pair_cos(cand.join(va, "id_a").join(vb, "id_b"))
     return pairs.filter(F.col("cos") >= threshold).select("id_a", "id_b", "cos")
 
 
@@ -259,19 +366,8 @@ def embedding_neardup_pairs_exact(embeddings: DataFrame, threshold: float = 0.9)
     QUADRATIC — ground-truth/test oracle only; the registered operator
     is the banded embedding_neardup_pairs above.
     """
-    a = with_norm(fan_out(embeddings)).select(
-        F.col("vec_id").alias("id_a"), F.col("embedding").alias("vec_a"), F.col("_norm").alias("norm_a")
-    )
-    b = with_norm(embeddings).select(
-        F.col("vec_id").alias("id_b"), F.col("embedding").alias("vec_b"), F.col("_norm").alias("norm_b")
-    )
-    pairs = a.join(b, F.col("id_a") < F.col("id_b")).select(
-        "id_a",
-        "id_b",
-        F.round(
-            _cos_pairs_once(F.col("vec_a"), F.col("vec_b"), F.col("norm_a"), F.col("norm_b")), 6
-        ).alias("cos"),
-    )
+    a, b = _pair_sides(fan_out(embeddings), embeddings)
+    pairs = _pair_cos(a.join(b, F.col("id_a") < F.col("id_b")))
     return pairs.filter(F.col("cos") >= threshold)
 
 
@@ -284,6 +380,19 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
     return np.random.RandomState(seed).normal(size=(n_planes, dim)).astype(np.float64)
 
 
+def _plane_proj(vec: Column, plane: np.ndarray) -> Column:
+    """v·plane as a sequential fold over the plane's literals."""
+    return F.aggregate(
+        F.zip_with(
+            vec,
+            F.array(*[F.lit(float(x)) for x in plane]),
+            lambda x, y: x.cast("double") * y,
+        ),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
 def hyperplane_signature(df: DataFrame, dim: int, n_planes: int = 12, vec: str = "embedding") -> DataFrame:
     """Append an int bucket = sign-bit signature under n_planes random
     hyperplanes. Pure column expressions (the plane matrix is folded
@@ -291,15 +400,7 @@ def hyperplane_signature(df: DataFrame, dim: int, n_planes: int = 12, vec: str =
     planes = _hyperplanes(dim, n_planes)
     sig = F.lit(0).cast("bigint")
     for p in range(n_planes):
-        proj = F.aggregate(
-            F.zip_with(
-                F.col(vec),
-                F.array(*[F.lit(float(x)) for x in planes[p]]),
-                lambda x, y: x.cast("double") * y,
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
+        proj = _plane_proj(F.col(vec), planes[p])
         sig = sig + F.when(proj > 0, F.lit(1 << p).cast("bigint")).otherwise(F.lit(0).cast("bigint"))
     return df.withColumn("bucket", sig)
 
@@ -328,30 +429,21 @@ def lsh_topk(
     untouched); recall rises accordingly. b=0 is single-probe.
     """
     corpus = hyperplane_signature(with_norm(fan_out(embeddings)), dim, n_planes).select(
-        F.col("vec_id").alias("n_id"),
-        F.col("embedding").alias("n_vec"),
-        F.col("_norm").alias("n_norm"),
-        "bucket",
+        *_side("n_id", "n_vec", "n_norm"), "bucket"
     )
-    planes = _hyperplanes(dim, n_planes)
     qsig = hyperplane_signature(with_norm(queries), dim, n_planes)
     if multi_probe > 0:
-        # |projection| per plane = distance-to-hyperplane proxy; flip
-        # the multi_probe closest bits → array of probe buckets
-        projs = []
-        for p in range(n_planes):
-            proj = F.aggregate(
-                F.zip_with(
-                    F.col("embedding"),
-                    F.array(*[F.lit(float(x)) for x in planes[p]]),
-                    lambda x, y: x.cast("double") * y,
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
+        planes = _hyperplanes(dim, n_planes)
+        # |projection| per plane = distance-to-hyperplane proxy, rounded
+        # 6dp for a cross-engine-stable order (ties → lower plane
+        # index); flip the multi_probe closest bits
+        projs = [
+            F.struct(
+                F.round(F.abs(_plane_proj(F.col("embedding"), planes[p])), 6).alias("d"),
+                F.lit(p).alias("p"),
             )
-            # rounded 6dp: cross-engine-stable ordering of the flip
-            # candidates (ties → lower plane index, both engines)
-            projs.append(F.struct(F.round(F.abs(proj), 6).alias("d"), F.lit(p).alias("p")))
+            for p in range(n_planes)
+        ]
         flip_bits = F.slice(
             F.transform(F.array_sort(F.array(*projs)), lambda s: s["p"]), 1, multi_probe
         )
@@ -368,29 +460,13 @@ def lsh_topk(
             ),
         )
         qsig = qsig.withColumn("bucket", F.explode(probes))
-    q = qsig.select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_vec"),
-        F.col("_norm").alias("q_norm"),
-        "bucket",
-    )
-    scored = corpus.join(F.broadcast(q), "bucket").filter(F.col("n_id") != F.col("q_id")).select(
-        "q_id",
-        "n_id",
-        F.round(
-            _cos_pairs(F.col("q_vec"), F.col("n_vec"), F.col("q_norm"), F.col("n_norm")), 6
-        ).alias("cos"),
-    )
+    q = qsig.select(*_side("q_id", "q_vec", "q_norm"), "bucket")
+    scored = _cos_scored(corpus.join(F.broadcast(q), "bucket"))
     # multi-probe can score the same (q, n) pair from two buckets —
     # dedup before ranking so row_number stays a true top-k
     if multi_probe > 0:
         scored = scored.distinct()
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("n_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "rank", "cos")
-    )
+    return _top_k(scored, k, F.desc, "cos")
 
 
 # ---------------------------------------------------------------------------
@@ -398,16 +474,60 @@ def lsh_topk(
 # ---------------------------------------------------------------------------
 
 
-def _nearest_centroid(vec: Column, cents: np.ndarray) -> Column:
-    """1-based index of the L2-nearest centroid, as pure column
-    expressions: argmin_c(||v-c||²) = argmin_c(c·c − 2·v·c)."""
-    scores = F.array(
+def _centroid_scores(vec: Column, cents: np.ndarray) -> Column:
+    """Array of ‖v−c‖² − ‖v‖² = c·c − 2·v·c per trained centroid, as
+    pure column expressions (the dropped ‖v‖² cannot move the argmin)."""
+    return F.array(
         *[
             F.lit(float(c @ c)) - 2.0 * dot(vec, F.array(*[F.lit(float(x)) for x in c]))
             for c in cents
         ]
     )
-    return F.array_position(scores, F.array_min(scores)).cast("int")
+
+
+def _rounded_centroid_dists(vec: Column, cents: list[list[float]], cc: list[float]) -> Column:
+    """Array of round(‖v−c‖² − ‖v‖², 6) per centroid: cc_c − 2·(v·c)
+    with the centroid norms precomputed as literals and the dot a
+    strict sequential fold — the SAME arithmetic (and rounding) the
+    DuckDB oracle runs, so argmin/probe selection agrees cross-engine
+    (ulp-level engine skew is absorbed by the rounding; ties break by
+    centroid id in both engines)."""
+    return F.array(
+        *[
+            F.round(F.lit(cc[i]) - 2.0 * dot(vec, F.array(*[F.lit(x) for x in c])), 6)
+            for i, c in enumerate(cents)
+        ]
+    )
+
+
+def _sample(embeddings: DataFrame, sample_size: int, vec: str = "embedding") -> np.ndarray:
+    """Deterministic bounded training sample: every ⌊n/sample_size⌋-th
+    vec_id, at most ``sample_size`` rows, as a float64 matrix."""
+    n = embeddings.count()
+    step = max(n // sample_size, 1)
+    rows = (
+        embeddings.filter(F.col("vec_id") % step == 0)
+        .orderBy("vec_id")
+        .select(vec)
+        .limit(sample_size)
+        .collect()
+    )
+    return np.array([r[0] for r in rows], dtype=np.float64)
+
+
+def _lloyd(X: np.ndarray, k: int, iters: int) -> np.ndarray:
+    """``iters`` rounds of Lloyd's k-means over the rows of X, seeded
+    with ``k`` evenly spaced rows; an empty cell keeps its centroid."""
+    cents = X[:: max(len(X) // k, 1)][:k].copy()
+    for _ in range(iters):
+        # ||x-c||² = x·x − 2 x·c + c·c; argmin over c drops x·x
+        d2 = -2.0 * X @ cents.T + np.sum(cents * cents, axis=1)
+        assign = np.argmin(d2, axis=1)
+        for j in range(len(cents)):
+            members = X[assign == j]
+            if len(members):
+                cents[j] = members.mean(axis=0)
+    return cents
 
 
 def train_ivf_centroids(
@@ -433,27 +553,29 @@ def train_ivf_centroids(
     Deterministic: sample = evenly spaced vec_ids, init = evenly
     spaced sample rows.
     """
-    n = embeddings.count()
-    step = max(n // sample_size, 1)
-    rows = (
-        embeddings.filter(F.col("vec_id") % step == 0)
-        .orderBy("vec_id")
-        .select(vec)
-        .limit(sample_size)
-        .collect()
-    )
-    X = np.array([r[0] for r in rows], dtype=np.float64)
-    cents = X[:: max(len(X) // n_centroids, 1)][:n_centroids].copy()
+    return _lloyd(_sample(embeddings, sample_size, vec), n_centroids, iters)
 
-    for _ in range(iters):
-        # ||x-c||² = x·x − 2 x·c + c·c; argmin over c drops x·x
-        d2 = -2.0 * X @ cents.T + np.sum(cents * cents, axis=1)
-        assign = np.argmin(d2, axis=1)
-        for cid in range(len(cents)):
-            members = X[assign == cid]
-            if len(members):
-                cents[cid] = members.mean(axis=0)
-    return cents
+
+def _probe_side(queries: DataFrame, dists: Column, n_probe: int) -> DataFrame:
+    """One (q_id, q_vec, q_norm, cid) row per query and probed list."""
+    return (
+        with_norm(queries)
+        .withColumn("cid", F.explode(_probe_cids(dists, n_probe)))
+        .select(*_side("q_id", "q_vec", "q_norm"), "cid")
+    )
+
+
+def _ivf_search(
+    embeddings: DataFrame, queries: DataFrame, dists: Column, k: int, n_probe: int
+) -> DataFrame:
+    """IVF top-k: the corpus joins the lists of its argmin over
+    ``dists`` (per-centroid distances of the ``embedding`` column), each
+    query its ``n_probe`` nearest, and the probe join is cosine-ranked."""
+    corpus = with_norm(embeddings).withColumn("cid", _argmin(dists)).select(
+        *_side("n_id", "n_vec", "n_norm"), "cid"
+    )
+    q = _probe_side(queries, dists, n_probe)
+    return _top_k(_cos_scored(corpus.join(F.broadcast(q), "cid")), k, F.desc, "cos")
 
 
 def ivf_topk(
@@ -474,54 +596,8 @@ def ivf_topk(
     measured against brute force in tests/test_operators.py.
     """
     cents = train_ivf_centroids(embeddings, dim, n_centroids)
-
-    corpus = with_norm(embeddings).withColumn(
-        "cid", _nearest_centroid(F.col("embedding"), cents)
-    ).select(
-        F.col("vec_id").alias("n_id"),
-        F.col("embedding").alias("n_vec"),
-        F.col("_norm").alias("n_norm"),
-        "cid",
-    )
-    # per-query distances to every centroid → n_probe nearest lists
-    qdists = F.array(
-        *[
-            F.lit(float(c @ c)) - 2.0 * dot(F.col("embedding"), F.array(*[F.lit(float(x)) for x in c]))
-            for c in cents
-        ]
-    )
-    probes = F.slice(
-        F.transform(
-            F.array_sort(
-                F.transform(qdists, lambda d, i: F.struct(d.alias("d"), (i + 1).alias("cid")))
-            ),
-            lambda s: s["cid"],
-        ),
-        1,
-        n_probe,
-    )
-    q = (
-        with_norm(queries)
-        .withColumn("cid", F.explode(probes))
-        .select(
-            F.col("vec_id").alias("q_id"),
-            F.col("embedding").alias("q_vec"),
-            F.col("_norm").alias("q_norm"),
-            "cid",
-        )
-    )
-    scored = corpus.join(F.broadcast(q), "cid").filter(F.col("n_id") != F.col("q_id")).select(
-        "q_id",
-        "n_id",
-        F.round(
-            _cos_pairs(F.col("q_vec"), F.col("n_vec"), F.col("q_norm"), F.col("n_norm")), 6
-        ).alias("cos"),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("n_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "rank", "cos")
+    return _ivf_search(
+        embeddings, queries, _centroid_scores(F.col("embedding"), cents), k, n_probe
     )
 
 
@@ -530,21 +606,6 @@ def ivf_topk(
 #: the DuckDB oracle generator in plans/pipeline.py.
 IVF_FIXED_CENTROID_IDS = tuple(i * 31 for i in range(16))
 IVF_FIXED_N_PROBE = 4
-
-
-def _rounded_centroid_dists(vec: Column, cents: list[list[float]], cc: list[float]) -> Column:
-    """Array of round(‖v−c‖² − ‖v‖², 6) per centroid: cc_c − 2·(v·c)
-    with the centroid norms precomputed as literals and the dot a
-    strict sequential fold — the SAME arithmetic (and rounding) the
-    DuckDB oracle runs, so argmin/probe selection agrees cross-engine
-    (ulp-level engine skew is absorbed by the rounding; ties break by
-    centroid id in both engines)."""
-    return F.array(
-        *[
-            F.round(F.lit(cc[i]) - 2.0 * dot(vec, F.array(*[F.lit(x) for x in c])), 6)
-            for i, c in enumerate(cents)
-        ]
-    )
 
 
 def ivf_topk_fixed(
@@ -572,61 +633,9 @@ def ivf_topk_fixed(
     the probe join broadcasts |Q|·n_probe rows, the corpus shuffles
     once on cid (or never, with the materialized index).
     """
-    cent_rows = (
-        embeddings.filter(F.col("vec_id").isin(list(centroid_ids)))
-        .orderBy("vec_id")
-        .select("embedding")
-        .collect()
-    )  # bounded by contract: len(centroid_ids) rows
-    cents = [[float(x) for x in r["embedding"]] for r in cent_rows]
-    cc = []
-    for c in cents:
-        acc = 0.0
-        for x in c:  # sequential fold — matches DuckDB list_dot_product
-            acc = acc + x * x
-        cc.append(acc)
-
+    cents, cc = _frozen(embeddings, centroid_ids)
     dists = _rounded_centroid_dists(F.col("embedding"), cents, cc)
-    nearest = F.array_position(dists, F.array_min(dists)).cast("int")
-    corpus = with_norm(embeddings).withColumn("cid", nearest).select(
-        F.col("vec_id").alias("n_id"),
-        F.col("embedding").alias("n_vec"),
-        F.col("_norm").alias("n_norm"),
-        "cid",
-    )
-    probes = F.slice(
-        F.transform(
-            F.array_sort(
-                F.transform(dists, lambda d, i: F.struct(d.alias("d"), (i + 1).alias("cid")))
-            ),
-            lambda s: s["cid"],
-        ),
-        1,
-        n_probe,
-    )
-    q = (
-        with_norm(queries)
-        .withColumn("cid", F.explode(probes))
-        .select(
-            F.col("vec_id").alias("q_id"),
-            F.col("embedding").alias("q_vec"),
-            F.col("_norm").alias("q_norm"),
-            "cid",
-        )
-    )
-    scored = corpus.join(F.broadcast(q), "cid").filter(F.col("n_id") != F.col("q_id")).select(
-        "q_id",
-        "n_id",
-        F.round(
-            _cos_pairs(F.col("q_vec"), F.col("n_vec"), F.col("q_norm"), F.col("n_norm")), 6
-        ).alias("cos"),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("n_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "rank", "cos")
-    )
+    return _ivf_search(embeddings, queries, dists, k, n_probe)
 
 
 # ---------------------------------------------------------------------------
@@ -652,7 +661,7 @@ def build_ivf_index(
     cents = train_ivf_centroids(embeddings, dim, n_centroids)
     (
         with_norm(embeddings)
-        .withColumn("cid", _nearest_centroid(F.col("embedding"), cents))
+        .withColumn("cid", _argmin(_centroid_scores(F.col("embedding"), cents)))
         .write.partitionBy("cid")
         .mode("overwrite")
         .parquet(path)
@@ -672,56 +681,14 @@ def ivf_topk_from_index(
     become a partition-column filter, so the scan reads ONLY those
     list partitions (Catalyst partition pruning — no full-corpus I/O).
     """
-    corpus = spark.read.parquet(path).select(
-        F.col("vec_id").alias("n_id"),
-        F.col("embedding").alias("n_vec"),
-        F.col("_norm").alias("n_norm"),
-        "cid",
-    )
-    qdists = F.array(
-        *[
-            F.lit(float(c @ c)) - 2.0 * dot(F.col("embedding"), F.array(*[F.lit(float(x)) for x in c]))
-            for c in cents
-        ]
-    )
-    probes = F.slice(
-        F.transform(
-            F.array_sort(
-                F.transform(qdists, lambda d, i: F.struct(d.alias("d"), (i + 1).alias("cid")))
-            ),
-            lambda s: s["cid"],
-        ),
-        1,
-        n_probe,
-    )
-    q = (
-        with_norm(queries)
-        .withColumn("cid", F.explode(probes))
-        .select(
-            F.col("vec_id").alias("q_id"),
-            F.col("embedding").alias("q_vec"),
-            F.col("_norm").alias("q_norm"),
-            "cid",
-        )
-    )
+    corpus = spark.read.parquet(path).select(*_side("n_id", "n_vec", "n_norm"), "cid")
+    q = _probe_side(queries, _centroid_scores(F.col("embedding"), cents), n_probe)
     qrows = q.collect()  # bounded by contract (small query set)
     probe_cids = sorted({r["cid"] for r in qrows})
     # partition-column filter → Catalyst prunes to the probed lists only
     pruned = corpus.filter(F.col("cid").isin(probe_cids))
     qdf = F.broadcast(spark.createDataFrame(qrows, q.schema))
-    scored = pruned.join(qdf, "cid").filter(F.col("n_id") != F.col("q_id")).select(
-        "q_id",
-        "n_id",
-        F.round(
-            _cos_pairs(F.col("q_vec"), F.col("n_vec"), F.col("q_norm"), F.col("n_norm")), 6
-        ).alias("cos"),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("n_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "rank", "cos")
-    )
+    return _top_k(_cos_scored(pruned.join(qdf, "cid")), k, F.desc, "cos")
 
 
 # ---------------------------------------------------------------------------
@@ -837,6 +804,36 @@ def label_centroids(df: DataFrame, vec: str = "embedding", label: str = "label")
     )
 
 
+# ---------------------------------------------------------------------------
+# SemDeDup: within-cell duplicate marking
+# ---------------------------------------------------------------------------
+
+
+def _same_cell_keep(vv: DataFrame, threshold: float, vec: str) -> DataFrame:
+    """(vec_id, cid, keep) over (vec_id, cid, ``vec``, _norm) rows:
+    keep=0 ⇔ a lower-id vector in the same cid has round-6 cosine ≥
+    ``threshold``.  The only shuffle is the cid-keyed self-join."""
+    a = vv.select("cid", *_side("id_a", "va", "na", vec))
+    b = vv.select("cid", *_side("id_b", "vb", "nb", vec))
+    cos = F.round(cosine(F.col("va"), F.col("vb"), F.col("na"), F.col("nb")), 6)
+    dup_ids = (
+        a.join(b, "cid")
+        .filter(F.col("id_a") < F.col("id_b"))
+        .filter(cos >= F.lit(threshold))
+        .select(F.col("id_b").alias("vec_id"))
+        .distinct()
+    )
+    return (
+        vv.select("vec_id", "cid")
+        .join(dup_ids.withColumn("_dup", F.lit(1)), "vec_id", "left")
+        .select(
+            "vec_id",
+            "cid",
+            F.when(F.col("_dup").isNull(), 1).otherwise(0).alias("keep"),
+        )
+    )
+
+
 def semdedup(
     embeddings: DataFrame,
     threshold: float = 0.9,
@@ -866,52 +863,9 @@ def semdedup(
     fold cosine are the same arithmetic the DuckDB oracle replays —
     fully oracle-checkable, like ivf_topk_fixed.
     """
-    cent_rows = (
-        embeddings.filter(F.col("vec_id").isin(list(centroid_ids)))
-        .orderBy("vec_id")
-        .select(vec)
-        .collect()
-    )  # bounded by contract: len(centroid_ids) rows
-    cents = [[float(x) for x in r[vec]] for r in cent_rows]
-    cc = []
-    for c in cents:
-        acc = 0.0
-        for x in c:  # sequential fold — matches DuckDB list_dot_product
-            acc = acc + x * x
-        cc.append(acc)
-
-    dists = _rounded_centroid_dists(F.col(vec), cents, cc)
-    nearest = F.array_position(dists, F.array_min(dists)).cast("int")
-    vecs = with_norm(embeddings, vec).withColumn("cid", nearest)
-    a = vecs.select(
-        "cid",
-        F.col("vec_id").alias("id_a"),
-        F.col(vec).alias("va"),
-        F.col("_norm").alias("na"),
-    )
-    b = vecs.select(
-        "cid",
-        F.col("vec_id").alias("id_b"),
-        F.col(vec).alias("vb"),
-        F.col("_norm").alias("nb"),
-    )
-    cos = F.round(dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6)
-    dup_ids = (
-        a.join(b, "cid")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(cos >= F.lit(threshold))
-        .select(F.col("id_b").alias("vec_id"))
-        .distinct()
-    )
-    return (
-        vecs.select("vec_id", "cid")
-        .join(dup_ids.withColumn("_dup", F.lit(1)), "vec_id", "left")
-        .select(
-            "vec_id",
-            "cid",
-            F.when(F.col("_dup").isNull(), 1).otherwise(0).alias("keep"),
-        )
-    )
+    cents, cc = _frozen(embeddings, centroid_ids, vec)
+    nearest = _argmin(_rounded_centroid_dists(F.col(vec), cents, cc))
+    return _same_cell_keep(with_norm(embeddings, vec).withColumn("cid", nearest), threshold, vec)
 
 
 #: paper-scale cap on the √N rule (Abbas et al. cluster 5B docs into
@@ -936,15 +890,14 @@ def semdedup_cells(n: int) -> int:
 def semdedup_auto(
     embeddings: DataFrame, threshold: float = 0.9, vec: str = "embedding"
 ) -> DataFrame:
-    """``semdedup`` with the production sizing WIRED IN (round-6
-    verdict #5): cells ≈ √N, centroids picked by a deterministic
-    stride rule (every ⌊N/cells⌋-th vec_id, first ``cells`` of them),
-    and — because √N cells outgrows literal expression trees — the
-    assignment runs as a BROADCAST JOIN against the centroid frame
-    instead of per-centroid literal distance expressions: no driver
-    collect at all, and 100k-cell codebooks broadcast as ordinary
-    relations (a few hundred MB of vectors) exactly like any other
-    small dimension table.
+    """``semdedup`` with the production sizing wired in: cells ≈ √N,
+    centroids picked by a deterministic stride rule (every
+    ⌊N/cells⌋-th vec_id, first ``cells`` of them), and — because √N
+    cells outgrows literal expression trees — the assignment runs as a
+    BROADCAST JOIN against the centroid frame instead of per-centroid
+    literal distance expressions: no driver collect at all, and
+    100k-cell codebooks broadcast as ordinary relations (a few hundred
+    MB of vectors) exactly like any other small dimension table.
 
     Output and semantics identical to ``semdedup`` (keep=0 ⇔ a
     lower-id same-cell vector has rounded cosine ≥ τ); only the
@@ -959,8 +912,6 @@ def semdedup_auto(
     is quadratic): at 10× sf0.1, ~29M distance+cosine evaluations
     versus the fixed-16-cell variant's ~225M.
     """
-    from pyspark.sql import Window
-
     n = embeddings.count()
     cells = semdedup_cells(n)
     stride = max(1, n // cells)
@@ -984,36 +935,7 @@ def semdedup_auto(
         .agg(F.min(F.struct("d", "cid")).alias("m"))
         .select("vec_id", F.col("m.cid").alias("cid"))
     )
-    vv = nv.join(assign, "vec_id")
-    a = vv.select(
-        "cid",
-        F.col("vec_id").alias("id_a"),
-        F.col(vec).alias("va"),
-        F.col("_norm").alias("na"),
-    )
-    b = vv.select(
-        "cid",
-        F.col("vec_id").alias("id_b"),
-        F.col(vec).alias("vb"),
-        F.col("_norm").alias("nb"),
-    )
-    cos = F.round(dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6)
-    dup_ids = (
-        a.join(b, "cid")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(cos >= F.lit(threshold))
-        .select(F.col("id_b").alias("vec_id"))
-        .distinct()
-    )
-    return (
-        vv.select("vec_id", "cid")
-        .join(dup_ids.withColumn("_dup", F.lit(1)), "vec_id", "left")
-        .select(
-            "vec_id",
-            "cid",
-            F.when(F.col("_dup").isNull(), 1).otherwise(0).alias("keep"),
-        )
-    )
+    return _same_cell_keep(nv.join(assign, "vec_id"), threshold, vec)
 
 
 # ---------------------------------------------------------------------------
@@ -1030,27 +952,11 @@ def _pq_codebooks(
     embeddings: DataFrame, dim: int, m: int, code_ids: tuple[int, ...]
 ) -> list[list[list[float]]]:
     """books[s][j] = subvector s of frozen-codebook row j (j ordered by
-    vec_id, 0-based here / 1-based as emitted codes).  Bounded collect
-    by contract: len(code_ids) rows — the codebook of a production PQ
-    index is trained once and shipped to every executor as literals."""
+    vec_id, 0-based here / 1-based as emitted codes), sliced from
+    ``_frozen``'s rows."""
     sub = dim // m
-    rows = (
-        embeddings.filter(F.col("vec_id").isin(list(code_ids)))
-        .orderBy("vec_id")
-        .select("embedding")
-        .collect()
-    )
-    return [
-        [[float(x) for x in r["embedding"][s * sub : (s + 1) * sub]] for r in rows]
-        for s in range(m)
-    ]
-
-
-def _seq_sq(v: list[float]) -> float:
-    acc = 0.0
-    for x in v:  # sequential fold — matches DuckDB list_dot_product
-        acc = acc + x * x
-    return acc
+    rows, _ = _frozen(embeddings, code_ids)
+    return [[r[s * sub : (s + 1) * sub] for r in rows] for s in range(m)]
 
 
 def _pq_dists(books: list[list[list[float]]], s: int, sub: int) -> Column:
@@ -1068,11 +974,25 @@ def _pq_dists(books: list[list[list[float]]], s: int, sub: int) -> Column:
     )
 
 
-def _pq_code(dists: Column) -> Column:
-    """1-based argmin with ties to the lowest code id (array_position
-    returns the FIRST index of the min — the same tie rule as the
-    oracle's ORDER BY d, j)."""
-    return F.array_position(dists, F.array_min(dists)).cast("int")
+def _pq_codes(books: list[list[list[float]]], m: int, sub: int) -> Column:
+    """Array of the ``m`` 1-based per-subspace codes of the row."""
+    return F.array(*[_argmin(_pq_dists(books, s, sub)) for s in range(m)])
+
+
+def _pq_table(books: list[list[list[float]]], m: int, sub: int) -> Column:
+    """The row's ADC lookup table: dt[s] = ``_pq_dists`` of subspace s."""
+    return F.array(*[_pq_dists(books, s, sub) for s in range(m)])
+
+
+def _adc_top_k(paired: DataFrame, k: int) -> DataFrame:
+    """Per-query top-k by ascending round-4 Σ_s dt[s][codes[s]] over
+    (q_id, dt) × (n_id, codes) pairs."""
+    adc = F.aggregate(
+        F.zip_with(F.col("dt"), F.col("codes"), lambda tbl, c: F.element_at(tbl, c)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    return _top_k(paired.select("q_id", "n_id", F.round(adc, 4).alias("adc")), k, F.asc, "adc")
 
 
 def _pq_encode_with_books(
@@ -1086,7 +1006,7 @@ def _pq_encode_with_books(
     for s in range(m):
         sv = F.slice(F.col("embedding"), s * sub + 1, sub)
         dists = _pq_dists(books, s, sub)
-        code_cols.append(_pq_code(dists).alias(f"c{s}"))
+        code_cols.append(_argmin(dists).alias(f"c{s}"))
         err_terms.append(F.round(dot(sv, sv), 6) + F.array_min(dists))
     out = embeddings.select("vec_id", *code_cols, *[
         e.alias(f"_e{s}") for s, e in enumerate(err_terms)
@@ -1162,29 +1082,10 @@ def pq_adc_topk_fixed(
     books = _pq_codebooks(embeddings, dim, m, code_ids)
     sub = dim // m
     coded = embeddings.select(
-        F.col("vec_id").alias("n_id"),
-        F.array(*[_pq_code(_pq_dists(books, s, sub)) for s in range(m)]).alias(
-            "codes"
-        ),
+        F.col("vec_id").alias("n_id"), _pq_codes(books, m, sub).alias("codes")
     )
-    # per-query distance table: dt[s] = array of 16 shifted distances
-    qt = queries.select(
-        F.col("vec_id").alias("q_id"),
-        F.array(*[_pq_dists(books, s, sub) for s in range(m)]).alias("dt"),
-    )
-    paired = coded.join(F.broadcast(qt), F.col("n_id") != F.col("q_id"))
-    adc = F.aggregate(
-        F.zip_with(F.col("dt"), F.col("codes"), lambda tbl, c: F.element_at(tbl, c)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    scored = paired.select("q_id", "n_id", F.round(adc, 4).alias("adc"))
-    w = Window.partitionBy("q_id").orderBy(F.asc("adc"), F.asc("n_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "rank", "adc")
-    )
+    qt = queries.select(F.col("vec_id").alias("q_id"), _pq_table(books, m, sub).alias("dt"))
+    return _adc_top_k(coded.join(F.broadcast(qt), F.col("n_id") != F.col("q_id")), k)
 
 
 def ivfpq_topk_fixed(
@@ -1218,56 +1119,20 @@ def ivfpq_topk_fixed(
     """
     books = _pq_codebooks(embeddings, dim, m, code_ids)
     sub = dim // m
-    cent_rows = (
-        embeddings.filter(F.col("vec_id").isin(list(centroid_ids)))
-        .orderBy("vec_id")
-        .select("embedding")
-        .collect()
-    )
-    cents = [[float(x) for x in r["embedding"]] for r in cent_rows]
-    cc = [_seq_sq(c) for c in cents]
-
+    cents, cc = _frozen(embeddings, centroid_ids)
     cdists = _rounded_centroid_dists(F.col("embedding"), cents, cc)
-    nearest = F.array_position(cdists, F.array_min(cdists)).cast("int")
     corpus = embeddings.select(
         F.col("vec_id").alias("n_id"),
-        nearest.alias("cid"),
-        F.array(*[_pq_code(_pq_dists(books, s, sub)) for s in range(m)]).alias(
-            "codes"
-        ),
-    )
-    probes = F.slice(
-        F.transform(
-            F.array_sort(
-                F.transform(
-                    cdists, lambda d, i: F.struct(d.alias("d"), (i + 1).alias("cid"))
-                )
-            ),
-            lambda s: s["cid"],
-        ),
-        1,
-        n_probe,
+        _argmin(cdists).alias("cid"),
+        _pq_codes(books, m, sub).alias("codes"),
     )
     qt = queries.select(
         F.col("vec_id").alias("q_id"),
-        F.explode(probes).alias("cid"),
-        F.array(*[_pq_dists(books, s, sub) for s in range(m)]).alias("dt"),
+        F.explode(_probe_cids(cdists, n_probe)).alias("cid"),
+        _pq_table(books, m, sub).alias("dt"),
     )
-    paired = corpus.join(F.broadcast(qt), "cid").filter(
-        F.col("n_id") != F.col("q_id")
-    )
-    adc = F.aggregate(
-        F.zip_with(F.col("dt"), F.col("codes"), lambda tbl, c: F.element_at(tbl, c)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    scored = paired.select("q_id", "n_id", F.round(adc, 4).alias("adc"))
-    w = Window.partitionBy("q_id").orderBy(F.asc("adc"), F.asc("n_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "rank", "adc")
-    )
+    paired = corpus.join(F.broadcast(qt), "cid").filter(F.col("n_id") != F.col("q_id"))
+    return _adc_top_k(paired, k)
 
 
 def train_pq_codebooks(
@@ -1284,30 +1149,12 @@ def train_pq_codebooks(
     sample/init determinism rules as train_ivf_centroids; returns
     books[s][j] in the layout pq_encode_fixed consumes, so the trained
     books plug into the same encode/ADC plans as the frozen ones."""
-    n = embeddings.count()
-    step = max(n // sample_size, 1)
-    rows = (
-        embeddings.filter(F.col("vec_id") % step == 0)
-        .orderBy("vec_id")
-        .select("embedding")
-        .limit(sample_size)
-        .collect()
-    )
-    X = np.array([r[0] for r in rows], dtype=np.float64)
+    X = _sample(embeddings, sample_size)
     sub = dim // m
-    books: list[list[list[float]]] = []
-    for s in range(m):
-        Xs = X[:, s * sub : (s + 1) * sub]
-        cents = Xs[:: max(len(Xs) // k, 1)][:k].copy()
-        for _ in range(iters):
-            d2 = -2.0 * Xs @ cents.T + np.sum(cents * cents, axis=1)
-            assign = np.argmin(d2, axis=1)
-            for j in range(len(cents)):
-                members = Xs[assign == j]
-                if len(members):
-                    cents[j] = members.mean(axis=0)
-        books.append([[float(x) for x in c] for c in cents])
-    return books
+    return [
+        [[float(x) for x in c] for c in _lloyd(X[:, s * sub : (s + 1) * sub], k, iters)]
+        for s in range(m)
+    ]
 
 
 def pq_encode_trained(
@@ -1357,17 +1204,9 @@ def ivfpq_rerank_topk_fixed(
         embeddings, queries, k=r, dim=dim, m=m,
         centroid_ids=centroid_ids, code_ids=code_ids, n_probe=n_probe,
     ).select("q_id", "n_id")
-    qv = with_norm(queries).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("qe"),
-        F.col("_norm").alias("qn"),
-    )
+    qv = with_norm(queries).select(*_side("q_id", "qe", "qn"))
     probe = cands.join(qv, "q_id")  # ≤ |Q|·r rows, query vecs attached
-    nv = with_norm(embeddings).select(
-        F.col("vec_id").alias("n_id"),
-        F.col("embedding").alias("ne"),
-        F.col("_norm").alias("nn"),
-    )
+    nv = with_norm(embeddings).select(*_side("n_id", "ne", "nn"))
     scored = nv.join(F.broadcast(probe), "n_id").select(
         "q_id",
         "n_id",
@@ -1375,9 +1214,4 @@ def ivfpq_rerank_topk_fixed(
             cosine(F.col("qe"), F.col("ne"), F.col("qn"), F.col("nn")), 6
         ).alias("cos"),
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("n_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "rank", "cos")
-    )
+    return _top_k(scored, k, F.desc, "cos")

@@ -799,14 +799,14 @@ def stream_sessions_stateful(spark, sf_dir):
     return run_stateful_sessions(spark, sf_dir)
 
 
-def _ivf_oracle() -> str:
-    """DuckDB replica of the frozen-quantizer IVF search: the same 16
-    centroid rows (fixed vec_ids), the same rounded argmin assignment
-    (ties → lowest cid), the same 4-probe lists and cosine top-k.
-    Rounding d to 6dp absorbs last-ulp dot-product skew between the
-    engines' accumulation, making assignment deterministic."""
+def _frozen_assign_ctes() -> str:
+    """The frozen-quantizer CTEs both IVF and SemDeDup oracles open
+    with: the same 16 centroid rows (fixed vec_ids), every vector's
+    rounded distance to each (``dist``) and its argmin cell (``assign``,
+    ties → lowest cid).  Rounding d to 6dp absorbs last-ulp dot-product
+    skew between the engines' accumulation, making assignment
+    deterministic."""
     ids = ", ".join(str(i) for i in similarity.IVF_FIXED_CENTROID_IDS)
-    n_probe = similarity.IVF_FIXED_N_PROBE
     return f"""
 WITH {_SQL_VECS},
 cents AS (SELECT row_number() OVER (ORDER BY vec_id) AS cid,
@@ -819,7 +819,14 @@ assign AS (SELECT vec_id, cid FROM (
              SELECT vec_id, cid,
                     row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
              FROM dist) WHERE rn = 1),
-probes AS (SELECT vec_id AS q_id, cid FROM (
+"""
+
+
+def _ivf_oracle() -> str:
+    """DuckDB replica of the frozen-quantizer IVF search: the shared
+    assignment CTEs, then the same 4-probe lists and cosine top-k."""
+    n_probe = similarity.IVF_FIXED_N_PROBE
+    return _frozen_assign_ctes() + f"""probes AS (SELECT vec_id AS q_id, cid FROM (
              SELECT vec_id, cid,
                     row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
              FROM dist WHERE vec_id < 10) WHERE rn <= {n_probe}),
@@ -1102,24 +1109,10 @@ def pipe_embed_centroids(spark, sf_dir):
 
 
 def _semdedup_oracle(threshold: float = 0.9) -> str:
-    """DuckDB replica of the frozen-quantizer SemDeDup pass: identical
-    centroid rows + rounded argmin assignment (shared with
-    _ivf_oracle), then dup = EXISTS lower-id same-cluster vector with
-    rounded cosine ≥ τ."""
-    ids = ", ".join(str(i) for i in similarity.IVF_FIXED_CENTROID_IDS)
-    return f"""
-WITH {_SQL_VECS},
-cents AS (SELECT row_number() OVER (ORDER BY vec_id) AS cid,
-                 e AS ce, list_dot_product(e, e) AS cc
-          FROM v WHERE vec_id IN ({ids})),
-dist AS (SELECT n.vec_id, c.cid,
-                round(c.cc - 2.0 * list_dot_product(n.e, c.ce), 6) AS d
-         FROM v n CROSS JOIN cents c),
-assign AS (SELECT vec_id, cid FROM (
-             SELECT vec_id, cid,
-                    row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
-             FROM dist) WHERE rn = 1),
-vv AS (SELECT n.vec_id, a.cid, n.e, n.nm
+    """DuckDB replica of the frozen-quantizer SemDeDup pass: the
+    shared assignment CTEs, then dup = EXISTS lower-id same-cluster
+    vector with rounded cosine ≥ τ."""
+    return _frozen_assign_ctes() + f"""vv AS (SELECT n.vec_id, a.cid, n.e, n.nm
        FROM nv n JOIN assign a ON a.vec_id = n.vec_id),
 dups AS (SELECT DISTINCT y.vec_id
          FROM vv x JOIN vv y ON x.cid = y.cid AND x.vec_id < y.vec_id

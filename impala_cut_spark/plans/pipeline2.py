@@ -803,31 +803,47 @@ def pipe_embed_pq(spark, sf_dir):
     return similarity.pq_encode_fixed(emb)
 
 
-def _pq_adc_oracle() -> str:
+def _pq_code_cols() -> tuple[str, str]:
+    """(select list c0..c7 of per-subspace codes, the a0..a7 joins that
+    bind them to ``v n``)."""
     from impala_cut_spark.operators.similarity import PQ_SUBSPACES
 
     cols = ", ".join(f"a{s}.code AS c{s}" for s in range(PQ_SUBSPACES))
     joins = "\n".join(
         f"JOIN a{s} ON a{s}.vec_id = n.vec_id" for s in range(PQ_SUBSPACES)
     )
+    return cols, joins
+
+
+def _adc_rank(k: int) -> str:
+    """The CTE tail both ADC oracles end with: ``pairs`` rows scored by
+    the round-4 sum of their query's per-subspace table entries, then
+    the per-query top-k by (adc, n_id)."""
+    from impala_cut_spark.operators.similarity import PQ_SUBSPACES
+
     djoins = "\n".join(
         f"JOIN d{s} t{s} ON t{s}.vec_id = p.q_id AND t{s}.j = p.c{s}"
         for s in range(PQ_SUBSPACES)
     )
     adc = " + ".join(f"t{s}.d" for s in range(PQ_SUBSPACES))
+    return f"""scored AS (SELECT p.q_id, p.n_id, round({adc}, 4) AS adc
+           FROM pairs p
+           {djoins}),
+r AS (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY adc, n_id) AS rank
+      FROM scored)
+SELECT q_id, n_id, rank, adc FROM r WHERE rank <= {k}
+"""
+
+
+def _pq_adc_oracle() -> str:
+    cols, joins = _pq_code_cols()
     return f"""
 WITH {_pq_oracle_ctes()},
 corpus AS (SELECT n.vec_id AS n_id, {cols} FROM v n {joins}),
 pairs AS (SELECT q.vec_id AS q_id, c.*
           FROM v q CROSS JOIN corpus c
           WHERE q.vec_id < 5 AND c.n_id <> q.vec_id),
-scored AS (SELECT p.q_id, p.n_id, round({adc}, 4) AS adc
-           FROM pairs p
-           {djoins}),
-r AS (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY adc, n_id) AS rank
-      FROM scored)
-SELECT q_id, n_id, rank, adc FROM r WHERE rank <= 5
-"""
+{_adc_rank(5)}"""
 
 
 @query("pipe_ann_pq", oracle=_pq_adc_oracle())
@@ -849,19 +865,10 @@ def _ivfpq_oracle(k: int = 5) -> str:
     from impala_cut_spark.operators.similarity import (
         IVF_FIXED_CENTROID_IDS,
         IVF_FIXED_N_PROBE,
-        PQ_SUBSPACES,
     )
 
     ivf_ids = ", ".join(str(i) for i in IVF_FIXED_CENTROID_IDS)
-    cols = ", ".join(f"a{s}.code AS c{s}" for s in range(PQ_SUBSPACES))
-    joins = "\n".join(
-        f"JOIN a{s} ON a{s}.vec_id = n.vec_id" for s in range(PQ_SUBSPACES)
-    )
-    djoins = "\n".join(
-        f"JOIN d{s} t{s} ON t{s}.vec_id = p.q_id AND t{s}.j = p.c{s}"
-        for s in range(PQ_SUBSPACES)
-    )
-    adc = " + ".join(f"t{s}.d" for s in range(PQ_SUBSPACES))
+    cols, joins = _pq_code_cols()
     return f"""
 WITH {_pq_oracle_ctes()},
 cents AS (SELECT row_number() OVER (ORDER BY vec_id) AS cid,
@@ -884,13 +891,7 @@ corpus AS (SELECT n.vec_id AS n_id, ca.cid, {cols}
 pairs AS (SELECT p.q_id, c.* FROM probes p
           JOIN corpus c ON c.cid = p.cid
           WHERE c.n_id <> p.q_id),
-scored AS (SELECT p.q_id, p.n_id, round({adc}, 4) AS adc
-           FROM pairs p
-           {djoins}),
-r AS (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY adc, n_id) AS rank
-      FROM scored)
-SELECT q_id, n_id, rank, adc FROM r WHERE rank <= {k}
-"""
+{_adc_rank(k)}"""
 
 
 @query("pipe_ann_ivfpq", oracle=_ivfpq_oracle())

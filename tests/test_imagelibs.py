@@ -240,12 +240,14 @@ import json, resource, sys
 from impala_cut_spark.operators import imagelibs
 payload = sys.stdin.buffer.read()
 resource.setrlimit(resource.RLIMIT_AS, (1 << 30, 1 << 30))
+before = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss
 try:
     getattr(imagelibs, sys.argv[1])(payload)
     raised = None
 except BaseException as e:
     raised = [type(e).__module__, type(e).__qualname__, str(e)[:200]]
-print(json.dumps(raised))
+grew = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss - before
+print(json.dumps({"raised": raised, "maxrss_grew_kb": grew}))
 """
 
 
@@ -400,7 +402,7 @@ def _run_child(name: str, payload: bytes) -> dict:
         return {"status": f"no result after {WALL_S}s"}
     if done.returncode != 0:
         return {"status": f"exit {done.returncode}: {done.stderr[-500:]!r}"}
-    return {"status": "ok", "raised": json.loads(done.stdout)}
+    return {"status": "ok", **json.loads(done.stdout)}
 
 
 @pytest.fixture(scope="module")
@@ -463,3 +465,38 @@ def test_library_messages_are_formatted(hostile):
                        ("jpeg/truncated-half", "Premature end of JPEG file")):
         message = hostile[name][2]["raised"][2]
         assert text in message and "%" not in message, message
+
+
+def test_arithmetic_frame_is_refused(monkeypatch):
+    """A Huffman-coded 8×8 gray JPEG whose SOF0 marker byte reads 0xC9
+    (SOF9, arithmetic sequential) raises before libgd runs: libjpeg's
+    arithmetic decoder would turn its scan into flat grey without a
+    warning."""
+    payload = bytearray(encode_jpeg(np.full((8, 8), 40, np.uint8)))
+    i = bytes(payload).index(b"\xff\xc0")
+    payload[i + 1] = 0xC9
+
+    def no_libgd():
+        raise AssertionError("libgd ran")
+
+    monkeypatch.setattr(imagelibs, "_libgd", no_libgd)
+    with pytest.raises(ValueError, match="arithmetic"):
+        imagelibs.decode_jpeg(bytes(payload))
+
+
+def test_frame_larger_than_its_payload_is_refused():
+    """A 629-byte JPEG whose SOF0 declares 16383×16383 (inside
+    MAX_PIXELS) raises before libgd allocates its 1 GB raster: decoded
+    in a child under the hostile table's 1 GiB cap, peak RSS grows by
+    less than 64 MB."""
+    import struct
+
+    payload = bytearray(encode_jpeg(np.zeros((8, 8, 3), np.uint8)))
+    assert len(payload) == 629
+    i = bytes(payload).index(b"\xff\xc0")
+    payload[i + 5 : i + 9] = struct.pack(">HH", 16383, 16383)
+    outcome = _run_child("jpeg/16383-square", bytes(payload))
+    assert outcome["status"] == "ok", outcome["status"]
+    assert outcome["raised"] is not None, "decoded"
+    assert outcome["raised"][1] == "ValueError", outcome["raised"]
+    assert outcome["maxrss_grew_kb"] < 64 << 10, outcome

@@ -1594,6 +1594,26 @@ class TestIvfIndex:
             assert live[(r.q_id, r.n_id)] == r.cos
 
 
+class TestFullProbe:
+    """Probing all 16 frozen cells scans the whole corpus, so the IVF
+    searches must return exactly what their unpruned counterparts do:
+    assignment, probe lists and ranking share one code path."""
+
+    def test_ivf_full_probe_equals_brute_force(self, emb):
+        probe = emb.filter(F.col("vec_id") < 10)
+        want = sorted(similarity.brute_force_topk(emb, probe, k=5).collect())
+        got = sorted(similarity.ivf_topk_fixed(emb, probe, k=5, n_probe=16).collect())
+        assert len(want) == 5 * probe.count()
+        assert got == want
+
+    def test_ivfpq_full_probe_equals_pq_adc(self, emb):
+        probe = emb.filter(F.col("vec_id") < 5)
+        want = sorted(similarity.pq_adc_topk_fixed(emb, probe, k=5).collect())
+        got = sorted(similarity.ivfpq_topk_fixed(emb, probe, k=5, n_probe=16).collect())
+        assert len(want) == 5 * probe.count()
+        assert got == want
+
+
 import numpy as np
 
 
